@@ -51,51 +51,6 @@ def run_bench(sf_dir: str, cpus: int, queries_subset: list[str] | None = None) -
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(f"{sf_dir}/events.parquet").count()
 
-    # Host-weather gate: this VM degrades JVM shuffle/window throughput 5-8×
-    # in multi-minute windows (BENCH/BASELINE.md) — a full run started inside
-    # one records the host, not the engine (the r3 +9% drift). Probe first
-    # and sit out a degraded window, bounded so a long bad epoch only delays,
-    # never blocks. Every pre-probe reading is stamped into the output so a
-    # still-degraded run is self-identifying.
-    pre_probes: list[float] = []
-    pyworker_probes: list[float] = []
-    if queries_subset is None and cpus >= 16:
-        healthy = 0.72  # local[32] healthy band < 0.7s (r3 records 0.55-0.65)
-        tries = int(os.environ.get("SPARK_GRAFT_HEALTHY_TRIES", "8"))
-        for attempt in range(max(1, tries)):
-            t0 = time.perf_counter()
-            (
-                spark.range(8_000_000)
-                .selectExpr("id % 997 AS k", "id", "cast(id % 10007 as double) AS v")
-                .selectExpr(
-                    "k", "v",
-                    "sum(v) OVER (PARTITION BY k ORDER BY id "
-                    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rs",
-                )
-                .write.format("noop").mode("overwrite").save()
-            )
-            pre_probes.append(round(time.perf_counter() - t0, 3))
-            if pre_probes[-1] < healthy or attempt == tries - 1:
-                break
-            time.sleep(45)
-        # THIRD degradation mode (r4s5): Python worker fork/spawn collapses
-        # while triad AND the JVM window probe read healthy — a trivial
-        # cpus-task mapInPandas went 10.8s where a warm run takes <1s,
-        # inflating every Arrow-kernel query 2-8× (media_pipeline 3.9→40s,
-        # cusum/hw_smooth ~2×). Probe it explicitly: one full-width
-        # mapInPandas per attempt; the first attempt's reading includes the
-        # spawn cost (which is what the first Arrow query of a run pays).
-        py_healthy = 3.0
-        for attempt in range(max(1, tries)):
-            t0 = time.perf_counter()
-            spark.range(0, cpus * 100, 1, cpus).mapInPandas(
-                lambda it: it, "id long").write.format("noop").mode(
-                "overwrite").save()
-            pyworker_probes.append(round(time.perf_counter() - t0, 3))
-            if pyworker_probes[-1] < py_healthy or attempt == tries - 1:
-                break
-            time.sleep(45)
-
     # the driver registry folds the three tiers into one correctness entry
     # (rollup_tiers); the bench keeps timing them individually — the
     # headline metric is per-tier throughput
@@ -240,8 +195,6 @@ def run_bench(sf_dir: str, cpus: int, queries_subset: list[str] | None = None) -
         "cpus": cpus,
         "host_triad_gbps": host_triad,
         "window_probe_sec": window_probe,
-        "pre_probes_sec": pre_probes,
-        "pyworker_probes_sec": pyworker_probes,
         "pyworker_post_sec": pyworker_post,
         **scale,
     }

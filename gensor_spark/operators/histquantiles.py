@@ -5,7 +5,7 @@ rollup.py) are associative, which is what makes the 1m→1h→1d cascade,
 incremental maintenance and late-data backfill work. Percentiles are not
 mergeable from those states — but for TOKEN data they are exactly mergeable
 through a **value-count histogram**: values are integer token ids from a
-bounded vocabulary (the narrow kernel already asserts |v| < 2^24), so a
+bounded vocabulary (the docs kernel below asserts 0 ≤ v < 2^24), so a
 per-(series, bin) map ``value → count`` is small (≤ distinct values per
 bin, ≤60 for a 1m tier at 1-tick-per-minute), loses nothing, and merges by
 key-wise addition. Quantiles derived from the merged histogram are EXACT —
@@ -84,8 +84,8 @@ def rollup_hist_docs_arrow(
     pattern applied to the histogram state).
 
     The trick: a (global bin, value) pair packs into one int64
-    (``bin << 25 | value`` — token ids are asserted ``0 ≤ v < 2^24``, the
-    same bound the narrow rollup kernel relies on), so ONE ``np.unique``
+    (``bin << 25 | value`` — token ids are asserted ``0 ≤ v < 2^24``),
+    so ONE ``np.unique``
     over the packed keys counts every bin of every doc in a single
     C-level sort pass. Output is bit-identical to
     ``rollup_hist(docs_to_points(docs), tier)`` (asserted in tests).

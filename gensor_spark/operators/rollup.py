@@ -227,10 +227,10 @@ def rollup_docs_arrays(
 
 def ragged_bins(pdf, k: int, dtype=None):
     """Per-Arrow-batch ragged-offset prefix sums shared by every affine
-    token→bin kernel (``rollup_docs_arrow``, ``rollup_docs_arrow_narrow``,
+    token→bin kernel (``rollup_docs_arrow``,
     ``histquantiles.rollup_hist_docs_arrow``) — ONE owner for the
     empty-doc mask and the doc/bin offset arithmetic, so an edge-case fix
-    lands in all three kernels at once.
+    lands in both kernels at once.
 
     Returns ``None`` for an all-empty batch, else the tuple
     ``(keep, flat, lens, nbins, doc_off, bin_off, bin_local, total_bins)``:
@@ -383,154 +383,6 @@ def _merge_partials(partials: DataFrame, group_cols: list[str]) -> DataFrame:
         if c in partials.columns:
             aggs.append(F.sum(c).alias(c))
     return partials.groupBy(*group_cols).agg(*aggs)
-
-
-# ---------------------------------------------------------------------------
-# narrow partial states: the shuffle-width experiment for the wide scaling
-# pair (BENCH/BASELINE.md). Same mathematics, narrower physical rows:
-# timestamps become int32 ordinals (bin index at the tier's step; last as a
-# global tick index), cnt becomes int32, and the extrema/last become float32.
-# float32 is LOSSLESS here iff every value is an integer with |v| < 2^24 —
-# true for any real tokenizer vocabulary (token ids ≪ 16.7M); the kernel
-# asserts it per Arrow batch and aborts rather than silently rounding.
-# vsum stays float64 (sums outgrow the 24-bit mantissa immediately).
-# ---------------------------------------------------------------------------
-
-NARROW_PARTIAL_COLS = ("cnt", "vmin", "vmax", "vsum", "last", "last_t")
-
-
-def rollup_docs_arrow_narrow(
-    docs: DataFrame,
-    tier: str = "1m",
-    tick_seconds: int = 60,
-    keys: tuple[str, ...] = ("doc_id", "source"),
-) -> DataFrame:
-    """``rollup_docs_arrow`` with narrow partial rows (see block comment).
-
-    Output: ``(keys…, bin int, cnt int, vmin float, vmax float,
-    vsum double, last float, last_t int)`` where ``bin`` is the bin ordinal
-    at the tier's step from the affine epoch and ``last_t`` the global tick
-    index of the bin's last point. ``widen_partials`` restores the standard
-    wide schema bit-identically.
-    """
-    import numpy as np
-    import pandas as pd
-
-    step = TIER_SECONDS.get(tier) or freq_to_seconds(tier)
-    if step % tick_seconds:
-        raise ValueError(f"tier step {step}s not a multiple of tick {tick_seconds}s")
-    k = step // tick_seconds
-
-    schema = (
-        "doc_id string, source string, bin int, cnt int, "
-        "vmin float, vmax float, vsum double, last float, last_t int"
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            rb = ragged_bins(pdf, k, dtype=np.float64)
-            if rb is None:
-                continue
-            keep, flat, lens, nbins, doc_off, bin_off, bin_local, total_bins = rb
-            starts = np.repeat(doc_off, nbins) + bin_local * k
-            ends = np.minimum(starts + k, np.repeat(doc_off + lens, nbins))
-            cnt = ends - starts
-            vmin = np.minimum.reduceat(flat, starts)
-            vmax = np.maximum.reduceat(flat, starts)
-            last = flat[ends - 1]
-            # f32-exactness check on the per-bin STORED values (tiny
-            # arrays), NOT on `flat` — a full-batch pass would allocate a
-            # copy of every token. The contract is abort-not-round, so the
-            # test is the exact one: every value that will be cast survives
-            # a f32 round-trip (catches non-integers like 0.1 that a
-            # magnitude-only |v| < 2^24 bound would silently round).
-            stored = np.concatenate((vmin, vmax, last))
-            if np.any(stored != stored.astype(np.float32).astype(np.float64)):
-                raise ValueError(
-                    "narrow partials require every stored value (per-bin "
-                    "min/max/last) to be exactly float32-representable — "
-                    "integers with |v| < 2^24; use rollup_docs_arrow instead"
-                )
-            yield pd.DataFrame({
-                "doc_id": np.repeat(pdf["doc_id"].to_numpy()[keep], nbins),
-                "source": np.repeat(pdf["source"].to_numpy()[keep], nbins),
-                "bin": bin_local.astype(np.int32),
-                "cnt": cnt.astype(np.int32),
-                "vmin": vmin.astype(np.float32),
-                "vmax": vmax.astype(np.float32),
-                "vsum": np.add.reduceat(flat, starts),
-                "last": last.astype(np.float32),
-                "last_t": (bin_local * k + cnt - 1).astype(np.int32),
-            })
-
-    return docs.mapInPandas(kernel, schema=schema)
-
-
-def _merge_partials_narrow(partials: DataFrame,
-                           group_cols: list[str]) -> DataFrame:
-    """``_merge_partials`` over the narrow schema (int/float32 preserved)."""
-    return partials.groupBy(*group_cols).agg(
-        F.sum("cnt").cast("int").alias("cnt"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
-        F.sum("vsum").alias("vsum"),
-        F.max_by("last", F.when(F.col("cnt") > 0, F.col("last_t"))).alias("last"),
-        F.max(F.when(F.col("cnt") > 0, F.col("last_t"))).alias("last_t"),
-    )
-
-
-def cascade_tier_narrow(
-    finer: DataFrame,
-    finer_tier: str,
-    tier: str,
-    keys: tuple[str, ...] = ("doc_id", "source"),
-) -> DataFrame:
-    """``cascade_tier`` on narrow partials: re-bin by integer ordinal.
-
-    ``bin`` ordinals are non-negative in the affine-ts path (ts ≥ epoch0 by
-    construction), so floor-div by the step ratio is the exact re-binning.
-    """
-    finer_step = TIER_SECONDS.get(finer_tier) or freq_to_seconds(finer_tier)
-    step = TIER_SECONDS.get(tier) or freq_to_seconds(tier)
-    if step % finer_step:
-        raise ValueError(f"{tier} not a multiple of {finer_tier}")
-    ratio = step // finer_step
-    rebinned = finer.withColumn(
-        "bin", F.floor(F.col("bin") / ratio).cast("int")
-    )
-    return _merge_partials_narrow(rebinned, [*keys, "bin"])
-
-
-def widen_partials(
-    narrow: DataFrame,
-    tier: str,
-    tick_seconds: int,
-    epoch0_us: int = 1_704_067_200_000_000,
-) -> DataFrame:
-    """Narrow partials → the standard wide schema (PARTIAL_COLS + bin_ts).
-
-    Exact inverse of the narrowing: ordinals back to timestamps, extrema
-    back to double (lossless — the kernel guaranteed f32-exactness), cnt
-    back to long.
-    """
-    step = TIER_SECONDS.get(tier) or freq_to_seconds(tier)
-    other = [c for c in narrow.columns
-             if c not in NARROW_PARTIAL_COLS and c != "bin"]
-    e0 = F.lit(epoch0_us).cast("long")
-    return narrow.select(
-        *other,
-        F.timestamp_micros(
-            e0 + F.col("bin").cast("long") * (step * 1_000_000)
-        ).alias("bin_ts"),
-        F.col("cnt").cast("long").alias("cnt"),
-        F.col("vmin").cast("double").alias("vmin"),
-        F.col("vmax").cast("double").alias("vmax"),
-        F.col("vsum").alias("vsum"),
-        F.col("last").cast("double").alias("last"),
-        F.timestamp_micros(
-            e0 + F.col("last_t").cast("long") * (tick_seconds * 1_000_000)
-        ).alias("last_ts"),
-    )
 
 
 def cascade_tier(

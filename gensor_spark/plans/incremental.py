@@ -42,11 +42,26 @@ import shutil
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from gensor_spark.operators.cmsketch import (
+    cascade_cms,
+    estimate_cms,
+    merge_cms,
+    rollup_cms,
+)
+from gensor_spark.operators.ddsketch import dd_quantize
+from gensor_spark.operators.distinctrollup import (
+    cascade_distinct,
+    finalize_distinct,
+    merge_distinct,
+    rollup_distinct,
+)
 from gensor_spark.operators.histquantiles import (
     cascade_hist,
     merge_hist,
@@ -57,17 +72,128 @@ from gensor_spark.operators.histquantiles import (
 from gensor_spark.operators.points import docs_to_points
 from gensor_spark.operators.rollup import (
     _merge_partials,
-    _merge_partials_narrow,
     cascade_tier,
-    cascade_tier_narrow,
     finalize_tier,
     rollup_docs_arrow,
-    rollup_docs_arrow_narrow,
     rollup_tier,
-    widen_partials,
+)
+from gensor_spark.operators.topkrollup import (
+    cascade_topk,
+    finalize_topk,
+    merge_topk,
+    rollup_topk,
 )
 
 TIERS = ("1m", "1h", "1d")
+
+
+def _rollup_hist_points(points: DataFrame, tier: str, keys: tuple[str, ...],
+                        quantize_alpha: float | None = None) -> DataFrame:
+    """Point-path histogram build. DDSketch mode (operators/ddsketch.py)
+    quantizes values onto the log bucket grid BEFORE they enter the 1m
+    histograms, so every downstream guarantee holds over the quantized
+    domain."""
+    if quantize_alpha is not None:
+        points = points.withColumn(
+            "value", dd_quantize(F.col("value"), quantize_alpha))
+    return rollup_hist(points, tier, keys=keys)
+
+
+def _rollup_hist_docs(docs: DataFrame, keys: tuple[str, ...],
+                      tick_seconds: int,
+                      quantize_alpha: float | None = None) -> DataFrame | None:
+    """1m histograms via the affine Arrow kernel: no point explode, no
+    raw-point shuffle, bit-identical to the point path (asserted in tests).
+    ``None`` sends the caller to the point path: the kernel's output schema
+    is fixed to the default series keys, and DDSketch quantization is a
+    point-grain projection."""
+    if tuple(keys) != ("doc_id", "source") or quantize_alpha is not None:
+        return None
+    return rollup_hist_docs_arrow(docs, "1m", tick_seconds=tick_seconds)
+
+
+@dataclass(frozen=True)
+class _SketchFamily:
+    """One mergeable sketch family's tier contract.
+
+    Every family stores per-contribution 1m partials under
+    ``tier_<tier>/batch=<id>/`` (batch, wave and stream-epoch
+    contributions alike), merges any set of them per (series, bin) at read,
+    and derives coarser tiers at read by cascading the merged 1m state —
+    bin-grain work, never a raw-point re-read. ``params`` are the rollup
+    parameters with their defaults: a TierPipeline takes them from its
+    ``<family>_<param>`` attributes, a stream sink as keywords, so batch and
+    stream contributions to one store are built alike (a pipeline's hist
+    rollup also gets its DDSketch ``quantize_alpha``). ``merge`` and
+    ``cascade`` get the same keywords and ignore those they do not use.
+    """
+
+    tier: str
+    params: dict
+    #: (points, tier, keys=, **params) → partials
+    rollup: Callable[..., DataFrame]
+    #: (partials, group_cols, **params) → one row per group
+    merge: Callable[..., DataFrame]
+    #: (merged, tier, keys=, **params) → merged at the coarser tier
+    cascade: Callable[..., DataFrame]
+    #: (docs, keys, tick_seconds, **params) → 1m partials straight from the
+    #: token docs, or None for the point path
+    docs_rollup: Callable[..., DataFrame | None] | None = None
+
+    def folded(self, store: Path) -> set[str]:
+        """Stream-epoch contribution ids already absorbed into ``batch=-1``
+        by a fold (compaction or retention), from the tier's
+        ``_folded.json``. foreachBatch replay is at-least-once, and a
+        replayed epoch re-written next to its folded copy would be counted
+        twice; this manifest is the store's memory of what a fold absorbed,
+        written INSIDE the fold's tmp dir and promoted by the same rename."""
+        f = store / f"tier_{self.tier}" / "_folded.json"
+        if not f.exists():
+            return set()
+        return set(json.loads(f.read_text()).get("folded_stream_epochs", []))
+
+
+_SKETCH_FAMILIES = {
+    # exact per-bin value counts → percentiles (operators/histquantiles.py)
+    "hist": _SketchFamily(
+        "hist_1m", {},
+        rollup=_rollup_hist_points,
+        merge=lambda raw, cols, **_: merge_hist(raw, cols),
+        cascade=lambda m, tier, keys, **_: cascade_hist(m, tier, keys=keys),
+        docs_rollup=_rollup_hist_docs,
+    ),
+    # HLL registers, register-max union (operators/distinctrollup.py)
+    "distinct": _SketchFamily(
+        "distinct_1m", {"of": "value", "lgk": 12},
+        rollup=rollup_distinct,
+        merge=lambda raw, cols, **_: merge_distinct(raw, cols),
+        cascade=lambda m, tier, keys, **_: cascade_distinct(m, tier, keys=keys),
+    ),
+    # Misra-Gries summaries; the merge is lossy but keeps the certificate
+    # bounds (operators/topkrollup.py)
+    "topk": _SketchFamily(
+        "topk_1m", {"of": "value", "k": 32},
+        rollup=rollup_topk,
+        merge=lambda raw, cols, k, **_: merge_topk(raw, cols, k=k),
+        cascade=lambda m, tier, keys, k, **_: cascade_topk(
+            m, tier, keys=keys, k=k),
+    ),
+    # Count-Min counters: sums, so every merge is bit-exact
+    # (operators/cmsketch.py)
+    "cms": _SketchFamily(
+        "cms_1m", {"of": "value", "depth": 4, "width": 1024},
+        rollup=rollup_cms,
+        merge=lambda raw, cols, **_: merge_cms(raw, cols),
+        cascade=lambda m, tier, keys, **_: cascade_cms(m, tier, keys=keys),
+    ),
+}
+
+
+def _cutoff(age: str, now) -> str:
+    """ISO timestamp ``now - age``: the oldest bin a retention run keeps."""
+    import pandas as pd
+
+    return (pd.Timestamp(now) - pd.Timedelta(age)).isoformat(sep=" ")
 
 
 class TierPipeline:
@@ -82,7 +208,6 @@ class TierPipeline:
         max_concurrent: int = 2,
         backend: str = "parquet",
         iceberg_namespace: str = "local.gensor",
-        narrow_partials: bool = False,
         hist_tiers: bool = False,
         distinct_tiers: bool = False,
         distinct_of: str = "value",
@@ -110,29 +235,17 @@ class TierPipeline:
         #: see iceberg_store.iceberg_conf). Ledger/lineage/blobs stay on the
         #: filesystem either way.
         self.backend = backend
-        # validate flag/backend combinations BEFORE any backend session work
-        if narrow_partials and backend != "parquet":
-            raise ValueError("narrow_partials requires the parquet backend")
-        if hist_tiers and backend != "parquet":
-            raise ValueError("hist_tiers requires the parquet backend")
-        if distinct_tiers and backend != "parquet":
-            raise ValueError("distinct_tiers requires the parquet backend")
-        if topk_tiers and backend != "parquet":
-            raise ValueError("topk_tiers requires the parquet backend")
-        if cms_tiers and backend != "parquet":
-            raise ValueError("cms_tiers requires the parquet backend")
-        if var_tiers and backend != "parquet":
-            raise ValueError("var_tiers requires the parquet backend")
-        if (ohlc_tiers or moment_tiers) and backend != "parquet":
-            raise ValueError("ohlc_tiers/moment_tiers require the parquet backend")
-        if var_tiers and narrow_partials:
+        # validate flag/backend combinations BEFORE any backend session work:
+        # the Iceberg MERGE templates carry the plain wide rows only — no
+        # map/array sketch columns, no optional partial columns
+        parquet_only = [name for name, on in (
+            ("hist_tiers", hist_tiers), ("distinct_tiers", distinct_tiers),
+            ("topk_tiers", topk_tiers), ("cms_tiers", cms_tiers),
+            ("var_tiers", var_tiers), ("ohlc_tiers", ohlc_tiers),
+            ("moment_tiers", moment_tiers)) if on]
+        if parquet_only and backend != "parquet":
             raise ValueError(
-                "var_tiers needs the wide partial schema (vsumsq is float64; "
-                "the narrow experiment does not carry it)"
-            )
-        if (ohlc_tiers or moment_tiers) and narrow_partials:
-            raise ValueError(
-                "ohlc_tiers/moment_tiers need the wide partial schema")
+                f"{'/'.join(parquet_only)} require the parquet backend")
         if backend == "iceberg":
             from gensor_spark.plans.iceberg_store import IcebergTierStore
 
@@ -142,14 +255,6 @@ class TierPipeline:
         #: north-star compression stage: also write each batch's series as
         #: Gorilla/delta-of-delta blobs (codecs/gorilla.py, Arrow UDF)
         self.encode_blobs = encode_blobs
-        #: store/shuffle tier partials in the NARROW physical schema
-        #: (int32 bin ordinals, float32 extrema — operators/rollup.py):
-        #: ~45% narrower numeric payload per partial row through the Arrow
-        #: boundary, the cascade shuffles and the parquet store. Lossless
-        #: iff |token| < 2^24 (asserted in the kernel); read_tier widens
-        #: back, so finalized outputs are bit-identical either way.
-        #: Parquet backend only (the Iceberg tier tables keep wide rows).
-        self.narrow_partials = narrow_partials
         #: also maintain 1m value-histogram partials per batch (operators/
         #: histquantiles.py) — the mergeable EXACT-percentile state the wide
         #: partials cannot express. Coarser percentile tiers cascade at read
@@ -157,9 +262,7 @@ class TierPipeline:
         #: ``read_hist_quantiles``. The batch path rides the affine Arrow
         #: kernel (rollup_hist_docs_arrow — no point explode); late-data
         #: waves use the ts-stamped point path. Opt-in: the histogram state
-        #: is inherently heavier than count/min/max/mean/last. Parquet
-        #: backend only (the Iceberg MERGE templates carry wide rows, not
-        #: map columns).
+        #: is inherently heavier than count/min/max/mean/last.
         self.hist_tiers = hist_tiers
         #: DDSketch mode for the histogram tiers (operators/ddsketch.py):
         #: when set, values are quantized onto the log bucket grid with this
@@ -178,8 +281,7 @@ class TierPipeline:
         #: (operators/distinctrollup.py) — the mergeable distinct-count
         #: state (distinct values/tokens/docs per bin) the numeric partials
         #: cannot express. Coarser tiers cascade at read via register-max
-        #: union (``read_distinct``), exactly the hist contract. Parquet
-        #: backend only.
+        #: union (``read_distinct``), exactly the hist contract.
         self.distinct_tiers = distinct_tiers
         self.distinct_of = distinct_of
         self.distinct_lgk = distinct_lgk
@@ -187,7 +289,7 @@ class TierPipeline:
         #: batch (operators/topkrollup.py) — the mergeable "which items
         #: dominate each bin" state over unbounded item domains. Coarser
         #: tiers cascade at read via the MG merge (``read_topk``), the
-        #: hist/distinct contract. Parquet backend only.
+        #: hist/distinct contract.
         self.topk_tiers = topk_tiers
         self.topk_of = topk_of
         self.topk_k = topk_k
@@ -198,7 +300,7 @@ class TierPipeline:
         #: cross-contribution merges, compaction and retention are all
         #: BIT-EXACT vs a from-scratch build (stronger than MG/HLL). Keep
         #: depth/width constant for a store's lifetime — they are the
-        #: sketch's identity, like lgk for HLL. Parquet backend only.
+        #: sketch's identity, like lgk for HLL.
         self.cms_tiers = cms_tiers
         self.cms_of = cms_of
         self.cms_depth = cms_depth
@@ -208,7 +310,7 @@ class TierPipeline:
         #: emits var/std alongside count/min/max/mean/last; the sumsq-aware
         #: merge makes cascades/compaction/retention propagate it unchanged.
         #: Keep the flag constant for a store's lifetime (mixed batches
-        #: would disagree on the parquet schema). Parquet backend only.
+        #: would disagree on the parquet schema).
         self.var_tiers = var_tiers
         #: ditto for the first/first_ts OHLC pair and the Σx³/Σx⁴ moment
         #: partials — each an opt-in column family every merge path
@@ -335,34 +437,21 @@ class TierPipeline:
         # raw-point shuffle; bit-identical to rollup_tier(docs_to_points(...)).
         # Persisted so the 1h cascade reuses the in-memory partials instead of
         # a parquet read-back round trip (another ~2 floor jobs per batch).
-        if self.narrow_partials:
-            m1 = rollup_docs_arrow_narrow(
-                batch_docs, "1m", tick_seconds=self.tick_seconds,
-                keys=self.keys,
-            ).persist()
-        else:
-            m1 = rollup_docs_arrow(
-                batch_docs, "1m", tick_seconds=self.tick_seconds,
-                keys=self.keys, with_sumsq=self.var_tiers,
-                with_first=self.ohlc_tiers, with_moments=self.moment_tiers,
-            ).persist()
+        m1 = rollup_docs_arrow(
+            batch_docs, "1m", tick_seconds=self.tick_seconds,
+            keys=self.keys, with_sumsq=self.var_tiers,
+            with_first=self.ohlc_tiers, with_moments=self.moment_tiers,
+        ).persist()
         h1: DataFrame | None = None
         try:
             counts["1m"] = self._store_tier(m1, "1m", b)
             # coarser tiers cascade from the (much smaller) finer tier —
             # never re-read the raw points
-            if self.narrow_partials:
-                h1 = cascade_tier_narrow(m1, "1m", "1h", keys=self.keys).persist()
-                counts["1h"] = self._store_tier(h1, "1h", b)
-                counts["1d"] = self._store_tier(
-                    cascade_tier_narrow(h1, "1h", "1d", keys=self.keys), "1d", b
-                )
-            else:
-                h1 = cascade_tier(m1, "1h", keys=self.keys).persist()
-                counts["1h"] = self._store_tier(h1, "1h", b)
-                counts["1d"] = self._store_tier(
-                    cascade_tier(h1, "1d", keys=self.keys), "1d", b
-                )
+            h1 = cascade_tier(m1, "1h", keys=self.keys).persist()
+            counts["1h"] = self._store_tier(h1, "1h", b)
+            counts["1d"] = self._store_tier(
+                cascade_tier(h1, "1d", keys=self.keys), "1d", b
+            )
         finally:
             m1.unpersist()
             if h1 is not None:
@@ -371,17 +460,10 @@ class TierPipeline:
                 blob_thread.join()
         if blob_err:
             raise blob_err[0]
-        if self.hist_tiers:
-            counts["hist_1m"] = self._store_hist_batch_docs(batch_docs, b)
-        if self.distinct_tiers:
-            counts["distinct_1m"] = self._store_distinct_batch(
-                docs_to_points(batch_docs, tick_seconds=self.tick_seconds), b)
-        if self.topk_tiers:
-            counts["topk_1m"] = self._store_topk_batch(
-                docs_to_points(batch_docs, tick_seconds=self.tick_seconds), b)
-        if self.cms_tiers:
-            counts["cms_1m"] = self._store_cms_batch(
-                docs_to_points(batch_docs, tick_seconds=self.tick_seconds), b)
+        points = docs_to_points(batch_docs, tick_seconds=self.tick_seconds)
+        for family in self._sketch_families():
+            counts[_SKETCH_FAMILIES[family].tier] = self._store_sketch(
+                family, b, points, docs=batch_docs)
         self._lineage_row(
             {
                 "batch": b,
@@ -459,12 +541,6 @@ class TierPipeline:
         """
         if not isinstance(wave, int) or wave < 1:
             raise ValueError(f"wave must be an integer >= 1, got {wave!r}")
-        if self.narrow_partials:
-            raise NotImplementedError(
-                "point-wave backfill stores wide partials; narrow_partials "
-                "pipelines (an off-by-default, measured-no-gain shuffle "
-                "experiment) do not support it"
-            )
         done = set(self.ledger()["processed"])
         bucketed = points.withColumn("_batch", self._batch_col())
         present = sorted(
@@ -501,14 +577,9 @@ class TierPipeline:
             m1.unpersist()
             if h1 is not None:
                 h1.unpersist()
-        if self.hist_tiers:
-            counts["hist_1m"] = self._store_hist_batch(pts, sid)
-        if self.distinct_tiers:
-            counts["distinct_1m"] = self._store_distinct_batch(pts, sid)
-        if self.topk_tiers:
-            counts["topk_1m"] = self._store_topk_batch(pts, sid)
-        if self.cms_tiers:
-            counts["cms_1m"] = self._store_cms_batch(pts, sid)
+        for family in self._sketch_families():
+            counts[_SKETCH_FAMILIES[family].tier] = self._store_sketch(
+                family, sid, pts)
         self._lineage_row(
             {
                 "batch": sid,
@@ -520,105 +591,115 @@ class TierPipeline:
         )
         self._commit_batch(sid)
 
-    # ----------------------------------------------- percentile (hist) tiers
-
-    def _store_hist_batch(self, points: DataFrame, sid: int) -> int:
-        """Write one contribution's 1m value-histogram partials (point
-        path — the late-data waves, which arrive ts-stamped)."""
-        if self.hist_quantize_alpha is not None:
-            from gensor_spark.operators.ddsketch import dd_quantize
-
-            points = points.withColumn(
-                "value", dd_quantize(F.col("value"),
-                                     self.hist_quantize_alpha))
-        hist = rollup_hist(points, "1m", keys=self.keys)
-        return self._write_counted(
-            hist, str(self.store / "tier_hist_1m" / f"batch={sid}")
-        )
-
-    def _store_hist_batch_docs(self, batch_docs: DataFrame, sid: int) -> int:
-        """Write one batch's 1m histogram partials via the affine Arrow
-        kernel (no point explode, no raw-point shuffle — bit-identical to
-        the point path, asserted in tests). Falls back to the point path
-        for non-default series keys (the kernel's output schema is fixed)
-        and for DDSketch mode (quantization is a point-grain projection)."""
-        if (tuple(self.keys) != ("doc_id", "source")
-                or self.hist_quantize_alpha is not None):
-            return self._store_hist_batch(docs_to_points(batch_docs), sid)
-        hist = rollup_hist_docs_arrow(
-            batch_docs, "1m", tick_seconds=self.tick_seconds
-        )
-        return self._write_counted(
-            hist, str(self.store / "tier_hist_1m" / f"batch={sid}")
-        )
-
-    # ------------------------------------------- sketch-tier family (generic)
-    # The percentile histograms and the HLL distinct sketches share ONE
-    # store contract: per-contribution 1m partial dirs under
-    # ``tier_<name>``, _SUCCESS-gated visibility, a fold manifest for
+    # ------------------------------------------------- sketch-tier families
+    # Histograms, HLL, Misra-Gries and Count-Min tiers share ONE store
+    # contract (_SKETCH_FAMILIES): per-contribution 1m partial dirs under
+    # ``tier_<family>_1m``, _SUCCESS-gated visibility, a fold manifest for
     # at-least-once stream replay, and the crash-safe compaction/retention
-    # rewrite. Parameterized by the tier dir name and the read-side merge.
+    # rewrite. The public per-family methods below are a call into it plus
+    # that family's finalize step.
 
-    def _sketch_contribs(self, name: str) -> list:
-        """Complete (``_SUCCESS``-marked) contribution dirs for a sketch
-        tier.
+    def _sketch_families(self) -> list[str]:
+        return [f for f in _SKETCH_FAMILIES if getattr(self, f"{f}_tiers")]
 
-        A crash mid-write leaves a partial ``batch=*`` dir with no
-        ``_SUCCESS``; reading it would merge half an epoch, and compacting
-        it away while marking the epoch folded would LOSE the other half.
-        Incomplete dirs are therefore invisible everywhere — the writer
-        (batch retry or stream epoch replay) overwrites them in full.
+    def _sketch_params(self, family: str) -> dict:
+        params = {p: getattr(self, f"{family}_{p}")
+                  for p in _SKETCH_FAMILIES[family].params}
+        if family == "hist":
+            # DDSketch mode is a pipeline option only; no stream sink takes it
+            params["quantize_alpha"] = self.hist_quantize_alpha
+        return params
+
+    def _store_sketch(self, family: str, sid: int, points: DataFrame,
+                      docs: DataFrame | None = None) -> int:
+        """Write one contribution's 1m partials of ``family``: from the
+        token ``docs`` when the family has a docs kernel that applies, else
+        from the point view."""
+        fam = _SKETCH_FAMILIES[family]
+        params = self._sketch_params(family)
+        part = None
+        if docs is not None and fam.docs_rollup is not None:
+            part = fam.docs_rollup(docs, self.keys, self.tick_seconds, **params)
+        if part is None:
+            part = fam.rollup(points, "1m", keys=self.keys, **params)
+        return self._write_counted(
+            part, str(self.store / f"tier_{fam.tier}" / f"batch={sid}"))
+
+    def _sketch_contribs(self, fam: _SketchFamily
+                         ) -> tuple[list[Path], set[str]]:
+        """Visible contribution dirs of a sketch tier, and its folded
+        stream epochs.
+
+        Two kinds of dir are invisible everywhere. A crash mid-write leaves
+        a ``batch=*`` dir with no ``_SUCCESS``; reading it would merge half
+        an epoch, and folding it while marking the epoch folded would LOSE
+        the other half, so the writer (batch retry or stream replay)
+        overwrites it in full. And a ``batch=s<e>`` whose epoch is listed
+        in ``_folded.json`` already sits inside ``batch=-1``: a replay that
+        passed the sink's manifest check just before a fold landed writes
+        it again, and counting it would count the epoch twice. The next
+        fold deletes it with the rest of the old tier dir.
         """
-        base = self.store / f"tier_{name}"
-        return sorted(p for p in base.glob("batch=*")
-                      if (p / "_SUCCESS").exists())
+        folded = fam.folded(self.store)
+        base = self.store / f"tier_{fam.tier}"
+        parts = sorted(p for p in base.glob("batch=*")
+                       if (p / "_SUCCESS").exists()
+                       and p.name.split("=", 1)[1] not in folded)
+        return parts, folded
 
-    def _sketch_folded(self, name: str) -> set[str]:
-        """Stream-epoch contribution ids already absorbed by a compacting
-        rewrite. foreachBatch replay is at-least-once: a replayed epoch
-        whose ``batch=s<id>`` dir was folded into ``batch=-1`` and deleted
-        would re-add (double-count) its partials unless the sink can see it
-        was absorbed — this manifest is that memory, written atomically
-        WITH the fold (inside the compact tmp dir, promoted by the same
-        rename)."""
-        f = self.store / f"tier_{name}" / "_folded.json"
-        if not f.exists():
-            return set()
-        return set(json.loads(f.read_text()).get("folded_stream_epochs", []))
-
-    def _read_sketch_merged(self, name: str, merge_fn, hint: str) -> DataFrame:
-        self._recover_compact(name)
-        parts = self._sketch_contribs(name)
-        base = self.store / f"tier_{name}"
+    def _read_sketch(self, family: str, tier: str = "1m",
+                     parts: list[Path] | None = None) -> DataFrame:
+        """Merged partials of ``family`` at ``tier``: the 1m contributions
+        (``parts``, default all visible ones) merge per (series, bin), and
+        coarser tiers cascade from the merged 1m state."""
+        fam = _SKETCH_FAMILIES[family]
+        base = self.store / f"tier_{fam.tier}"
+        if parts is None:
+            self._recover_compact(fam.tier)
+            parts, _ = self._sketch_contribs(fam)
         if not parts:
             raise FileNotFoundError(
                 f"no partials under {base} — construct the pipeline with "
-                f"{hint} and run() it first"
+                f"{family}_tiers=True and run() it first"
             )
+        params = self._sketch_params(family)
         raw = self.spark.read.option("basePath", str(base)).parquet(
             *[str(p) for p in parts]
         ).drop("batch")
-        return merge_fn(raw)
+        merged = fam.merge(raw, [*self.keys, "bin_ts"], **params)
+        if tier != "1m":
+            merged = fam.cascade(merged, tier, keys=self.keys, **params)
+        return merged
 
-    def _sketch_fold_manifest(self, name: str) -> dict:
-        """Manifest for a sketch-tier rewrite: previously-folded stream
-        epochs ∪ the complete stream contributions this rewrite absorbs."""
-        absorbed = {p.name.split("=", 1)[1] for p in self._sketch_contribs(name)
+    def _fold_sketch(self, family: str, cutoff: str | None = None
+                     ) -> str | None:
+        """Fold every visible contribution of ``family`` into one
+        ``batch=-1`` (compaction); with ``cutoff``, also drop bins older
+        than it (retention — coarser sketch tiers are derived at read, so
+        the 1m horizon IS the family's retention horizon).
+
+        The fold's manifest (previously folded epochs ∪ the stream
+        contributions it absorbs) and its input come from ONE listing, so
+        no epoch is recorded as folded without having been read. An epoch
+        whose write completes after that listing but before the rewrite's
+        rename is still deleted with the old tier dir: nothing orders a
+        stream write against a running fold.
+        """
+        fam = _SKETCH_FAMILIES[family]
+        self._recover_compact(fam.tier)
+        parts, folded = self._sketch_contribs(fam)
+        absorbed = {p.name.split("=", 1)[1] for p in parts
                     if p.name.startswith("batch=s")}
-        return {"folded_stream_epochs":
-                sorted(self._sketch_folded(name) | absorbed)}
-
-    # ----------------------------------------------- percentile (hist) tiers
-
-    def _merge_hist_fn(self, raw: DataFrame) -> DataFrame:
-        return merge_hist(raw, [*self.keys, "bin_ts"])
-
-    def _hist_folded(self) -> set[str]:
-        return self._sketch_folded("hist_1m")
-
-    def _read_hist_merged(self) -> DataFrame:
-        return self._read_sketch_merged(
-            "hist_1m", self._merge_hist_fn, "hist_tiers=True")
+        merged = self._read_sketch(family, parts=parts)
+        if cutoff is not None:
+            merged = merged.filter(
+                F.col("bin_ts") >= F.lit(cutoff).cast("timestamp"))
+        self._rewrite_tier(
+            fam.tier, merged,
+            manifest={"folded_stream_epochs": sorted(folded | absorbed)})
+        if cutoff is not None:
+            self._lineage_row({"retention": {fam.tier: cutoff}})
+        return cutoff
 
     def read_hist_quantiles(
         self, tier: str = "1h", ps: tuple[float, ...] = (0.5, 0.95, 0.99)
@@ -628,194 +709,71 @@ class TierPipeline:
         re-sum, never a raw-point re-read), the same shape as
         ``read_tier``'s cross-batch partial merge. Exactness argument and
         plan audit: operators/histquantiles.py."""
-        merged = self._read_hist_merged()
-        if tier != "1m":
-            merged = cascade_hist(merged, tier, keys=self.keys)
-        return quantiles_from_hist(merged, ps=ps, keys=self.keys)
-
-    def compact_hist(self) -> None:
-        """Fold all histogram contributions into one (crash-safe rewrite —
-        the same promote/rollback protocol as ``compact``). Absorbed stream
-        epochs are recorded in the tier's ``_folded.json`` so an
-        at-least-once replay of those epochs skips re-writing them."""
-        manifest = self._sketch_fold_manifest("hist_1m")
-        self._rewrite_tier("hist_1m", self._read_hist_merged(),
-                           manifest=manifest)
-
-    def _apply_sketch_retention(self, name: str, merge_fn, hint: str,
-                                age: str, now) -> str:
-        """Shared sketch-tier retention: drop 1m bins older than
-        ``now - age`` (compacting rewrite, same crash protocol). Coarser
-        tiers of every sketch family are derived at read, so the 1m
-        horizon IS that family's retention horizon. Returns the ISO
-        cutoff applied."""
-        import pandas as pd
-
-        cutoff = (pd.Timestamp(now) - pd.Timedelta(age)).isoformat(sep=" ")
-        manifest = self._sketch_fold_manifest(name)
-        kept = self._read_sketch_merged(name, merge_fn, hint).filter(
-            F.col("bin_ts") >= F.lit(cutoff).cast("timestamp")
-        )
-        # retention is also a fold: every stream contribution dir is
-        # absorbed (or expired) by the rewrite, so record them all
-        self._rewrite_tier(name, kept, manifest=manifest)
-        self._lineage_row({"retention": {name: cutoff}})
-        return cutoff
-
-    def apply_hist_retention(self, age: str, now) -> str:
-        """Drop 1m histogram bins older than ``now - age``."""
-        return self._apply_sketch_retention(
-            "hist_1m", self._merge_hist_fn, "hist_tiers=True", age, now)
-
-    def apply_distinct_retention(self, age: str, now) -> str:
-        """Drop 1m HLL distinct-sketch bins older than ``now - age``."""
-        return self._apply_sketch_retention(
-            "distinct_1m", self._merge_distinct_fn, "distinct_tiers=True",
-            age, now)
-
-    def apply_topk_retention(self, age: str, now) -> str:
-        """Drop 1m Misra-Gries summary bins older than ``now - age``."""
-        return self._apply_sketch_retention(
-            "topk_1m", self._merge_topk_fn, "topk_tiers=True", age, now)
-
-    # ------------------------------------------------- distinct (HLL) tiers
-
-    def _merge_distinct_fn(self, raw: DataFrame) -> DataFrame:
-        from gensor_spark.operators.distinctrollup import merge_distinct
-
-        return merge_distinct(raw, [*self.keys, "bin_ts"])
-
-    def _store_distinct_batch(self, points: DataFrame, sid: int) -> int:
-        """Write one contribution's 1m HLL sketch partials."""
-        from gensor_spark.operators.distinctrollup import rollup_distinct
-
-        sk = rollup_distinct(points, "1m", of=self.distinct_of,
-                             keys=self.keys, lgk=self.distinct_lgk)
-        return self._write_counted(
-            sk, str(self.store / "tier_distinct_1m" / f"batch={sid}")
-        )
+        return quantiles_from_hist(self._read_sketch("hist", tier), ps=ps,
+                                   keys=self.keys)
 
     def read_distinct(self, tier: str = "1h") -> DataFrame:
         """Per-bin distinct-count estimates at ``tier`` from the stored 1m
-        sketches — coarser tiers cascade at read via register-max union
-        (exactly equal to direct aggregation; operators/distinctrollup.py),
-        the same bin-grain-only contract as ``read_hist_quantiles``."""
-        from gensor_spark.operators.distinctrollup import (
-            cascade_distinct,
-            finalize_distinct,
-        )
-
-        merged = self._read_sketch_merged(
-            "distinct_1m", self._merge_distinct_fn, "distinct_tiers=True")
-        if tier != "1m":
-            merged = cascade_distinct(merged, tier, keys=self.keys)
-        return finalize_distinct(merged)
-
-    def compact_distinct(self) -> None:
-        """Fold all distinct-sketch contributions into one (the hist
-        crash-safe rewrite protocol, fold manifest included)."""
-        self._rewrite_tier(
-            "distinct_1m",
-            self._read_sketch_merged(
-                "distinct_1m", self._merge_distinct_fn, "distinct_tiers=True"),
-            manifest=self._sketch_fold_manifest("distinct_1m"),
-        )
-
-    # ------------------------------------------- top-k (Misra-Gries) tiers
-
-    def _merge_topk_fn(self, raw: DataFrame) -> DataFrame:
-        from gensor_spark.operators.topkrollup import merge_topk
-
-        return merge_topk(raw, [*self.keys, "bin_ts"], k=self.topk_k)
-
-    def _store_topk_batch(self, points: DataFrame, sid: int) -> int:
-        """Write one contribution's 1m Misra-Gries top-k summaries."""
-        from gensor_spark.operators.topkrollup import rollup_topk
-
-        sk = rollup_topk(points, "1m", of=self.topk_of,
-                         keys=self.keys, k=self.topk_k)
-        return self._write_counted(
-            sk, str(self.store / "tier_topk_1m" / f"batch={sid}")
-        )
+        HLL sketches — coarser tiers cascade at read via register-max union
+        (exactly equal to direct aggregation; operators/distinctrollup.py)."""
+        return finalize_distinct(self._read_sketch("distinct", tier))
 
     def read_topk(self, tier: str = "1h", top: int | None = None) -> DataFrame:
         """Per-bin ranked heavy hitters at ``tier`` from the stored 1m
-        summaries — coarser tiers cascade at read via the MG merge
-        (certificate bounds preserved; operators/topkrollup.py), the same
-        bin-grain-only contract as ``read_distinct``."""
-        from gensor_spark.operators.topkrollup import (
-            cascade_topk,
-            finalize_topk,
-        )
-
-        merged = self._read_sketch_merged(
-            "topk_1m", self._merge_topk_fn, "topk_tiers=True")
-        if tier != "1m":
-            merged = cascade_topk(merged, tier, keys=self.keys, k=self.topk_k)
-        return finalize_topk(merged, top=top)
-
-    def compact_topk(self) -> None:
-        """Fold all top-k summary contributions into one (the hist
-        crash-safe rewrite protocol, fold manifest included)."""
-        self._rewrite_tier(
-            "topk_1m",
-            self._read_sketch_merged(
-                "topk_1m", self._merge_topk_fn, "topk_tiers=True"),
-            manifest=self._sketch_fold_manifest("topk_1m"),
-        )
-
-    # ------------------------------------------- Count-Min frequency tiers
-
-    def _merge_cms_fn(self, raw: DataFrame) -> DataFrame:
-        from gensor_spark.operators.cmsketch import merge_cms
-
-        return merge_cms(raw, [*self.keys, "bin_ts"])
-
-    def _store_cms_batch(self, points: DataFrame, sid: int) -> int:
-        """Write one contribution's 1m Count-Min counter partials."""
-        from gensor_spark.operators.cmsketch import rollup_cms
-
-        sk = rollup_cms(points, "1m", of=self.cms_of, keys=self.keys,
-                        depth=self.cms_depth, width=self.cms_width)
-        return self._write_counted(
-            sk, str(self.store / "tier_cms_1m" / f"batch={sid}")
-        )
+        Misra-Gries summaries — coarser tiers cascade at read via the MG
+        merge (certificate bounds preserved; operators/topkrollup.py)."""
+        return finalize_topk(self._read_sketch("topk", tier), top=top)
 
     def read_cms(self, tier: str = "1h", items: DataFrame | None = None,
                  item_col: str = "item") -> DataFrame:
         """Per-bin Count-Min state at ``tier`` from the stored 1m counters
         — coarser tiers cascade at read via counter sums (BIT-EXACT vs a
-        direct build; operators/cmsketch.py), the same bin-grain-only
-        contract as ``read_topk``. With ``items`` (a one-column DataFrame
-        whose type matches ``cms_of``), returns point-query estimates
-        ``keys..., bin_ts, item, est`` instead of raw counters."""
-        from gensor_spark.operators.cmsketch import cascade_cms, estimate_cms
-
-        merged = self._read_sketch_merged(
-            "cms_1m", self._merge_cms_fn, "cms_tiers=True")
-        if tier != "1m":
-            merged = cascade_cms(merged, tier, keys=self.keys)
+        direct build; operators/cmsketch.py). With ``items`` (a one-column
+        DataFrame whose type matches ``cms_of``), returns point-query
+        estimates ``keys..., bin_ts, item, est`` instead of raw counters."""
+        merged = self._read_sketch("cms", tier)
         if items is None:
             return merged
         return estimate_cms(merged, items, item_col=item_col,
                             keys=self.keys, depth=self.cms_depth,
                             width=self.cms_width)
 
+    def compact_hist(self) -> None:
+        """Fold all histogram contributions into one (crash-safe rewrite —
+        the same promote/rollback protocol as ``compact``). Absorbed stream
+        epochs are recorded in the tier's ``_folded.json`` so an
+        at-least-once replay of those epochs skips re-writing them."""
+        self._fold_sketch("hist")
+
+    def compact_distinct(self) -> None:
+        """Fold all distinct-sketch contributions into one."""
+        self._fold_sketch("distinct")
+
+    def compact_topk(self) -> None:
+        """Fold all top-k summary contributions into one."""
+        self._fold_sketch("topk")
+
     def compact_cms(self) -> None:
-        """Fold all Count-Min contributions into one (the hist crash-safe
-        rewrite protocol, fold manifest included). Counters are sums, so
+        """Fold all Count-Min contributions into one. Counters are sums, so
         the folded state is bit-identical to the unfolded union."""
-        self._rewrite_tier(
-            "cms_1m",
-            self._read_sketch_merged(
-                "cms_1m", self._merge_cms_fn, "cms_tiers=True"),
-            manifest=self._sketch_fold_manifest("cms_1m"),
-        )
+        self._fold_sketch("cms")
+
+    def apply_hist_retention(self, age: str, now) -> str:
+        """Drop 1m histogram bins older than ``now - age``; returns the ISO
+        cutoff applied."""
+        return self._fold_sketch("hist", _cutoff(age, now))
+
+    def apply_distinct_retention(self, age: str, now) -> str:
+        """Drop 1m HLL distinct-sketch bins older than ``now - age``."""
+        return self._fold_sketch("distinct", _cutoff(age, now))
+
+    def apply_topk_retention(self, age: str, now) -> str:
+        """Drop 1m Misra-Gries summary bins older than ``now - age``."""
+        return self._fold_sketch("topk", _cutoff(age, now))
 
     def apply_cms_retention(self, age: str, now) -> str:
         """Drop 1m Count-Min counter bins older than ``now - age``."""
-        return self._apply_sketch_retention(
-            "cms_1m", self._merge_cms_fn, "cms_tiers=True", age, now)
+        return self._fold_sketch("cms", _cutoff(age, now))
 
     # ------------------------------------------------------------------- read
 
@@ -861,30 +819,8 @@ class TierPipeline:
                 df = self.spark.read.option("basePath", str(base)).parquet(
                     *[str(p) for p in parts]
                 ).drop("batch")
-        if self.narrow_partials:
-            merged = widen_partials(
-                _merge_partials_narrow(df, [*self.keys, "bin"]),
-                tier, self.tick_seconds,
-            )
-        else:
-            merged = _merge_partials(df, [*self.keys, "bin_ts"])
+        merged = _merge_partials(df, [*self.keys, "bin_ts"])
         return finalize_tier(merged) if finalize else merged
-
-    def _read_merged_storage(self, tier: str) -> DataFrame:
-        """Merged tier in its STORAGE schema (narrow stays narrow) — the
-        input for compaction/retention rewrites, which must not change the
-        physical schema of the tier directory."""
-        self._recover_compact(tier)
-        df = self._bucketed_scan(tier)
-        if df is None:
-            base = self.store / f"tier_{tier}"
-            parts = sorted(base.glob("batch=*"))
-            df = self.spark.read.option("basePath", str(base)).parquet(
-                *[str(p) for p in parts]
-            ).drop("batch")
-        if self.narrow_partials:
-            return _merge_partials_narrow(df, [*self.keys, "bin"])
-        return _merge_partials(df, [*self.keys, "bin_ts"])
 
     def _compact_paths(self, tier: str) -> tuple[Path, Path, Path]:
         base = self.store / f"tier_{tier}"
@@ -918,7 +854,7 @@ class TierPipeline:
 
         Crash-safe: the current tier is renamed aside, not deleted, until the
         new copy is promoted — see ``_recover_compact`` for the repair of
-        every intermediate state. ``manifest`` (the hist tier's folded
+        every intermediate state. ``manifest`` (a sketch tier's folded
         stream epochs) is written INSIDE tmp before the promote rename, so
         the fold and its memory become visible in the same atomic step — no
         window where contributions are folded but the manifest is missing.
@@ -1046,13 +982,10 @@ class TierPipeline:
         if bucket is not None:
             if zorder:
                 raise ValueError("bucket and zorder are exclusive layouts")
-            if self.narrow_partials:
-                raise ValueError(
-                    "bucket compaction needs the wide partial schema")
             self._rewrite_tier_bucketed(
-                tier, self._read_merged_storage(tier), bucket)
+                tier, self.read_tier(tier, finalize=False), bucket)
             return
-        merged = self._read_merged_storage(tier)
+        merged = self.read_tier(tier, finalize=False)
         if zorder:
             from gensor_spark.plans.zorder import rank_scale, zvalue
 
@@ -1087,11 +1020,9 @@ class TierPipeline:
 
         if unit not in CALENDAR_UNITS:
             raise ValueError(f"unit must be one of {CALENDAR_UNITS}, got {unit!r}")
-        if self.narrow_partials:
-            raise ValueError("refresh_calendar needs the wide partial schema")
         if self.backend != "parquet":
             raise ValueError("refresh_calendar requires the parquet backend")
-        cal = cascade_calendar(self._read_merged_storage(from_tier), unit,
+        cal = cascade_calendar(self.read_tier(from_tier, finalize=False), unit,
                                keys=self.keys, finer_unit=from_tier)
         final, tmp, old = self._compact_paths(unit)
         if final.exists():
@@ -1121,13 +1052,11 @@ class TierPipeline:
 
         Returns tier → ISO cutoff actually applied.
         """
-        import pandas as pd
-
         applied: dict[str, str] = {}
         for tier, age in policy.items():
             if tier not in TIERS:
                 raise ValueError(f"unknown tier {tier!r}")
-            cutoff = (pd.Timestamp(now) - pd.Timedelta(age)).isoformat(sep=" ")
+            cutoff = _cutoff(age, now)
             # a tier never written yet (retention scheduled before first
             # ingest) is a no-op, not an abort-mid-policy crash — both
             # backends (iceberg tier tables are created lazily on the first
@@ -1144,19 +1073,9 @@ class TierPipeline:
                     f"WHERE bin_ts < TIMESTAMP '{cutoff}'"
                 )
             else:
-                merged = self._read_merged_storage(tier)
-                if self.narrow_partials:
-                    # bin_ts = epoch0 + bin·step ≥ cutoff ⇔ bin ≥ ceil(…)
-                    from gensor_spark.operators.rollup import TIER_SECONDS
-
-                    step_us = TIER_SECONDS[tier] * 1_000_000
-                    cut_us = int(pd.Timestamp(cutoff).value // 1000)
-                    min_bin = -((1_704_067_200_000_000 - cut_us) // step_us)
-                    kept = merged.filter(F.col("bin") >= min_bin)
-                else:
-                    kept = merged.filter(
-                        F.col("bin_ts") >= F.lit(cutoff).cast("timestamp")
-                    )
+                kept = self.read_tier(tier, finalize=False).filter(
+                    F.col("bin_ts") >= F.lit(cutoff).cast("timestamp")
+                )
                 self._rewrite_tier(tier, kept)
             applied[tier] = cutoff
         if applied:

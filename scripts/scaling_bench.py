@@ -104,9 +104,7 @@ def runner(docs_dir: str, cpus: int, repeats: int = 1) -> None:
         # reduction). encode_blobs: the full north-star job includes the
         # Gorilla/DoD compression stage (Arrow-UDF numpy kernels).
         pipe = TierPipeline(spark, str(store), n_batches=2, tick_seconds=1,
-                            encode_blobs=True,
-                            narrow_partials=os.environ.get(
-                                "SPARK_GRAFT_NARROW") == "true")
+                            encode_blobs=True)
         t0 = time.perf_counter()
         pipe.run(docs)
         walls.append(round(time.perf_counter() - t0, 2))
@@ -183,11 +181,6 @@ def main() -> None:
         repeats = int(sys.argv[sys.argv.index("--repeats") + 1])
     if "--zstd" in sys.argv:
         os.environ["SPARK_GRAFT_SHUFFLE_CODEC"] = "zstd"
-    if "--narrow" in sys.argv:
-        # narrow partial-state rows (operators/rollup.py): int32 ordinals +
-        # float32 extrema through the Arrow boundary, cascade shuffles and
-        # the tier store — the wide-pair memory-traffic experiment
-        os.environ["SPARK_GRAFT_NARROW"] = "true"
 
     WORK.mkdir(parents=True, exist_ok=True)
     if "--skip-prepare" in sys.argv and (WORK / "docs" / "_SUCCESS").exists():

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -10,6 +12,26 @@ from gensor_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+
+
+def _half_of_ram() -> str | None:
+    """Half the machine's RAM as a JVM size string (Linux), else None."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"  # kB → MB, /2
+    except OSError:
+        pass
+    return None
+
+
+# The library's driver heap default (24g, what the benchmark measures) is
+# larger than many machines' RAM; a test JVM the OOM killer takes down fails
+# every later test with it. Size the test heap to the machine unless
+# SPARK_GRAFT_DRIVER_MEM is set explicitly.
+if (_heap := _half_of_ram()) is not None:
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _heap)
 
 
 @pytest.fixture(scope="session")

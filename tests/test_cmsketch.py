@@ -186,14 +186,14 @@ def test_cms_stream_epochs_equal_batch_and_retention(spark, tmp_path):
     from gensor_spark.operators.points import docs_to_points
     from gensor_spark.plans.incremental import TierPipeline
     from gensor_spark.sources.synth import synth_docs
-    from gensor_spark.streaming.cms_stream import make_cms_sink
+    from gensor_spark.streaming.sketch_stream import make_sketch_sink
 
     docs = synth_docs(spark, n_docs=60, seed=5, vocab=32, num_partitions=4)
     store = str(tmp_path / "store")
     pipe = TierPipeline(spark, store, n_batches=2, tick_seconds=60,
                         cms_tiers=True, cms_depth=3, cms_width=128)
     pipe.run(docs)
-    sink = make_cms_sink(store, depth=3, width=128)
+    sink = make_sketch_sink(store, "cms", depth=3, width=128)
     extra = docs_to_points(docs.limit(5), tick_seconds=60)
     sink(extra, 9)
 

@@ -136,10 +136,7 @@ def test_quantiles_within_2alpha_of_duckdb_exact(spark, pts):
 
 # ---------------------------------------------------- incremental pipeline
 
-def test_tierpipeline_dd_mode_matches_scratch(spark, tmp_path):
-    """TierPipeline(hist_tiers=True, hist_quantize_alpha=...) maintains the
-    DDSketch tiers incrementally: quantiles read from the store equal the
-    from-scratch rollup over all batches' points."""
+def _dd_pipeline_matches_scratch(spark, tmp_path, tick_seconds):
     from gensor_spark.plans.incremental import TierPipeline
     from gensor_spark.operators.points import docs_to_points
     from gensor_spark.sources.synth import synth_docs
@@ -147,12 +144,26 @@ def test_tierpipeline_dd_mode_matches_scratch(spark, tmp_path):
     docs = synth_docs(spark, n_docs=300, seed=11, num_partitions=4)
     # float-ize the token-derived values so the run exercises the float path
     pipe = TierPipeline(spark, str(tmp_path / "store"), n_batches=3,
-                        hist_tiers=True, hist_quantize_alpha=ALPHA)
+                        hist_tiers=True, hist_quantize_alpha=ALPHA,
+                        tick_seconds=tick_seconds)
     pipe.run(docs)
     stored = _rows(pipe.read_hist_quantiles("1h"))
-    pts = docs_to_points(docs)
+    pts = docs_to_points(docs, tick_seconds=tick_seconds)
     scratch = _rows(rollup_dd_quantiles(pts, "1h", alpha=ALPHA))
     assert stored == scratch
+
+
+def test_tierpipeline_dd_mode_matches_scratch(spark, tmp_path):
+    """TierPipeline(hist_tiers=True, hist_quantize_alpha=...) maintains the
+    DDSketch tiers incrementally: quantiles read from the store equal the
+    from-scratch rollup over all batches' points."""
+    _dd_pipeline_matches_scratch(spark, tmp_path, tick_seconds=60)
+
+
+def test_tierpipeline_dd_mode_uses_pipeline_tick(spark, tmp_path):
+    """DDSketch mode builds its 1m histograms on the point path, which must
+    explode the docs at the pipeline's tick_seconds, not the 60 s default."""
+    _dd_pipeline_matches_scratch(spark, tmp_path, tick_seconds=1)
 
 
 def test_alpha_requires_hist_tiers(spark, tmp_path):

@@ -16,7 +16,7 @@ from gensor_spark.operators.distinctrollup import finalize_distinct, rollup_dist
 from gensor_spark.operators.points import docs_to_points, events_to_points
 from gensor_spark.plans.incremental import TierPipeline
 from gensor_spark.sources.synth import synth_docs
-from gensor_spark.streaming.distinct_stream import make_distinct_sink, start_distinct_sink
+from gensor_spark.streaming.sketch_stream import make_sketch_sink, start_sketch_sink
 
 SF = "/root/testdata/sf0.001"
 
@@ -56,7 +56,7 @@ def test_streamed_distinct_equals_batch(spark, tmp_path_factory, tmp_path,
     schema = spark.read.parquet(in_dir).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = start_distinct_sink(stream, store, trigger_once=True)
+    q = start_sketch_sink(stream, store, "distinct", trigger_once=True)
     q.awaitTermination(180)
 
     pipe = TierPipeline(spark, store, distinct_tiers=True)
@@ -78,7 +78,7 @@ def test_stream_batch_share_store_and_folded_replay(spark, tmp_path_factory,
 
     pipe = TierPipeline(spark, store, n_batches=1, distinct_tiers=True)
     pipe.run(half_a)
-    sink = make_distinct_sink(store)
+    sink = make_sketch_sink(store, "distinct")
     sink(half_b_pts, 0)
 
     want = _estimates(finalize_distinct(rollup_distinct(pts, "1h")))

@@ -127,7 +127,7 @@ def test_distinct_retention(spark, tmp_path):
     from gensor_spark.operators.points import docs_to_points
     from gensor_spark.plans.incremental import TierPipeline
     from gensor_spark.sources.synth import synth_docs
-    from gensor_spark.streaming.distinct_stream import make_distinct_sink
+    from gensor_spark.streaming.sketch_stream import make_sketch_sink
 
     docs = synth_docs(spark, n_docs=60, seed=5, num_partitions=4)
     store = str(tmp_path / "store")
@@ -135,7 +135,7 @@ def test_distinct_retention(spark, tmp_path):
                         distinct_tiers=True)
     pipe.run(docs)
     # one stream contribution too, so retention's fold has an epoch to absorb
-    sink = make_distinct_sink(store)
+    sink = make_sketch_sink(store, "distinct")
     extra = docs_to_points(docs.limit(5), tick_seconds=60)
     sink(extra, 9)
 

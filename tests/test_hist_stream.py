@@ -19,7 +19,7 @@ from gensor_spark.operators.histquantiles import rollup_quantiles
 from gensor_spark.operators.points import docs_to_points, events_to_points
 from gensor_spark.plans.incremental import TierPipeline
 from gensor_spark.sources.synth import synth_docs
-from gensor_spark.streaming.hist_stream import start_hist_sink
+from gensor_spark.streaming.sketch_stream import start_sketch_sink
 
 SF = "/root/testdata/sf0.001"
 
@@ -56,7 +56,7 @@ def test_streamed_hist_equals_batch_percentiles(spark, tmp_path_factory,
     schema = spark.read.parquet(in_dir).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = start_hist_sink(stream, store, trigger_once=True)
+    q = start_sketch_sink(stream, store, "hist", trigger_once=True)
     q.awaitTermination(180)
 
     pipe = TierPipeline(spark, store, hist_tiers=True)
@@ -88,7 +88,7 @@ def test_stream_and_batch_contributions_share_one_store(spark,
     schema = spark.read.parquet(in_dir).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = start_hist_sink(stream, store, trigger_once=True)
+    q = start_sketch_sink(stream, store, "hist", trigger_once=True)
     q.awaitTermination(180)
 
     everything = pts.select("doc_id", "source", "ts", "value").unionByName(extra)
@@ -114,7 +114,7 @@ def test_epoch_replay_is_idempotent(spark, tmp_path_factory, tmp_path):
     for ck in ("c1", "c2"):  # second pass = full replay of both epochs
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(in_dir))
-        q = start_hist_sink(stream, store, trigger_once=True,
+        q = start_sketch_sink(stream, store, "hist", trigger_once=True,
                             checkpoint_dir=str(tmp_path / ck))
         q.awaitTermination(180)
 
@@ -145,7 +145,7 @@ def test_compact_then_replay_does_not_double_count(spark, tmp_path_factory,
     def run_pass(ck):
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(in_dir))
-        q = start_hist_sink(stream, store, trigger_once=True,
+        q = start_sketch_sink(stream, store, "hist", trigger_once=True,
                             checkpoint_dir=str(tmp_path / ck))
         q.awaitTermination(180)
 

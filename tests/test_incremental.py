@@ -232,33 +232,6 @@ def test_pipeline_tiers_match_pandas_reference(spark, docs, tmp_path):
         _assert_tiers_equal(got, want)
 
 
-def test_narrow_partials_match_wide_exactly(spark, docs, tmp_path):
-    """The narrow physical schema (int32 bin ordinals, float32 extrema) is a
-    pure representation change: finalized tiers are bit-identical to the
-    wide pipeline's, through ingest, compaction and retention."""
-    wide = TierPipeline(spark, str(tmp_path / "w"), n_batches=3)
-    narrow = TierPipeline(spark, str(tmp_path / "n"), n_batches=3,
-                          narrow_partials=True)
-    wide.run(docs)
-    narrow.run(docs)
-    for tier in ("1m", "1h", "1d"):
-        _assert_tiers_equal(_tier_pdf(wide.read_tier(tier)),
-                            _tier_pdf(narrow.read_tier(tier)))
-
-    # compaction keeps the narrow storage schema and the same results
-    narrow.compact("1h")
-    _assert_tiers_equal(_tier_pdf(wide.read_tier("1h")),
-                        _tier_pdf(narrow.read_tier("1h")))
-
-    # retention drops the same bins in both representations
-    cutoff_now = "2024-01-02 00:00:00"
-    wide.apply_retention({"1m": "12 hours"}, cutoff_now)
-    narrow.apply_retention({"1m": "12 hours"}, cutoff_now)
-    a, b = _tier_pdf(wide.read_tier("1m")), _tier_pdf(narrow.read_tier("1m"))
-    assert len(a) > 0
-    _assert_tiers_equal(a, b)
-
-
 def test_late_points_wave_matches_full_recompute(spark, docs, tmp_path):
     """Backfill: a late point delta folded in as a wave equals a from-scratch
     recompute over old+late points — the continuous-aggregate property.
@@ -294,14 +267,10 @@ def test_late_points_wave_matches_full_recompute(spark, docs, tmp_path):
     )
 
 
-def test_points_wave_rejects_bad_wave_and_narrow(spark, docs, tmp_path):
+def test_points_wave_rejects_bad_wave(spark, docs, tmp_path):
     pipe = TierPipeline(spark, str(tmp_path / "s1"), n_batches=4)
     with pytest.raises(ValueError, match="wave"):
         pipe.ingest_points_wave(docs_to_points(docs), wave=0)
-    narrow = TierPipeline(spark, str(tmp_path / "s2"), n_batches=4,
-                          narrow_partials=True)
-    with pytest.raises(NotImplementedError):
-        narrow.ingest_points_wave(docs_to_points(docs), wave=1)
 
 
 def test_hist_tiers_incremental_percentiles(spark, docs, tmp_path):
@@ -363,28 +332,6 @@ def test_hist_tiers_requires_parquet_backend(spark, tmp_path):
                      hist_tiers=True)
 
 
-def test_narrow_kernel_aborts_on_unrepresentable_values(spark):
-    """The narrow kernel's contract is abort-not-round: any stored value
-    (per-bin min/max/last) that does not survive a float32 round-trip —
-    e.g. a non-integer like 0.1, well under the 2^24 magnitude bound —
-    must raise, not silently lose precision."""
-    from gensor_spark.operators.rollup import rollup_docs_arrow_narrow
-
-    bad = spark.createDataFrame(
-        [("d1", "s", [1.0, 2.0, 0.1], 3)],
-        "doc_id string, source string, tokens array<double>, n_tok int",
-    )
-    with pytest.raises(Exception, match="float32"):
-        rollup_docs_arrow_narrow(bad, "1m", tick_seconds=60).collect()
-
-    ok = spark.createDataFrame(
-        [("d1", "s", [float(x) for x in range(100)], 100)],
-        "doc_id string, source string, tokens array<double>, n_tok int",
-    )
-    # tick=1s → 60 tokens per 1m bin → 100 integer tokens = 2 bins, no raise
-    assert rollup_docs_arrow_narrow(ok, "1m", tick_seconds=1).count() == 2
-
-
 def test_compact_zorder_preserves_results_and_drops_helpers(spark, docs, tmp_path):
     """Z-order compaction is a pure LAYOUT rewrite: tier contents identical,
     helper columns absent, file count as requested; iceberg backend refuses."""
@@ -427,8 +374,6 @@ def test_var_tiers_store_matches_direct_and_validates(spark, docs, tmp_path):
                 direct[col].to_numpy(), incr[col].to_numpy(), err_msg=col
             )
     # flag/backend validation
-    with pytest.raises(ValueError, match="narrow"):
-        TierPipeline(spark, store, var_tiers=True, narrow_partials=True)
     with pytest.raises(ValueError, match="parquet"):
         TierPipeline(spark, store, var_tiers=True, backend="iceberg")
 

@@ -212,7 +212,5 @@ def test_store_ohlc_moment_tiers_match_direct(spark, tmp_path):
                 direct[col].to_numpy(float), incr[col].to_numpy(float),
                 rtol=1e-6, atol=1e-9, err_msg=f"{tier}/{col}",
             )
-    with pytest.raises(ValueError, match="wide partial"):
-        TierPipeline(spark, store, ohlc_tiers=True, narrow_partials=True)
     with pytest.raises(ValueError, match="parquet"):
         TierPipeline(spark, store, moment_tiers=True, backend="iceberg")

@@ -23,7 +23,7 @@ from gensor_spark.operators.topkrollup import (
 )
 from gensor_spark.plans.incremental import TierPipeline
 from gensor_spark.sources.synth import synth_docs
-from gensor_spark.streaming.topk_stream import make_topk_sink, start_topk_sink
+from gensor_spark.streaming.sketch_stream import make_sketch_sink, start_sketch_sink
 
 SF = "/root/testdata/sf0.001"
 
@@ -71,7 +71,7 @@ def test_streamed_topk_equals_batch_exact_regime(spark, tmp_path_factory,
     schema = spark.read.parquet(in_dir).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = start_topk_sink(stream, store, k=512, trigger_once=True)
+    q = start_sketch_sink(stream, store, "topk", k=512, trigger_once=True)
     q.awaitTermination(180)
 
     pipe = TierPipeline(spark, store, topk_tiers=True, topk_k=512)
@@ -94,7 +94,7 @@ def test_streamed_topk_certificate_truncated(spark, tmp_path):
         .otherwise(F.col("value"))
     ).select("doc_id", "source", "ts", "value").cache()
     store = str(tmp_path / "store")
-    sink = make_topk_sink(store, k=k)
+    sink = make_sketch_sink(store, "topk", k=k)
     sink(pts.filter(F.second("ts") % 2 == 0), 0)
     sink(pts.filter(F.second("ts") % 2 == 1), 1)
 
@@ -139,7 +139,7 @@ def test_stream_batch_share_store_and_folded_replay(spark, tmp_path):
 
     pipe = TierPipeline(spark, store, n_batches=1, topk_tiers=True, topk_k=k)
     pipe.run(half_a)
-    sink = make_topk_sink(store, k=k)
+    sink = make_sketch_sink(store, "topk", k=k)
     sink(half_b_pts, 0)
 
     want = _by_bin(finalize_topk(rollup_topk(pts, "1h", k=k)))

@@ -257,7 +257,7 @@ def test_topk_retention(spark, tmp_path):
     from gensor_spark.operators.points import docs_to_points
     from gensor_spark.plans.incremental import TierPipeline
     from gensor_spark.sources.synth import synth_docs
-    from gensor_spark.streaming.topk_stream import make_topk_sink
+    from gensor_spark.streaming.sketch_stream import make_sketch_sink
 
     k = 64
     docs = synth_docs(spark, n_docs=60, seed=5, vocab=32, num_partitions=4)
@@ -266,7 +266,7 @@ def test_topk_retention(spark, tmp_path):
                         topk_tiers=True, topk_k=k)
     pipe.run(docs)
     # one stream contribution too, so retention's fold has an epoch to absorb
-    sink = make_topk_sink(store, k=k)
+    sink = make_sketch_sink(store, "topk", k=k)
     extra = docs_to_points(docs.limit(5), tick_seconds=60)
     sink(extra, 9)
 
