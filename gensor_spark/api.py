@@ -104,7 +104,7 @@ class Dataset:
         return popped, self._wrap(
             self.df.filter(~F.coalesce(cond, F.lit(False))))
 
-    def get_locations(self, limit: int = 10_000) -> list:
+    def get_locations(self, limit: int | None = 10_000) -> list:
         """gensor ``Dataset.get_locations`` (core/dataset.py:194): the
         distinct series ids, as a driver-side list (the reference API
         returns a Python list).

@@ -22,7 +22,9 @@ function of the value, so the (rep → count) map is a DDSketch, and
 - merging   = ``histquantiles.merge_hist``       (key-wise count addition),
 - cascading = ``histquantiles.cascade_hist``     (1m → 1h → 1d, no raw re-read),
 - quantiles = ``histquantiles.quantiles_from_hist`` (type-7 interpolation
-  over representatives).
+  over representatives; with ``tier=`` it reads finer or unmerged
+  sketches directly, so a coarser-tier quantile needs no merge or cascade
+  first).
 
 Every guarantee the hist tier family proves (merge associativity, cascade
 == direct, incremental maintenance through ``TierPipeline``, retention,
@@ -127,14 +129,15 @@ def rollup_dd_quantiles(
     keys: tuple[str, ...] = KEYS,
     via_tier: str | None = "1m",
 ) -> DataFrame:
-    """Relative-error quantiles at ``tier``, cascaded through ``via_tier``
-    DDSketch partials (set ``via_tier=None`` to sketch directly at
-    ``tier``). Both routes are exactly equal — quantization happens once,
-    at the leaves, so the cascade merges identical bucket keys."""
+    """Relative-error quantiles at ``tier`` from ``via_tier`` DDSketch
+    partials re-binned in the quantile window (set ``via_tier=None`` to
+    sketch directly at ``tier``). Both routes are exactly equal —
+    quantization happens once, at the leaves, so the re-binned entries
+    share bucket keys."""
     if via_tier is not None and _step(tier) % _step(via_tier) == 0 \
             and _step(via_tier) < _step(tier):
-        fine = rollup_dd(points, via_tier, alpha=alpha, keys=keys)
-        hist = cascade_dd(fine, tier, keys=keys)
-    else:
-        hist = rollup_dd(points, tier, alpha=alpha, keys=keys)
-    return quantiles_from_dd(hist, ps=ps, keys=keys)
+        return quantiles_from_dd(
+            rollup_dd(points, via_tier, alpha=alpha, keys=keys),
+            ps=ps, keys=keys, tier=tier)
+    return quantiles_from_dd(rollup_dd(points, tier, alpha=alpha, keys=keys),
+                             ps=ps, keys=keys)

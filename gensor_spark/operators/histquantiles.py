@@ -23,13 +23,20 @@ Plan shapes (all pure Catalyst, no Python):
 - ``rollup_hist``: groupBy (keys, bin, value) partial-count → regroup to a
   map. Two shuffles; the second is bin-grain (small).
 - ``cascade_hist``: explode the finer maps → re-sum at the coarser bin →
-  re-map. Operates on bin-grain rows only — never touches raw points.
-- ``quantiles_from_hist``: explode → ONE window (cumulative count, ordered
-  by value) → per-row interpolation flags → min-CASE aggregate. The window
-  and the final groupBy share the (keys, bin) hash partitioning, so one
-  Exchange serves both. Linear interpolation matches ``percentile_cont`` /
-  pandas ``quantile`` (type-7): h = (n−1)p, result = x_⌊h⌋ +
-  (h−⌊h⌋)·(x_⌊h⌋₊₁ − x_⌊h⌋).
+  re-map. Two shuffles over bin-grain rows — never touches raw points.
+  It builds a coarser tier's histograms; quantiles at a coarser tier do
+  not need them (below).
+- ``quantiles_from_hist``: explode → (with ``tier``) re-bin each entry →
+  ONE window (cumulative count, ordered by value) → per-row interpolation
+  flags → min-CASE aggregate. The window and the final groupBy share the
+  (keys, bin) hash partitioning, so one Exchange serves both. Its input
+  need not be merged: rows with equal values are window peers, so several
+  contributions or finer bins give the merged histogram's cumulative
+  counts, and a quantile read over stored 1m contributions at any coarser
+  tier is that one Exchange (merging and cascading first would make it
+  four).
+  Linear interpolation matches ``percentile_cont`` / pandas ``quantile``
+  (type-7): h = (n−1)p, result = x_⌊h⌋ + (h−⌊h⌋)·(x_⌊h⌋₊₁ − x_⌊h⌋).
 
 NULL values never enter the histogram (``quantile_cont`` semantics);
 all-NULL bins are absent rather than NULL-rowed.
@@ -170,14 +177,24 @@ def quantiles_from_hist(
     hists: DataFrame,
     ps: tuple[float, ...] = (0.5, 0.95, 0.99),
     keys: tuple[str, ...] = KEYS,
+    tier: str | None = None,
 ) -> DataFrame:
     """Exact linear-interpolation quantiles per (keys..., bin_ts).
+
+    ``hists`` may hold several rows per (keys, bin): unmerged contributions,
+    or with ``tier`` set, finer-tier histograms whose ``(value, count)``
+    entries are re-binned to ``tier``. The answer equals that of the
+    merged (and cascaded) histogram: the cumulative count's window has the
+    default RANGE frame, so rows with equal values are peers and all get
+    the merged entry's cumulative count.
 
     Output: ``keys..., bin_ts, p50, p95, ...`` (column per p, named by
     percent with a ``p`` prefix; 0.5 → ``p50``, 0.999 → ``p99_9``).
     """
     group = [*keys, "bin_ts"]
     ex = hists.select(*group, F.explode("hist").alias("_v", "_c"))
+    if tier is not None:
+        ex = ex.withColumn("bin_ts", bin_ts(F.col("bin_ts"), _step(tier)))
     w_ord = W.partitionBy(*group).orderBy("_v")
     w_all = W.partitionBy(*group).rowsBetween(
         W.unboundedPreceding, W.unboundedFollowing
@@ -211,14 +228,14 @@ def rollup_quantiles(
     keys: tuple[str, ...] = KEYS,
     via_tier: str | None = "1m",
 ) -> DataFrame:
-    """Exact per-bin quantiles at ``tier``, cascaded through ``via_tier``
-    histograms (the continuous-aggregate path — set ``via_tier=None`` to
-    histogram directly at ``tier``). Both routes are exactly equal; the
-    cascade is what an incremental deployment maintains."""
+    """Exact per-bin quantiles at ``tier`` from ``via_tier`` histograms
+    re-binned in the quantile window (the continuous-aggregate path — set
+    ``via_tier=None`` to histogram directly at ``tier``). Both routes are
+    exactly equal; the ``via_tier`` histograms are what an incremental
+    deployment maintains."""
     if via_tier is not None and _step(tier) % _step(via_tier) == 0 \
             and _step(via_tier) < _step(tier):
-        fine = rollup_hist(points, via_tier, keys=keys)
-        hist = cascade_hist(fine, tier, keys=keys)
-    else:
-        hist = rollup_hist(points, tier, keys=keys)
-    return quantiles_from_hist(hist, ps=ps, keys=keys)
+        return quantiles_from_hist(rollup_hist(points, via_tier, keys=keys),
+                                   ps=ps, keys=keys, tier=tier)
+    return quantiles_from_hist(rollup_hist(points, tier, keys=keys),
+                               ps=ps, keys=keys)

@@ -48,6 +48,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gensor_spark.operators.cmsketch import (
     cascade_cms,
@@ -326,6 +327,10 @@ class TierPipeline:
         #: scaling efficiency (the Amdahl term measured in BENCH/BASELINE.md).
         self.max_concurrent = max(1, max_concurrent)
         self._meta_lock = threading.Lock()
+        #: data schema (without the ``batch`` partition column) of each
+        #: tier directory this pipeline has read, by directory name — see
+        #: ``_scan``. Cleared by ``reset()``.
+        self._schemas: dict[str, StructType] = {}
         self.store.mkdir(parents=True, exist_ok=True)
 
     # ------------------------------------------------------------- checkpoint
@@ -647,11 +652,10 @@ class TierPipeline:
                        and p.name.split("=", 1)[1] not in folded)
         return parts, folded
 
-    def _read_sketch(self, family: str, tier: str = "1m",
+    def _sketch_scan(self, family: str,
                      parts: list[Path] | None = None) -> DataFrame:
-        """Merged partials of ``family`` at ``tier``: the 1m contributions
-        (``parts``, default all visible ones) merge per (series, bin), and
-        coarser tiers cascade from the merged 1m state."""
+        """The unmerged 1m contributions of ``family`` (``parts``, default
+        all visible ones): one row per (contribution, series, bin)."""
         fam = _SKETCH_FAMILIES[family]
         base = self.store / f"tier_{fam.tier}"
         if parts is None:
@@ -662,11 +666,17 @@ class TierPipeline:
                 f"no partials under {base} — construct the pipeline with "
                 f"{family}_tiers=True and run() it first"
             )
+        return self._scan(base, parts)
+
+    def _read_sketch(self, family: str, tier: str = "1m",
+                     parts: list[Path] | None = None) -> DataFrame:
+        """Merged partials of ``family`` at ``tier``: the 1m contributions
+        (``parts``, default all visible ones) merge per (series, bin), and
+        coarser tiers cascade from the merged 1m state."""
+        fam = _SKETCH_FAMILIES[family]
         params = self._sketch_params(family)
-        raw = self.spark.read.option("basePath", str(base)).parquet(
-            *[str(p) for p in parts]
-        ).drop("batch")
-        merged = fam.merge(raw, [*self.keys, "bin_ts"], **params)
+        merged = fam.merge(self._sketch_scan(family, parts),
+                           [*self.keys, "bin_ts"], **params)
         if tier != "1m":
             merged = fam.cascade(merged, tier, keys=self.keys, **params)
         return merged
@@ -705,12 +715,14 @@ class TierPipeline:
         self, tier: str = "1h", ps: tuple[float, ...] = (0.5, 0.95, 0.99)
     ) -> DataFrame:
         """Exact per-bin percentiles at ``tier`` from the stored 1m
-        histograms — coarser tiers cascade at read (bin-grain explode +
-        re-sum, never a raw-point re-read), the same shape as
-        ``read_tier``'s cross-batch partial merge. Exactness argument and
-        plan audit: operators/histquantiles.py."""
-        return quantiles_from_hist(self._read_sketch("hist", tier), ps=ps,
-                                   keys=self.keys)
+        histograms. The visible contributions go to the quantile window
+        unmerged, re-binned to ``tier`` (bin-grain rows, never a raw-point
+        re-read): equal (value) rows of several contributions or finer bins
+        are window peers, so the answer equals the merged, cascaded
+        histogram's with one shuffle instead of four. Exactness argument
+        and plan audit: operators/histquantiles.py."""
+        return quantiles_from_hist(self._sketch_scan("hist"), ps=ps,
+                                   keys=self.keys, tier=tier)
 
     def read_distinct(self, tier: str = "1h") -> DataFrame:
         """Per-bin distinct-count estimates at ``tier`` from the stored 1m
@@ -816,11 +828,33 @@ class TierPipeline:
                         f"tier {tier!r} has no data under {base} — run() it "
                         "first (retention/compaction skip absent tiers)"
                     )
-                df = self.spark.read.option("basePath", str(base)).parquet(
-                    *[str(p) for p in parts]
-                ).drop("batch")
+                df = self._scan(base, parts)
         merged = _merge_partials(df, [*self.keys, "bin_ts"])
         return finalize_tier(merged) if finalize else merged
+
+    def _scan(self, base: Path, parts: list[Path]) -> DataFrame:
+        """Parquet scan of the contribution dirs ``parts`` of the tier
+        directory ``base``, without the ``batch`` partition column.
+
+        Only a directory's first scan infers the data schema (a one-task
+        Spark job over a footer, most of a small read's plan-build time);
+        later scans pass the remembered one. ``batch`` stays out of the
+        memo, so its type is still inferred from the paths. A pipeline's
+        flags fix each tier's columns for its lifetime, so the memo cannot
+        go stale; DataFrames are NOT reused across reads, because a file
+        index keeps the listing it was built with and a rerun batch or a
+        fold would leave it stale.
+        """
+        reader = self.spark.read.option("basePath", str(base))
+        known = self._schemas.get(base.name)
+        if known is not None:
+            reader = reader.schema(known)
+        df = reader.parquet(*[str(p) for p in parts])
+        if known is None:
+            # concurrent first reads may both infer; they store equal schemas
+            self._schemas[base.name] = StructType(
+                [f for f in df.schema.fields if f.name != "batch"])
+        return df.drop("batch")
 
     def _compact_paths(self, tier: str) -> tuple[Path, Path, Path]:
         base = self.store / f"tier_{tier}"
@@ -849,8 +883,9 @@ class TierPipeline:
             shutil.rmtree(tmp, ignore_errors=True)
 
     def _rewrite_tier(self, tier: str, partials: DataFrame,
-                      manifest: dict | None = None) -> None:
-        """Atomically replace a tier's contents (parquet backend).
+                      manifest: dict | None = None) -> int:
+        """Atomically replace a tier's contents (parquet backend); returns
+        the row count written.
 
         Crash-safe: the current tier is renamed aside, not deleted, until the
         new copy is promoted — see ``_recover_compact`` for the repair of
@@ -861,7 +896,7 @@ class TierPipeline:
         """
         final, tmp, old = self._compact_paths(tier)
         shutil.rmtree(tmp, ignore_errors=True)
-        partials.write.mode("overwrite").parquet(str(tmp / "batch=-1"))  # step 1
+        n = self._write_counted(partials, str(tmp / "batch=-1"))  # step 1
         if manifest is not None:
             (tmp / "_folded.json").write_text(json.dumps(manifest))
         # a plain rewrite replaces any bucketed layout: retire the catalog
@@ -872,6 +907,7 @@ class TierPipeline:
         os.replace(final, old)  # step 2: set aside, never rmtree the live tier
         os.replace(tmp, final)  # step 3: promote
         shutil.rmtree(old)  # step 4: cleanup
+        return n
 
     def _drop_bucket_table(self, tier: str) -> None:
         try:
@@ -1026,12 +1062,11 @@ class TierPipeline:
                                keys=self.keys, finer_unit=from_tier)
         final, tmp, old = self._compact_paths(unit)
         if final.exists():
-            self._rewrite_tier(unit, cal)
+            n = self._rewrite_tier(unit, cal)
         else:
             shutil.rmtree(tmp, ignore_errors=True)
-            cal.write.mode("overwrite").parquet(str(tmp / "batch=-1"))
+            n = self._write_counted(cal, str(tmp / "batch=-1"))
             os.replace(tmp, final)
-        n = self.spark.read.parquet(str(final / "batch=-1")).count()
         self._lineage_row({"calendar_refresh": {"unit": unit,
                                                 "from": from_tier, "rows": n}})
         return n
@@ -1091,6 +1126,7 @@ class TierPipeline:
                 self.iceberg.drop(tier)
         shutil.rmtree(self.store, ignore_errors=True)
         self.store.mkdir(parents=True, exist_ok=True)
+        self._schemas.clear()
 
 
 def read_range(

@@ -240,11 +240,12 @@ FROM pts GROUP BY 1, 2
 
 
 def q_rollup_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact percentile tier (p50/p95/p99 per 1h bin), cascaded through 1m
+    """Exact percentile tier (p50/p95/p99 per 1h bin) from 1m
     value-histogram partials (operators/histquantiles.py) — the mergeable
     exact-quantile state the count/min/max/mean/last tiers cannot express.
-    The driver row deliberately exercises the CASCADED path (1m → 1h), so
-    the oracle proves the merge is lossless, not just the direct rollup."""
+    The driver row deliberately exercises the 1m → 1h path (1m entries
+    re-binned in the quantile window), so the oracle proves it lossless,
+    not just the direct rollup."""
     from gensor_spark.operators.histquantiles import rollup_quantiles
 
     out = rollup_quantiles(_points(spark, sf_dir), "1h",
@@ -1306,8 +1307,8 @@ def q_rollup_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_rollup_dd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DDSketch float-quantile tier (1h p50/p95/p99, cascaded through 1m
-    sketches; alpha=1% relative accuracy) — the unbounded-float counterpart
+    """DDSketch float-quantile tier (1h p50/p95/p99 from 1m sketches;
+    alpha=1% relative accuracy) — the unbounded-float counterpart
     of the exact hist tier, over the continuous events.value domain the
     integer histogram cannot bound. Registry entry outside the driver
     window (bucket boundaries depend on libm ``log``, so a cross-engine

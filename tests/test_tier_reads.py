@@ -1,0 +1,151 @@
+"""The tier read path: the per-pipeline schema memo behind every tier scan,
+and histogram quantile reads straight from the unmerged 1m contributions.
+
+A tier read passes the schema it remembers for the directory instead of
+letting Spark infer it with a job; the memo must equal what a fresh
+inference gives after every kind of write the store sees. A quantile read
+re-bins the visible contributions inside the quantile window; it must equal
+merge → cascade → quantiles exactly, with one hash exchange.
+"""
+
+from __future__ import annotations
+
+import uuid
+
+import pytest
+from pyspark.sql.types import StructType
+
+from gensor_spark.operators.histquantiles import (
+    cascade_hist,
+    merge_hist,
+    quantiles_from_hist,
+)
+from gensor_spark.operators.points import docs_to_points
+from gensor_spark.plans.incremental import TierPipeline
+from gensor_spark.sources.synth import synth_docs
+from gensor_spark.streaming.sketch_stream import make_sketch_sink
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    # ~12 docs × up to ~2 days of 1-minute points
+    return synth_docs(spark, n_docs=12, seed=5, min_tok=100,
+                      max_tok=3000).cache()
+
+
+def _late(points, mod: int, rem: int, shift_s: int, add: int):
+    """A late delta that lands in bins the batches already cover."""
+    return points.filter(f"seq % {mod} = {rem}").selectExpr(
+        "doc_id", "source", "seq",
+        f"ts + INTERVAL {shift_s} SECONDS AS ts", f"value + {add} AS value")
+
+
+def _fresh_schema(spark, base) -> StructType:
+    parts = sorted(str(p) for p in base.glob("batch=*")
+                   if (p / "_SUCCESS").exists())
+    df = spark.read.option("basePath", str(base)).parquet(*parts)
+    return StructType([f for f in df.schema.fields if f.name != "batch"])
+
+
+def _read_every_tier(pipe: TierPipeline) -> None:
+    """Build (no action) a read of every tier directory in the store."""
+    for d in sorted(pipe.store.glob("tier_*")):
+        name = d.name[len("tier_"):]
+        if name == "hist_1m":
+            pipe.read_hist_quantiles("1h")
+        else:
+            pipe.read_tier(name)
+
+
+def test_schema_memo_matches_fresh_inference(spark, docs, tmp_path):
+    pipe = TierPipeline(spark, str(tmp_path / "store"), n_batches=2,
+                        hist_tiers=True)
+    points = docs_to_points(docs)
+    cal_rows = []
+
+    def refresh():
+        cal_rows.append(pipe.refresh_calendar("month"))
+
+    steps = [
+        ("run", lambda: pipe.run(docs)),
+        ("wave", lambda: pipe.ingest_points_wave(
+            _late(points, 13, 5, 30, 7), wave=1)),
+        ("compact 1m", lambda: pipe.compact("1m")),
+        ("retention", lambda: pipe.apply_retention(
+            {"1m": "1 day", "1h": "30 days"}, now="2024-01-03")),
+        ("compact_hist", pipe.compact_hist),
+        ("hist epoch", lambda: make_sketch_sink(str(pipe.store), "hist")(
+            _late(points, 17, 3, 10, 3).drop("seq"), 9)),
+        ("calendar", refresh),
+        ("calendar again", refresh),
+    ]
+    for step, act in steps:
+        act()
+        _read_every_tier(pipe)
+        tiers = sorted(d.name for d in pipe.store.glob("tier_*"))
+        assert sorted(pipe._schemas) == tiers, step
+        for name in tiers:
+            assert pipe._schemas[name] == _fresh_schema(
+                spark, pipe.store / name), (step, name)
+        assert "batch" not in {
+            f.name for s in pipe._schemas.values() for f in s.fields}
+
+    # refresh_calendar's row count comes from its write, on both branches
+    assert cal_rows == [pipe.read_tier("month").count()] * 2
+    pipe.reset()
+    assert pipe._schemas == {}
+
+
+def _jobs_submitted(spark, build) -> int:
+    sc = spark.sparkContext
+    group = f"tier-reads-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one plan build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker learns of jobs through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_tier_read_builds_without_a_job(spark, docs, tmp_path):
+    pipe = TierPipeline(spark, str(tmp_path / "store"), n_batches=2)
+    pipe.run(docs)
+    pipe.read_tier("1m")  # the first build infers the schema
+    assert _jobs_submitted(spark, lambda: pipe.read_tier("1m")) == 0
+
+
+def test_hist_quantile_read_equals_merge_cascade(spark, docs, tmp_path):
+    pipe = TierPipeline(spark, str(tmp_path / "store"), n_batches=2,
+                        hist_tiers=True)
+    pipe.run(docs)
+    points = docs_to_points(docs)
+    pipe.ingest_points_wave(_late(points, 13, 5, 30, 7), wave=1)
+    make_sketch_sink(str(pipe.store), "hist")(
+        _late(points, 11, 2, 20, 1).drop("seq"), 4)
+    base = pipe.store / "tier_hist_1m"
+    keys = [*pipe.keys, "bin_ts"]
+
+    def check() -> None:
+        parts = sorted(str(p) for p in base.glob("batch=*"))
+        raw = spark.read.option("basePath", str(base)).parquet(
+            *parts).drop("batch")
+        merged = merge_hist(raw, keys)
+        for tier in ("1m", "1h", "1d"):
+            want = quantiles_from_hist(
+                merged if tier == "1m" else cascade_hist(merged, tier),
+                keys=pipe.keys)
+            got = pipe.read_hist_quantiles(tier)
+            assert got.count() == want.count() > 0
+            assert got.exceptAll(want).count() == 0, tier
+            assert want.exceptAll(got).count() == 0, tier
+            plan = got._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("Exchange hashpartitioning") == 1, plan
+
+    assert len(list(base.glob("batch=*"))) > 3  # batches, wave, epoch s4
+    check()
+    pipe.compact_hist()
+    assert [p.name for p in base.glob("batch=*")] == ["batch=-1"]
+    check()
