@@ -31,16 +31,18 @@ from pyspark.sql import types as T
 
 
 def _funnel_kernel(
-    ts: np.ndarray, step_idx: np.ndarray, k: int, window_us: int
+    ts: np.ndarray, step_idx: np.ndarray, starts: list, window_us: int
 ) -> tuple[int, float]:
     """(max level, start ts of a maximal chain) for one key's events,
-    sorted by (ts, step_idx). Greedy latest-start DP: among chains
-    reaching step i, only the start time matters for extendability (the
-    window binds on it; ordering is satisfied by the scan), so the chain
-    with the latest start dominates — keeping just that one is optimal
-    (pinned vs exponential brute force in tests). Each event type IS one
-    step (steps are distinct), so an event updates exactly one level."""
-    starts = [None] * k  # latest chain-start reaching step i
+    sorted by (ts, step_idx), folded into ``starts`` in place: the latest
+    chain-start reaching step i (None = unset), ``[None] * k`` for a fresh
+    key; a stream carries it across micro-batches. Greedy latest-start DP:
+    among chains reaching step i, only the start time matters for
+    extendability (the window binds on it; ordering is satisfied by the
+    scan), so the chain with the latest start dominates — keeping just
+    that one is optimal (pinned vs exponential brute force in tests). Each
+    event type IS one step (steps are distinct), so an event updates
+    exactly one level."""
     for t, i in zip(ts, step_idx):
         if i == 0:
             if starts[0] is None or t > starts[0]:
@@ -49,10 +51,32 @@ def _funnel_kernel(
             prev = starts[i - 1]
             if starts[i] is None or prev > starts[i]:
                 starts[i] = prev
-    for lvl in range(k - 1, -1, -1):
+    for lvl in range(len(starts) - 1, -1, -1):
         if starts[lvl] is not None:
             return lvl + 1, float(starts[lvl])
     return 0, float("nan")
+
+
+def _step_events(events: DataFrame, steps: list[str], window_seconds: int,
+                 event_col: str, *cols) -> tuple[DataFrame, int]:
+    """Check the funnel arguments; return ``cols`` + the step index
+    ``_step`` of the step events only, and the window in µs. The index is
+    a Catalyst CASE, so non-step events drop before the kernel ever sees
+    them (column pruning + filter at the scan)."""
+    if len(steps) < 2:
+        raise ValueError(f"need at least 2 steps, got {len(steps)}")
+    if len(set(steps)) != len(steps):
+        raise ValueError("steps must be distinct event types")
+    if window_seconds <= 0:
+        raise ValueError(f"window_seconds must be > 0, got {window_seconds}")
+    from pyspark.sql import functions as F
+
+    idx = F.lit(None).cast("int")
+    for i, s in reversed(list(enumerate(steps))):
+        idx = F.when(F.col(event_col) == s, i).otherwise(idx)
+    slim = events.select(*cols, idx.alias("_step"))
+    return (slim.filter(F.col("_step").isNotNull()),
+            int(window_seconds) * 1_000_000)
 
 
 def window_funnel(
@@ -70,28 +94,14 @@ def window_funnel(
     one maximal chain (NULL at level 0). Keys with NO step events emit
     nothing — they are filtered before the kernel (left-join the key
     universe if zero rows are wanted)."""
-    if len(steps) < 2:
-        raise ValueError(f"need at least 2 steps, got {len(steps)}")
-    if len(set(steps)) != len(steps):
-        raise ValueError("steps must be distinct event types")
-    if window_seconds <= 0:
-        raise ValueError(f"window_seconds must be > 0, got {window_seconds}")
     from pyspark.sql import functions as F
 
     from gensor_spark.operators.udfkernel import per_series_map
 
-    window_us = int(window_seconds) * 1_000_000
+    slim, window_us = _step_events(
+        events, steps, window_seconds, event_col, *keys,
+        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("_us"))
     k = len(steps)
-    # step index as a Catalyst CASE: non-step events drop before the
-    # kernel ever sees them (column pruning + filter at the scan)
-    idx = F.lit(None).cast("int")
-    for i, s in reversed(list(enumerate(steps))):
-        idx = F.when(F.col(event_col) == s, i).otherwise(idx)
-    slim = events.select(
-        *keys,
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("_us"),
-        idx.alias("_step"),
-    ).filter(F.col("_step").isNotNull())
     schema = T.StructType(
         [f for f in slim.schema.fields if f.name in keys]
         + [T.StructField("level", T.IntegerType()),
@@ -103,7 +113,8 @@ def window_funnel(
         # chain (documented non-strict semantics)
         pdf = pdf.sort_values(["_us", "_step"], kind="stable")
         lvl, start = _funnel_kernel(
-            pdf["_us"].to_numpy(), pdf["_step"].to_numpy(), k, window_us)
+            pdf["_us"].to_numpy(), pdf["_step"].to_numpy(), [None] * k,
+            window_us)
         out = pdf.iloc[:1][list(keys)].copy()
         out["level"] = np.int32(lvl)
         out["chain_start_us"] = pd.array(

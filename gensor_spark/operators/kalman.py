@@ -37,6 +37,8 @@ kernel stage carries no cross-series state.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -45,36 +47,37 @@ from pyspark.sql import types as T
 KEYS = ("doc_id", "source")
 
 
-def _kalman_kernel(
-    y: np.ndarray, q: float, r: float
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
-    """Filter + RTS smoother for one series. Returns
-    ``(filtered, smoothed, smoothed_var, concentrated_loglik_part)`` where
-    the last value is ``(n_eff·log(sigma2_hat) + sum(log s_t))`` — the
-    quantity ``_mle_ratio`` minimizes (r=1 scaling; see there).
-    NaN positions predict through; positions before the first observation
-    stay NaN everywhere.
-    """
+def _kalman_filter(
+    y: np.ndarray, q: float, r: float, a: float = np.nan, p: float = np.nan
+) -> tuple[int, np.ndarray, np.ndarray, np.ndarray, np.ndarray,
+           float, float, int]:
+    """Forward filter pass from the posterior ``(a, p)``; NaN ``a`` is the
+    diffuse start (the first observation sets a = y, p = r). Returns
+    ``(first, a_f, p_f, a_p, p_p, ll_s, ll_e, n_eff)``: ``first`` is the
+    first position with a state (``len(y)`` if none), ``a_f``/``p_f`` the
+    filtered mean/variance (NaN before ``first``), ``a_p``/``p_p`` the
+    one-step predictions (set after ``first``), and the likelihood sums
+    over observations after the first: ``sum log s_t``, ``sum e_t^2/s_t``
+    and their count. The stream carries ``(a_f[-1], p_f[-1])``."""
     n = len(y)
-    filt = np.full(n, np.nan)
-    smoo = np.full(n, np.nan)
-    svar = np.full(n, np.nan)
-    obs = np.flatnonzero(~np.isnan(y))
-    if len(obs) == 0:
-        return filt, smoo, svar, np.nan
-    first = obs[0]
-    # per-step stores for the RTS pass (indices first..n-1)
-    a_f = np.empty(n)   # a_{t|t}
-    p_f = np.empty(n)   # P_{t|t}
-    a_p = np.empty(n)   # a_{t|t-1}
-    p_p = np.empty(n)   # P_{t|t-1}
-    a, p = y[first], r  # exact-diffuse posterior after the first obs
-    a_f[first] = a_p[first] = a
-    p_f[first] = p_p[first] = p
+    a_f = np.full(n, np.nan)   # a_{t|t}
+    p_f = np.full(n, np.nan)   # P_{t|t}
+    a_p = np.empty(n)          # a_{t|t-1}
+    p_p = np.empty(n)          # P_{t|t-1}
+    first = start = 0
+    if math.isnan(a):
+        obs = np.flatnonzero(~np.isnan(y))
+        if len(obs) == 0:
+            return n, a_f, p_f, a_p, p_p, 0.0, 0.0, 0
+        first = obs[0]
+        a, p = y[first], r  # exact-diffuse posterior after the first obs
+        a_f[first] = a_p[first] = a
+        p_f[first] = p_p[first] = p
+        start = first + 1
     ll_s = 0.0   # sum log s_t over post-first observations
     ll_e = 0.0   # sum e_t^2 / s_t over post-first observations
     n_eff = 0
-    for t in range(first + 1, n):
+    for t in range(start, n):
         a_prior, p_prior = a, p + q
         a_p[t], p_p[t] = a_prior, p_prior
         if np.isnan(y[t]):
@@ -89,7 +92,25 @@ def _kalman_kernel(
             ll_e += e * e / s
             n_eff += 1
         a_f[t], p_f[t] = a, p
-    filt[first:] = a_f[first:]
+    return first, a_f, p_f, a_p, p_p, ll_s, ll_e, n_eff
+
+
+def _kalman_kernel(
+    y: np.ndarray, q: float, r: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
+    """Filter + RTS smoother for one series. Returns
+    ``(filtered, smoothed, smoothed_var, concentrated_loglik_part)`` where
+    the last value is ``(n_eff·log(sigma2_hat) + sum(log s_t))`` — the
+    quantity ``_mle_ratio`` minimizes (r=1 scaling; see there).
+    NaN positions predict through; positions before the first observation
+    stay NaN everywhere.
+    """
+    n = len(y)
+    first, a_f, p_f, a_p, p_p, ll_s, ll_e, n_eff = _kalman_filter(y, q, r)
+    smoo = np.full(n, np.nan)
+    svar = np.full(n, np.nan)
+    if first == n:
+        return a_f, smoo, svar, np.nan
     # RTS backward pass
     sm = a_f[n - 1]
     sv = p_f[n - 1]
@@ -102,9 +123,9 @@ def _kalman_kernel(
         smoo[t] = sm
         svar[t] = sv
     if n_eff == 0:
-        return filt, smoo, svar, np.nan
+        return a_f, smoo, svar, np.nan
     sigma2 = ll_e / n_eff
-    return filt, smoo, svar, n_eff * np.log(max(sigma2, 1e-300)) + ll_s
+    return a_f, smoo, svar, n_eff * np.log(max(sigma2, 1e-300)) + ll_s
 
 
 def _mle_ratio(y: np.ndarray, lo: float = -8.0, hi: float = 8.0,

@@ -2335,7 +2335,7 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     out, _ = corpus_prep(docs, scrub=True, near_dedup=True,
                          minhash_threshold=0.6, temperature=0.7)
-    return out.select("doc_id", "source").orderBy("doc_id")
+    return out.select("doc_id", "source")
 
 
 QUERIES["spectral_anomaly"] = q_spectral_anomaly

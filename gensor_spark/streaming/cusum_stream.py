@@ -16,10 +16,9 @@ by the caller, or self-calibrated from the series' first ``warmup``
 observations (state carries the running calibration; alarms are suppressed
 during warmup). NaN observations pass through without touching the state.
 
-Same stateful shape as streaming_ewma (`applyInPandasWithState`,
-chunks concatenated + sorted ONCE per series per batch, event-time TTL):
-per-series state is 7 doubles, so a billion live series is ~56 GB of state
-store across the cluster — the monitoring-scale budget.
+Run by the shared stateful driver (``streaming/stateful.py``): per-series
+state is 7 doubles + the driver's ``last_us``, so a billion live series is
+~64 GB of state store across the cluster — the monitoring-scale budget.
 
 Exactness contract (pinned in tests): feeding the same in-order points
 through any epoch split yields bit-identical scores and alarms to a single
@@ -28,14 +27,9 @@ sequential pass — the recurrence state is the ONLY cross-batch memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -44,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from gensor_spark.streaming.stateful import stateful_stream
 
 CUSUM_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -55,16 +51,10 @@ CUSUM_SCHEMA = StructType([
     StructField("alarm", BooleanType()),
 ])
 
-STATE_SCHEMA = StructType([
-    StructField("s_pos", DoubleType()),
-    StructField("s_neg", DoubleType()),
-    StructField("n_cal", DoubleType()),
-    StructField("cal_sum", DoubleType()),
-    StructField("cal_sq", DoubleType()),
-    StructField("mu", DoubleType()),
-    StructField("sigma", DoubleType()),
-    StructField("last_us", DoubleType()),
-])
+_STATE_FIELDS = [
+    StructField(name, DoubleType())
+    for name in ("s_pos", "s_neg", "n_cal", "cal_sum", "cal_sq", "mu", "sigma")
+]
 
 
 def streaming_cusum(
@@ -89,82 +79,45 @@ def streaming_cusum(
     if not fixed and warmup < 2:
         raise ValueError(f"warmup must be >= 2 for self-calibration")
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-           ) -> Iterator[pd.DataFrame]:
-        doc_id, source = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            sp, sn, n_cal, cal_sum, cal_sq, mu, sigma, last_us = state.get
-        else:
-            sp = sn = n_cal = cal_sum = cal_sq = 0.0
-            mu = float(mu0) if fixed else np.nan
-            sigma = float(sigma0) if fixed else np.nan
-            last_us = None
+    init = (0.0, 0.0, 0.0, 0.0, 0.0,
+            float(mu0) if fixed else np.nan,
+            float(sigma0) if fixed else np.nan)
 
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf.sort_values("ts", kind="stable")
-            vals = pdf["value"].to_numpy(dtype=float)
-            out_p = np.full(len(vals), np.nan)
-            out_n = np.full(len(vals), np.nan)
-            alarm = np.zeros(len(vals), dtype=bool)
-            for i, v in enumerate(vals):
-                if np.isnan(v):
-                    continue
-                if np.isnan(sigma):  # self-calibration phase
-                    n_cal += 1.0
-                    cal_sum += v
-                    cal_sq += v * v
-                    if n_cal >= warmup:
-                        mu = cal_sum / n_cal
-                        var = cal_sq / n_cal - mu * mu
-                        # flat warmup: keep calibrating until spread appears
-                        if var > 0:
-                            sigma = float(np.sqrt(var))
-                    continue
-                z = (v - mu) / sigma
-                sp = max(0.0, sp + z - k)
-                sn = max(0.0, sn - z - k)
-                out_p[i] = sp
-                out_n[i] = sn
-                if sp > h or sn > h:
-                    alarm[i] = True
-                    if sp > h:
-                        sp = 0.0
-                    if sn > h:
-                        sn = 0.0
-            yield pd.DataFrame({
-                "doc_id": doc_id,
-                "source": source,
-                "ts": pdf["ts"].to_numpy(),
-                "value": pdf["value"].to_numpy(),
-                "s_pos": out_p,
-                "s_neg": out_n,
-                "alarm": alarm,
-            })
-            last_us = float(
-                pd.to_datetime(pdf["ts"]).astype("int64").to_numpy()[-1]
-                // 1000)
+    def step(key, state, pdf):
+        sp, sn, n_cal, cal_sum, cal_sq, mu, sigma, _ = state
+        vals = pdf["value"].to_numpy(dtype=float)
+        out_p = np.full(len(vals), np.nan)
+        out_n = np.full(len(vals), np.nan)
+        alarm = np.zeros(len(vals), dtype=bool)
+        for i, v in enumerate(vals):
+            if np.isnan(v):
+                continue
+            if np.isnan(sigma):  # self-calibration phase
+                n_cal += 1.0
+                cal_sum += v
+                cal_sq += v * v
+                if n_cal >= warmup:
+                    mu = cal_sum / n_cal
+                    var = cal_sq / n_cal - mu * mu
+                    # flat warmup: keep calibrating until spread appears
+                    if var > 0:
+                        sigma = float(np.sqrt(var))
+                continue
+            z = (v - mu) / sigma
+            sp = max(0.0, sp + z - k)
+            sn = max(0.0, sn - z - k)
+            out_p[i] = sp
+            out_n[i] = sn
+            if sp > h or sn > h:
+                alarm[i] = True
+                if sp > h:
+                    sp = 0.0
+                if sn > h:
+                    sn = 0.0
+        out = pdf[["doc_id", "source", "ts", "value"]].assign(
+            s_pos=out_p, s_neg=out_n, alarm=alarm)
+        return out, (sp, sn, n_cal, cal_sum, cal_sq, mu, sigma)
 
-        if last_us is not None:
-            state.update((float(sp), float(sn), float(n_cal),
-                          float(cal_sum), float(cal_sq),
-                          float(mu), float(sigma), last_us))
-            if state_ttl_seconds is not None:
-                state.setTimeoutTimestamp(
-                    int(last_us) // 1000 + state_ttl_seconds * 1000)
-
-    return (
-        points.withWatermark("ts", watermark)
-        .groupBy("doc_id", "source")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=CUSUM_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return stateful_stream(
+        points, ("doc_id", "source"), ["ts"], step, init, CUSUM_SCHEMA,
+        _STATE_FIELDS, watermark, state_ttl_seconds)

@@ -4,36 +4,29 @@ micro-batches.
 The batch operator (operators/funnel.window_funnel) is a greedy
 latest-start DP whose entire per-key memory is the ``starts`` vector (the
 latest chain-start timestamp per step) — which makes it a textbook
-``applyInPandasWithState`` operator: carry ``starts`` in GroupState, fold
-each micro-batch's events through the same kernel, emit the current level
-after every batch. A user's funnel deepens LIVE as events land, instead of
-waiting for the nightly batch.
+stateful stream (``streaming/stateful.py``): carry ``starts`` per key, fold
+each micro-batch's events through the same kernel
+(``funnel._funnel_kernel``), emit the current level after every batch. A
+user's funnel deepens LIVE as events land, instead of waiting for the
+nightly batch.
 
 Semantics, pinned to the batch operator over the concatenated in-order
-stream (tests): events must reach the operator in event-time order per key
-ACROSS batches (the rate_stream contract); within a micro-batch the
-operator concatenates the group's Arrow chunks and sorts once by
-(ts, step) — chunk-local sorting would mis-order chains that span chunks.
-Emits one row per key per micro-batch in which that key had step events:
-(keys, level, chain_start_us, batch_events) — ``level`` is the depth over
-ALL history, monotonically non-decreasing batch over batch (asserted in
-tests).
+stream (tests): within a micro-batch events sort by (ts, step), as in
+batch. Emits one row per key per micro-batch in which that key had step
+events: (keys, level, chain_start_us, batch_events) — ``level`` is the
+depth over ALL history, monotonically non-decreasing batch over batch
+(asserted in tests).
 
 State lifecycle: one k-long vector per live key; ``state_ttl_seconds``
-drops keys idle past the TTL (event-time watermark) — their next event
-starts a fresh funnel. Same staleness trade as rate_stream, documented.
+drops keys idle past the TTL — their next event starts a fresh funnel.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -43,6 +36,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gensor_spark.operators.funnel import _funnel_kernel, _step_events
+from gensor_spark.streaming.stateful import event_us, stateful_stream
+
 FUNNEL_SCHEMA = StructType([
     StructField("doc_id", StringType()),
     StructField("level", IntegerType()),
@@ -50,10 +46,7 @@ FUNNEL_SCHEMA = StructType([
     StructField("batch_events", LongType()),
 ])
 
-STATE_SCHEMA = StructType([
-    StructField("starts", ArrayType(LongType())),  # -1 encodes "unset"
-    StructField("last_us", LongType()),
-])
+_STATE_FIELDS = [StructField("starts", ArrayType(LongType()))]
 
 
 def streaming_window_funnel(
@@ -67,75 +60,23 @@ def streaming_window_funnel(
     state_ttl_seconds: int | None = 30 * 86400,
 ) -> DataFrame:
     """events stream → per-key funnel depth after each micro-batch."""
-    if len(steps) < 2 or len(set(steps)) != len(steps):
-        raise ValueError("steps must be >= 2 distinct event types")
-    if window_seconds <= 0:
-        raise ValueError(f"window_seconds must be > 0, got {window_seconds}")
-    k = len(steps)
-    window_us = int(window_seconds) * 1_000_000
+    slim, window_us = _step_events(
+        events, steps, window_seconds, event_col,
+        F.col(key_col).alias("doc_id"), F.col(ts_col).alias("ts"))
 
-    idx = F.lit(None).cast("int")
-    for i, s in reversed(list(enumerate(steps))):
-        idx = F.when(F.col(event_col) == s, i).otherwise(idx)
-    slim = events.select(
-        F.col(key_col).alias("doc_id"),
-        F.col(ts_col).alias("ts"),
-        idx.alias("_step"),
-    ).filter(F.col("_step").isNotNull())
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-           ) -> Iterator[pd.DataFrame]:
-        (doc_id,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        starts: list[int | None] = [None] * k
-        last_us = 0
-        if state.exists:
-            raw, last_us = state.get
-            starts = [None if v == -1 else int(v) for v in raw]
-
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        pdf = pdf.sort_values(["ts", "_step"], kind="stable")
-        ts_us = (pd.to_datetime(pdf["ts"]).astype("int64") // 1000).to_numpy()
-        # the batch kernel, folded from the carried state
-        for t, i in zip(ts_us, pdf["_step"].to_numpy()):
-            t = int(t)
-            i = int(i)
-            if i == 0:
-                if starts[0] is None or t > starts[0]:
-                    starts[0] = t
-            elif starts[i - 1] is not None and t - starts[i - 1] <= window_us:
-                prev = starts[i - 1]
-                if starts[i] is None or prev > starts[i]:
-                    starts[i] = prev
-        level, chain_start = 0, None
-        for lvl in range(k - 1, -1, -1):
-            if starts[lvl] is not None:
-                level, chain_start = lvl + 1, starts[lvl]
-                break
-        yield pd.DataFrame({
-            "doc_id": [doc_id],
+    def step(key, state, pdf):
+        starts = list(state[0])
+        level, start = _funnel_kernel(
+            event_us(pdf), pdf["_step"].to_numpy(), starts, window_us)
+        out = pd.DataFrame({
+            "doc_id": [key[0]],
             "level": pd.array([level], dtype="int32"),
-            "chain_start_us": pd.array([chain_start], dtype="Int64"),
+            "chain_start_us": pd.array([int(start) if level else None],
+                                       dtype="Int64"),
             "batch_events": pd.array([len(pdf)], dtype="int64"),
         })
-        last_us = max(last_us, int(ts_us[-1]))
-        state.update(([-1 if s is None else int(s) for s in starts], last_us))
-        if state_ttl_seconds is not None:
-            state.setTimeoutTimestamp(last_us // 1000 + state_ttl_seconds * 1000)
+        return out, ([None if s is None else int(s) for s in starts],)
 
-    return (
-        slim.withWatermark("ts", watermark)
-        .groupBy("doc_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=FUNNEL_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return stateful_stream(
+        slim, ("doc_id",), ["ts", "_step"], step, ([None] * len(steps),),
+        FUNNEL_SCHEMA, _STATE_FIELDS, watermark, state_ttl_seconds)

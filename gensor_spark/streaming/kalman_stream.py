@@ -8,10 +8,11 @@ streaming level estimator: gap-aware (variance inflates through missing
 observations), uncertainty-carrying (``k_pvar`` is the filtered variance;
 ±2σ = 2·sqrt(k_pvar)), and exactly resumable.
 
-Same stateful shape as streaming_cusum (``applyInPandasWithState``,
-chunks concatenated + sorted once per series per batch, event-time TTL):
-per-series state is (a, p) + a bookkeeping timestamp — three doubles, so
-a billion live series costs ~24 GB of state store cluster-wide.
+Each micro-batch runs the batch operator's own forward pass
+(``kalman._kalman_filter``) from the carried posterior (a, p), through the
+shared stateful driver (``streaming/stateful.py``): per-series state is
+(a, p) + the driver's ``last_us``, so a billion live series costs ~24 GB
+of state store cluster-wide.
 
 Exactness contract (pinned in tests): the emitted ``k_filt`` sequence is
 BIT-IDENTICAL to the batch operator's ``k_filt`` column under any epoch
@@ -27,13 +28,9 @@ first observation emit NaN.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
+
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -42,6 +39,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from gensor_spark.operators.kalman import _kalman_filter
+from gensor_spark.streaming.stateful import stateful_stream
+
 KALMAN_SCHEMA = StructType([
     StructField("doc_id", StringType()),
     StructField("source", StringType()),
@@ -49,12 +49,6 @@ KALMAN_SCHEMA = StructType([
     StructField("value", DoubleType()),
     StructField("k_filt", DoubleType()),
     StructField("k_pvar", DoubleType()),
-])
-
-STATE_SCHEMA = StructType([
-    StructField("a", DoubleType()),
-    StructField("p", DoubleType()),
-    StructField("last_us", DoubleType()),
 ])
 
 
@@ -70,71 +64,17 @@ def streaming_kalman(
     model x_t = x_{t-1} + N(0, q), y_t = x_t + N(0, r)."""
     if q <= 0 or r <= 0:
         raise ValueError("q and r must be positive")
-    qq, rr = float(q), float(r)
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-           ) -> Iterator[pd.DataFrame]:
-        doc_id, source = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            a, p, last_us = state.get
-        else:
-            a = p = np.nan
-            last_us = None
+    def step(key, state, pdf):
+        a, p, _ = state
+        _, filt, pvar, *_ = _kalman_filter(
+            pdf["value"].to_numpy(dtype=float), float(q), float(r), a, p)
+        out = pdf[["doc_id", "source", "ts", "value"]].assign(
+            k_filt=filt, k_pvar=pvar)
+        return out, (filt[-1], pvar[-1])
 
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf.sort_values("ts", kind="stable")
-            vals = pdf["value"].to_numpy(dtype=float)
-            filt = np.full(len(vals), np.nan)
-            pvar = np.full(len(vals), np.nan)
-            for i, v in enumerate(vals):
-                if np.isnan(a):
-                    # pre-first-observation: NaN out, state untouched
-                    if not np.isnan(v):
-                        a, p = v, rr  # exact-diffuse posterior
-                        filt[i] = a
-                        pvar[i] = p
-                    continue
-                p_prior = p + qq
-                if np.isnan(v):
-                    a, p = a, p_prior  # predict through the gap
-                else:
-                    s = p_prior + rr
-                    kgain = p_prior / s
-                    a = a + kgain * (v - a)
-                    p = (1.0 - kgain) * p_prior
-                filt[i] = a
-                pvar[i] = p
-            yield pd.DataFrame({
-                "doc_id": doc_id,
-                "source": source,
-                "ts": pdf["ts"].to_numpy(),
-                "value": pdf["value"].to_numpy(),
-                "k_filt": filt,
-                "k_pvar": pvar,
-            })
-            last_us = float(
-                pd.to_datetime(pdf["ts"]).astype("int64").to_numpy()[-1]
-                // 1000)
-
-        if last_us is not None:
-            state.update((float(a), float(p), last_us))
-            if state_ttl_seconds is not None:
-                state.setTimeoutTimestamp(
-                    int(last_us) // 1000 + state_ttl_seconds * 1000)
-
-    return (
-        points.withWatermark("ts", watermark)
-        .groupBy("doc_id", "source")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=KALMAN_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return stateful_stream(
+        points, ("doc_id", "source"), ["ts"], step, (np.nan, np.nan),
+        KALMAN_SCHEMA,
+        [StructField("a", DoubleType()), StructField("p", DoubleType())],
+        watermark, state_ttl_seconds)

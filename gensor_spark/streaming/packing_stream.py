@@ -5,8 +5,8 @@ The batch packer (operators/packing.py) cuts the doc-id-ordered corpus into
 ingest needs the same cut over an UNBOUNDED arrival stream: this operator
 packs per ``source`` in event-time arrival order, emitting every FULL chunk
 as soon as its tokens exist and carrying the remainder (< seq_len tokens)
-in GroupState to seed the next micro-batch — no token is ever dropped or
-duplicated, and chunk boundaries are exactly where a single sequential pass
+in per-source state to seed the next micro-batch — no token is ever dropped
+or duplicated, and chunk boundaries are exactly where a single sequential pass
 over the concatenated stream would put them.
 
 Per-source state = the leftover token array (≤ seq_len − 1 ints) + the
@@ -18,23 +18,17 @@ Exactness contract (pinned in tests): any epoch split of the same in-order
 stream yields the identical chunk sequence, and
 ``emitted tokens + carried remainder == ingested tokens`` at every point.
 
-Ordering note: like every recurrence stream in this package (ewma, rate,
-cusum), rows must reach the operator in event-time order per source; the
-operator concatenates all Arrow chunks of a micro-batch and sorts ONCE by
-``(ts, doc_id)`` — the deterministic tie-break makes same-timestamp docs
-pack identically on every replay.
+It runs on the shared stateful driver (``streaming/stateful.py``), which
+sorts each micro-batch once by ``(ts, doc_id)`` — the deterministic
+tie-break makes same-timestamp docs pack identically on every replay.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-from typing import Any
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -44,16 +38,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gensor_spark.streaming.stateful import stateful_stream
+
 PACK_SCHEMA = StructType([
     StructField("source", StringType()),
     StructField("chunk_seq", LongType()),
     StructField("tokens", ArrayType(IntegerType())),
 ])
 
-STATE_SCHEMA = StructType([
+_STATE_FIELDS = [
     StructField("carry", ArrayType(IntegerType())),
     StructField("next_seq", LongType()),
-])
+]
 
 
 def streaming_pack(
@@ -70,58 +66,25 @@ def streaming_pack(
     if seq_len < 1:
         raise ValueError(f"seq_len must be >= 1, got {seq_len}")
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-           ) -> Iterator[pd.DataFrame]:
-        (source,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            carry_raw, next_seq = state.get
-            carry = np.asarray(carry_raw if carry_raw is not None else [],
-                               dtype=np.int64)
-        else:
-            carry = np.empty(0, dtype=np.int64)
-            next_seq = 0
+    def step(key, state, pdf):
+        carry, next_seq, _ = state
+        flat = np.concatenate([np.asarray(carry, dtype=np.int64)] + [
+            np.asarray(t, dtype=np.int64)
+            for t in pdf["tokens"] if t is not None and len(t)
+        ])
+        n_full = len(flat) // seq_len
+        out = None
+        if n_full:
+            body = flat[: n_full * seq_len].reshape(n_full, seq_len)
+            out = pd.DataFrame({
+                "source": key[0],
+                "chunk_seq": np.arange(next_seq, next_seq + n_full,
+                                       dtype=np.int64),
+                "tokens": [row.astype(np.int32).tolist() for row in body],
+            })
+        carry = flat[n_full * seq_len:].astype(np.int32).tolist()
+        return out, (carry, next_seq + n_full)
 
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf.sort_values(["ts", "doc_id"], kind="stable")
-            arrs = [carry] + [
-                np.asarray(t, dtype=np.int64)
-                for t in pdf["tokens"] if t is not None and len(t)
-            ]
-            flat = np.concatenate(arrs) if arrs else carry
-            n_full = len(flat) // seq_len
-            if n_full:
-                body = flat[: n_full * seq_len].reshape(n_full, seq_len)
-                yield pd.DataFrame({
-                    "source": source,
-                    "chunk_seq": np.arange(next_seq, next_seq + n_full,
-                                           dtype=np.int64),
-                    "tokens": [row.astype(np.int32).tolist()
-                               for row in body],
-                })
-                next_seq += n_full
-            carry = flat[n_full * seq_len:]
-            last_us = int(
-                pd.to_datetime(pdf["ts"]).astype("int64").to_numpy()[-1]
-                // 1000)
-            state.update((carry.astype(np.int32).tolist() or None,
-                          int(next_seq)))
-            if state_ttl_seconds is not None:
-                state.setTimeoutTimestamp(
-                    last_us // 1000 + state_ttl_seconds * 1000)
-
-    return (
-        docs.withWatermark("ts", watermark)
-        .groupBy("source")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=PACK_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return stateful_stream(
+        docs, ("source",), ["ts", "doc_id"], step, ([], 0), PACK_SCHEMA,
+        _STATE_FIELDS, watermark, state_ttl_seconds)

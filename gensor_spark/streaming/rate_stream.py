@@ -1,12 +1,12 @@
 """Stateful streaming counter rate: the batch ``counter_rate`` semantics
-over an unbounded stream, with the previous sample carried in GroupState.
+over an unbounded stream, with the previous sample carried per series.
 
 The batch operator (operators/seriesstats.counter_rate — the adjacent-sample
 PromQL ``increase``/``rate`` form) needs only ``lag``; over a stream the lag
 partner of a micro-batch's FIRST point lives in the PREVIOUS micro-batch, so
-the operator needs true per-series state: ``applyInPandasWithState`` carrying
-``(last_ts, last_value)`` across batches — the same pattern as
-``streaming/sessions_stream.py``.
+the operator carries the last value (NaN for NULL) per series through the
+shared driver (``streaming/stateful.py``), whose ``last_us`` is the last
+sample's time.
 
 Semantics (append mode), pinned to the batch operator over the concatenated
 in-order stream:
@@ -16,38 +16,30 @@ in-order stream:
   value; gauges (``counter=False``) pass negative deltas through;
 - NULL values and non-positive Δt mask the affected increase/rate to NULL,
   never crash, and a NULL value becomes the carried "previous" exactly as
-  ``lag`` would;
-- rows must reach the operator in event-time order per series (file source
-  with time-split files, or any source after a watermark-sorted stage);
-  within a micro-batch the operator sorts by ``ts`` itself.
+  ``lag`` would.
 
-State lifecycle at web scale: every live series holds one 17-byte state row.
-``state_ttl_seconds`` bounds that — a series idle past the TTL (by event-time
-watermark) is dropped from state, and its next point behaves like a first
-point (NULL increase). That is monitoring staleness semantics, and it is the
-ONE deliberate divergence from replaying the batch operator over all history;
-set it long (default 30 days) or to ``None`` to never expire.
+``state_ttl_seconds`` drops a series idle past the TTL, and its next point
+behaves like a first point (NULL increase). That is monitoring staleness
+semantics, and it is the ONE deliberate divergence from replaying the batch
+operator over all history; set it long (default 30 days) or to ``None`` to
+never expire.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
-    LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
+
+from gensor_spark.streaming.stateful import event_us, stateful_stream
 
 RATE_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -57,12 +49,6 @@ RATE_SCHEMA = StructType([
     StructField("is_reset", BooleanType()),
     StructField("increase", DoubleType()),
     StructField("rate", DoubleType()),
-])
-
-STATE_SCHEMA = StructType([
-    StructField("last_us", LongType()),
-    StructField("last_val", DoubleType()),
-    StructField("last_val_null", BooleanType()),
 ])
 
 
@@ -75,77 +61,28 @@ def streaming_counter_rate(
 ) -> DataFrame:
     """points(doc_id, source, ts, value) stream → per-point increase/rate."""
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-           ) -> Iterator[pd.DataFrame]:
-        doc_id, source = key
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def step(key, state, pdf):
+        prev_val, prev_us = state
+        ts_us = event_us(pdf)
+        vals = pdf["value"].to_numpy(dtype=float)  # NULL → NaN
+        pv = np.concatenate(([prev_val], vals[:-1]))
+        p_us = np.concatenate(
+            ([np.nan if prev_us is None else float(prev_us)],
+             ts_us[:-1].astype(float)))
+        with np.errstate(invalid="ignore", divide="ignore"):
+            delta = vals - pv
+            dt = (ts_us.astype(float) - p_us) / 1e6
+            # batch-operator mask: non-positive Δt (duplicate ts) has no
+            # time base — NULL increase/rate, is_reset False
+            valid = dt > 0  # NaN compares False
+            reset = valid & (delta < 0) & bool(counter)
+            increase = np.where(valid, np.where(reset, vals, delta), np.nan)
+            rate = np.where(valid, increase / dt * per_seconds, np.nan)
+        out = pdf[["doc_id", "source", "ts", "value"]].assign(
+            is_reset=reset, increase=increase, rate=rate)
+        return out, (vals[-1],)
 
-        prev_us: int | None = None
-        prev_val = np.nan
-        if state.exists:
-            last_us, last_val, last_val_null = state.get
-            prev_us = last_us
-            prev_val = np.nan if last_val_null else float(last_val)
-
-        # Arrow hands the group as an ITERATOR of chunks (~10k rows each)
-        # in arbitrary order; sorting each chunk alone would pair lag
-        # partners wrongly whenever a series' micro-batch rows span chunks.
-        # Concatenate first, sort ONCE, compute once. Memory bound: one
-        # series' rows for one micro-batch — the same bound every
-        # applyInPandasWithState group already has.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf.sort_values("ts", kind="stable")
-            ts_us = (pd.to_datetime(pdf["ts"]).astype("int64") // 1000
-                     ).to_numpy()
-            vals = pdf["value"].to_numpy(dtype=float)  # NULL → NaN
-
-            pv = np.concatenate(([prev_val], vals[:-1]))
-            p_us = np.concatenate(
-                ([np.nan if prev_us is None else float(prev_us)],
-                 ts_us[:-1].astype(float))
-            )
-            with np.errstate(invalid="ignore", divide="ignore"):
-                delta = vals - pv
-                dt = (ts_us.astype(float) - p_us) / 1e6
-                # batch-operator mask: non-positive Δt (duplicate ts) has
-                # no time base — NULL increase/rate, is_reset False
-                valid = dt > 0  # NaN compares False
-                reset = valid & (delta < 0) & bool(counter)
-                increase = np.where(
-                    valid, np.where(reset, vals, delta), np.nan)
-                rate = np.where(valid, increase / dt * per_seconds, np.nan)
-
-            yield pd.DataFrame({
-                "doc_id": doc_id,
-                "source": source,
-                "ts": pdf["ts"].to_numpy(),
-                "value": pdf["value"].to_numpy(),
-                "is_reset": reset,
-                "increase": increase,
-                "rate": rate,
-            })
-            prev_us = int(ts_us[-1])
-            prev_val = float(vals[-1])
-
-        if prev_us is not None:
-            state.update((prev_us, float(np.nan_to_num(prev_val)),
-                          bool(np.isnan(prev_val))))
-            if state_ttl_seconds is not None:
-                state.setTimeoutTimestamp(
-                    prev_us // 1000 + state_ttl_seconds * 1000)
-
-    return (
-        points.withWatermark("ts", watermark)
-        .groupBy("doc_id", "source")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=RATE_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return stateful_stream(
+        points, ("doc_id", "source"), ["ts"], step, (np.nan,), RATE_SCHEMA,
+        [StructField("last_val", DoubleType())], watermark,
+        state_ttl_seconds)

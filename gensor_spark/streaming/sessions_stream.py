@@ -3,38 +3,32 @@
 The batch engine sessionizes with a lag-window (queries.q_gap_sessions —
 gensor's coverage gap segmentation, dataset.py:645-661). Over an unbounded
 stream that needs true per-key STATE: a session that is still open at the
-end of one micro-batch must continue in the next. This is the
-``applyInPandasWithState`` pattern the build brief names: per-group pandas
-logic with an explicit GroupState, Arrow-batched, with an event-time
-timeout flushing sessions that stopped receiving points.
+end of one micro-batch must continue in the next. It runs on the shared
+stateful driver (``streaming/stateful.py``), whose event-time timeout
+flushes sessions that stopped receiving points.
 
 Semantics (append mode):
-- points for a key arrive in event-time order across micro-batches (file
-  source with time-split files; late rows beyond the watermark are dropped
-  by the engine before reaching the operator);
 - a gap > ``gap_seconds`` between consecutive points closes the current
-  session and emits it; the trailing open session is kept in state;
+  session and emits it; the trailing open session is kept in state as
+  (start, point count), the driver's ``last_us`` being its last point;
 - when the watermark passes ``last_ts + gap_seconds`` without new points,
   the state times out and the open session is emitted.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
+
+from gensor_spark.streaming.stateful import event_us, stateful_stream
 
 SESSION_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -45,11 +39,17 @@ SESSION_SCHEMA = StructType([
     StructField("closed_by", StringType()),  # 'gap' | 'timeout'
 ])
 
-STATE_SCHEMA = StructType([
-    StructField("start_us", LongType()),
-    StructField("last_us", LongType()),
-    StructField("n", LongType()),
-])
+
+def _emit(key, sessions) -> pd.DataFrame:
+    doc_id, source = key
+    return pd.DataFrame({
+        "doc_id": doc_id,
+        "source": source,
+        "session_start": pd.to_datetime([s[0] for s in sessions], unit="us"),
+        "session_end": pd.to_datetime([s[1] for s in sessions], unit="us"),
+        "n_points": [s[2] for s in sessions],
+        "closed_by": [s[3] for s in sessions],
+    })
 
 
 def streaming_gap_sessions(points: DataFrame, gap_seconds: int = 3600,
@@ -57,59 +57,27 @@ def streaming_gap_sessions(points: DataFrame, gap_seconds: int = 3600,
     """points(doc_id, source, ts, value) stream → closed-session rows."""
     gap_us = gap_seconds * 1_000_000
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-           ) -> Iterator[pd.DataFrame]:
-        doc_id, source = key
-        if state.hasTimedOut:
-            start_us, last_us, n = state.get
-            state.remove()
-            yield _emit(doc_id, source, [(start_us, last_us, n, "timeout")])
-            return
+    def step(key, state, pdf):
+        start_us, n, last_us = state
+        closed = []
+        for t in event_us(pdf).tolist():
+            if start_us is None:
+                start_us, n = t, 1
+            elif t - last_us > gap_us:
+                closed.append((start_us, last_us, n, "gap"))
+                start_us, n = t, 1
+            else:
+                n += 1
+            last_us = t
+        return (_emit(key, closed) if closed else None), (start_us, n)
 
-        start_us = last_us = None
-        n = 0
-        if state.exists:
-            start_us, last_us, n = state.get
-        closed: list[tuple[int, int, int, str]] = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ts_us = (
-                pd.to_datetime(pdf["ts"]).astype("int64") // 1000
-            ).sort_values().to_numpy()
-            for t in ts_us:
-                if start_us is None:
-                    start_us, last_us, n = int(t), int(t), 1
-                elif t - last_us > gap_us:
-                    closed.append((start_us, last_us, n, "gap"))
-                    start_us, last_us, n = int(t), int(t), 1
-                else:
-                    last_us, n = int(t), n + 1
-        if start_us is not None:
-            state.update((int(start_us), int(last_us), int(n)))
-            # flush via timeout once the watermark passes the gap horizon
-            state.setTimeoutTimestamp(last_us // 1000 + gap_seconds * 1000)
-        if closed:
-            yield _emit(doc_id, source, closed)
+    def on_timeout(key, state):
+        start_us, n, last_us = state
+        return _emit(key, [(start_us, last_us, n, "timeout")])
 
-    def _emit(doc_id, source, sessions):
-        return pd.DataFrame({
-            "doc_id": doc_id,
-            "source": source,
-            "session_start": pd.to_datetime([s[0] for s in sessions], unit="us"),
-            "session_end": pd.to_datetime([s[1] for s in sessions], unit="us"),
-            "n_points": [s[2] for s in sessions],
-            "closed_by": [s[3] for s in sessions],
-        })
-
-    return (
-        points.withWatermark("ts", watermark)
-        .groupBy("doc_id", "source")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    # the TTL is the gap: the watermark passing the gap horizon flushes
+    return stateful_stream(
+        points, ("doc_id", "source"), ["ts"], step, (None, 0),
+        SESSION_SCHEMA,
+        [StructField("start_us", LongType()), StructField("n", LongType())],
+        watermark, gap_seconds, on_timeout)

@@ -1,49 +1,38 @@
 """Stateful streaming EWMA: the batch ``ewma`` semantics over an unbounded
-stream, with the decaying weight state carried in GroupState.
+stream, with the decaying weight state carried per series (run by the
+shared driver, ``streaming/stateful.py``).
 
-The batch operator (operators/seriesstats.ewma — pandas ``.ewm().mean()``
-exact) is a per-series recurrence; over a stream the recurrence state of a
-micro-batch's first point lives in the PREVIOUS micro-batch, so the operator
-carries true per-series state with ``applyInPandasWithState`` — the same
-pattern as ``streaming/rate_stream.py``.
+Both forms carry the (numerator, denominator) pair of the unbiased
+(``adjust=True``) exponential mean through ONE recurrence,
 
-The carried state is the (numerator, denominator) pair of the unbiased
-(``adjust=True``) exponential mean:
-
-    num_t = (1-alpha) * num_{t-1} + x_t      (x term only when observed)
-    den_t = (1-alpha) * den_{t-1} + 1
+    num_t = d_t * num_{t-1} + x_t      (x term only when observed)
+    den_t = d_t * den_{t-1} + 1
     ewma_t = num_t / den_t
 
-which reproduces pandas exactly for every NaN pattern: with
-``ignore_na=False`` (default) a missing observation still ages the weights
-(decay applies, no new term); with ``ignore_na=True`` it is skipped entirely.
-Either way the emitted value at a missing observation is the carried mean —
-exactly pandas' output. ``adjust=False`` is deliberately NOT offered here:
-its recurrence seeds from the first observation with biased weights and is
-available in batch; the unbiased form is the streaming-sane one (a restart
-mid-series changes nothing but the weight tail).
+and differ only in the decay vector ``d``:
 
-Semantics (append mode), pinned to the batch operator over the concatenated
-in-order stream by tests: rows must reach the operator in event-time order
-per series; within a micro-batch the operator concatenates ALL Arrow chunks
-and sorts ONCE (chunk-local sorting would mis-order the recurrence whenever
-a series' rows span chunks — the rate_stream lesson).
+- ``streaming_ewma``: ``d = 1-alpha`` per sample. This reproduces pandas
+  exactly for every NaN pattern: with ``ignore_na=False`` (default) a
+  missing observation still ages the weights (decay applies, no new term);
+  with ``ignore_na=True`` it is skipped entirely (``d = 1``). Either way the
+  emitted value at a missing observation is the carried mean — exactly
+  pandas' output. ``adjust=False`` is deliberately NOT offered here: its
+  recurrence seeds from the first observation with biased weights and is
+  available in batch; the unbiased form is the streaming-sane one (a
+  restart mid-series changes nothing but the weight tail).
+- ``streaming_ewma_halflife``: ``d = 0.5**(Δt/halflife)`` over event time,
+  the driver's ``last_us`` anchoring the first Δt of a batch.
 
-State lifecycle at web scale: every live series holds one 17-byte state row;
-``state_ttl_seconds`` (event-time timeout) drops idle series — their next
-point restarts the mean, the same staleness semantics as rate_stream.
+Both are pinned to their batch operator over any epoch split in tests.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+import math
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -52,19 +41,56 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-SMOOTH_SCHEMA = StructType([
-    StructField("doc_id", StringType()),
-    StructField("source", StringType()),
-    StructField("ts", TimestampType()),
-    StructField("value", DoubleType()),
-    StructField("ewma", DoubleType()),
-])
+from gensor_spark.streaming.stateful import event_us, stateful_stream
 
-STATE_SCHEMA = StructType([
+_COLS = ["doc_id", "source", "ts", "value"]
+
+
+def _out_schema(out_col: str) -> StructType:
+    return StructType([
+        StructField("doc_id", StringType()),
+        StructField("source", StringType()),
+        StructField("ts", TimestampType()),
+        StructField("value", DoubleType()),
+        StructField(out_col, DoubleType()),
+    ])
+
+
+SMOOTH_SCHEMA = _out_schema("ewma")
+SMOOTH_T_SCHEMA = _out_schema("ewma_t")
+
+_STATE_FIELDS = [
     StructField("num", DoubleType()),
     StructField("den", DoubleType()),
-    StructField("last_us", DoubleType()),
-])
+]
+
+
+def _decayed_mean(vals: np.ndarray, decay: np.ndarray, num: float,
+                  den: float) -> tuple[np.ndarray, float, float]:
+    """The shared recurrence over one batch from the carried (num, den)."""
+    out = np.empty(len(vals))
+    for i, (v, d) in enumerate(zip(vals.tolist(), decay.tolist())):
+        num *= d
+        den *= d
+        if not math.isnan(v):
+            num += v
+            den += 1.0
+        out[i] = num / den if den > 0.0 else np.nan
+    return out, num, den
+
+
+def _ewma_stream(points, decay_of, out_col, watermark, state_ttl_seconds):
+    """Run the recurrence with ``decay_of(vals, pdf, last_us)`` as ``d``."""
+    def step(key, state, pdf):
+        num, den, last_us = state
+        vals = pdf["value"].to_numpy(dtype=float)  # NULL → NaN
+        out, num, den = _decayed_mean(
+            vals, decay_of(vals, pdf, last_us), num, den)
+        return pdf[_COLS].assign(**{out_col: out}), (num, den)
+
+    return stateful_stream(
+        points, ("doc_id", "source"), ["ts"], step, (0.0, 0.0),
+        _out_schema(out_col), _STATE_FIELDS, watermark, state_ttl_seconds)
 
 
 def streaming_ewma(
@@ -74,79 +100,19 @@ def streaming_ewma(
     watermark: str = "1 minute",
     state_ttl_seconds: int | None = 30 * 86400,
 ) -> DataFrame:
-    """points(doc_id, source, ts, value) stream → per-point unbiased EWMA."""
+    """points(doc_id, source, ts, value) stream → per-point unbiased EWMA.
+    A series idle past ``state_ttl_seconds`` restarts its mean."""
     if not 0.0 < alpha <= 1.0:
         raise ValueError("alpha must be in (0, 1]")
-    decay = 1.0 - alpha
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-           ) -> Iterator[pd.DataFrame]:
-        doc_id, source = key
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def decay_of(vals, pdf, last_us):
+        skip = np.isnan(vals) & ignore_na
+        return np.where(skip, 1.0, 1.0 - alpha)
 
-        num, den, last_us = (state.get if state.exists else (0.0, 0.0, None))
-
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf.sort_values("ts", kind="stable")
-            vals = pdf["value"].to_numpy(dtype=float)  # NULL → NaN
-            out = np.empty(len(vals))
-            for i, v in enumerate(vals):
-                observed = not np.isnan(v)
-                if observed or not ignore_na:
-                    num *= decay
-                    den *= decay
-                if observed:
-                    num += v
-                    den += 1.0
-                out[i] = num / den if den > 0.0 else np.nan
-            yield pd.DataFrame({
-                "doc_id": doc_id,
-                "source": source,
-                "ts": pdf["ts"].to_numpy(),
-                "value": pdf["value"].to_numpy(),
-                "ewma": out,
-            })
-            last_us = float(
-                pd.to_datetime(pdf["ts"]).astype("int64").to_numpy()[-1]
-                // 1000
-            )
-
-        if last_us is not None:
-            state.update((float(num), float(den), last_us))
-            if state_ttl_seconds is not None:
-                state.setTimeoutTimestamp(
-                    int(last_us) // 1000 + state_ttl_seconds * 1000)
-
-    return (
-        points.withWatermark("ts", watermark)
-        .groupBy("doc_id", "source")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SMOOTH_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return _ewma_stream(points, decay_of, "ewma", watermark,
+                        state_ttl_seconds)
 
 
-SMOOTH_T_SCHEMA = StructType([
-    StructField("doc_id", StringType()),
-    StructField("source", StringType()),
-    StructField("ts", TimestampType()),
-    StructField("value", DoubleType()),
-    StructField("ewma_t", DoubleType()),
-])
-
-
-# NOTE: shares streaming_ewma's stateful skeleton (timeout handling, chunk
-# concat+single-sort, TTL anchoring) with only the decay rule differing —
-# a fix to either body must be mirrored in the other; both are pinned by
-# their own epoch-split batch-parity tests.
 def streaming_ewma_halflife(
     points: DataFrame,
     halflife_seconds: float,
@@ -156,69 +122,21 @@ def streaming_ewma_halflife(
     """TIME-aware streaming EWMA: decay by elapsed EVENT time,
     ``0.5**(Δt/halflife)`` — the streaming form of
     ``seriesstats.ewma_halflife`` (pandas ``ewm(halflife=Timedelta,
-    times=...)`` semantics). The carried state is the same (num, den,
-    last_event_us) triple as ``streaming_ewma``; ``last_event_us`` is
-    both the TTL anchor and the decay anchor, so a restart or an idle gap
-    ages the state by exactly the real elapsed time — time-based decay is
-    the natural streaming smoother (no per-sample cadence assumption).
-    NaN observations age the state by their gap without contributing.
-    Pinned equal to the batch operator over any epoch split in tests."""
+    times=...)`` semantics). The last event time is both the TTL anchor
+    and the decay anchor, so a restart or an idle gap ages the state by
+    exactly the real elapsed time — time-based decay is the natural
+    streaming smoother (no per-sample cadence assumption). NaN
+    observations age the state by their gap without contributing."""
     if halflife_seconds <= 0:
         raise ValueError("halflife_seconds must be positive")
     hl_us = float(halflife_seconds) * 1e6
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-           ) -> Iterator[pd.DataFrame]:
-        doc_id, source = key
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def decay_of(vals, pdf, last_us):
+        # integer µs arithmetic: float seconds lose sub-microsecond bits
+        # (ulp ~256 ns at 2026 epochs) vs the batch kernel's exact times
+        ts_us = event_us(pdf)
+        prev = ts_us[0] if last_us is None else last_us
+        return 0.5 ** (np.diff(ts_us, prepend=prev) / hl_us)
 
-        num, den, last_us = (state.get if state.exists else (0.0, 0.0, None))
-
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf.sort_values("ts", kind="stable")
-            vals = pdf["value"].to_numpy(dtype=float)
-            # integer ns→us division: float `/ 1e3` loses sub-microsecond
-            # bits (ulp ~256 ns at 2026 epochs) vs the batch kernel's
-            # exact integer time arithmetic
-            ts_us = (pd.to_datetime(pdf["ts"]).astype("int64").to_numpy()
-                     // 1000)
-            out = np.empty(len(vals))
-            for i, (v, t) in enumerate(zip(vals, ts_us)):
-                if last_us is not None:
-                    decay = 0.5 ** ((t - last_us) / hl_us)
-                    num *= decay
-                    den *= decay
-                last_us = t
-                if not np.isnan(v):
-                    num += v
-                    den += 1.0
-                out[i] = num / den if den > 0.0 else np.nan
-            yield pd.DataFrame({
-                "doc_id": doc_id,
-                "source": source,
-                "ts": pdf["ts"].to_numpy(),
-                "value": pdf["value"].to_numpy(),
-                "ewma_t": out,
-            })
-
-        if last_us is not None:
-            state.update((float(num), float(den), float(last_us)))
-            if state_ttl_seconds is not None:
-                state.setTimeoutTimestamp(
-                    int(last_us) // 1000 + state_ttl_seconds * 1000)
-
-    return (
-        points.withWatermark("ts", watermark)
-        .groupBy("doc_id", "source")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SMOOTH_T_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return _ewma_stream(points, decay_of, "ewma_t", watermark,
+                        state_ttl_seconds)

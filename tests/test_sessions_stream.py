@@ -11,6 +11,7 @@ from __future__ import annotations
 import shutil
 import time
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -109,3 +110,44 @@ def test_stateful_sessions_match_batch(spark, split_input, tmp_path):
     assert len(fed) >= 2, [p["numInputRows"] for p in progress]
     updated = [p["stateOperators"][0]["numRowsUpdated"] for p in fed]
     assert all(u > 0 for u in updated), updated
+
+
+def test_session_spanning_arrow_chunks(spark, tmp_path):
+    """One series whose single micro-batch spans three Arrow chunks
+    (~10k rows each), written in SHUFFLED row order so later chunks carry
+    earlier timestamps: the operator must sort the WHOLE group once, or a
+    chunk-local order invents gaps at every chunk seam."""
+    n = 25_000
+    us = np.arange(n, dtype=np.int64) * 1_000_000
+    hole = 3 * 3600 * 1_000_000
+    us[8_000:] += hole   # two 3-hour holes: after points 8 000 and 17 000
+    us[17_000:] += hole
+    pdf = pd.DataFrame({
+        "doc_id": "big", "source": "s",
+        "ts": pd.Timestamp("2024-01-01", tz="UTC")
+        + pd.to_timedelta(us, unit="us"),
+        "value": 1.0,
+    })
+    rng = np.random.RandomState(7)
+    shuffled = pdf.iloc[rng.permutation(n)].reset_index(drop=True)
+    in_dir = str(tmp_path / "in")
+    spark.createDataFrame(shuffled).coalesce(1).write.parquet(in_dir)
+    stream = spark.readStream.schema(
+        spark.read.parquet(in_dir).schema).parquet(in_dir)
+    q = (
+        streaming_gap_sessions(stream, gap_seconds=GAP_S)
+        .writeStream.outputMode("append").format("memory")
+        .queryName("sess_chunks")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    got = (spark.sql("select * from sess_chunks").toPandas()
+           .sort_values("session_start").reset_index(drop=True))
+    assert got["closed_by"].tolist() == ["gap", "gap"]
+    assert got["n_points"].tolist() == [8_000, 9_000]
+    span = (got["session_end"] - got["session_start"]).dt.total_seconds()
+    assert span.tolist() == [7_999.0, 8_999.0]
+    between = got["session_start"].iloc[1] - got["session_end"].iloc[0]
+    assert between == pd.Timedelta(hours=3, seconds=1)
