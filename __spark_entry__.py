@@ -62,6 +62,13 @@ _ATEXIT_REGISTERED = False
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The registry, each query wrapped in the cache hygiene above.
+
+    Build a query's plan and run its action before building the next one:
+    each build releases the pooled caches of the plans built before it, so
+    an earlier plan acted on after a later build recomputes what its caches
+    held (same rows, slower).
+    """
     from gensor_spark.queries import QUERIES
 
     return {n: _with_cache_hygiene(n, q) for n, q in QUERIES.items()}

@@ -120,6 +120,43 @@ _GRAD_SCHEMA = T.StructType([
 ])
 
 
+def _logreg_grad(bc):
+    """``mapInPandas`` body of one gradient pass under the broadcast
+    ``(w, b)``: one partial-gradient row per slot (plus the bias as slot
+    -1) per task."""
+
+    def grad(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        wv, bv = bc.value
+        dense = np.zeros(len(wv), dtype=np.float64)  # per-worker partial
+        bias_g = 0.0
+        for pdf in batches:
+            # CSR-shaped batch kernel: margins = X @ w + b and the
+            # partial grad = X.T @ r as two bincount segment-sums over
+            # the flattened (cols, data) arrays — O(nnz) numpy, no
+            # per-doc Python loop
+            lens = np.fromiter((len(s) for s in pdf["slots"]),
+                               dtype=np.int64, count=len(pdf))
+            cols = (np.concatenate(list(pdf["slots"])).astype(np.int64)
+                    if lens.sum() else np.empty(0, np.int64))
+            data = (np.concatenate(list(pdf["vals"]))
+                    .astype(np.float64)
+                    if lens.sum() else np.empty(0, np.float64))
+            seg = np.repeat(np.arange(len(pdf)), lens)
+            margins = bv + np.bincount(
+                seg, weights=wv[cols] * data, minlength=len(pdf))
+            r = _sigmoid(margins) - pdf["y"].to_numpy(np.float64)
+            bias_g += float(r.sum())
+            dense += np.bincount(
+                cols, weights=data * r[seg], minlength=len(wv))
+        nz = np.nonzero(dense)[0]
+        yield pd.DataFrame({
+            "slot": np.concatenate([nz, [-1]]).astype(np.int32),
+            "g": np.concatenate([dense[nz], [bias_g]]),
+        })
+
+    return grad
+
+
 def train_quality_classifier(
     feats: DataFrame,
     labels: DataFrame,
@@ -145,68 +182,49 @@ def train_quality_classifier(
     # partials per iteration — pure scheduling + shuffle overhead. ~20k
     # seed docs per partition keeps a CCNet-sized (10^5-10^6) seed set
     # parallel while a bench-sized one trains in single-task iterations.
-    n_labels = labels.count()
-    n_parts = max(1, -(-n_labels // 20_000))
-    train = (
-        feats.join(F.broadcast(labels.select("doc_id", label_col)), "doc_id")
-        .select("slots", "vals", F.col(label_col).cast("double").alias("y"))
-        .repartition(n_parts)
-        .cache()
-    )
-    n_docs = train.count()  # materializes the cache; also the 1/n factor
-    if n_docs == 0:
-        raise ValueError("no labeled training docs after the join")
-
-    w = np.zeros(n_features, dtype=np.float64)
-    b = 0.0
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast((w, b))
-
-        def grad(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            wv, bv = bc.value
-            dense = np.zeros(len(wv), dtype=np.float64)  # per-worker partial
-            bias_g = 0.0
-            for pdf in batches:
-                # CSR-shaped batch kernel: margins = X @ w + b and the
-                # partial grad = X.T @ r as two bincount segment-sums over
-                # the flattened (cols, data) arrays — O(nnz) numpy, no
-                # per-doc Python loop
-                lens = np.fromiter((len(s) for s in pdf["slots"]),
-                                   dtype=np.int64, count=len(pdf))
-                cols = (np.concatenate(list(pdf["slots"])).astype(np.int64)
-                        if lens.sum() else np.empty(0, np.int64))
-                data = (np.concatenate(list(pdf["vals"]))
-                        .astype(np.float64)
-                        if lens.sum() else np.empty(0, np.float64))
-                seg = np.repeat(np.arange(len(pdf)), lens)
-                margins = bv + np.bincount(
-                    seg, weights=wv[cols] * data, minlength=len(pdf))
-                r = _sigmoid(margins) - pdf["y"].to_numpy(np.float64)
-                bias_g += float(r.sum())
-                dense += np.bincount(
-                    cols, weights=data * r[seg], minlength=len(wv))
-            nz = np.nonzero(dense)[0]
-            yield pd.DataFrame({
-                "slot": np.concatenate([nz, [-1]]).astype(np.int32),
-                "g": np.concatenate([dense[nz], [bias_g]]),
-            })
-
-        rows = (
-            train.mapInPandas(grad, _GRAD_SCHEMA)
-            .groupBy("slot").agg(F.sum("g").alias("g"))
-            .collect()
+    # The seed projection is persisted around that count, so the labels
+    # lineage runs once (count + join), not twice.
+    seeds = labels.select("doc_id", label_col).persist()
+    train = None
+    try:
+        n_labels = seeds.count()
+        n_parts = max(1, -(-n_labels // 20_000))
+        train = (
+            feats.join(F.broadcast(seeds), "doc_id")
+            .select("slots", "vals", F.col(label_col).cast("double").alias("y"))
+            .repartition(n_parts)
+            .cache()
         )
-        bc.unpersist()
-        g = np.zeros(n_features, dtype=np.float64)
-        bias_g = 0.0
-        for r in rows:
-            if r.slot == -1:
-                bias_g = r.g
-            else:
-                g[r.slot] = r.g
-        w -= lr * (g / n_docs + l2 * w)
-        b -= lr * (bias_g / n_docs)
-    train.unpersist()
+        n_docs = train.count()  # materializes the cache; also the 1/n factor
+        seeds.unpersist()  # train holds the joined rows from here on
+        if n_docs == 0:
+            raise ValueError("no labeled training docs after the join")
+
+        w = np.zeros(n_features, dtype=np.float64)
+        b = 0.0
+        for _ in range(iters):
+            bc = spark.sparkContext.broadcast((w, b))
+            try:
+                rows = (
+                    train.mapInPandas(_logreg_grad(bc), _GRAD_SCHEMA)
+                    .groupBy("slot").agg(F.sum("g").alias("g"))
+                    .collect()
+                )
+            finally:
+                bc.unpersist()
+            g = np.zeros(n_features, dtype=np.float64)
+            bias_g = 0.0
+            for r in rows:
+                if r.slot == -1:
+                    bias_g = r.g
+                else:
+                    g[r.slot] = r.g
+            w -= lr * (g / n_docs + l2 * w)
+            b -= lr * (bias_g / n_docs)
+    finally:
+        seeds.unpersist()
+        if train is not None:
+            train.unpersist()
     return w, b
 
 

@@ -60,12 +60,14 @@ def corpus_prep(
     at minimum). Stages toggle independently; disabled stages cost
     nothing. ``rates`` and ``temperature`` are exclusive mixing modes.
 
-    ``cache_intermediate`` pools a cache (``plans.caching.pooled_cache``;
-    the CALLER releases after its action) on the post-gate/scrub frame and
-    on the post-exact-dedup frame: both are consumed by MULTIPLE
-    downstream branches (the exact-dedup digest agg + its anti-join left
-    side; the minhash signature chain, the representative quality table
-    and the mixing counts), and without materialization Spark re-executes
+    ``cache_intermediate`` pools a cache (``plans.caching.pooled_cache``)
+    on the post-gate/scrub frame and on the post-exact-dedup frame. The
+    CALLER releases both with ``plans.caching.release_caches()`` after its
+    action; otherwise they stay cached until the session ends. Both
+    frames are consumed by MULTIPLE downstream branches (the exact-dedup
+    digest agg + its anti-join left side; the minhash signature chain, the
+    representative quality table and the mixing counts), and without
+    materialization Spark re-executes
     the scan + row-local stages — including the regex-heavy PII scrub —
     once per branch (r5 profiling: 4 scan+scrub replays in this very
     composition's plan)."""

@@ -132,99 +132,6 @@ def rollup_tier(
     return binned.groupBy(*keys, "bin_ts").agg(*partials)
 
 
-def rollup_docs_arrays(
-    docs: DataFrame,
-    tier: str = "1m",
-    tick_seconds: int = 60,
-    epoch0: str = "2024-01-01 00:00:00",
-    keys: tuple[str, ...] = ("doc_id", "source"),
-    with_sumsq: bool = False,
-    with_first: bool = False,
-    with_moments: bool = False,
-) -> DataFrame:
-    """Tier partials straight from the token table — no point-view explode.
-
-    For pre-tokenized docs the timestamp is affine in ``seq`` (ts = epoch0 +
-    seq·tick), so a tier bin is exactly a FIXED-SIZE SLICE of the token
-    array: bin ``b`` covers ``tokens[b·k : (b+1)·k]`` with ``k = step/tick``.
-    All five partials are computed row-locally with array functions (slice/
-    array_min/array_max/aggregate/element_at) and only the ~step/tick-times-
-    smaller bin rows are ever exploded and shuffled.
-
-    vs ``rollup_tier(docs_to_points(docs))``: identical output partials
-    (asserted in tests), but the 100-TB-shape difference is that the raw
-    point rows (each carrying the doc_id string!) never exist as rows — at
-    tick=1s/1m-tier this is ~60× less JVM row churn and shuffle input, and
-    per-doc skew vanishes before the shuffle (a hot doc compresses to its
-    bin rows inside its own task). The generic shuffle path remains for
-    irregular timestamps (events).
-    """
-    step = TIER_SECONDS.get(tier) or freq_to_seconds(tier)
-    if step % tick_seconds:
-        raise ValueError(f"tier step {step}s not a multiple of tick {tick_seconds}s")
-    k = step // tick_seconds
-    epoch_expr = F.unix_timestamp(F.lit(epoch0).cast("timestamp"))
-
-    n_bins = F.ceil(F.size("tokens") / F.lit(k)).cast("int")
-    # stage the chunk slices as a column: each chunk is then a BOUND lambda
-    # variable in the aggregate pass below (evaluated once), not an inlined
-    # slice expression recomputed per partial
-    staged = (
-        docs.filter(F.size("tokens") > 0)  # sequence(0,-1) would descend
-        .select(
-            *keys,
-            F.transform(
-                F.sequence(F.lit(0), n_bins - 1),
-                lambda b: F.slice("tokens", b * k + 1, k),
-            ).alias("_chunks"),
-        )
-    )
-    def bin_struct(ch, i):
-        fields = [
-            F.timestamp_seconds(epoch_expr + i.cast("long") * step).alias("bin_ts"),
-            F.size(ch).cast("long").alias("cnt"),
-            F.array_min(ch).cast("double").alias("vmin"),
-            F.array_max(ch).cast("double").alias("vmax"),
-            F.aggregate(ch, F.lit(0.0), lambda acc, x: acc + x).alias("vsum"),
-            F.element_at(ch, -1).cast("double").alias("last"),
-            F.timestamp_seconds(
-                epoch_expr + (i.cast("long") * k + F.size(ch) - 1) * tick_seconds
-            ).alias("last_ts"),
-        ]
-        if with_first:
-            fields.append(F.element_at(ch, 1).cast("double").alias("first"))
-            fields.append(F.timestamp_seconds(
-                epoch_expr + i.cast("long") * k * tick_seconds
-            ).alias("first_ts"))
-        fields.append(
-            F.aggregate(  # cast BEFORE the square: int32·int32 overflows
-                ch, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x
-            ).alias("vsumsq"))
-        if with_moments:
-            fields.append(F.aggregate(
-                ch, F.lit(0.0),
-                lambda acc, x: acc + x.cast("double") * x * x).alias("vsumcu"))
-            fields.append(F.aggregate(
-                ch, F.lit(0.0),
-                lambda acc, x: acc
-                + (x.cast("double") * x) * (x.cast("double") * x),
-            ).alias("vsumqu"))
-        return F.struct(*fields)
-
-    out_cols = ["_b.bin_ts", "_b.cnt", "_b.vmin", "_b.vmax",
-                "_b.vsum", "_b.last", "_b.last_ts"]
-    if with_first:
-        out_cols += ["_b.first", "_b.first_ts"]
-    if with_sumsq or with_moments:
-        out_cols.append("_b.vsumsq")
-    if with_moments:
-        out_cols += ["_b.vsumcu", "_b.vsumqu"]
-    return (
-        staged.select(*keys, F.explode(F.transform("_chunks", bin_struct)).alias("_b"))
-        .select(*keys, *out_cols)
-    )
-
-
 def ragged_bins(pdf, k: int, dtype=None):
     """Per-Arrow-batch ragged-offset prefix sums shared by every affine
     token→bin kernel (``rollup_docs_arrow``,
@@ -264,28 +171,30 @@ def rollup_docs_arrow(
     tier: str = "1m",
     tick_seconds: int = 60,
     epoch0_us: int = 1_704_067_200_000_000,
-    keys: tuple[str, ...] = ("doc_id", "source"),
     with_sumsq: bool = False,
     with_first: bool = False,
     with_moments: bool = False,
 ) -> DataFrame:
     """Affine-ts tier partials via a batched numpy kernel (the fast path).
 
-    Same mathematics as ``rollup_docs_arrays`` (a tier bin of a token doc is
-    a fixed-size array slice), but executed as ONE set of
-    ``ufunc.reduceat`` calls per Arrow batch: all docs' tokens are
-    concatenated, global bin boundaries are computed arithmetically, and
-    min/max/sum reduce every bin of every doc in single C passes. The bin
-    starts tile the flat array exactly (each doc's last bin ends where the
-    next doc begins), which is precisely reduceat's segment semantics.
+    For pre-tokenized docs the timestamp is affine in ``seq`` (ts = epoch0 +
+    seq·tick), so a tier bin is exactly a FIXED-SIZE SLICE of the token
+    array: bin ``b`` covers ``tokens[b·k : (b+1)·k]`` with ``k = step/tick``.
+    The kernel runs ONE set of ``ufunc.reduceat`` calls per Arrow batch: all
+    docs' tokens are concatenated, global bin boundaries are computed
+    arithmetically, and min/max/sum reduce every bin of every doc in single
+    C passes. The bin starts tile the flat array exactly (each doc's last
+    bin ends where the next doc begins), which is precisely reduceat's
+    segment semantics.
 
-    Why not pure SQL: the higher-order-function variant evaluates an
-    interpreted lambda per token (no codegen for HOFs — measured slower
-    than exploding 60× more rows through codegen), and the explode variant
-    shuffles a row per token. This kernel touches each token once at numpy
-    speed and emits only bin rows. Output is bit-identical to
-    ``rollup_tier(docs_to_points(docs))`` (sums reduce in seq order) —
-    asserted in tests.
+    Why not pure SQL: a higher-order-function variant (array slices plus
+    ``aggregate`` lambdas) evaluates an interpreted lambda per token (no
+    codegen for HOFs — measured slower than exploding 60× more rows through
+    codegen), and the explode variant shuffles a row per token. This kernel
+    touches each token once at numpy speed and emits only bin rows. Output
+    rows are keyed by the docs' series columns ``doc_id, source`` and are
+    bit-identical to ``rollup_tier(docs_to_points(docs))`` (sums reduce in
+    seq order) — asserted in tests.
     """
     import pandas as pd
 

@@ -14,8 +14,10 @@ storage dies with the JVM).
 Contract: operators register every such intra-plan cache here via
 ``pooled_cache``; the CALLER releases them after the consuming action with
 ``release_caches()``. ``bench.py`` does exactly that between queries. A
-caller that skips release leaks nothing new vs the old behavior — it can
-always fall back to ``spark.catalog.clearCache()``.
+caller that skips release keeps every pooled frame cached until the
+session ends — e.g. two per ``corpus_prep`` call with its default
+``cache_intermediate=True``, where that operator used to cache nothing —
+so a long-lived session must release (or ``spark.catalog.clearCache()``).
 
 The pool is deliberately session-global and drain-all: queries in this
 engine run their actions to completion before the next query starts

@@ -87,6 +87,9 @@ from gensor_spark.operators.topkrollup import (
 
 TIERS = ("1m", "1h", "1d")
 
+#: the series columns of a token docs table
+_DOC_KEYS = ("doc_id", "source")
+
 
 def _rollup_hist_points(points: DataFrame, tier: str, keys: tuple[str, ...],
                         quantize_alpha: float | None = None) -> DataFrame:
@@ -108,7 +111,7 @@ def _rollup_hist_docs(docs: DataFrame, keys: tuple[str, ...],
     ``None`` sends the caller to the point path: the kernel's output schema
     is fixed to the default series keys, and DDSketch quantization is a
     point-grain projection."""
-    if tuple(keys) != ("doc_id", "source") or quantize_alpha is not None:
+    if tuple(keys) != _DOC_KEYS or quantize_alpha is not None:
         return None
     return rollup_hist_docs_arrow(docs, "1m", tick_seconds=tick_seconds)
 
@@ -408,21 +411,26 @@ class TierPipeline:
             tier_df, str(self.store / f"tier_{tier}" / f"batch={b}")
         )
 
-    def _process_batch(self, docs_batched: DataFrame, b: int) -> None:
+    def _store_contribution(self, sid: int, m1: DataFrame, points: DataFrame,
+                            docs: DataFrame | None = None,
+                            blobs: DataFrame | None = None,
+                            wave: int | None = None) -> None:
+        """Write one contribution ``sid`` to every tier, then commit it.
+
+        ``m1`` is its 1m partials and ``points`` its point view; ``docs``
+        (token docs) lets a sketch family with a docs kernel skip the point
+        view, and ``blobs`` is its Gorilla-encoded series. A ``run()`` batch
+        passes all of them; a late wave passes ``wave`` and no docs or
+        blobs. One lineage row and the ledger commit close the
+        contribution; a crash before the commit reruns it, overwriting the
+        same directories.
+        """
         t0 = time.monotonic()
-        batch_docs = docs_batched.filter(F.col("_batch") == b).drop("_batch")
         counts: dict[str, int] = {}
         blob_thread: threading.Thread | None = None
         blob_err: list[BaseException] = []
-        if self.encode_blobs:
-            from gensor_spark.codecs.gorilla import EPOCH0_US, encode_docs
-
-            blob_dir = str(self.store / "blobs" / f"batch={b}")
-            blobs = encode_docs(
-                batch_docs,
-                tick_us=self.tick_seconds * 1_000_000,
-                epoch0_us=EPOCH0_US,
-            )
+        if blobs is not None:
+            blob_dir = str(self.store / "blobs" / f"batch={sid}")
 
             def _encode() -> None:
                 # overlaps the tier chain below: the codec stage is pure
@@ -437,25 +445,18 @@ class TierPipeline:
             blob_thread = threading.Thread(target=_encode, daemon=True)
             blob_thread.start()
 
-        # affine-ts fast path: 1m partials straight from the token arrays via
-        # the batched numpy reduceat kernel — no point-view explode, no
-        # raw-point shuffle; bit-identical to rollup_tier(docs_to_points(...)).
-        # Persisted so the 1h cascade reuses the in-memory partials instead of
-        # a parquet read-back round trip (another ~2 floor jobs per batch).
-        m1 = rollup_docs_arrow(
-            batch_docs, "1m", tick_seconds=self.tick_seconds,
-            keys=self.keys, with_sumsq=self.var_tiers,
-            with_first=self.ohlc_tiers, with_moments=self.moment_tiers,
-        ).persist()
+        # persisted so the 1h cascade reuses the in-memory partials instead
+        # of a parquet read-back round trip (another ~2 floor jobs per batch)
+        m1 = m1.persist()
         h1: DataFrame | None = None
         try:
-            counts["1m"] = self._store_tier(m1, "1m", b)
+            counts["1m"] = self._store_tier(m1, "1m", sid)
             # coarser tiers cascade from the (much smaller) finer tier —
             # never re-read the raw points
             h1 = cascade_tier(m1, "1h", keys=self.keys).persist()
-            counts["1h"] = self._store_tier(h1, "1h", b)
+            counts["1h"] = self._store_tier(h1, "1h", sid)
             counts["1d"] = self._store_tier(
-                cascade_tier(h1, "1d", keys=self.keys), "1d", b
+                cascade_tier(h1, "1d", keys=self.keys), "1d", sid
             )
         finally:
             m1.unpersist()
@@ -465,19 +466,36 @@ class TierPipeline:
                 blob_thread.join()
         if blob_err:
             raise blob_err[0]
-        points = docs_to_points(batch_docs, tick_seconds=self.tick_seconds)
         for family in self._sketch_families():
             counts[_SKETCH_FAMILIES[family].tier] = self._store_sketch(
-                family, b, points, docs=batch_docs)
-        self._lineage_row(
-            {
-                "batch": b,
-                "rows": counts,
-                "wall_s": round(time.monotonic() - t0, 3),
-                "tiers": list(TIERS),
-            }
+                family, sid, points, docs=docs)
+        row: dict = {"batch": sid}
+        if wave is not None:
+            row["wave"] = wave
+        row.update(rows=counts, wall_s=round(time.monotonic() - t0, 3),
+                   tiers=list(TIERS))
+        self._lineage_row(row)
+        self._commit_batch(sid)
+
+    def _process_batch(self, docs_batched: DataFrame, b: int) -> None:
+        batch_docs = docs_batched.filter(F.col("_batch") == b).drop("_batch")
+        blobs = None
+        if self.encode_blobs:
+            from gensor_spark.codecs.gorilla import EPOCH0_US, encode_docs
+
+            blobs = encode_docs(batch_docs,
+                                tick_us=self.tick_seconds * 1_000_000,
+                                epoch0_us=EPOCH0_US)
+        # affine-ts fast path: 1m partials straight from the token arrays via
+        # the batched numpy reduceat kernel — no point-view explode, no
+        # raw-point shuffle; bit-identical to rollup_tier(docs_to_points(...)).
+        m1 = rollup_docs_arrow(
+            batch_docs, "1m", tick_seconds=self.tick_seconds,
+            with_sumsq=self.var_tiers, with_first=self.ohlc_tiers,
+            with_moments=self.moment_tiers,
         )
-        self._commit_batch(b)
+        points = docs_to_points(batch_docs, tick_seconds=self.tick_seconds)
+        self._store_contribution(b, m1, points, docs=batch_docs, blobs=blobs)
 
     def run(self, docs: DataFrame, batches: list[int] | None = None) -> dict:
         """Process unprocessed batches; returns per-run stats.
@@ -488,7 +506,15 @@ class TierPipeline:
         ``max_concurrent`` batches run concurrently (correct in any order /
         interleaving: batches are disjoint row sets and partials are
         associative; ledger + lineage writes are lock-serialized).
+
+        The token docs carry their series identity in ``doc_id``/``source``
+        only, so ``keys`` must be a non-empty subset of those two; other
+        series keys fit the point path (``ingest_points_wave``).
         """
+        if not self.keys or not set(self.keys) <= set(_DOC_KEYS):
+            raise ValueError(
+                f"run() keys must be a non-empty subset of {_DOC_KEYS}, the "
+                f"token docs' series columns; got keys={self.keys!r}")
         done = set(self.ledger()["processed"])
         todo = [
             b
@@ -563,38 +589,12 @@ class TierPipeline:
 
     def _process_points_batch(self, bucketed: DataFrame, b: int, sid: int,
                               wave: int) -> None:
-        t0 = time.monotonic()
         pts = bucketed.filter(F.col("_batch") == b).drop("_batch")
-        counts: dict[str, int] = {}
         m1 = rollup_tier(
             pts, "1m", keys=self.keys, with_sumsq=self.var_tiers,
             with_first=self.ohlc_tiers, with_moments=self.moment_tiers,
-        ).persist()
-        h1: DataFrame | None = None
-        try:
-            counts["1m"] = self._store_tier(m1, "1m", sid)
-            h1 = cascade_tier(m1, "1h", keys=self.keys).persist()
-            counts["1h"] = self._store_tier(h1, "1h", sid)
-            counts["1d"] = self._store_tier(
-                cascade_tier(h1, "1d", keys=self.keys), "1d", sid
-            )
-        finally:
-            m1.unpersist()
-            if h1 is not None:
-                h1.unpersist()
-        for family in self._sketch_families():
-            counts[_SKETCH_FAMILIES[family].tier] = self._store_sketch(
-                family, sid, pts)
-        self._lineage_row(
-            {
-                "batch": sid,
-                "wave": wave,
-                "rows": counts,
-                "wall_s": round(time.monotonic() - t0, 3),
-                "tiers": list(TIERS),
-            }
         )
-        self._commit_batch(sid)
+        self._store_contribution(sid, m1, pts, wave=wave)
 
     # ------------------------------------------------- sketch-tier families
     # Histograms, HLL, Misra-Gries and Count-Min tiers share ONE store
@@ -861,14 +861,16 @@ class TierPipeline:
         return base, Path(f"{base}_compact_tmp"), Path(f"{base}_old")
 
     def _recover_compact(self, tier: str) -> None:
-        """Repair any state a crash mid-``compact`` can leave behind.
+        """Repair any state a crash mid-``_rewrite_tier`` can leave behind.
 
-        compact's step order is: (1) write tmp, (2) rename final→old,
+        The rewrite's step order is: (1) write tmp, (2) rename final→old,
         (3) rename tmp→final, (4) delete old. A crash after any single step
         leaves either final intact (→ drop leftovers) or final missing with
         a complete tmp and the old copy still on disk (→ promote tmp,
         falling back to restoring old). No window loses the tier — the old
-        copy is only deleted after the compacted one is in place.
+        copy is only deleted after the compacted one is in place. A first
+        write (no final yet, so no step 2) leaves a complete tmp (→ promote)
+        or an incomplete one, which the next rewrite clears.
         """
         final, tmp, old = self._compact_paths(tier)
         if final.exists():
@@ -883,30 +885,58 @@ class TierPipeline:
             shutil.rmtree(tmp, ignore_errors=True)
 
     def _rewrite_tier(self, tier: str, partials: DataFrame,
-                      manifest: dict | None = None) -> int:
-        """Atomically replace a tier's contents (parquet backend); returns
-        the row count written.
+                      manifest: dict | None = None,
+                      n_buckets: int | None = None) -> int | None:
+        """Atomically replace a tier's contents with ``partials`` as its one
+        ``batch=-1`` contribution (parquet backend); returns the row count
+        written (None for a bucketed write). The one rewrite behind every
+        fold: compaction (plain, z-order, bucketed), retention, sketch folds
+        and calendar refreshes, first write included.
 
-        Crash-safe: the current tier is renamed aside, not deleted, until the
-        new copy is promoted — see ``_recover_compact`` for the repair of
-        every intermediate state. ``manifest`` (a sketch tier's folded
-        stream epochs) is written INSIDE tmp before the promote rename, so
-        the fold and its memory become visible in the same atomic step — no
-        window where contributions are folded but the manifest is missing.
+        Steps: (1) write tmp, (2) set the live tier aside (skipped when there
+        is none yet), (3) promote tmp, (4) delete the old copy. The current
+        tier is renamed aside, not deleted, until the new copy is promoted —
+        ``_recover_compact`` repairs every intermediate state. ``manifest``
+        (a sketch tier's folded stream epochs) is written INSIDE tmp before
+        the promote rename, so the fold and its memory become visible in the
+        same atomic step.
+
+        ``n_buckets`` writes tmp as a bucketed catalog table on the series
+        keys (plans/bucketing.py) and re-points the catalog at the live tier
+        after the promote. Bucket file names carry their bucket id, so the
+        layout survives the rename; only the catalog's location string is
+        stale between promote and re-point, and the read side treats the
+        catalog as advisory (``_bucketed_scan``), so every crash window
+        degrades to the plain path scan, never to wrong data.
         """
         final, tmp, old = self._compact_paths(tier)
         shutil.rmtree(tmp, ignore_errors=True)
-        n = self._write_counted(partials, str(tmp / "batch=-1"))  # step 1
+        # any rewrite retires a bucketed layout's catalog entry BEFORE the
+        # promote, or a reader could treat new plain files as bucket files
+        # (Spark aborts on unsuffixed bucket files), and before a bucketed
+        # write, so an overwrite-saveAsTable onto an entry registered at the
+        # LIVE location never gets to touch it (external-table drops are
+        # metadata-only; the live files stay)
+        self._drop_bucket_table(tier)
+        # step 1: write tmp
+        if n_buckets is None:
+            n = self._write_counted(partials, str(tmp / "batch=-1"))
+        else:
+            from gensor_spark.plans.bucketing import write_bucketed
+
+            write_bucketed(partials, self._bucket_table(tier), n_buckets,
+                           bucket_cols=self.keys, sort_cols=("bin_ts",),
+                           path=str(tmp / "batch=-1"))
+            n = None
         if manifest is not None:
             (tmp / "_folded.json").write_text(json.dumps(manifest))
-        # a plain rewrite replaces any bucketed layout: retire the catalog
-        # entry BEFORE promoting, or a reader could treat the new plain
-        # files as bucket files (Spark aborts on unsuffixed bucket files —
-        # a crash, not wrong data, but still a broken store)
-        self._drop_bucket_table(tier)
-        os.replace(final, old)  # step 2: set aside, never rmtree the live tier
+        if final.exists():
+            os.replace(final, old)  # step 2: set aside, never rmtree the live tier
         os.replace(tmp, final)  # step 3: promote
-        shutil.rmtree(old)  # step 4: cleanup
+        if n_buckets is not None:
+            self.spark.sql(f"ALTER TABLE {self._bucket_table(tier)} "
+                           f"SET LOCATION '{final / 'batch=-1'}'")
+        shutil.rmtree(old, ignore_errors=True)  # step 4: cleanup
         return n
 
     def _drop_bucket_table(self, tier: str) -> None:
@@ -926,34 +956,6 @@ class TierPipeline:
 
         h = hashlib.md5(str(self.store.resolve()).encode()).hexdigest()[:10]
         return f"gs_bkt_{h}_{tier.replace('-', '_')}"
-
-    def _rewrite_tier_bucketed(self, tier: str, partials: DataFrame,
-                               n_buckets: int) -> None:
-        """The ``_rewrite_tier`` protocol with a bucketed writer: steps 1-4
-        identical (tmp write → set-aside → promote → cleanup), plus a final
-        catalog re-point. Bucket file names carry their bucket id, so the
-        layout survives the directory rename; only the catalog's location
-        string goes stale between promote and re-register — and the read
-        side treats the catalog as advisory (``_bucketed_scan``), so every
-        crash window degrades to the plain path scan, never to wrong data.
-        """
-        from gensor_spark.plans.bucketing import write_bucketed
-
-        final, tmp, old = self._compact_paths(tier)
-        shutil.rmtree(tmp, ignore_errors=True)
-        tbl = self._bucket_table(tier)
-        # drop any previous entry BEFORE the write: an overwrite-saveAsTable
-        # onto an existing external table registered at the LIVE location
-        # must never get a chance to touch that location (external-table
-        # drops are metadata-only; the live files stay)
-        self._drop_bucket_table(tier)
-        write_bucketed(partials, tbl, n_buckets, bucket_cols=self.keys,
-                       sort_cols=("bin_ts",), path=str(tmp / "batch=-1"))
-        os.replace(final, old)
-        os.replace(tmp, final)
-        self.spark.sql(
-            f"ALTER TABLE {tbl} SET LOCATION '{final / 'batch=-1'}'")
-        shutil.rmtree(old)
 
     def _bucketed_scan(self, tier: str) -> DataFrame | None:
         """The verified bucketed fast path: the catalog table must exist,
@@ -1015,12 +1017,8 @@ class TierPipeline:
                     "order via the catalog)")
             self.iceberg.compact(tier)  # rewrite_data_files, atomic snapshot
             return
-        if bucket is not None:
-            if zorder:
-                raise ValueError("bucket and zorder are exclusive layouts")
-            self._rewrite_tier_bucketed(
-                tier, self.read_tier(tier, finalize=False), bucket)
-            return
+        if bucket is not None and zorder:
+            raise ValueError("bucket and zorder are exclusive layouts")
         merged = self.read_tier(tier, finalize=False)
         if zorder:
             from gensor_spark.plans.zorder import rank_scale, zvalue
@@ -1036,7 +1034,7 @@ class TierPipeline:
                 .sortWithinPartitions("__z")
                 .drop("__sid", "__ts", "__zs0", "__zs1", "__z")
             )
-        self._rewrite_tier(tier, merged)
+        self._rewrite_tier(tier, merged, n_buckets=bucket)
 
     def refresh_calendar(self, unit: str = "month",
                          from_tier: str = "1d") -> int:
@@ -1060,13 +1058,7 @@ class TierPipeline:
             raise ValueError("refresh_calendar requires the parquet backend")
         cal = cascade_calendar(self.read_tier(from_tier, finalize=False), unit,
                                keys=self.keys, finer_unit=from_tier)
-        final, tmp, old = self._compact_paths(unit)
-        if final.exists():
-            n = self._rewrite_tier(unit, cal)
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-            n = self._write_counted(cal, str(tmp / "batch=-1"))
-            os.replace(tmp, final)
+        n = self._rewrite_tier(unit, cal)
         self._lineage_row({"calendar_refresh": {"unit": unit,
                                                 "from": from_tier, "rows": n}})
         return n

@@ -69,16 +69,11 @@ def streaming_rollup(
     v = F.col("value")
     win = F.window("ts", f"{step} seconds")
     aggs = partial_aggs(v, F.col("ts"), with_sumsq, with_first, with_moments)
-    out = ["cnt", "vmin", "vmax", "vsum", "last", "last_ts"]
-    if with_first:
-        out += ["first", "first_ts"]
-    if with_sumsq or with_moments:
-        out.append("vsumsq")
-    if with_moments:
-        out += ["vsumcu", "vsumqu"]
     agged = points.withWatermark("ts", watermark).groupBy(*keys, win).agg(*aggs)
+    # the partial columns are whatever partial_aggs produced, in its order
     return agged.select(
-        *keys, F.col("window.start").alias("bin_ts"), *out,
+        *keys, F.col("window.start").alias("bin_ts"),
+        *agged.columns[len(keys) + 1:],
     )
 
 

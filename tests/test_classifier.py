@@ -133,3 +133,30 @@ def test_empty_label_join_raises(spark):
     with pytest.raises(ValueError, match="no labeled"):
         train_quality_classifier(hashed_features(docs, n_features=D),
                                  labels, n_features=D, iters=1)
+
+
+@pytest.mark.parametrize("fail_in", ["join", "loop"])
+def test_training_failure_releases_its_caches(spark, monkeypatch, fail_in):
+    """An exception after the seed projection is persisted — an empty join,
+    or a failing gradient pass — leaves no training cache pinned."""
+    import gensor_spark.operators.classifier as clf
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    rows = _corpus()
+    docs = spark.createDataFrame([(i, t) for i, t, _ in rows],
+                                 "doc_id long, text string")
+    labels = spark.createDataFrame(
+        [(i + (1000 if fail_in == "join" else 0), y) for i, _, y in rows],
+        "doc_id long, label int")
+    feats = hashed_features(docs, n_features=D)
+
+    def boom(bc):
+        raise RuntimeError("gradient pass failed")
+
+    monkeypatch.setattr(clf, "_logreg_grad", boom)
+    before = persisted()
+    with pytest.raises((ValueError, RuntimeError)):
+        train_quality_classifier(feats, labels, n_features=D, iters=2)
+    assert persisted() == before

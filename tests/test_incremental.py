@@ -97,6 +97,34 @@ def test_compact_preserves_results(spark, docs, tmp_path):
     _assert_tiers_equal(before, after)
 
 
+def _assert_crash_states_recover(pipe, tier, write_tmp, want):
+    """Forge the on-disk state a crash leaves after each step of the tier
+    rewrite (``TierPipeline._rewrite_tier``) over an existing tier and
+    assert read_tier() recovers the identical tier. ``write_tmp(path)``
+    writes the rewrite's step-1 output the way that caller's writer does.
+    """
+    import os
+    import shutil
+
+    final, tmp, old = pipe._compact_paths(tier)
+
+    # crash after step 1: tmp written, final untouched
+    write_tmp(tmp / "batch=-1")
+    _assert_tiers_equal(want, _tier_pdf(pipe.read_tier(tier)))
+    assert not tmp.exists()  # leftover cleaned
+
+    # crash after step 2: final renamed aside, tmp complete
+    write_tmp(tmp / "batch=-1")
+    os.replace(final, old)
+    _assert_tiers_equal(want, _tier_pdf(pipe.read_tier(tier)))
+
+    # crash after step 2 with an INCOMPLETE tmp (no _SUCCESS): roll back
+    shutil.rmtree(tmp, ignore_errors=True)
+    (tmp / "batch=-1").mkdir(parents=True)
+    os.replace(final, old)
+    _assert_tiers_equal(want, _tier_pdf(pipe.read_tier(tier)))
+
+
 def test_compact_crash_between_steps_preserves_tier(spark, docs, tmp_path):
     """A kill at ANY point inside compact() must not lose the tier.
 
@@ -104,39 +132,97 @@ def test_compact_crash_between_steps_preserves_tier(spark, docs, tmp_path):
     (3) rename tmp→final, (4) rmtree _old. We forge the on-disk state a crash
     leaves after each step and assert read_tier() recovers the identical tier.
     """
-    import os
-    import shutil
-
     store = str(tmp_path / "tiers")
     pipe = TierPipeline(spark, store, n_batches=3)
     pipe.run(docs)
     want = _tier_pdf(pipe.read_tier("1h"))
-    final, tmp, old = pipe._compact_paths("1h")
-
-    # crash after step 1: tmp written, final untouched
-    pipe.read_tier("1h", finalize=False).write.mode("overwrite").parquet(
-        str(tmp / "batch=-1")
-    )
-    _assert_tiers_equal(want, _tier_pdf(pipe.read_tier("1h")))
-    assert not tmp.exists()  # leftover cleaned
-
-    # crash after step 2: final renamed aside, tmp complete
-    pipe.read_tier("1h", finalize=False).write.mode("overwrite").parquet(
-        str(tmp / "batch=-1")
-    )
-    os.replace(final, old)
-    _assert_tiers_equal(want, _tier_pdf(pipe.read_tier("1h")))
-
-    # crash after step 2 with an INCOMPLETE tmp (no _SUCCESS): roll back
-    shutil.rmtree(tmp, ignore_errors=True)
-    (tmp / "batch=-1").mkdir(parents=True)
-    os.replace(final, old)
-    _assert_tiers_equal(want, _tier_pdf(pipe.read_tier("1h")))
+    _assert_crash_states_recover(
+        pipe, "1h",
+        lambda path: pipe.read_tier("1h", finalize=False).write.mode(
+            "overwrite").parquet(str(path)),
+        want)
 
     # crash after step 3: compacted final in place, old not yet deleted
     pipe.compact("1h")
     compacted = _tier_pdf(pipe.read_tier("1h"))
     _assert_tiers_equal(want, compacted)
+
+
+@pytest.mark.parametrize("caller", ["bucket", "calendar"])
+def test_rewrite_crash_between_steps_preserves_tier(spark, docs, tmp_path,
+                                                    caller):
+    """The other callers of the one tier rewrite recover like compact():
+    ``compact("1h", bucket=4)`` (a bucketed step-1 write that re-points the
+    catalog at tmp), and the FIRST ``refresh_calendar("month")``, which has
+    no live tier to set aside, so its crash states are "tmp complete, final
+    missing" and "tmp incomplete, final missing". Each rewrite then runs to
+    completion twice (the second folds its own output)."""
+    import shutil
+
+    from gensor_spark.operators.rollup import cascade_calendar
+    from gensor_spark.plans.bucketing import write_bucketed
+
+    pipe = TierPipeline(spark, str(tmp_path / "tiers"), n_batches=3)
+    pipe.run(docs)
+    if caller == "bucket":
+        tier = "1h"
+        want = _tier_pdf(pipe.read_tier(tier))
+        tbl = pipe._bucket_table(tier)
+
+        def write_tmp(path):
+            partials = pipe.read_tier(tier, finalize=False)
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            write_bucketed(partials, tbl, 4, bucket_cols=pipe.keys,
+                           sort_cols=("bin_ts",), path=str(path))
+
+        _assert_crash_states_recover(pipe, tier, write_tmp, want)
+        for _ in range(2):
+            pipe.compact(tier, bucket=4)
+            assert pipe._bucketed_scan(tier) is not None
+            _assert_tiers_equal(want, _tier_pdf(pipe.read_tier(tier)))
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        return
+
+    tier = "month"
+    final, tmp, old = pipe._compact_paths(tier)
+
+    def cal():
+        return cascade_calendar(pipe.read_tier("1d", finalize=False), tier,
+                                keys=pipe.keys, finer_unit="1d")
+
+    want = _tier_pdf(finalize_tier(cal()))
+    # crash after step 1 of the first write: tmp complete, final missing
+    cal().write.mode("overwrite").parquet(str(tmp / "batch=-1"))
+    _assert_tiers_equal(want, _tier_pdf(pipe.read_tier(tier)))
+    assert final.exists() and not tmp.exists()
+
+    # crash mid step 1 of the first write: tmp incomplete, final missing —
+    # there was no tier yet, so none is served, and the rerun clears tmp
+    shutil.rmtree(final)
+    (tmp / "batch=-1").mkdir(parents=True)
+    with pytest.raises(FileNotFoundError):
+        pipe.read_tier(tier)
+    assert not final.exists()
+    for _ in range(2):
+        assert pipe.refresh_calendar(tier) == len(want)
+        _assert_tiers_equal(want, _tier_pdf(pipe.read_tier(tier)))
+        assert not tmp.exists() and not old.exists()
+
+
+def test_run_rejects_keys_outside_doc_columns(spark, docs, tmp_path):
+    """Token docs carry their series identity in doc_id/source only: run()
+    with other keys raises before writing anything (it used to fail in the
+    1h cascade with tier_1m/batch=0 already on disk and an empty ledger)."""
+    from pyspark.sql import functions as F
+
+    tagged = docs.withColumn("lang", F.lit("en"))
+    store = tmp_path / "s"
+    for keys in (("lang",), ("doc_id", "lang"), ()):
+        pipe = TierPipeline(spark, str(store), keys=keys, n_batches=2)
+        with pytest.raises(ValueError, match="keys"):
+            pipe.run(tagged)
+        assert not list(store.glob("tier_*"))
+        assert pipe.ledger() == {"processed": []}
 
 
 def test_apply_retention_drops_only_expired_bins(spark, docs, tmp_path):

@@ -140,17 +140,13 @@ def test_salted_rollup_equals_plain(spark, points_sdf):
 
 
 def test_rollup_fast_paths_bit_identical(spark):
-    """The three 1m-rollup strategies agree bit-for-bit (SURVEY §2.4 +
-    rollup_docs_arrow docstring): explode+shuffle, HOF array slices, and the
-    batched numpy reduceat kernel."""
+    """The two 1m-rollup strategies agree bit-for-bit (SURVEY §2.4 +
+    rollup_docs_arrow docstring): explode+shuffle and the batched numpy
+    reduceat kernel."""
     import pandas as pd
 
-    from gensor_spark.operators.points import EPOCH0, docs_to_points
-    from gensor_spark.operators.rollup import (
-        rollup_docs_arrays,
-        rollup_docs_arrow,
-        rollup_tier,
-    )
+    from gensor_spark.operators.points import docs_to_points
+    from gensor_spark.operators.rollup import rollup_docs_arrow, rollup_tier
     from gensor_spark.sources.synth import synth_docs
 
     docs = synth_docs(spark, n_docs=200, seed=13, min_tok=0, max_tok=400,
@@ -158,9 +154,6 @@ def test_rollup_fast_paths_bit_identical(spark):
     order = ["doc_id", "source", "bin_ts"]
     a = (rollup_tier(docs_to_points(docs, tick_seconds=1), "1m")
          .orderBy(*order).toPandas().reset_index(drop=True))
-    b = (rollup_docs_arrays(docs, "1m", tick_seconds=1, epoch0=EPOCH0)
-         .orderBy(*order).toPandas().reset_index(drop=True))
     c = (rollup_docs_arrow(docs, "1m", tick_seconds=1)
          .orderBy(*order).toPandas().reset_index(drop=True))
-    pd.testing.assert_frame_equal(a, b[a.columns])
     pd.testing.assert_frame_equal(a, c[a.columns])

@@ -2,8 +2,8 @@
 with_moments=True)``): the ``first``/``first_ts`` pair that completes the
 OHLC bar and the Σx³/Σx⁴ partials behind per-bin skewness/kurtosis.
 Pinned: pandas-resample parity (first/skew/kurt incl. NaN handling), DuckDB
-builtin skewness()/kurtosis() parity, cascade≡direct, salted≡plain, the two
-Catalyst producer paths bit-identical, degenerate-bin guards, and absence
+builtin skewness()/kurtosis() parity, cascade≡direct, salted≡plain, the point
+path and the numpy docs kernel bit-identical, degenerate-bin guards, and absence
 when not requested."""
 
 from __future__ import annotations
@@ -13,11 +13,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from gensor_spark.operators.points import EPOCH0, docs_to_points
+from gensor_spark.operators.points import docs_to_points
 from gensor_spark.operators.rollup import (
     cascade_tier,
     finalize_tier,
-    rollup_docs_arrays,
+    rollup_docs_arrow,
     rollup_tier,
 )
 
@@ -119,16 +119,17 @@ def test_salted_equals_plain(spark, points_sdf):
 
 
 def test_producer_paths_bit_identical(spark):
-    """rollup_tier(docs_to_points) and the array-native rollup_docs_arrays
-    emit the same partial rows (Σx, Σx², Σx³, Σx⁴ all left-to-right over
-    the same sequence → bitwise)."""
+    """rollup_tier(docs_to_points) and the shipped numpy kernel
+    rollup_docs_arrow emit the same partial rows (Σx, Σx², Σx³, Σx⁴ all
+    left-to-right over the same sequence, x³ = (x·x)·x and x⁴ = (x·x)·(x·x)
+    in both → bitwise)."""
     from gensor_spark.sources.synth import synth_docs
 
     docs = synth_docs(spark, n_docs=80, seed=13, min_tok=0, max_tok=300,
                       hot_fraction=0.05, hot_factor=5).cache()
     a = (rollup_tier(docs_to_points(docs, tick_seconds=1), "1m", **FLAGS)
          .orderBy(*KEY).toPandas().reset_index(drop=True))
-    b = (rollup_docs_arrays(docs, "1m", tick_seconds=1, epoch0=EPOCH0, **FLAGS)
+    b = (rollup_docs_arrow(docs, "1m", tick_seconds=1, **FLAGS)
          .orderBy(*KEY).toPandas().reset_index(drop=True))
     assert len(a) == len(b) > 0
     pd.testing.assert_frame_equal(a, b[a.columns])

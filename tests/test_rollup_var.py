@@ -1,7 +1,7 @@
 """Variance/stddev tier rollups (``rollup_tier(with_sumsq=True)``): the
 mergeable Σx² partial behind per-bin var/std (TimescaleDB ``stats_agg``
 analogue). Pinned here: pandas-resample parity (ddof semantics incl. NaN
-bins), DuckDB oracle parity, cascade≡direct, salted≡plain, the three
+bins), DuckDB oracle parity, cascade≡direct, salted≡plain, the two
 producer paths bit-identical, and absence when not requested."""
 
 from __future__ import annotations
@@ -11,11 +11,10 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from gensor_spark.operators.points import EPOCH0, docs_to_points
+from gensor_spark.operators.points import docs_to_points
 from gensor_spark.operators.rollup import (
     cascade_tier,
     finalize_tier,
-    rollup_docs_arrays,
     rollup_docs_arrow,
     rollup_tier,
 )
@@ -115,12 +114,8 @@ def test_producer_paths_bit_identical_with_sumsq(spark):
     a = (rollup_tier(docs_to_points(docs, tick_seconds=1), "1m",
                      with_sumsq=True)
          .orderBy(*KEY).toPandas().reset_index(drop=True))
-    b = (rollup_docs_arrays(docs, "1m", tick_seconds=1, epoch0=EPOCH0,
-                            with_sumsq=True)
-         .orderBy(*KEY).toPandas().reset_index(drop=True))
     c = (rollup_docs_arrow(docs, "1m", tick_seconds=1, with_sumsq=True)
          .orderBy(*KEY).toPandas().reset_index(drop=True))
-    pd.testing.assert_frame_equal(a, b[a.columns])
     pd.testing.assert_frame_equal(a, c[a.columns])
 
 

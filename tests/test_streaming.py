@@ -173,3 +173,22 @@ def test_streaming_rollup_ohlc_moments_match_batch(spark, events_dir, tmp_path):
     w = want.select(*cols[:5], *[F.round(c, 6).alias(c) for c in cols[5:]])
     assert g.exceptAll(w).count() == 0
     assert g.count() >= w.count() * 0.95 and g.count() > 0
+
+
+@pytest.mark.parametrize("with_moments", [False, True])
+@pytest.mark.parametrize("with_first", [False, True])
+@pytest.mark.parametrize("with_sumsq", [False, True])
+def test_streaming_rollup_schema_matches_rollup_tier(
+        spark, with_sumsq, with_first, with_moments):
+    """The stream's output columns come from the aggregate it runs, so every
+    partial-flag combination has exactly ``rollup_tier``'s columns: same
+    names, types and order (on a static frame the watermark is a no-op)."""
+    points = events_to_points(spark.read.parquet(f"{SF}/events.parquet"))
+    flags = dict(with_sumsq=with_sumsq, with_first=with_first,
+                 with_moments=with_moments)
+
+    def shape(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    assert shape(streaming_rollup(points, "1m", **flags)) == shape(
+        rollup_tier(points, "1m", **flags))
