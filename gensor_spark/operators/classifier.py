@@ -182,21 +182,18 @@ def train_quality_classifier(
     # partials per iteration — pure scheduling + shuffle overhead. ~20k
     # seed docs per partition keeps a CCNet-sized (10^5-10^6) seed set
     # parallel while a bench-sized one trains in single-task iterations.
-    # The seed projection is persisted around that count, so the labels
-    # lineage runs once (count + join), not twice.
-    seeds = labels.select("doc_id", label_col).persist()
-    train = None
+    # (Column pruning cuts this count to a doc_id scan; the label column's
+    # lineage runs once, inside the join.)
+    n_labels = labels.count()
+    n_parts = max(1, -(-n_labels // 20_000))
+    train = (
+        feats.join(F.broadcast(labels.select("doc_id", label_col)), "doc_id")
+        .select("slots", "vals", F.col(label_col).cast("double").alias("y"))
+        .repartition(n_parts)
+        .cache()
+    )
     try:
-        n_labels = seeds.count()
-        n_parts = max(1, -(-n_labels // 20_000))
-        train = (
-            feats.join(F.broadcast(seeds), "doc_id")
-            .select("slots", "vals", F.col(label_col).cast("double").alias("y"))
-            .repartition(n_parts)
-            .cache()
-        )
         n_docs = train.count()  # materializes the cache; also the 1/n factor
-        seeds.unpersist()  # train holds the joined rows from here on
         if n_docs == 0:
             raise ValueError("no labeled training docs after the join")
 
@@ -222,9 +219,7 @@ def train_quality_classifier(
             w -= lr * (g / n_docs + l2 * w)
             b -= lr * (bias_g / n_docs)
     finally:
-        seeds.unpersist()
-        if train is not None:
-            train.unpersist()
+        train.unpersist()
     return w, b
 
 

@@ -48,9 +48,9 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from gensor_spark.operators.resample import bin_ts, freq_to_seconds
-from gensor_spark.operators.rollup import TIER_SECONDS, ragged_bins
+from gensor_spark.operators.rollup import _DOC_KEYS, TIER_SECONDS, ragged_bins
 
-KEYS = ("doc_id", "source")
+KEYS = _DOC_KEYS
 
 
 def _step(tier: str) -> int:
@@ -110,7 +110,8 @@ def rollup_hist_docs_arrow(
         raise ValueError(
             f"tier step {step}s not a multiple of tick {tick_seconds}s")
     k = step // tick_seconds
-    schema = "doc_id string, source string, bin_ts timestamp, hist map<double,bigint>"
+    schema = ("".join(f"{key} string, " for key in _DOC_KEYS)
+              + "bin_ts timestamp, hist map<double,bigint>")
     _VBITS = 25
     _VMAX = 1 << 24
 
@@ -138,8 +139,8 @@ def rollup_hist_docs_arrow(
                 for v, ct in zip(np.split(u_val, split), np.split(c, split))
             ]
             yield pd.DataFrame({
-                "doc_id": np.repeat(pdf["doc_id"].to_numpy()[keep], nbins),
-                "source": np.repeat(pdf["source"].to_numpy()[keep], nbins),
+                **{key: np.repeat(pdf[key].to_numpy()[keep], nbins)
+                   for key in _DOC_KEYS},
                 "bin_ts": pd.to_datetime(
                     epoch0_us + bin_local * (step * 1_000_000), unit="us"),
                 "hist": hists,

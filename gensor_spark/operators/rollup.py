@@ -166,6 +166,12 @@ def ragged_bins(pdf, k: int, dtype=None):
     return keep, flat, lens, nbins, doc_off, bin_off, bin_local, total_bins
 
 
+#: the series columns of a token docs table — the only keys the docs
+#: kernels (``rollup_docs_arrow``, ``rollup_hist_docs_arrow``) and
+#: ``docs_to_points`` carry
+_DOC_KEYS = ("doc_id", "source")
+
+
 def rollup_docs_arrow(
     docs: DataFrame,
     tier: str = "1m",
@@ -205,7 +211,8 @@ def rollup_docs_arrow(
     import numpy as np
 
     schema = (
-        "doc_id string, source string, bin_ts timestamp, cnt long, "
+        "".join(f"{key} string, " for key in _DOC_KEYS)
+        + "bin_ts timestamp, cnt long, "
         "vmin double, vmax double, vsum double, last double, last_ts timestamp"
     )
     if with_first:
@@ -236,8 +243,8 @@ def rollup_docs_arrow(
                 unit="us",
             )
             out = {
-                "doc_id": np.repeat(pdf["doc_id"].to_numpy()[keep], nbins),
-                "source": np.repeat(pdf["source"].to_numpy()[keep], nbins),
+                **{key: np.repeat(pdf[key].to_numpy()[keep], nbins)
+                   for key in _DOC_KEYS},
                 "bin_ts": bin_ts,
                 "cnt": cnt,
                 "vmin": vmin,

@@ -72,6 +72,7 @@ from gensor_spark.operators.histquantiles import (
 )
 from gensor_spark.operators.points import docs_to_points
 from gensor_spark.operators.rollup import (
+    _DOC_KEYS,
     _merge_partials,
     cascade_tier,
     finalize_tier,
@@ -86,9 +87,6 @@ from gensor_spark.operators.topkrollup import (
 )
 
 TIERS = ("1m", "1h", "1d")
-
-#: the series columns of a token docs table
-_DOC_KEYS = ("doc_id", "source")
 
 
 def _rollup_hist_points(points: DataFrame, tier: str, keys: tuple[str, ...],
@@ -911,19 +909,21 @@ class TierPipeline:
         """
         final, tmp, old = self._compact_paths(tier)
         shutil.rmtree(tmp, ignore_errors=True)
-        # any rewrite retires a bucketed layout's catalog entry BEFORE the
-        # promote, or a reader could treat new plain files as bucket files
-        # (Spark aborts on unsuffixed bucket files), and before a bucketed
-        # write, so an overwrite-saveAsTable onto an entry registered at the
-        # LIVE location never gets to touch it (external-table drops are
-        # metadata-only; the live files stay)
-        self._drop_bucket_table(tier)
-        # step 1: write tmp
+        # step 1: write tmp. Any rewrite retires a bucketed layout's catalog
+        # entry before the promote, or a reader could treat new plain files
+        # as bucket files (Spark aborts on unsuffixed bucket files). A plain
+        # rewrite retires it only once tmp is written, so a failed write
+        # leaves the live bucketed fast path in place; a bucketed rewrite
+        # retires it before the write, so an overwrite-saveAsTable onto an
+        # entry registered at the LIVE location never gets to touch it
+        # (external-table drops are metadata-only; the live files stay)
         if n_buckets is None:
             n = self._write_counted(partials, str(tmp / "batch=-1"))
+            self._drop_bucket_table(tier)
         else:
             from gensor_spark.plans.bucketing import write_bucketed
 
+            self._drop_bucket_table(tier)
             write_bucketed(partials, self._bucket_table(tier), n_buckets,
                            bucket_cols=self.keys, sort_cols=("bin_ts",),
                            path=str(tmp / "batch=-1"))

@@ -211,3 +211,35 @@ def test_tier_store_bucket_validations(spark, tmp_path):
     pipe.run(docs)
     with pytest.raises(ValueError, match="exclusive"):
         pipe.compact("1h", zorder=True, bucket=4)
+
+
+def test_failed_plain_rewrite_keeps_bucketed_fast_path(spark, tmp_path,
+                                                       monkeypatch):
+    """A plain rewrite that fails while writing tmp leaves the bucketed tier
+    AND its catalog entry live: reads keep the zero-Exchange fast path."""
+    import pandas as pd
+
+    from gensor_spark.plans.incremental import TierPipeline
+    from gensor_spark.sources.synth import synth_docs
+
+    docs = synth_docs(spark, n_docs=12, seed=5, min_tok=5, max_tok=120)
+    pipe = TierPipeline(spark, str(tmp_path / "bkt_fail"), n_batches=1)
+    pipe.run(docs)
+    pipe.compact("1h", bucket=4)
+    want = (pipe.read_tier("1h").orderBy("doc_id", "source", "bin_ts")
+            .toPandas().reset_index(drop=True))
+
+    def failing_write(df, path):
+        raise RuntimeError("tmp write failed")
+
+    monkeypatch.setattr(pipe, "_write_counted", failing_write)
+    with pytest.raises(RuntimeError, match="tmp write failed"):
+        pipe.compact("1h")
+    monkeypatch.undo()
+
+    merged = pipe.read_tier("1h", finalize=False)
+    assert is_bucket_satisfied(merged), _plan(merged)
+    got = (pipe.read_tier("1h").orderBy("doc_id", "source", "bin_ts")
+           .toPandas().reset_index(drop=True))
+    pd.testing.assert_frame_equal(got, want)
+    spark.sql(f"DROP TABLE IF EXISTS {pipe._bucket_table('1h')}")

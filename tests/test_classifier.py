@@ -137,8 +137,8 @@ def test_empty_label_join_raises(spark):
 
 @pytest.mark.parametrize("fail_in", ["join", "loop"])
 def test_training_failure_releases_its_caches(spark, monkeypatch, fail_in):
-    """An exception after the seed projection is persisted — an empty join,
-    or a failing gradient pass — leaves no training cache pinned."""
+    """An exception after the training set is cached — an empty join, or a
+    failing gradient pass — leaves no training cache pinned."""
     import gensor_spark.operators.classifier as clf
 
     def persisted():
