@@ -28,11 +28,14 @@ Architecture (Spark-first, not a port):
                    driver-oracled operators).
 """
 
-from gensor_spark.session import get_spark
-
 
 def __getattr__(name):
-    # lazy: api pulls pyspark.sql at import; keep bare-package import cheap
+    # lazy: both import pyspark, and the worker daemon starts as
+    # ``-m gensor_spark.pydaemon``, which must filter sys.path first
+    if name == "get_spark":
+        from gensor_spark.session import get_spark
+
+        return get_spark
     if name == "Dataset":
         from gensor_spark.api import Dataset
 

@@ -406,7 +406,6 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 64) -> DataFrame:
         .localCheckpoint()
     )
     pairs.unpersist()
-    spark = edges.sparkSession
     # localCheckpoint (not cache): each round's plan would otherwise nest the
     # previous round's joins — after N rounds the lineage is N joins deep and
     # the optimizer chokes long before the data does. Checkpointing cuts the
@@ -427,21 +426,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 64) -> DataFrame:
             F.sum(F.xxhash64("id", "root").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
 
-    # The loop's joins are shuffle-bound JVM stages with no Python kernels,
-    # so AQE's byte-sized partition coalescing — deliberately OFF session-wide
-    # because it starves CPU-bound Arrow stages (session.py) — is the RIGHT
-    # cost model here: a small near-dup graph coalesces each round's
-    # exchanges to a handful of tasks (measured 4.4s/round → ~0.4s/round on
-    # an 83k-edge graph at 32 cores), while a web-scale graph keeps its
-    # width. Enabled only for the loop (set INSIDE the try so any eager
-    # failure still restores it), previous value put back after.
-    _coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    _coalesce_prev = spark.conf.get(_coalesce_key)
-    try:
-        spark.conf.set(_coalesce_key, "true")
-        return _propagate(edges, labels, _checksum, max_iter)
-    finally:
-        spark.conf.set(_coalesce_key, _coalesce_prev)
+    return _propagate(edges, labels, _checksum, max_iter)
 
 
 def _propagate(edges: DataFrame, labels: DataFrame, _checksum,

@@ -97,6 +97,16 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_GC_OPTS", "-XX:+UseParallelGC"),
         )
     )
+    if master.startswith("local["):
+        # Workers import the driver's pyspark instead of Spark's bundled
+        # zips, which cost ~250 ms per Arrow task (pydaemon.py). The daemon
+        # and every engine kernel need the engine on the workers' path,
+        # wherever the driver was started from.
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = (
+            builder.config("spark.python.daemon.module", "gensor_spark.pydaemon")
+            .config("spark.executorEnv.PYTHONPATH", root)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
