@@ -717,8 +717,9 @@ class TierPipeline:
         unmerged, re-binned to ``tier`` (bin-grain rows, never a raw-point
         re-read): equal (value) rows of several contributions or finer bins
         are window peers, so the answer equals the merged, cascaded
-        histogram's with one shuffle instead of four. Exactness argument
-        and plan audit: operators/histquantiles.py."""
+        histogram's with one shuffle instead of four; a read under the
+        one-task cut (``_scan``) uses none. Exactness argument and plan
+        audit: operators/histquantiles.py."""
         return quantiles_from_hist(self._sketch_scan("hist"), ps=ps,
                                    keys=self.keys, tier=tier)
 
@@ -842,6 +843,17 @@ class TierPipeline:
         go stale; DataFrames are NOT reused across reads, because a file
         index keeps the listing it was built with and a rerun batch or a
         fold would leave it stale.
+
+        A read whose ``part-*`` files sum to at most the session's
+        ``spark.sql.files.openCostInBytes`` (1 MB from ``get_spark``) runs
+        as one task (``coalesce(1)``): splitting a read smaller than the
+        cost Spark charges for opening one file buys nothing. The single
+        partition already meets the clustering of the merge aggregate, the
+        quantile windows and an overview ``groupBy``, so such a read plans
+        no Exchange and runs as one job; filters still push into the scan.
+        Larger reads keep their file splits and the merge its shuffle: one
+        task is slower there (a 1.9 MB hist quantile read, measured). The
+        sizes come from a local directory listing, never a Spark job.
         """
         reader = self.spark.read.option("basePath", str(base))
         known = self._schemas.get(base.name)
@@ -852,7 +864,14 @@ class TierPipeline:
             # concurrent first reads may both infer; they store equal schemas
             self._schemas[base.name] = StructType(
                 [f for f in df.schema.fields if f.name != "batch"])
-        return df.drop("batch")
+        df = df.drop("batch")
+        size = 0
+        for p in parts:
+            with os.scandir(p) as entries:
+                size += sum(e.stat().st_size for e in entries
+                            if e.name.startswith("part-"))
+        conf = self.spark._jsparkSession.sessionState().conf()
+        return df.coalesce(1) if size <= conf.filesOpenCostInBytes() else df
 
     def _compact_paths(self, tier: str) -> tuple[Path, Path, Path]:
         base = self.store / f"tier_{tier}"

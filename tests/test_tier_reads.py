@@ -1,16 +1,22 @@
 """The tier read path: the per-pipeline schema memo behind every tier scan,
-and histogram quantile reads straight from the unmerged 1m contributions.
+the one-task scan of small tiers, and histogram quantile reads straight from
+the unmerged 1m contributions.
 
 A tier read passes the schema it remembers for the directory instead of
 letting Spark infer it with a job; the memo must equal what a fresh
-inference gives after every kind of write the store sees. A quantile read
-re-bins the visible contributions inside the quantile window; it must equal
-merge → cascade → quantiles exactly, with one hash exchange.
+inference gives after every kind of write the store sees. A read whose data
+files sum to at most ``spark.sql.files.openCostInBytes`` runs as one task
+with no exchange and must return exactly the rows of the split scan. A
+quantile read re-bins the visible contributions inside the quantile window;
+it must equal merge → cascade → quantiles exactly, with one hash exchange
+when the scan is split.
 """
 
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
+from datetime import timedelta
 
 import pytest
 from pyspark.sql.types import StructType
@@ -21,7 +27,7 @@ from gensor_spark.operators.histquantiles import (
     quantiles_from_hist,
 )
 from gensor_spark.operators.points import docs_to_points
-from gensor_spark.plans.incremental import TierPipeline
+from gensor_spark.plans.incremental import TierPipeline, read_range
 from gensor_spark.sources.synth import synth_docs
 from gensor_spark.streaming.sketch_stream import make_sketch_sink
 
@@ -96,7 +102,8 @@ def test_schema_memo_matches_fresh_inference(spark, docs, tmp_path):
     assert pipe._schemas == {}
 
 
-def _jobs_submitted(spark, build) -> int:
+def _tasks_per_job(spark, build) -> list[int]:
+    """Task count of each job that ``build()`` submits."""
     sc = spark.sparkContext
     group = f"tier-reads-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "count the jobs of one plan build")
@@ -107,7 +114,43 @@ def _jobs_submitted(spark, build) -> int:
         sc.setLocalProperty("spark.job.description", None)
     # the status tracker learns of jobs through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    return [sum(tracker.getStageInfo(s).numTasks
+                for s in tracker.getJobInfo(j).stageIds)
+            for j in tracker.getJobIdsForGroup(group)]
+
+
+def _jobs_submitted(spark, build) -> int:
+    return len(_tasks_per_job(spark, build))
+
+
+def _data_bytes(base) -> int:
+    """Bytes of the data files of every contribution of a tier dir."""
+    return sum(f.stat().st_size for f in base.glob("batch=*/part-*"))
+
+
+@contextmanager
+def _open_cost(spark, n_bytes: int):
+    """Run the block with ``spark.sql.files.openCostInBytes`` at
+    ``n_bytes``: the size under which a tier read runs as one task."""
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n_bytes))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _exchanges(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "Exchange")
+
+
+def _same_rows(got, want) -> None:
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_second_tier_read_builds_without_a_job(spark, docs, tmp_path):
@@ -137,11 +180,15 @@ def test_hist_quantile_read_equals_merge_cascade(spark, docs, tmp_path):
             want = quantiles_from_hist(
                 merged if tier == "1m" else cascade_hist(merged, tier),
                 keys=pipe.keys)
+            # the test store is under the default cut: one task, no exchange
             got = pipe.read_hist_quantiles(tier)
-            assert got.count() == want.count() > 0
-            assert got.exceptAll(want).count() == 0, tier
-            assert want.exceptAll(got).count() == 0, tier
-            plan = got._jdf.queryExecution().executedPlan().toString()
+            _same_rows(got, want)
+            assert _exchanges(got) == 0, tier
+            # a store above the cut takes the split path: one hash exchange
+            with _open_cost(spark, _data_bytes(base) - 1):
+                got = pipe.read_hist_quantiles(tier)
+                _same_rows(got, want)
+                plan = got._jdf.queryExecution().executedPlan().toString()
             assert plan.count("Exchange hashpartitioning") == 1, plan
 
     assert len(list(base.glob("batch=*"))) > 3  # batches, wave, epoch s4
@@ -149,3 +196,38 @@ def test_hist_quantile_read_equals_merge_cascade(spark, docs, tmp_path):
     pipe.compact_hist()
     assert [p.name for p in base.glob("batch=*")] == ["batch=-1"]
     check()
+
+
+def test_small_tier_reads_run_as_one_task(spark, docs, tmp_path):
+    pipe = TierPipeline(spark, str(tmp_path / "store"), n_batches=2,
+                        hist_tiers=True)
+    pipe.run(docs)
+    points = docs_to_points(docs)
+    pipe.ingest_points_wave(_late(points, 13, 5, 30, 7), wave=1)
+    make_sketch_sink(str(pipe.store), "hist")(
+        _late(points, 11, 2, 20, 1).drop("seq"), 4)
+    t0 = points.agg({"ts": "min"}).first()[0]
+    # read name: (build, the tier dir it scans)
+    reads = {
+        "tier_1m": (lambda: pipe.read_tier("1m"), "1m"),
+        "tier_1h": (lambda: pipe.read_tier("1h"), "1h"),
+        "range_1m": (lambda: read_range(
+            pipe, t0, t0 + timedelta(hours=6), max_points=300)[0], "1m"),
+        "hist_q": (lambda: pipe.read_hist_quantiles("1h"), "hist_1m"),
+    }
+    assert read_range(pipe, t0, t0 + timedelta(hours=6),
+                      max_points=300)[1] == "1m"
+    for name, (read, tier) in reads.items():
+        base = pipe.store / f"tier_{tier}"
+        assert len(list(base.glob("batch=*"))) >= 3, name
+        size = _data_bytes(base)
+        # at the cut: one job of one task, no exchange
+        with _open_cost(spark, size):
+            small = read()
+            assert _exchanges(small) == 0, name
+            assert _tasks_per_job(spark, small.collect) == [1], name
+        # one byte below it: the split scan and its shuffle
+        with _open_cost(spark, size - 1):
+            split = read()
+            assert _exchanges(split) > 0, name
+            _same_rows(small, split)
