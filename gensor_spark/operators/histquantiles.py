@@ -44,11 +44,16 @@ all-NULL bins are absent rather than NULL-rowed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gensor_spark.operators.resample import bin_ts, freq_to_seconds
-from gensor_spark.operators.rollup import _DOC_KEYS, TIER_SECONDS, ragged_bins
+from gensor_spark.operators.resample import bin_ts, bin_ts_sql, freq_to_seconds
+from gensor_spark.operators.rollup import (
+    _DOC_KEYS,
+    TIER_SECONDS,
+    ragged_bins,
+    sql_ident,
+)
 
 KEYS = _DOC_KEYS
 
@@ -193,33 +198,29 @@ def quantiles_from_hist(
     percent with a ``p`` prefix; 0.5 → ``p50``, 0.999 → ``p99_9``).
     """
     group = [*keys, "bin_ts"]
-    ex = hists.select(*group, F.explode("hist").alias("_v", "_c"))
-    if tier is not None:
-        ex = ex.withColumn("bin_ts", bin_ts(F.col("bin_ts"), _step(tier)))
-    w_ord = W.partitionBy(*group).orderBy("_v")
-    w_all = W.partitionBy(*group).rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    ex = ex.withColumn("_cum", F.sum("_c").over(w_ord)).withColumn(
-        "_n", F.sum("_c").over(w_all)
+    part = ", ".join(map(sql_ident, group))
+    ts = "bin_ts" if tier is None else bin_ts_sql("bin_ts", _step(tier))
+    ex = hists.selectExpr(*map(sql_ident, keys), f"{ts} AS bin_ts",
+                          "explode(hist) AS (_v, _c)").selectExpr(
+        "*",
+        f"sum(_c) OVER (PARTITION BY {part} ORDER BY _v) AS _cum",
+        f"sum(_c) OVER (PARTITION BY {part} ROWS BETWEEN UNBOUNDED PRECEDING"
+        " AND UNBOUNDED FOLLOWING) AS _n",
     )
 
     aggs = []
     for p in ps:
         name = f"p{p * 100:g}".replace(".", "_")
-        # type-7: 0-indexed fractional rank h in [0, n-1]
-        h = (F.col("_n") - 1) * F.lit(float(p))
-        lo_rank = F.floor(h) + 1      # 1-indexed position of x_⌊h⌋
-        hi_rank = F.ceil(h) + 1
-        x_lo = F.min(F.when(F.col("_cum") >= lo_rank, F.col("_v")))
-        x_hi = F.min(F.when(F.col("_cum") >= hi_rank, F.col("_v")))
-        frac = h - F.floor(h)
-        # frac/h are row-level but constant within the group (they depend
-        # only on _n); min() collapses them losslessly
-        aggs.append(
-            (x_lo + F.min(frac) * (x_hi - x_lo)).alias(name)
-        )
-    return ex.groupBy(*group).agg(*aggs)
+        # type-7: 0-indexed fractional rank h in [0, n-1]; x_lo/x_hi are at
+        # the 1-indexed positions ⌊h⌋+1 and ⌈h⌉+1
+        h = f"((_n - 1) * {float(p)!r}D)"
+        x_lo = f"min(CASE WHEN _cum >= floor({h}) + 1 THEN _v END)"
+        x_hi = f"min(CASE WHEN _cum >= ceil({h}) + 1 THEN _v END)"
+        # the fraction is row-level but constant within the group (it
+        # depends only on _n); min() collapses it losslessly
+        frac = f"min({h} - floor({h}))"
+        aggs.append(f"{x_lo} + {frac} * ({x_hi} - {x_lo}) AS {name}")
+    return ex.groupBy(*group).agg(*map(F.expr, aggs))
 
 
 def rollup_quantiles(

@@ -85,19 +85,16 @@ def events_to_points(events: DataFrame) -> DataFrame:
     indexable (``gensor/core/indexer.py:20-32``) which several operators
     (difference transform, trend) rely on.
     """
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("doc_id", "source").orderBy("ts", "event_id")
-    return (
-        events.select(
-            F.col("user_id").cast("string").alias("doc_id"),
-            F.col("event_type").alias("source"),
-            # testdata parquet timestamps arrive as TIMESTAMP_NTZ in Spark 4;
-            # with the session pinned to UTC this cast is wall-clock identity
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.col("value").cast("double").alias("value"),
-            F.col("event_id"),
-        )
-        .withColumn("seq", F.row_number().over(w) - F.lit(1))
-        .drop("event_id")
+    return events.selectExpr(
+        "CAST(user_id AS STRING) AS doc_id",
+        "event_type AS source",
+        # testdata parquet timestamps arrive as TIMESTAMP_NTZ in Spark 4;
+        # with the session pinned to UTC this cast is wall-clock identity
+        "CAST(ts AS TIMESTAMP) AS ts",
+        "CAST(value AS DOUBLE) AS value",
+        "event_id",
+    ).selectExpr(
+        "doc_id", "source", "ts", "value",
+        "row_number() OVER (PARTITION BY doc_id, source"
+        " ORDER BY ts, event_id) - 1 AS seq",
     )

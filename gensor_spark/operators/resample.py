@@ -80,6 +80,14 @@ def bin_ts(ts: Column, step_seconds: int) -> Column:
     return F.timestamp_seconds(binned)
 
 
+def bin_ts_sql(col: str, step_seconds: int) -> str:
+    """``bin_ts`` of the column named ``col`` as one SQL expression string
+    (an identifier, quoted by the caller where needed): the same plan for
+    one Py4J call instead of one per ``F.*`` node."""
+    secs = f"unix_timestamp({col})"
+    return f"timestamp_seconds({secs} - pmod({secs}, {step_seconds}))"
+
+
 def resample(
     points: DataFrame,
     freq: str,

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gensor_spark.operators.resample import bin_ts, freq_to_seconds
+from gensor_spark.operators.resample import bin_ts, bin_ts_sql, freq_to_seconds
 
 PARTIAL_COLS = ("cnt", "vmin", "vmax", "vsum", "last", "last_ts")
 
@@ -58,6 +58,12 @@ PARTIAL_COLS = ("cnt", "vmin", "vmax", "vsum", "last", "last_ts")
 OPT_PARTIAL_COLS = ("vsumsq", "first", "first_ts", "vsumcu", "vsumqu")
 
 TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier, for column names that come from
+    callers (series keys, group columns) inside an expression string."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def partial_aggs(v, ts, with_sumsq: bool = False, with_first: bool = False,
@@ -279,26 +285,27 @@ def _merge_partials(partials: DataFrame, group_cols: list[str]) -> DataFrame:
     Sumsq-aware: a ``vsumsq`` column, when present, merges as a plain sum —
     so the cascade, the salted two-phase path, the incremental pipeline, and
     the streaming rollup all propagate the variance state without changes.
+
+    The aggregates, like ``finalize_tier``'s projection, are SQL expression
+    strings: one Py4J call each, where an ``F.*`` tree makes one per node
+    (the same analysed plan; a tier read's build is half the calls).
     """
+    cols = partials.columns
     aggs = [
-        F.sum("cnt").alias("cnt"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
-        F.sum("vsum").alias("vsum"),
-        F.max_by("last", F.when(F.col("cnt") > 0, F.col("last_ts"))).alias("last"),
-        F.max(F.when(F.col("cnt") > 0, F.col("last_ts"))).alias("last_ts"),
+        "sum(cnt) AS cnt",
+        "min(vmin) AS vmin",
+        "max(vmax) AS vmax",
+        "sum(vsum) AS vsum",
+        "max_by(`last`, CASE WHEN cnt > 0 THEN last_ts END) AS `last`",
+        "max(CASE WHEN cnt > 0 THEN last_ts END) AS last_ts",
     ]
-    if "first" in partials.columns:
-        aggs.append(F.min_by("first", F.when(F.col("cnt") > 0,
-                                             F.col("first_ts"))).alias("first"))
-        aggs.append(F.min(F.when(F.col("cnt") > 0,
-                                 F.col("first_ts"))).alias("first_ts"))
-    if "vsumsq" in partials.columns:
-        aggs.append(F.sum("vsumsq").alias("vsumsq"))
-    for c in ("vsumcu", "vsumqu"):
-        if c in partials.columns:
-            aggs.append(F.sum(c).alias(c))
-    return partials.groupBy(*group_cols).agg(*aggs)
+    if "first" in cols:
+        aggs.append(
+            "min_by(`first`, CASE WHEN cnt > 0 THEN first_ts END) AS `first`")
+        aggs.append("min(CASE WHEN cnt > 0 THEN first_ts END) AS first_ts")
+    aggs += [f"sum({c}) AS {c}" for c in ("vsumsq", "vsumcu", "vsumqu")
+             if c in cols]
+    return partials.groupBy(*group_cols).agg(*map(F.expr, aggs))
 
 
 def cascade_tier(
@@ -314,7 +321,7 @@ def cascade_tier(
     (vsum, cnt), never averaged across bins.
     """
     step = TIER_SECONDS.get(tier) or freq_to_seconds(tier)
-    rebinned = finer.withColumn("bin_ts", bin_ts(F.col("bin_ts"), step))
+    rebinned = finer.withColumn("bin_ts", F.expr(bin_ts_sql("bin_ts", step)))
     return _merge_partials(rebinned, [*keys, "bin_ts"])
 
 
@@ -342,44 +349,39 @@ def finalize_tier(partials: DataFrame, ddof: int = 1) -> DataFrame:
     covers exactly-constant bins and the near-constant ones where a
     one-pass moment formula, like DuckDB's own, is pure noise).
     """
-    nz = F.col("cnt") > 0
     cols = [
-        *[c for c in partials.columns
-          if c not in PARTIAL_COLS and c not in OPT_PARTIAL_COLS],
-        F.col("cnt").alias("count"),
-        F.when(nz, F.col("vmin")).alias("min"),
-        F.when(nz, F.col("vmax")).alias("max"),
-        F.when(nz, F.col("vsum") / F.col("cnt")).alias("mean"),
-        F.when(nz, F.col("last")).alias("last"),
+        *(sql_ident(c) for c in partials.columns
+          if c not in PARTIAL_COLS and c not in OPT_PARTIAL_COLS),
+        "cnt AS `count`",
+        "CASE WHEN cnt > 0 THEN vmin END AS `min`",
+        "CASE WHEN cnt > 0 THEN vmax END AS `max`",
+        "CASE WHEN cnt > 0 THEN vsum / cnt END AS mean",
+        "CASE WHEN cnt > 0 THEN `last` END AS `last`",
     ]
     if "first" in partials.columns:
-        cols.append(F.when(nz, F.col("first")).alias("open"))
+        cols.append("CASE WHEN cnt > 0 THEN `first` END AS `open`")
     if "vsumsq" in partials.columns:
-        n = F.col("cnt")
-        var = F.greatest(
-            (F.col("vsumsq") - F.col("vsum") * F.col("vsum") / n)
-            / (n - F.lit(ddof)),
-            F.lit(0.0),
-        )
-        var = F.when(n > ddof, var)
-        cols.append(var.alias("var"))
-        cols.append(F.sqrt(var).alias("std"))
+        var = (f"CASE WHEN cnt > {ddof} THEN greatest("
+               f"(vsumsq - vsum * vsum / cnt) / (cnt - {ddof}), 0.0D) END")
+        cols.append(f"{var} AS var")
+        cols.append(f"sqrt({var}) AS std")
     if "vsumcu" in partials.columns:
-        n = F.col("cnt").cast("double")
-        mean = F.col("vsum") / n
-        m2 = F.col("vsumsq") / n - mean * mean
-        m3 = (F.col("vsumcu") / n - F.lit(3.0) * mean * (F.col("vsumsq") / n)
-              + F.lit(2.0) * mean * mean * mean)
-        m4 = (F.col("vsumqu") / n - F.lit(4.0) * mean * (F.col("vsumcu") / n)
-              + F.lit(6.0) * mean * mean * (F.col("vsumsq") / n)
-              - F.lit(3.0) * mean * mean * (mean * mean))
-        ok = m2 > F.lit(1e-9) * (F.col("vsumsq") / n)
-        skew = (F.sqrt(n * (n - 1)) / (n - 2)) * m3 / F.pow(m2, 1.5)
-        kurt = ((n - 1) / ((n - 2) * (n - 3))) * (
-            (n + 1) * (m4 / (m2 * m2) - F.lit(3.0)) + F.lit(6.0))
-        cols.append(F.when(ok & (F.col("cnt") >= 3), skew).alias("skew"))
-        cols.append(F.when(ok & (F.col("cnt") >= 4), kurt).alias("kurt"))
-    return partials.select(*cols)
+        n = "CAST(cnt AS DOUBLE)"
+        mean = f"(vsum / {n})"
+        m2 = f"(vsumsq / {n} - {mean} * {mean})"
+        m3 = (f"(vsumcu / {n} - 3.0D * {mean} * (vsumsq / {n})"
+              f" + 2.0D * {mean} * {mean} * {mean})")
+        m4 = (f"(vsumqu / {n} - 4.0D * {mean} * (vsumcu / {n})"
+              f" + 6.0D * {mean} * {mean} * (vsumsq / {n})"
+              f" - 3.0D * {mean} * {mean} * ({mean} * {mean}))")
+        ok = f"{m2} > 1.0E-9D * (vsumsq / {n})"
+        skew = (f"(sqrt({n} * ({n} - 1)) / ({n} - 2)) * {m3}"
+                f" / power({m2}, 1.5D)")
+        kurt = (f"(({n} - 1) / (({n} - 2) * ({n} - 3)))"
+                f" * (({n} + 1) * ({m4} / ({m2} * {m2}) - 3.0D) + 6.0D)")
+        cols.append(f"CASE WHEN {ok} AND cnt >= 3 THEN {skew} END AS skew")
+        cols.append(f"CASE WHEN {ok} AND cnt >= 4 THEN {kurt} END AS kurt")
+    return partials.selectExpr(*cols)
 
 
 # ---------------------------------------------------------------------------

@@ -332,6 +332,9 @@ class TierPipeline:
         #: tier directory this pipeline has read, by directory name — see
         #: ``_scan``. Cleared by ``reset()``.
         self._schemas: dict[str, StructType] = {}
+        #: the last frame each tier read built, with the listing it was
+        #: built on, by read key — see ``_memo_read``. Cleared by ``reset()``.
+        self._frames: dict[tuple, tuple[tuple, DataFrame]] = {}
         self.store.mkdir(parents=True, exist_ok=True)
 
     # ------------------------------------------------------------- checkpoint
@@ -628,10 +631,10 @@ class TierPipeline:
         return self._write_counted(
             part, str(self.store / f"tier_{fam.tier}" / f"batch={sid}"))
 
-    def _sketch_contribs(self, fam: _SketchFamily
-                         ) -> tuple[list[Path], set[str]]:
-        """Visible contribution dirs of a sketch tier, and its folded
-        stream epochs.
+    def _sketch_contribs(self, family: str
+                         ) -> tuple[Path, list[Path], set[str]]:
+        """The tier dir of ``family``, its visible contribution dirs and
+        its folded stream epochs, once crash leftovers are repaired.
 
         Two kinds of dir are invisible everywhere. A crash mid-write leaves
         a ``batch=*`` dir with no ``_SUCCESS``; reading it would merge half
@@ -643,41 +646,39 @@ class TierPipeline:
         it again, and counting it would count the epoch twice. The next
         fold deletes it with the rest of the old tier dir.
         """
+        fam = _SKETCH_FAMILIES[family]
+        self._recover_compact(fam.tier)
         folded = fam.folded(self.store)
         base = self.store / f"tier_{fam.tier}"
         parts = sorted(p for p in base.glob("batch=*")
                        if (p / "_SUCCESS").exists()
                        and p.name.split("=", 1)[1] not in folded)
-        return parts, folded
-
-    def _sketch_scan(self, family: str,
-                     parts: list[Path] | None = None) -> DataFrame:
-        """The unmerged 1m contributions of ``family`` (``parts``, default
-        all visible ones): one row per (contribution, series, bin)."""
-        fam = _SKETCH_FAMILIES[family]
-        base = self.store / f"tier_{fam.tier}"
-        if parts is None:
-            self._recover_compact(fam.tier)
-            parts, _ = self._sketch_contribs(fam)
         if not parts:
             raise FileNotFoundError(
                 f"no partials under {base} — construct the pipeline with "
                 f"{family}_tiers=True and run() it first"
             )
-        return self._scan(base, parts)
+        return base, parts, folded
 
-    def _read_sketch(self, family: str, tier: str = "1m",
-                     parts: list[Path] | None = None) -> DataFrame:
-        """Merged partials of ``family`` at ``tier``: the 1m contributions
-        (``parts``, default all visible ones) merge per (series, bin), and
-        coarser tiers cascade from the merged 1m state."""
+    def _merge_sketch(self, family: str, raw: DataFrame,
+                      tier: str = "1m") -> DataFrame:
+        """Merged partials of ``family`` at ``tier`` from its unmerged 1m
+        contributions ``raw``: they merge per (series, bin), and coarser
+        tiers cascade from the merged 1m state."""
         fam = _SKETCH_FAMILIES[family]
         params = self._sketch_params(family)
-        merged = fam.merge(self._sketch_scan(family, parts),
-                           [*self.keys, "bin_ts"], **params)
+        merged = fam.merge(raw, [*self.keys, "bin_ts"], **params)
         if tier != "1m":
             merged = fam.cascade(merged, tier, keys=self.keys, **params)
         return merged
+
+    def _read_sketch(self, family: str, key: tuple,
+                     build: Callable[[DataFrame], DataFrame]) -> DataFrame:
+        """``build`` over the visible 1m contributions of ``family`` (one
+        row per contribution, series and bin), memoized under
+        ``(family, *key)`` by ``_memo_read``."""
+        base, parts, _ = self._sketch_contribs(family)
+        return self._memo_read((family, *key), base, parts, build)
 
     def _fold_sketch(self, family: str, cutoff: str | None = None
                      ) -> str | None:
@@ -694,11 +695,10 @@ class TierPipeline:
         stream write against a running fold.
         """
         fam = _SKETCH_FAMILIES[family]
-        self._recover_compact(fam.tier)
-        parts, folded = self._sketch_contribs(fam)
+        base, parts, folded = self._sketch_contribs(family)
         absorbed = {p.name.split("=", 1)[1] for p in parts
                     if p.name.startswith("batch=s")}
-        merged = self._read_sketch(family, parts=parts)
+        merged = self._merge_sketch(family, self._scan(base, parts))
         if cutoff is not None:
             merged = merged.filter(
                 F.col("bin_ts") >= F.lit(cutoff).cast("timestamp"))
@@ -720,20 +720,25 @@ class TierPipeline:
         histogram's with one shuffle instead of four; a read under the
         one-task cut (``_scan``) uses none. Exactness argument and plan
         audit: operators/histquantiles.py."""
-        return quantiles_from_hist(self._sketch_scan("hist"), ps=ps,
-                                   keys=self.keys, tier=tier)
+        return self._read_sketch("hist", ("quantiles", tier, tuple(ps)),
+                                 lambda raw: quantiles_from_hist(
+                                     raw, ps=ps, keys=self.keys, tier=tier))
 
     def read_distinct(self, tier: str = "1h") -> DataFrame:
         """Per-bin distinct-count estimates at ``tier`` from the stored 1m
         HLL sketches — coarser tiers cascade at read via register-max union
         (exactly equal to direct aggregation; operators/distinctrollup.py)."""
-        return finalize_distinct(self._read_sketch("distinct", tier))
+        return self._read_sketch("distinct", (tier,), lambda raw:
+                                 finalize_distinct(self._merge_sketch(
+                                     "distinct", raw, tier)))
 
     def read_topk(self, tier: str = "1h", top: int | None = None) -> DataFrame:
         """Per-bin ranked heavy hitters at ``tier`` from the stored 1m
         Misra-Gries summaries — coarser tiers cascade at read via the MG
         merge (certificate bounds preserved; operators/topkrollup.py)."""
-        return finalize_topk(self._read_sketch("topk", tier), top=top)
+        return self._read_sketch("topk", (tier, top), lambda raw:
+                                 finalize_topk(self._merge_sketch(
+                                     "topk", raw, tier), top=top))
 
     def read_cms(self, tier: str = "1h", items: DataFrame | None = None,
                  item_col: str = "item") -> DataFrame:
@@ -742,7 +747,8 @@ class TierPipeline:
         direct build; operators/cmsketch.py). With ``items`` (a one-column
         DataFrame whose type matches ``cms_of``), returns point-query
         estimates ``keys..., bin_ts, item, est`` instead of raw counters."""
-        merged = self._read_sketch("cms", tier)
+        merged = self._read_sketch(
+            "cms", (tier,), lambda raw: self._merge_sketch("cms", raw, tier))
         if items is None:
             return merged
         return estimate_cms(merged, items, item_col=item_col,
@@ -801,48 +807,95 @@ class TierPipeline:
         Parquet backend (Iceberg's own snapshot time travel covers it
         there).
         """
+        def build(df: DataFrame) -> DataFrame:
+            merged = _merge_partials(df, [*self.keys, "bin_ts"])
+            return finalize_tier(merged) if finalize else merged
+
         if self.backend == "iceberg":
             if as_of_batch is not None:
                 raise ValueError(
                     "as_of_batch is parquet-backend only — use Iceberg "
                     "snapshot time travel (VERSION AS OF) instead")
-            df = self.iceberg.read(tier)
-        else:
-            self._recover_compact(tier)
-            df = self._bucketed_scan(tier) if as_of_batch is None else None
-            if df is None:
-                base = self.store / f"tier_{tier}"
-                parts = sorted(base.glob("batch=*"))
-                if as_of_batch is not None:
-                    ids = [int(p.name.split("=", 1)[1]) for p in parts]
-                    if -1 in ids:
-                        raise ValueError(
-                            f"tier {tier!r} is compacted (batch=-1): its "
-                            "per-batch history is folded — as-of reads need "
-                            "the uncompacted layout")
-                    parts = [p for p, i in zip(parts, ids)
-                             if i <= as_of_batch]
-                if not parts:
-                    raise FileNotFoundError(
-                        f"tier {tier!r} has no data under {base} — run() it "
-                        "first (retention/compaction skip absent tiers)"
-                    )
-                df = self._scan(base, parts)
-        merged = _merge_partials(df, [*self.keys, "bin_ts"])
-        return finalize_tier(merged) if finalize else merged
+            return build(self.iceberg.read(tier))
+        self._recover_compact(tier)
+        if as_of_batch is None:
+            df = self._bucketed_scan(tier)
+            if df is not None:
+                return build(df)
+        base = self.store / f"tier_{tier}"
+        parts = sorted(base.glob("batch=*"))
+        if as_of_batch is not None:
+            ids = [int(p.name.split("=", 1)[1]) for p in parts]
+            if -1 in ids:
+                raise ValueError(
+                    f"tier {tier!r} is compacted (batch=-1): its per-batch "
+                    "history is folded — as-of reads need the uncompacted "
+                    "layout")
+            parts = [p for p, i in zip(parts, ids) if i <= as_of_batch]
+        if not parts:
+            raise FileNotFoundError(
+                f"tier {tier!r} has no data under {base} — run() it first "
+                "(retention/compaction skip absent tiers)"
+            )
+        return self._memo_read(("tier", tier, finalize, as_of_batch),
+                               base, parts, build)
 
-    def _scan(self, base: Path, parts: list[Path]) -> DataFrame:
+    def _listing(self, parts: list[Path]) -> tuple:
+        """What a scan of the contribution dirs ``parts`` is built on: each
+        dir's ``part-*`` files as (name, size, ``st_mtime_ns``), and the
+        session's ``spark.sql.files.openCostInBytes`` (the one-task cut of
+        ``_scan``). One local ``os.scandir`` per dir, never a Spark job."""
+        dirs = []
+        for p in parts:
+            with os.scandir(p) as entries:
+                files = sorted((e.name, st.st_size, st.st_mtime_ns)
+                               for e in entries if e.name.startswith("part-")
+                               for st in (e.stat(),))
+            dirs.append((str(p), tuple(files)))
+        conf = self.spark._jsparkSession.sessionState().conf()
+        return tuple(dirs), conf.filesOpenCostInBytes()
+
+    def _memo_read(self, key: tuple, base: Path, parts: list[Path],
+                   build: Callable[[DataFrame], DataFrame]) -> DataFrame:
+        """``build`` over the scan of ``parts``, or the frame the last read
+        under ``key`` built, when the listing (``_listing``) it was built on
+        is unchanged.
+
+        Building a read is driver work before any job: data source
+        resolution, file index, analysis of the merge and finalize plans,
+        and their Py4J round trips; a store that has not changed gets the
+        frame it already has. Every write changes the listing: a batch, a
+        wave or a stream epoch adds a dir, and every overwrite or fold
+        writes new part names (each write job stamps its own UUID in them),
+        by this pipeline or any other. Crash repair and the visibility
+        filter run before the listing is taken, on every read. A frame keeps
+        the SQL conf it was analysed under, and a file rewritten in place
+        with the same name, size and mtime is not seen; a new
+        ``TierPipeline`` builds afresh. Concurrent reads of one key may each
+        build; each stores its frame together with its own listing.
+        """
+        listing = self._listing(parts)
+        hit = self._frames.get(key)
+        if hit is not None and hit[0] == listing:
+            return hit[1]
+        df = build(self._scan(base, parts, listing))
+        self._frames[key] = (listing, df)
+        return df
+
+    def _scan(self, base: Path, parts: list[Path],
+              listing: tuple | None = None) -> DataFrame:
         """Parquet scan of the contribution dirs ``parts`` of the tier
-        directory ``base``, without the ``batch`` partition column.
+        directory ``base``, without the ``batch`` partition column;
+        ``listing`` is their ``_listing``, taken here when not given.
 
         Only a directory's first scan infers the data schema (a one-task
         Spark job over a footer, most of a small read's plan-build time);
         later scans pass the remembered one. ``batch`` stays out of the
         memo, so its type is still inferred from the paths. A pipeline's
         flags fix each tier's columns for its lifetime, so the memo cannot
-        go stale; DataFrames are NOT reused across reads, because a file
-        index keeps the listing it was built with and a rerun batch or a
-        fold would leave it stale.
+        go stale. A frame's file index keeps the listing it was built with,
+        which is why a read reuses a frame (``_memo_read``) only while the
+        listing is unchanged.
 
         A read whose ``part-*`` files sum to at most the session's
         ``spark.sql.files.openCostInBytes`` (1 MB from ``get_spark``) runs
@@ -852,8 +905,7 @@ class TierPipeline:
         quantile windows and an overview ``groupBy``, so such a read plans
         no Exchange and runs as one job; filters still push into the scan.
         Larger reads keep their file splits and the merge its shuffle: one
-        task is slower there (a 1.9 MB hist quantile read, measured). The
-        sizes come from a local directory listing, never a Spark job.
+        task is slower there (a 1.9 MB hist quantile read, measured).
         """
         reader = self.spark.read.option("basePath", str(base))
         known = self._schemas.get(base.name)
@@ -865,13 +917,9 @@ class TierPipeline:
             self._schemas[base.name] = StructType(
                 [f for f in df.schema.fields if f.name != "batch"])
         df = df.drop("batch")
-        size = 0
-        for p in parts:
-            with os.scandir(p) as entries:
-                size += sum(e.stat().st_size for e in entries
-                            if e.name.startswith("part-"))
-        conf = self.spark._jsparkSession.sessionState().conf()
-        return df.coalesce(1) if size <= conf.filesOpenCostInBytes() else df
+        dirs, open_cost = listing or self._listing(parts)
+        size = sum(f[1] for _, files in dirs for f in files)
+        return df.coalesce(1) if size <= open_cost else df
 
     def _compact_paths(self, tier: str) -> tuple[Path, Path, Path]:
         base = self.store / f"tier_{tier}"
@@ -1138,6 +1186,7 @@ class TierPipeline:
         shutil.rmtree(self.store, ignore_errors=True)
         self.store.mkdir(parents=True, exist_ok=True)
         self._schemas.clear()
+        self._frames.clear()
 
 
 def read_range(
@@ -1188,8 +1237,6 @@ def read_range(
                 chosen = t
                 break
     df = pipeline.read_tier(chosen, finalize=finalize)
-    out = df.filter(
-        (F.col("bin_ts") >= F.lit(str(s)).cast("timestamp"))
-        & (F.col("bin_ts") < F.lit(str(e)).cast("timestamp"))
-    )
+    out = df.filter(f"bin_ts >= CAST('{s}' AS TIMESTAMP)"
+                    f" AND bin_ts < CAST('{e}' AS TIMESTAMP)")
     return out, chosen

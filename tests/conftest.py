@@ -84,3 +84,27 @@ def points_pdf() -> pd.DataFrame:
 def points_sdf(spark, points_pdf):
     sdf = spark.createDataFrame(points_pdf)
     return sdf.cache()
+
+
+@pytest.fixture
+def py4j_calls(spark, monkeypatch):
+    """``count(build)``: how many Py4J round trips ``build()`` makes, each
+    ``ClientServerConnection.send_command`` one driver→JVM call. Plan-build
+    budgets assert on it: a call costs far more than the Python around it."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+
+    def count(build) -> int:
+        before = sent[0]
+        build()
+        return sent[0] - before
+
+    return count

@@ -1,6 +1,7 @@
 """The tier read path: the per-pipeline schema memo behind every tier scan,
-the one-task scan of small tiers, and histogram quantile reads straight from
-the unmerged 1m contributions.
+the frame memo keyed by the contribution listing, the one-task scan of small
+tiers, and histogram quantile reads straight from the unmerged 1m
+contributions.
 
 A tier read passes the schema it remembers for the directory instead of
 letting Spark infer it with a job; the memo must equal what a fresh
@@ -9,7 +10,9 @@ files sum to at most ``spark.sql.files.openCostInBytes`` runs as one task
 with no exchange and must return exactly the rows of the split scan. A
 quantile read re-bins the visible contributions inside the quantile window;
 it must equal merge → cascade → quantiles exactly, with one hash exchange
-when the scan is split.
+when the scan is split. A read of an unchanged store returns the frame the
+last read built; after any write the next read must equal a fresh
+pipeline's.
 """
 
 from __future__ import annotations
@@ -231,3 +234,106 @@ def test_small_tier_reads_run_as_one_task(spark, docs, tmp_path):
             split = read()
             assert _exchanges(split) > 0, name
             _same_rows(small, split)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+_MEMO_FLAGS = {"n_batches": 3, "hist_tiers": True, "distinct_tiers": True}
+
+
+def _memo_reads(pipe: TierPipeline) -> dict:
+    """The memoized read kinds, built (no action) on ``pipe``."""
+    return {
+        "tier_1m": pipe.read_tier("1m"),
+        "tier_1h_partials": pipe.read_tier("1h", finalize=False),
+        "hist_q": pipe.read_hist_quantiles("1h"),
+        "distinct": pipe.read_distinct("1h"),
+    }
+
+
+def test_unchanged_store_reads_reuse_their_frame(spark, docs, tmp_path,
+                                                 py4j_calls):
+    pipe = TierPipeline(spark, str(tmp_path / "store"), **_MEMO_FLAGS)
+    pipe.run(docs)
+    first = _memo_reads(pipe)
+    again = _memo_reads(pipe)
+    for name, df in first.items():
+        assert again[name] is df, name
+    # the key holds the read's arguments
+    assert pipe.read_tier("1m", finalize=False) is not first["tier_1m"]
+    assert pipe.read_hist_quantiles("1h", ps=(0.5,)) is not first["hist_q"]
+    # a warm repeat range read is a listing and a filter: no plan to build
+    # (227 Py4J calls before the memo)
+    t0 = docs_to_points(docs).agg({"ts": "min"}).first()[0]
+    span = (t0, t0 + timedelta(hours=6))
+    read_range(pipe, *span, max_points=300)
+    assert py4j_calls(lambda: read_range(pipe, *span, max_points=300)) <= 60
+
+
+def test_reads_after_each_write_equal_a_fresh_pipeline(spark, docs,
+                                                      tmp_path):
+    store = str(tmp_path / "store")
+    pipe = TierPipeline(spark, store, **_MEMO_FLAGS)
+    points = docs_to_points(docs)
+    pipe.run(docs, batches=[0])
+    steps = [
+        ("run a further batch", lambda: pipe.run(docs, batches=[1])),
+        ("second pipeline", lambda: TierPipeline(
+            spark, store, **_MEMO_FLAGS).run(docs, batches=[2])),
+        ("wave", lambda: pipe.ingest_points_wave(
+            _late(points, 13, 5, 30, 7), wave=1)),
+        ("stream epoch", lambda: make_sketch_sink(store, "hist")(
+            _late(points, 11, 2, 20, 1).drop("seq"), 4)),
+        ("compact", lambda: (pipe.compact("1m"), pipe.compact("1h"),
+                             pipe.compact_hist(), pipe.compact_distinct())),
+        ("retention", lambda: (
+            pipe.apply_retention({"1m": "1 day", "1h": "1 day"},
+                                 now="2024-01-03"),
+            pipe.apply_hist_retention("1 day", now="2024-01-03"),
+            pipe.apply_distinct_retention("1 day", now="2024-01-03"))),
+        ("reset and rerun", lambda: (pipe.reset(), pipe.run(docs))),
+    ]
+    for step, act in steps:
+        _memo_reads(pipe)  # the frames a stale memo would return
+        act()
+        got = _memo_reads(pipe)
+        fresh = _memo_reads(TierPipeline(spark, store, **_MEMO_FLAGS))
+        for name, df in fresh.items():
+            assert _rows(got[name]) == _rows(df), (step, name)
+
+
+def test_concurrent_reads_keep_one_consistent_memo(spark, docs, tmp_path):
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    pipe = TierPipeline(spark, str(tmp_path / "store"), n_batches=2,
+                        hist_tiers=True)
+    pipe.run(docs)
+    reads = [lambda: pipe.read_tier("1m"),
+             lambda: pipe.read_tier("1h", finalize=False),
+             lambda: pipe.read_hist_quantiles("1h")]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(reads[i % 3]) for i in range(48)]
+            got = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    # concurrent first reads may each build; every frame answers correctly
+    fresh = TierPipeline(spark, str(pipe.store), n_batches=2, hist_tiers=True)
+    want = [_rows(read()) for read in
+            (lambda: fresh.read_tier("1m"),
+             lambda: fresh.read_tier("1h", finalize=False),
+             lambda: fresh.read_hist_quantiles("1h"))]
+    built = {id(df): (i % 3, df) for i, df in enumerate(got)}
+    for kind, df in built.values():
+        assert _rows(df) == want[kind]
+    # one entry per key, and the next read returns the stored frame
+    assert len(pipe._frames) == 3
+    for read in reads:
+        df = read()
+        assert df is read()
+        assert any(df is frame for _, frame in pipe._frames.values())
