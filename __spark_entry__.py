@@ -25,53 +25,42 @@ def entry(spark: SparkSession) -> DataFrame:
     return _q_rollup("1h")(spark, "/root/testdata/sf0.001")
 
 
-def _with_cache_hygiene(
-    name: str, q: Callable[[SparkSession, str], DataFrame]
+def _release_then_build(
+    q: Callable[[SparkSession, str], DataFrame]
 ) -> Callable[[SparkSession, str], DataFrame]:
-    """Registry-level cache lifecycle for EXTERNAL harnesses.
+    """Drain the session cache pool (``plans.caching``), then build ``q``.
 
-    Operators register intra-plan caches in ``plans.caching``'s pool and
-    rely on the caller to release them after the consuming action
-    (``bench.py`` does). A driver that calls ``queries()[name]`` directly
-    has no release hook, so across a 50-query sweep pools would accumulate
-    until session end. The registry cannot observe the driver's action —
-    but it CAN know the previous query is finished the moment the next one
-    is requested (the driver contract runs queries strictly one at a
-    time), so each wrapper drains the pool left by its predecessor before
-    building, and one atexit drain covers the final query.
+    A lazy query pools its intra-plan caches in the session pool, and an
+    external harness acts on the returned frame with no release hook of its
+    own. The contract runs queries strictly one at a time, so when the next
+    query is requested the previous one's action is done and its pool can
+    go. The last query's caches die with the JVM.
     """
     import functools
 
     @functools.wraps(q)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import atexit
-
         from gensor_spark.plans.caching import release_caches
 
-        global _ATEXIT_REGISTERED
-        release_caches()  # predecessor's action is complete by contract
-        if not _ATEXIT_REGISTERED:
-            atexit.register(release_caches)
-            _ATEXIT_REGISTERED = True
+        release_caches()
         return q(spark, sf_dir)
 
     return wrapped
 
 
-_ATEXIT_REGISTERED = False
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The registry, each query wrapped in the cache hygiene above.
+    """The registry, each query wrapped to release its predecessor's caches.
 
     Build a query's plan and run its action before building the next one:
     each build releases the pooled caches of the plans built before it, so
     an earlier plan acted on after a later build recomputes what its caches
-    held (same rows, slower).
+    held (same rows, slower). A caller that builds several plans before
+    acting calls ``gensor_spark.queries.QUERIES`` inside a
+    ``plans.caching.cache_scope()`` instead.
     """
     from gensor_spark.queries import QUERIES
 
-    return {n: _with_cache_hygiene(n, q) for n, q in QUERIES.items()}
+    return {n: _release_then_build(q) for n, q in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:

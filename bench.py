@@ -41,6 +41,7 @@ def _materialize(df) -> int:
 
 def run_bench(sf_dir: str, cpus: int, queries_subset: list[str] | None = None) -> dict:
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
+    from gensor_spark.plans.caching import cache_scope
     from gensor_spark.queries import QUERIES
     from gensor_spark.session import get_spark
 
@@ -92,22 +93,20 @@ def run_bench(sf_dir: str, cpus: int, queries_subset: list[str] | None = None) -
         q = bench_queries[name]
         # construction happens INSIDE the timed window: iterative operators
         # (dup_clusters) run distributed jobs while building their result
-        t0 = time.perf_counter()
-        df = q(spark, sf_dir)
-        if name in TIER_QUERIES:
-            # the primary metric needs output cardinality: count() executes
-            # the identical aggregation plan (no pruning past the groupBy)
-            rolled_points += df.count()
-        else:
-            _materialize(df)
-        timings[name] = round(time.perf_counter() - t0, 3)
-        # operators that cache intra-plan intermediates (LSH band tables,
-        # shingle indexes, token counts) register them in the cache pool;
-        # the query's action is done, so release before the next query —
-        # this keeps a full bench run's executor storage flat
-        from gensor_spark.plans.caching import release_caches
-
-        release_caches()
+        # the query's pooled caches (LSH band tables, shingle indexes,
+        # token counts) are released when its scope exits, after the
+        # action: a full bench run's executor storage stays flat
+        with cache_scope():
+            t0 = time.perf_counter()
+            df = q(spark, sf_dir)
+            if name in TIER_QUERIES:
+                # the primary metric needs output cardinality: count()
+                # executes the identical aggregation plan (no pruning past
+                # the groupBy)
+                rolled_points += df.count()
+            else:
+                _materialize(df)
+            timings[name] = round(time.perf_counter() - t0, 3)
         print(f"  {name}: {timings[name]}s", file=sys.stderr, flush=True)
 
     # at-scale tier throughput: the sf0.1 events tiers are so small that

@@ -945,7 +945,11 @@ class Corpus:
 
     def prepare(self, **kwargs) -> "tuple[Corpus, dict]":
         """The one-call composed pipeline (operators/corpusprep.py):
-        gate → gopher → scrub → dedup → decontaminate → mix → pack."""
+        gate → gopher → scrub → dedup → decontaminate → mix → pack.
+
+        Its intermediate caches are pooled: the caller's
+        ``plans.caching.cache_scope()`` releases them on exit, or, outside
+        a scope, ``plans.caching.release_caches()`` after the action."""
         from gensor_spark.operators.corpusprep import corpus_prep
 
         out, rep = corpus_prep(self.df, text_col=self.text_col,

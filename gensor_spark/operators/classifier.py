@@ -49,6 +49,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gensor_spark.plans.caching import cache_scope, pooled_cache
+
 __all__ = [
     "hashed_features",
     "train_quality_classifier",
@@ -186,13 +188,12 @@ def train_quality_classifier(
     # lineage runs once, inside the join.)
     n_labels = labels.count()
     n_parts = max(1, -(-n_labels // 20_000))
-    train = (
-        feats.join(F.broadcast(labels.select("doc_id", label_col)), "doc_id")
-        .select("slots", "vals", F.col(label_col).cast("double").alias("y"))
-        .repartition(n_parts)
-        .cache()
-    )
-    try:
+    with cache_scope():
+        train = pooled_cache(
+            feats.join(F.broadcast(labels.select("doc_id", label_col)), "doc_id")
+            .select("slots", "vals", F.col(label_col).cast("double").alias("y"))
+            .repartition(n_parts)
+        )
         n_docs = train.count()  # materializes the cache; also the 1/n factor
         if n_docs == 0:
             raise ValueError("no labeled training docs after the join")
@@ -218,8 +219,6 @@ def train_quality_classifier(
                     g[r.slot] = r.g
             w -= lr * (g / n_docs + l2 * w)
             b -= lr * (bias_g / n_docs)
-    finally:
-        train.unpersist()
     return w, b
 
 

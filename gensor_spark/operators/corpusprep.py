@@ -54,16 +54,15 @@ def corpus_prep(
     text_col: str = "text",
     id_col: str = "doc_id",
     report: bool = False,
-    cache_intermediate: bool = True,
 ) -> tuple[DataFrame, dict[str, int]]:
     """Run the composed preparation over ``docs`` (``doc_id, text, source``
     at minimum). Stages toggle independently; disabled stages cost
     nothing. ``rates`` and ``temperature`` are exclusive mixing modes.
 
-    ``cache_intermediate`` pools a cache (``plans.caching.pooled_cache``)
-    on the post-gate/scrub frame and on the post-exact-dedup frame. The
-    CALLER releases both with ``plans.caching.release_caches()`` after its
-    action; otherwise they stay cached until the session ends. Both
+    The post-gate/scrub frame, and with ``near_dedup`` the post-exact-dedup
+    frame, are pooled caches (``plans.caching.pooled_cache``): the
+    caller's ``cache_scope()`` releases them when it exits, or, outside a
+    scope, ``release_caches()`` once the caller's action is done. Both
     frames are consumed by MULTIPLE downstream branches (the exact-dedup
     digest agg + its anti-join left side; the minhash signature chain, the
     representative quality table and the mixing counts), and without
@@ -103,20 +102,18 @@ def corpus_prep(
 
     from gensor_spark.operators.dedup import exact_dedup
 
-    if cache_intermediate:
-        out = pooled_cache(out)
+    out = pooled_cache(out)
     dups = exact_dedup(out, text_col=text_col, id_col=id_col)
     out = note("exact_dedup", out.join(
         dups.select(F.col("dup_id").alias(id_col)), id_col, "anti"))
-    if cache_intermediate and near_dedup:
-        out = pooled_cache(out)
-
     if near_dedup:
         from gensor_spark.operators.dedup import (
             cluster_representatives,
             dup_clusters,
             minhash_dedup_pairs,
         )
+
+        out = pooled_cache(out)
 
         # the minhash chain (shingles/signatures/bands) is written against
         # the canonical (doc_id, text) contract — present a renamed view

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from gensor_spark.plans.caching import pooled_cache
+from gensor_spark.plans.caching import cache_scope, pooled_cache
 
 from gensor_spark.functions.text import md5int, shingles, tokens
 
@@ -398,14 +398,14 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 64) -> DataFrame:
     # without materialization the whole upstream pair pipeline (LSH/SimHash
     # joins) would run once per branch; the edge list itself is checkpointed
     # so none of the loop's rounds re-derive it either
-    pairs = pairs.cache()
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    pairs.unpersist()
+    with cache_scope():
+        pairs = pooled_cache(pairs)
+        edges = (
+            pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+            .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
+            .distinct()
+            .localCheckpoint()
+        )
     # localCheckpoint (not cache): each round's plan would otherwise nest the
     # previous round's joins — after N rounds the lineage is N joins deep and
     # the optimizer chokes long before the data does. Checkpointing cuts the

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from gensor_spark.plans.caching import cache_scope, pooled_cache
+
 
 def _bucket_of(col, boundaries: list) -> F.Column:
     """Index of the range-bucket containing ``col``: count of boundaries
@@ -63,13 +65,13 @@ def _range_boundaries(df: DataFrame, order_col: str, n_buckets: int) -> list:
     offsets wrong the moment column pruning made the branches non-identical).
     """
     target = n_buckets * 64
-    # Two driver actions (count + sample-collect) are needed here; persist
+    # Two driver actions (count + sample-collect) are needed here; cache
     # the single-column key projection so the upstream plan — which for
     # pack_chunks includes the full tokenization/filter pipeline — executes
     # once for both, not once per action. The cached frame is one pruned
     # column, O(rows × key width), spilled to disk if it doesn't fit.
-    keys_df = df.select(order_col).persist()
-    try:
+    with cache_scope():
+        keys_df = pooled_cache(df.select(order_col))
         cnt = keys_df.count()
         if cnt == 0:
             return []
@@ -77,8 +79,6 @@ def _range_boundaries(df: DataFrame, order_col: str, n_buckets: int) -> list:
         keys = sorted(
             r[0] for r in keys_df.sample(False, frac, seed=7).collect()
         )
-    finally:
-        keys_df.unpersist()
     if len(keys) < n_buckets:
         return []
     step = len(keys) / n_buckets

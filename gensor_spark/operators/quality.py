@@ -97,7 +97,7 @@ def unigram_logprob_scores(
     )
     # counts feed both the logprob table and the (N, V) normalizer; persist
     # so the tokenize+count plan executes once, not once per consumer —
-    # released by the caller via plans.caching.release_caches()
+    # owned by the caller's cache_scope() or the session pool
     counts = pooled_cache(toks.groupBy("tok").agg(F.count("*").alias("c")))
     # global scalars as a broadcast 1-row cross join — no driver action, the
     # whole scorer stays one lazy plan

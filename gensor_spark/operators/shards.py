@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gensor_spark.operators.packing import with_global_offset
+from gensor_spark.plans.caching import cache_scope, pooled_cache
 
 
 def shuffle_key(id_col: Column, seed: str = "shuffle1") -> Column:
@@ -146,8 +147,8 @@ def write_shards(assigned: DataFrame, out_dir: str,
     # two actions (data write + manifest) — pin the assignment DAG once so
     # the md5 projection / boundary sampling / prefix-sum shuffles don't
     # re-execute from the source for the manifest
-    assigned = assigned.persist()
-    try:
+    with cache_scope():
+        assigned = pooled_cache(assigned)
         (
             assigned
             .repartition(F.col("shard"))
@@ -158,8 +159,6 @@ def write_shards(assigned: DataFrame, out_dir: str,
         )
         manifest = shard_manifest(assigned, length_col=length_col)
         manifest.coalesce(1).write.mode(mode).parquet(f"{out_dir}/manifest")
-    finally:
-        assigned.unpersist()
     # hand back the STORED manifest — its lineage is the written file, not
     # the (now unpersisted) assignment DAG
     return assigned.sparkSession.read.parquet(f"{out_dir}/manifest")

@@ -332,8 +332,8 @@ def neardup_pairs_lsh(emb: DataFrame, threshold: float = 0.45,
         .filter(F.col("_n") <= max_bucket)
         .drop("_n")
     )
-    # both sides of the bucket self-join read this once; released by the
-    # caller via plans.caching.release_caches() after the consuming action
+    # both sides of the bucket self-join read this once; owned by the
+    # caller's cache_scope() or the session pool (plans.caching)
     banded = pooled_cache(banded)
     a = banded.select("tbl", "bucket", F.col("vid").alias("id_a"))
     b = banded.select("tbl", "bucket", F.col("vid").alias("id_b"))

@@ -59,6 +59,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gensor_spark.plans.caching import cache_scope, pooled_cache
+
 NEG_INF = float("-inf")
 
 
@@ -190,21 +192,12 @@ def _seed_vocab(words: DataFrame, n_seed: int, max_piece_len: int):
         )).alias("p"),
         "cnt",
     )
-    # two collects (top-n + all chars) — persist the piece-grain counts so
-    # the substring explode + shuffle runs once (the packing try/finally
-    # convention)
-    counted = subs.groupBy("p").agg(F.sum("cnt").alias("c")).persist()
-    try:
-        top = (
-            counted.orderBy(F.desc("c"), F.asc("p")).limit(n_seed)
-            .collect()
-        )
-        chars = (
-            counted.filter(F.length("p") == 1)
-            .collect()
-        )
-    finally:
-        counted.unpersist()
+    # two collects (top-n + all chars) — cache the piece-grain counts so
+    # the substring explode + shuffle runs once
+    with cache_scope():
+        counted = pooled_cache(subs.groupBy("p").agg(F.sum("cnt").alias("c")))
+        top = counted.orderBy(F.desc("c"), F.asc("p")).limit(n_seed).collect()
+        chars = counted.filter(F.length("p") == 1).collect()
     vocab = {r["p"]: float(r["c"]) for r in top}
     for r in chars:
         vocab.setdefault(r["p"], float(r["c"]))

@@ -1,57 +1,72 @@
-"""Cache lifecycle for lazy operator plans.
+"""The one cache lifecycle: every DataFrame cache is pooled, and its pool's
+owner releases it.
 
-Several operators cache/persist an intermediate that feeds MULTIPLE
-consumers inside the single plan they return (both sides of a self-join,
-a count table read by two aggregates): without materialization the whole
-upstream pipeline would execute once per consumer. But the returned
-DataFrame is lazy — the operator cannot unpersist before returning or the
-cache would be dropped before the caller's action ever runs, and Spark's
-CacheManager holds such entries until an explicit unpersist or session end.
-Left alone, that is a slow storage leak on a long-lived session that calls
-the operators repeatedly (this is invisible in one-shot jobs: executor
-storage dies with the JVM).
+Operators cache an intermediate that feeds several consumers (both sides
+of a self-join, a count table read by two aggregates, partials written to
+two tiers): without materialization the upstream pipeline would run once
+per consumer. Spark's CacheManager holds such an entry until an explicit
+unpersist or session end, so every cache needs an owner that releases it.
+This module is the only code that caches a DataFrame, and the owner rule
+is:
 
-Contract: operators register every such intra-plan cache here via
-``pooled_cache``; the CALLER releases them after the consuming action with
-``release_caches()``. ``bench.py`` does exactly that between queries. A
-caller that skips release keeps every pooled frame cached until the
-session ends — e.g. two per ``corpus_prep`` call with its default
-``cache_intermediate=True``, where that operator used to cache nothing —
-so a long-lived session must release (or ``spark.catalog.clearCache()``).
+- ``pooled_cache(df)`` caches ``df`` and adds it to the pool of the
+  innermost open ``cache_scope()`` in this thread's context.
+- ``cache_scope()`` owns the pool it opens: on exit, normal or by an
+  exception, it unpersists every frame pooled inside it, including those
+  of lazy operators called there. A nested scope releases only its own
+  pool. So no frame built inside a scope may be acted on after it.
+- Outside any scope (and in any new thread) a cache lands in the session
+  pool, which the caller drains with ``release_caches()`` once the
+  consuming action is done. Do not call it between the build and the
+  action of a plan you still intend to run.
 
-The pool is deliberately session-global and drain-all: queries in this
-engine run their actions to completion before the next query starts
-(including the driver's oracle loop and bench), so "everything registered
-so far is no longer needed" is the invariant at every release point. Do
-NOT call ``release_caches()`` between the construction and the action of a
-plan you still intend to run.
+An operator that runs its own actions (a writer, a training loop) opens a
+scope around them; a lazy operator pools into whatever scope its caller
+holds. Spark keeps one CacheManager entry per plan, so two pools that cache
+equal plans share it, and the first to release drops it for both (the
+other's reads recompute; rows are unchanged). A long-lived session that
+acts on lazy plans outside a scope must call ``release_caches()``; at
+process exit executor storage dies with the JVM.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager, suppress
+from contextvars import ContextVar
+
 from pyspark.sql import DataFrame
 
-_POOL: list[DataFrame] = []
+_SESSION_POOL: list[DataFrame] = []
+_pool: ContextVar[list[DataFrame]] = ContextVar("cache_pool", default=_SESSION_POOL)
 
 
 def pooled_cache(df: DataFrame) -> DataFrame:
-    """``df.cache()`` + register the cached frame for deferred release."""
-    df = df.cache()
-    _POOL.append(df)
+    """``df.cache()``, owned by the innermost open ``cache_scope()`` or,
+    outside any scope, by the session pool."""
+    _pool.get().append(df.cache())
     return df
 
 
-def release_caches() -> int:
-    """Unpersist every pooled cache; returns how many were released.
-
-    Call after the action that consumed the operator's result — e.g. at the
-    end of each bench query, or periodically on a long-lived session.
-    """
-    n = len(_POOL)
-    for df in _POOL:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped; nothing to release
-    _POOL.clear()
+def _drain(pool: list[DataFrame]) -> int:
+    n = len(pool)
+    while pool:
+        with suppress(Exception):  # session already stopped: nothing held
+            pool.pop().unpersist()
     return n
+
+
+@contextmanager
+def cache_scope():
+    """Pool the block's caches apart and unpersist them when it exits."""
+    pool: list[DataFrame] = []
+    token = _pool.set(pool)
+    try:
+        yield
+    finally:
+        _pool.reset(token)
+        _drain(pool)
+
+
+def release_caches() -> int:
+    """Unpersist every cache in the session pool; returns how many."""
+    return _drain(_SESSION_POOL)

@@ -85,6 +85,7 @@ from gensor_spark.operators.topkrollup import (
     merge_topk,
     rollup_topk,
 )
+from gensor_spark.plans.caching import cache_scope, pooled_cache
 
 TIERS = ("1m", "1h", "1d")
 
@@ -446,23 +447,21 @@ class TierPipeline:
             blob_thread = threading.Thread(target=_encode, daemon=True)
             blob_thread.start()
 
-        # persisted so the 1h cascade reuses the in-memory partials instead
-        # of a parquet read-back round trip (another ~2 floor jobs per batch)
-        m1 = m1.persist()
-        h1: DataFrame | None = None
         try:
-            counts["1m"] = self._store_tier(m1, "1m", sid)
-            # coarser tiers cascade from the (much smaller) finer tier —
-            # never re-read the raw points
-            h1 = cascade_tier(m1, "1h", keys=self.keys).persist()
-            counts["1h"] = self._store_tier(h1, "1h", sid)
-            counts["1d"] = self._store_tier(
-                cascade_tier(h1, "1d", keys=self.keys), "1d", sid
-            )
+            with cache_scope():
+                # cached so the 1h cascade reuses the in-memory partials
+                # instead of a parquet read-back round trip (another ~2
+                # floor jobs per batch)
+                m1 = pooled_cache(m1)
+                counts["1m"] = self._store_tier(m1, "1m", sid)
+                # coarser tiers cascade from the (much smaller) finer tier —
+                # never re-read the raw points
+                h1 = pooled_cache(cascade_tier(m1, "1h", keys=self.keys))
+                counts["1h"] = self._store_tier(h1, "1h", sid)
+                counts["1d"] = self._store_tier(
+                    cascade_tier(h1, "1d", keys=self.keys), "1d", sid
+                )
         finally:
-            m1.unpersist()
-            if h1 is not None:
-                h1.unpersist()
             if blob_thread is not None:
                 blob_thread.join()
         if blob_err:

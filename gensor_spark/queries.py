@@ -1476,7 +1476,7 @@ def q_series_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # three method branches (pair / acf / ccf) consume picked — cache it so
     # the events scan + top-coverage semi-join run once, not three times
-    # (released by the caller via plans.caching.release_caches())
+    # (owned by the caller's cache_scope() or the session pool)
     picked = pooled_cache(pts.join(
         F.broadcast(top.select("sid_k")), sid == F.col("sid_k"), "left_semi"
     ))

@@ -16,6 +16,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as E  # noqa: E402
+from gensor_spark.plans.caching import cache_scope  # noqa: E402
 from gensor_spark.session import get_spark  # noqa: E402
 from gensor_spark.sources.tables import TESTDATA_TABLES  # noqa: E402
 
@@ -41,7 +42,8 @@ def main() -> None:
     for name in names:
         t0 = time.perf_counter()
         try:
-            sdf = Q[name](spark, sf).toPandas()
+            with cache_scope():
+                sdf = Q[name](spark, sf).toPandas()
         except Exception as exc:
             print(f"{name}: SPARK ERROR {str(exc)[:200]}")
             failures += 1
@@ -56,9 +58,6 @@ def main() -> None:
             print(f"{name}: ORACLE ERROR {str(exc)[:200]}")
             failures += 1
             continue
-        from gensor_spark.plans.caching import release_caches
-
-        release_caches()  # bench.py's per-query hygiene, mirrored here
         hs, ns = value_hash(sdf)
         ho, no = value_hash(odf)
         ok = hs == ho

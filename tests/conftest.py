@@ -108,3 +108,12 @@ def py4j_calls(spark, monkeypatch):
         return sent[0] - before
 
     return count
+
+
+@pytest.fixture
+def cached_entries(spark):
+    """``cached_entries()``: how many plans the session's CacheManager holds.
+    Lifecycle tests compare it before and after, because session fixtures
+    keep their own caches for the whole run."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return lambda: int(cm.numCachedEntries())

@@ -597,26 +597,148 @@ def test_contamination_stats(spark):
     assert strict == {0: False, 1: False, 2: False}
 
 
-def test_cache_pool_releases_operator_caches(spark):
+def test_cache_pool_releases_operator_caches(spark, cached_entries):
     """Operators that cache intra-plan intermediates register them in the
     plans.caching pool; release_caches() after the consuming action must
     unpersist every one (the long-lived-session leak fix)."""
     from gensor_spark.operators.dedup import simhash_pairs
-    from gensor_spark.plans.caching import _POOL, release_caches
+    from gensor_spark.plans.caching import release_caches
 
     release_caches()  # start clean regardless of earlier tests
+    before = cached_entries()
     docs = spark.createDataFrame(
         [("d1", "alpha beta gamma delta"), ("d2", "alpha beta gamma delta"),
          ("d3", "something else entirely")],
         "doc_id string, text string",
     )
     simhash_pairs(docs, max_hamming=3).collect()
-    assert len(_POOL) >= 1
-    cached = list(_POOL)
-    assert any(df.storageLevel.useMemory for df in cached)
-    n = release_caches()
-    assert n == len(cached) and not _POOL
-    assert all(not df.storageLevel.useMemory for df in cached)
+    pooled = cached_entries() - before
+    assert pooled >= 1
+    assert release_caches() == pooled
+    assert cached_entries() == before
+
+
+# ------------------------------------------------------------ cache lifecycle
+
+def _frames(spark, n: int, tag: int):
+    """``n`` frames with distinct plans: the CacheManager keeps one entry
+    per plan, so equal plans would share an entry."""
+    return [spark.range(10 + i).selectExpr(f"id + {tag} AS x")
+            for i in range(n)]
+
+
+def test_cache_scope_releases_on_exit_and_on_error(spark, cached_entries):
+    from gensor_spark.plans.caching import cache_scope, pooled_cache
+
+    before = cached_entries()
+    with cache_scope():
+        for df in _frames(spark, 2, 1):
+            pooled_cache(df).count()
+        assert cached_entries() == before + 2
+    assert cached_entries() == before
+
+    with pytest.raises(RuntimeError, match="boom"):
+        with cache_scope():
+            pooled_cache(_frames(spark, 1, 2)[0]).count()
+            assert cached_entries() == before + 1
+            raise RuntimeError("boom")
+    assert cached_entries() == before
+
+
+def test_nested_cache_scope_releases_only_its_own(spark, cached_entries):
+    from gensor_spark.plans.caching import cache_scope, pooled_cache
+
+    before = cached_entries()
+    with cache_scope():
+        outer = pooled_cache(_frames(spark, 1, 3)[0])
+        with cache_scope():
+            pooled_cache(_frames(spark, 1, 4)[0]).count()
+            assert cached_entries() == before + 2
+        assert cached_entries() == before + 1
+        assert outer.storageLevel.useMemory
+    assert cached_entries() == before
+    assert not outer.storageLevel.useMemory
+
+
+def test_build_two_then_run_both_keeps_caches_live(spark, cached_entries):
+    """Two lazy plans built in one scope keep their pooled caches until the
+    scope exits, whichever runs first: acting on one releases nothing the
+    other still reads."""
+    from gensor_spark.operators.dedup import minhash_dedup_pairs, simhash_pairs
+    from gensor_spark.plans.caching import cache_scope
+
+    docs = spark.createDataFrame(
+        [("d1", "alpha beta gamma delta epsilon"),
+         ("d2", "alpha beta gamma delta epsilon"),
+         ("d3", "something else entirely here")],
+        "doc_id string, text string",
+    )
+    before = cached_entries()
+    with cache_scope():
+        sim = simhash_pairs(docs, max_hamming=3)
+        mh = minhash_dedup_pairs(docs, threshold=0.5)
+        built = cached_entries()
+        assert built >= before + 3  # simhash table + bands + shingles
+        assert {(r.id_a, r.id_b) for r in sim.collect()} == {("d1", "d2")}
+        assert cached_entries() == built
+        assert {(r.id_a, r.id_b) for r in mh.collect()} == {("d1", "d2")}
+        assert cached_entries() == built
+    assert cached_entries() == before
+
+
+def test_session_pool_outside_scope_released_by_release_caches(
+        spark, cached_entries):
+    """Outside any scope, and in a thread started inside one, caches land in
+    the session pool; release_caches() drains it and returns the count."""
+    import threading
+
+    from gensor_spark.plans.caching import (
+        cache_scope,
+        pooled_cache,
+        release_caches,
+    )
+
+    release_caches()
+    before = cached_entries()
+    a, b, c = _frames(spark, 3, 5)
+    pooled_cache(a)
+    with cache_scope():
+        t = threading.Thread(target=pooled_cache, args=(b,))
+        t.start()
+        t.join()
+        pooled_cache(c)
+    # the scope released only its own frame, c
+    assert cached_entries() == before + 2
+    assert release_caches() == 2
+    assert cached_entries() == before
+    assert release_caches() == 0
+
+
+def test_only_the_caching_module_caches_a_dataframe():
+    """Every DataFrame cache goes through plans.caching: no other engine
+    file calls .cache(), .persist() or a DataFrame's .unpersist(). The
+    broadcast variables' unpersist is not a DataFrame cache."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "gensor_spark"
+    broadcast_receivers = {("operators/classifier.py", "bc")}
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "plans/caching.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("cache", "persist", "unpersist")):
+                continue
+            recv = node.func.value
+            if (node.func.attr == "unpersist" and isinstance(recv, ast.Name)
+                    and (rel, recv.id) in broadcast_receivers):
+                continue
+            offenders.append(f"{rel}:{node.lineno} .{node.func.attr}()")
+    assert not offenders, offenders
 
 
 # ------------------------------------------------------------ semantic_dedup

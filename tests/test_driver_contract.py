@@ -52,29 +52,38 @@ def test_all_oracled_queries_inside_driver_window():
     )
 
 
-def test_registry_releases_predecessor_caches(spark):
+def test_registry_releases_predecessor_caches(spark, cached_entries):
     """External-harness cache hygiene: a registry callable drains the
     pooled caches its PREDECESSOR registered (the driver has no release
     hook of its own), so a sequential sweep never accumulates executor
     storage beyond one query's pools."""
-    from gensor_spark.plans import caching
+    from gensor_spark.plans.caching import release_caches
 
+    release_caches()
+    before = cached_entries()
     qs = _entry_mod.queries()
     # series_corr pools the picked-series cache; run it as the driver
     # would (build + action), leaving its pool entries behind
     qs["series_corr"](spark, SF).write.format("noop").mode(
         "overwrite").save()
-    assert len(caching._POOL) > 0
+    assert cached_entries() > before
     # building ANY next registry query must drain the predecessor's pool
     qs["mask_where"](spark, SF)
-    assert len(caching._POOL) == 0
+    assert cached_entries() == before
 
 
 @pytest.mark.parametrize("name", _query_names())
-def test_query_matches_oracle(spark, name):
+def test_query_matches_oracle(spark, cached_entries, name):
+    from gensor_spark.plans.caching import release_caches
+
     qs, oracles = _entry_mod.queries(), _entry_mod.oracle_sql()
+    release_caches()
+    before = cached_entries()
     df = qs[name](spark, SF)
     if name not in oracles:
         assert df.count() >= 0  # rows-only check, like the driver's weak mode
-        return
-    compare(df, run_oracle(oracles[name], SF), name)
+    else:
+        compare(df, run_oracle(oracles[name], SF), name)
+    # every cache the query made is pooled: none outlives the release
+    release_caches()
+    assert cached_entries() == before
