@@ -15,8 +15,8 @@ Architecture (Spark-first, not a port):
                    (1m→1h→1d), compensation, outlier masking, gap-fill,
                    transforms, masking/dedup, coverage (``gensor/core/*``,
                    ``gensor/processing/*``, ``gensor/analysis/*``).
-- ``codecs``     — delta-of-delta timestamp + Gorilla-style XOR value codecs,
-                   vectorized numpy inside Arrow UDFs.
+- ``codecs``     — one delta-of-delta timestamp + Gorilla-style XOR value
+                   codec, vectorized numpy inside Arrow UDFs.
 - ``plans``      — incremental tier maintenance: partition-idempotent merges,
                    checkpoint ledger, per-partition lineage rows.
 - ``functions``  — column-level helpers (tokenization, text quality, hashing).

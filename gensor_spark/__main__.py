@@ -59,37 +59,42 @@ def main(argv: list[str] | None = None) -> None:
     from gensor_spark.session import get_spark
 
     spark = get_spark(app_name="gensor_spark_job", master=args.master)
-    if args.synth_docs:
-        from gensor_spark.sources.synth import synth_docs
+    try:
+        if args.synth_docs:
+            from gensor_spark.sources.synth import synth_docs
 
-        docs = synth_docs(spark, n_docs=args.synth_docs, seed=42)
-    elif args.docs:
-        docs = spark.read.parquet(args.docs)
-    else:
-        ap.error("one of --docs or --synth-docs is required")
+            docs = synth_docs(spark, n_docs=args.synth_docs, seed=42)
+        elif args.docs:
+            docs = spark.read.parquet(args.docs)
+        else:
+            ap.error("one of --docs or --synth-docs is required")
 
-    pipe = TierPipeline(spark, args.store, n_batches=args.batches,
-                        tick_seconds=args.tick, hist_tiers=args.hist_tiers,
-                        distinct_tiers=args.distinct_tiers,
-                        topk_tiers=args.topk_tiers, topk_k=args.topk_k,
-                        cms_tiers=args.cms_tiers,
-                        var_tiers=args.var_tiers,
-                        ohlc_tiers=args.ohlc_tiers,
-                        moment_tiers=args.moment_tiers)
-    stats = pipe.run(docs)
-    result = {
-        "stats": stats,
-        "tiers": {t: pipe.read_tier(t).count() for t in TIERS},
-        "lineage_tail": pipe.lineage()[-3:],
-    }
-    if args.hist_tiers:
-        result["hist_1h_bins"] = pipe.read_hist_quantiles("1h").count()
-    if args.distinct_tiers:
-        result["distinct_1h_bins"] = pipe.read_distinct("1h").count()
-    if args.topk_tiers:
-        result["topk_1h_rows"] = pipe.read_topk("1h").count()
-    json.dump(result, sys.stdout)
-    print()
+        pipe = TierPipeline(spark, args.store, n_batches=args.batches,
+                            tick_seconds=args.tick, hist_tiers=args.hist_tiers,
+                            distinct_tiers=args.distinct_tiers,
+                            topk_tiers=args.topk_tiers, topk_k=args.topk_k,
+                            cms_tiers=args.cms_tiers,
+                            var_tiers=args.var_tiers,
+                            ohlc_tiers=args.ohlc_tiers,
+                            moment_tiers=args.moment_tiers)
+        stats = pipe.run(docs)
+        result = {
+            "stats": stats,
+            "tiers": {t: pipe.read_tier(t).count() for t in TIERS},
+            "lineage_tail": pipe.lineage()[-3:],
+        }
+        if args.hist_tiers:
+            result["hist_1h_bins"] = pipe.read_hist_quantiles("1h").count()
+        if args.distinct_tiers:
+            result["distinct_1h_bins"] = pipe.read_distinct("1h").count()
+        if args.topk_tiers:
+            result["topk_1h_rows"] = pipe.read_topk("1h").count()
+        json.dump(result, sys.stdout)
+        print()
+    finally:
+        # an unstopped session is torn down by the JVM's shutdown hooks,
+        # where a local-cluster master still tries to launch executors
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -1,29 +1,27 @@
 """Delta-of-delta timestamp + Gorilla-style XOR value compression, vectorized.
 
 Based on the public Gorilla paper (Pelkonen et al., "Gorilla: A Fast,
-Scalable, In-Memory Time Series Database", VLDB 2015). One deliberate
-deviation for full numpy vectorization (encode AND decode, no per-row
-Python): control bits, fixed-width metadata, and variable-width payloads are
-stored as three *separate* packed bit streams instead of one interleaved
-stream. Interleaving (as in the paper) makes decoding inherently sequential
-— each control decides how many bits to read next; splitting the streams
-lets widths be computed up-front (cumsum) and every bit gathered with one
-vectorized scatter/gather. The same columnar-split idea appears in later
-public formats (e.g. Chimp128, ALP).
+Scalable, In-Memory Time Series Database", VLDB 2015), with one bit width
+per stream per series instead of the paper's per-point widths, so encode
+and decode are whole-array numpy with no per-point Python and no
+sequential bit reader:
 
-Streams per series
-------------------
-timestamps (int64 microseconds):
-  - ctrl: 3 bits/point — bucket of zigzag(delta-of-delta):
-      0→0 bits (dod=0), 1→7, 2→9, 3→12, 4→32, 5→64
-  - payload: zigzag(dod) in the bucket width, MSB first
-  (first two "dod" slots carry ts[0] and delta[0], both bucketed normally)
-values (float64, XOR of consecutive raw bit patterns):
-  - ctrl: 1 bit/point — 0: xor == 0 (repeat), 1: payload present
-  - meta: 12 bits per ctrl=1 point — 6b leading-zero count, 6b (siglen-1)
-  - payload: the significant bits (xor >> trailing_zeros), siglen wide
-  (Gorilla's "reuse previous leading/length window" mode is dropped: it
-  creates a sequential dependency; the meta costs ≤12 extra bits/point.)
+- timestamps (int64 microseconds): ``ts0`` and the first delta are 8-byte
+  header fields; the remaining delta-of-deltas are zigzagged and stored at
+  the series' max-dod width (0 bits for a perfectly regular series — the
+  common case for tokenized docs, where ts is affine in seq);
+- values (float64, XOR of consecutive raw bit patterns): a 1-bit ctrl per
+  point marks ``xor == 0``; nonzero xors store ``xor >> tz_anchor`` at one
+  window width per series — Gorilla's "reuse previous window" mode taken
+  to its limit, so there is no per-point (leading zeros, length) meta.
+
+Blob layout, each stream byte-aligned, MSB first::
+
+    u32 n | i64 ts0 | i64 delta1 | u8 w_ts | ts payload |
+    ctrl bits | u8 tz_anchor | u8 w_val | val payload
+
+``n == 0`` stops after ``n``; ``n == 1`` omits ``delta1``, ``w_ts`` and
+the ts payload.
 
 Round-trip is bit-exact — the token-array-equality gate of BASELINE.json.
 """
@@ -35,100 +33,9 @@ import struct
 import numpy as np
 
 _U64 = np.uint64
-_DOD_WIDTHS = np.array([0, 7, 9, 12, 32, 64], dtype=np.int64)
 
 
 # ---------------------------------------------------------------- bit kernels
-
-def _clz64(x: np.ndarray) -> np.ndarray:
-    """Vectorized count-leading-zeros for uint64 (binary search, 6 steps)."""
-    x = x.astype(_U64)
-    n = np.full(x.shape, 64, dtype=np.int64)
-    shift = 32
-    cur = x.copy()
-    while shift:
-        hi = cur >> _U64(shift)
-        has = hi != 0
-        n = np.where(has, n - shift, n)
-        cur = np.where(has, hi, cur)
-        shift //= 2
-    return n - (cur != 0).astype(np.int64)  # cur is 0 or 1 here
-
-
-def _ctz64(x: np.ndarray) -> np.ndarray:
-    """Vectorized count-trailing-zeros (via isolate-lowest-set-bit + clz)."""
-    x = x.astype(_U64)
-    low = x & (~x + _U64(1))
-    out = np.where(x == 0, 64, 63 - _clz64(low))
-    return out.astype(np.int64)
-
-
-def _pack_bits(codes: np.ndarray, widths: np.ndarray) -> bytes:
-    """Pack each codes[i]'s low widths[i] bits into bytes, width-bucketed.
-
-    Layout: for each distinct width (ascending), the values of that width in
-    original element order, packed MSB-first as an (n_w × w) bit matrix; each
-    bucket pads to a byte boundary (≤ 7 bits per bucket — negligible). The
-    bucket split is recoverable from ``widths`` alone, so ``_unpack_bits``
-    needs no extra metadata.
-
-    Why bucketed: equal-width packing is a single ``(n, w)`` broadcast shift
-    + ``packbits`` — no per-bit index/gather arrays. The previous
-    element-order layout needed ``repeat``/``arange``/fancy-gather over one
-    int64 element PER BIT (~20× slower, measured).
-    """
-    codes = codes.astype(_U64)
-    widths = widths.astype(np.int64)
-    if widths.size == 0 or int(widths.sum()) == 0:
-        return b""
-    parts = []
-    for w in np.unique(widths):
-        if w == 0:
-            continue
-        sel = codes[widths == w]
-        # bit matrix via byte-level unpack of the big-endian view — packbits/
-        # unpackbits run at C byte speed, no per-bit u64 shift matrices
-        bits64 = np.unpackbits(
-            sel.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1
-        )
-        parts.append(np.packbits(bits64[:, 64 - w:].ravel()))
-    return b"".join(p.tobytes() for p in parts)
-
-
-def _packed_nbytes(widths: np.ndarray) -> int:
-    """Byte length of a ``_pack_bits`` stream for these widths."""
-    widths = np.asarray(widths, dtype=np.int64)
-    total = 0
-    for w, cnt in zip(*np.unique(widths, return_counts=True)):
-        if w:
-            total += (int(w) * int(cnt) + 7) // 8
-    return total
-
-
-def _unpack_bits(buf: bytes, widths: np.ndarray) -> np.ndarray:
-    """Inverse of _pack_bits: recover one uint64 per width entry."""
-    widths = np.asarray(widths, dtype=np.int64)
-    n = len(widths)
-    out = np.zeros(n, dtype=_U64)
-    off = 0
-    for w in np.unique(widths):
-        if w == 0:
-            continue
-        sel = widths == w
-        cnt = int(sel.sum())
-        nbytes = (int(w) * cnt + 7) // 8
-        bits = np.unpackbits(
-            np.frombuffer(buf[off : off + nbytes], dtype=np.uint8),
-            count=int(w) * cnt,
-        ).reshape(cnt, int(w))
-        full = np.zeros((cnt, 64), dtype=np.uint8)
-        full[:, 64 - int(w):] = bits
-        out[sel] = (
-            np.packbits(full, axis=1).copy().view(">u8").astype(_U64).ravel()
-        )
-        off += nbytes
-    return out
-
 
 def _zigzag(v: np.ndarray) -> np.ndarray:
     v = v.astype(np.int64)
@@ -140,104 +47,8 @@ def _unzigzag(z: np.ndarray) -> np.ndarray:
     return ((z >> _U64(1)).astype(np.int64)) ^ -(z & _U64(1)).astype(np.int64)
 
 
-# ------------------------------------------------------------------ timestamps
-
-def _encode_ts(ts_us: np.ndarray) -> bytes:
-    ts = ts_us.astype(np.int64)
-    n = ts.size
-    if n == 0:
-        return struct.pack("<I", 0)
-    delta = np.diff(ts, prepend=0)
-    dod = np.diff(delta, prepend=0)
-    dod[0] = ts[0]  # slot 0 carries the absolute start
-    if n > 1:
-        dod[1] = delta[1]  # slot 1 carries the first real delta
-    z = _zigzag(dod)
-    nbits = 64 - _clz64(z)
-    ctrl = np.searchsorted(_DOD_WIDTHS, nbits)  # smallest bucket that fits
-    ctrl = np.where(z == 0, 0, ctrl)
-    widths = _DOD_WIDTHS[ctrl]
-    return (
-        struct.pack("<I", n)
-        + _pack_bits(ctrl.astype(_U64), np.full(n, 3))
-        + _pack_bits(z, widths)
-    )
-
-
-def _decode_ts(buf: bytes, off: int = 0) -> tuple[np.ndarray, int]:
-    (n,) = struct.unpack_from("<I", buf, off)
-    off += 4
-    if n == 0:
-        return np.empty(0, dtype=np.int64), off
-    ctrl_bytes = (3 * n + 7) // 8
-    ctrl = _unpack_bits(buf[off : off + ctrl_bytes], np.full(n, 3)).astype(np.int64)
-    off += ctrl_bytes
-    widths = _DOD_WIDTHS[ctrl]
-    pay_bytes = _packed_nbytes(widths)
-    z = _unpack_bits(buf[off : off + pay_bytes], widths)
-    off += pay_bytes
-    dod = _unzigzag(z)
-    delta = np.cumsum(dod)
-    delta[0] = 0  # slot 0 was the absolute start, not a dod
-    if n > 1:
-        delta[1:] = np.cumsum(dod[1:])
-    ts = dod[0] + np.concatenate([[0], np.cumsum(delta[1:])])
-    return ts.astype(np.int64), off
-
-
-# --------------------------------------------------------------------- values
-
-def _encode_vals(values: np.ndarray) -> bytes:
-    x = np.ascontiguousarray(values, dtype=np.float64).view(_U64)
-    n = x.size
-    if n == 0:
-        return struct.pack("<I", 0)
-    xor = x ^ np.concatenate([[_U64(0)], x[:-1]])
-    ctrl = (xor != 0).astype(_U64)
-    lz = np.minimum(_clz64(xor), 63)  # Gorilla caps LZ at 6 bits
-    tz = _ctz64(xor)
-    siglen = np.where(xor == 0, 0, 64 - lz - tz).astype(np.int64)
-    sig = xor >> tz.astype(_U64)
-
-    nz = ctrl == 1
-    meta = (lz[nz].astype(_U64) << _U64(6)) | (siglen[nz] - 1).astype(_U64)
-    return (
-        struct.pack("<I", n)
-        + _pack_bits(ctrl, np.full(n, 1))
-        + _pack_bits(meta, np.full(int(nz.sum()), 12))
-        + _pack_bits(sig[nz], siglen[nz])
-    )
-
-
-def _decode_vals(buf: bytes, off: int = 0) -> tuple[np.ndarray, int]:
-    (n,) = struct.unpack_from("<I", buf, off)
-    off += 4
-    if n == 0:
-        return np.empty(0, dtype=np.float64), off
-    ctrl_bytes = (n + 7) // 8
-    ctrl = _unpack_bits(buf[off : off + ctrl_bytes], np.full(n, 1)).astype(bool)
-    off += ctrl_bytes
-    n1 = int(ctrl.sum())
-    meta_bytes = (12 * n1 + 7) // 8
-    meta = _unpack_bits(buf[off : off + meta_bytes], np.full(n1, 12))
-    off += meta_bytes
-    lz = (meta >> _U64(6)).astype(np.int64)
-    siglen = (meta & _U64(0x3F)).astype(np.int64) + 1
-    sig_bytes = _packed_nbytes(siglen)
-    sig = _unpack_bits(buf[off : off + sig_bytes], siglen)
-    off += sig_bytes
-
-    xor = np.zeros(n, dtype=_U64)
-    tz = (64 - lz - siglen).astype(_U64)
-    xor[ctrl] = sig << tz
-    x = np.bitwise_xor.accumulate(xor)
-    return x.view(np.float64).copy(), off
-
-
-# ------------------------------------------------- fast fixed-window variant
-
 def _pack_fixed(vals: np.ndarray, w: int) -> bytes:
-    """Pack each value's low ``w`` bits, MSB-first — single-bucket fast path."""
+    """Pack each value's low ``w`` bits, MSB-first."""
     if w == 0 or vals.size == 0:
         return b""
     bits64 = np.unpackbits(vals.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1)
@@ -255,27 +66,10 @@ def _unpack_fixed(buf: bytes, n: int, w: int) -> np.ndarray:
     return np.packbits(full, axis=1).copy().view(">u8").astype(_U64).ravel()
 
 
-def encode_series_fast(ts_us: np.ndarray, values: np.ndarray) -> bytes:
-    """Fixed-window variant of the codec: ~10× less per-series overhead.
+# ----------------------------------------------------------------- series API
 
-    Same public ideas (delta-of-delta timestamps, XOR values) but each
-    series uses ONE bit width per stream instead of per-point widths:
-
-    - timestamps: ``ts0`` and the first delta are 8-byte header fields; the
-      remaining delta-of-deltas are zigzagged and stored at the series'
-      max-dod width (0 bits for perfectly regular series — the common case
-      for tokenized docs where ts is affine in seq);
-    - values: one (trailing-zero anchor, window width) pair per SERIES —
-      Gorilla's "reuse window" taken to its limit; a 1-bit ctrl per point
-      marks xor==0, nonzero xors store ``xor >> tz_anchor`` at the fixed
-      window width. No per-point (lz, len) meta at all, which on noisy data
-      more than pays for the wider window.
-
-    Layout: ``u32 n | i64 ts0 | i64 delta1 | u8 w_ts | ts payload |
-    u8 tz_anchor | u8 w_val | ctrl bits | val payload`` (streams
-    byte-aligned). Round-trip bit-exactness is unchanged — the correctness
-    gate (token-array equality) covers both variants.
-    """
+def encode_series(ts_us: np.ndarray, values: np.ndarray) -> bytes:
+    """One series' points → one binary blob (layout in the module doc)."""
     ts = np.asarray(ts_us, dtype=np.int64)
     x = np.ascontiguousarray(values, dtype=np.float64).view(_U64)
     n = ts.size
@@ -310,7 +104,8 @@ def encode_series_fast(ts_us: np.ndarray, values: np.ndarray) -> bytes:
     return b"".join(out)
 
 
-def decode_series_fast(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
+def decode_series(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of ``encode_series``: ``(ts_us, values)``, bit-exact."""
     (n,) = struct.unpack_from("<I", blob, 0)
     off = 4
     if n == 0:
@@ -344,37 +139,20 @@ def decode_series_fast(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
     return ts.astype(np.int64), x.view(np.float64).copy()
 
 
-# ----------------------------------------------------------------- series API
-
-def encode_series(ts_us: np.ndarray, values: np.ndarray) -> bytes:
-    """One series' points → one binary blob (timestamps + values streams)."""
-    return _encode_ts(np.asarray(ts_us)) + _encode_vals(np.asarray(values))
-
-
-def decode_series(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
-    ts, off = _decode_ts(blob, 0)
-    vals, off = _decode_vals(blob, off)
-    return ts, vals
-
-
 # ---------------------------------------------------------------- Spark layer
 
 EPOCH0_US = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC
 TICK_US = 60_000_000
 
 
-def encode_docs(docs, tick_us: int = TICK_US, epoch0_us: int = EPOCH0_US,
-                codec: str = "fast"):
+def encode_docs(docs, tick_us: int = TICK_US, epoch0_us: int = EPOCH0_US):
     """docs(doc_id, tokens, n_tok, source) → (doc_id, source, n_tok, blob).
 
     mapInPandas: Arrow batches in, vectorized numpy codec per series. The
     per-batch loop is over *series* (rows), never points — identical shape to
-    Spark's own grouped processing. ``codec='fast'`` (fixed-window, default)
-    or ``'paper'`` (per-point widths, closer to the Gorilla paper layout).
+    Spark's own grouped processing.
     """
     import pandas as pd
-
-    enc_fn = encode_series_fast if codec == "fast" else encode_series
 
     def enc(batches):
         for pdf in batches:
@@ -382,7 +160,7 @@ def encode_docs(docs, tick_us: int = TICK_US, epoch0_us: int = EPOCH0_US,
             for toks in pdf["tokens"]:
                 t = np.asarray(toks, dtype=np.int64)
                 ts = epoch0_us + np.arange(t.size, dtype=np.int64) * tick_us
-                blobs.append(enc_fn(ts, t.astype(np.float64)))
+                blobs.append(encode_series(ts, t.astype(np.float64)))
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -397,17 +175,15 @@ def encode_docs(docs, tick_us: int = TICK_US, epoch0_us: int = EPOCH0_US,
     )
 
 
-def decode_docs(encoded, codec: str = "fast"):
+def decode_docs(encoded):
     """Inverse of encode_docs; reconstructs the exact token arrays."""
     import pandas as pd
-
-    dec_fn = decode_series_fast if codec == "fast" else decode_series
 
     def dec(batches):
         for pdf in batches:
             toks = []
             for blob in pdf["blob"]:
-                _, vals = dec_fn(bytes(blob))
+                _, vals = decode_series(bytes(blob))
                 toks.append(vals.astype(np.int32))
             yield pd.DataFrame(
                 {

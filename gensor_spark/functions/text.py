@@ -57,12 +57,6 @@ def md5int(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
 
-def seeded_hash(seed: Column | int, s: Column) -> Column:
-    """``md5int(seed || ':' || s)`` — one member of a cheap hash family."""
-    seed_col = F.lit(seed) if isinstance(seed, int) else seed
-    return md5int(F.concat(seed_col.cast("string"), F.lit(":"), s))
-
-
 def shingles(toks: Column, k: int = 3) -> Column:
     """``k``-token shingles joined by spaces; empty array when < k tokens.
 
@@ -168,18 +162,3 @@ def token_entropy(toks: Column) -> Column:
         ) * F.log(
             F.size(F.filter(toks, lambda x: x == u)).cast("double") / n),
     )).otherwise(F.lit(0.0))
-
-
-def doc_fingerprint(text: Column, k: int = 5) -> Column:
-    """Rolling-hash document fingerprint: min 32-bit hash over k-shingles.
-
-    A 1-permutation MinHash — stable under small edits anywhere except at
-    the minimizing shingle, the classic cheap near-dup prefilter. Docs
-    shorter than k tokens fall back to the hash of the whole token stream.
-    """
-    toks = tokens(text)
-    sh = shingles(toks, k)
-    whole = md5int(F.array_join(toks, " "))
-    return F.when(
-        F.size(sh) > 0, F.array_min(F.transform(sh, lambda s: md5int(s)))
-    ).otherwise(whole)

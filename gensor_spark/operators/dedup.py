@@ -517,13 +517,6 @@ def simhash_docs(docs: DataFrame, bits: int = SIMHASH_BITS,
     )
 
 
-def simhash_col(text_col, bits: int = SIMHASH_BITS):
-    """Column-level SimHash (composable; prefer simhash_docs in pipelines —
-    this inline form recomputes the token hashes once per bit)."""
-    th = F.transform(tokens(text_col), lambda t: md5int(t))
-    return _simhash_from_hashes(th, bits)
-
-
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
                   bits: int = SIMHASH_BITS, bands: int = SIMHASH_BANDS,
                   text_col: str = "text", id_col: str = "doc_id",

@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from gensor_spark.operators.transforms import golden_min
+
 KEYS = ("doc_id", "source")
 
 
@@ -133,25 +135,12 @@ def _mle_ratio(y: np.ndarray, lo: float = -8.0, hi: float = 8.0,
     """Golden-section MLE of log10(q/r) on the concentrated log-likelihood
     (r := 1 during the search; the scale factor sigma2 is concentrated out
     inside the kernel). Returns the fitted RATIO q/r."""
-    gr = (np.sqrt(5.0) - 1.0) / 2.0
 
     def nll(lr: float) -> float:
         v = _kalman_kernel(y, 10.0 ** lr, 1.0)[3]
         return np.inf if np.isnan(v) else v
 
-    a, b = lo, hi
-    c, d = b - gr * (b - a), a + gr * (b - a)
-    fc, fd = nll(c), nll(d)
-    while (b - a) > tol:
-        if fc < fd:
-            b, d, fd = d, c, fc
-            c = b - gr * (b - a)
-            fc = nll(c)
-        else:
-            a, c, fc = c, d, fd
-            d = a + gr * (b - a)
-            fd = nll(d)
-    return float(10.0 ** ((a + b) / 2.0))
+    return float(10.0 ** golden_min(nll, lo, hi, tol))
 
 
 def kalman_smooth(

@@ -34,13 +34,13 @@ one tenant) exactly like every published correlation-matrix job; the
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from gensor_spark.operators.transforms import golden_min
 
 KEYS = ("doc_id", "source")
 
@@ -1214,22 +1214,10 @@ def _ses_sse(x: np.ndarray, alpha: float) -> float:
 
 def _theta_alpha(x: np.ndarray) -> float:
     """Golden-section minimization of the SES one-step SSE over alpha in
-    [0.01, 0.99] — deterministic, wheel-free (the box_cox_mle pattern)."""
-    lo, hi = 0.01, 0.99
-    gr = (math.sqrt(5.0) - 1.0) / 2.0
-    c = hi - gr * (hi - lo)
-    d = lo + gr * (hi - lo)
-    fc, fd = _ses_sse(x, c), _ses_sse(x, d)
-    for _ in range(60):
-        if fc < fd:
-            hi, d, fd = d, c, fc
-            c = hi - gr * (hi - lo)
-            fc = _ses_sse(x, c)
-        else:
-            lo, c, fc = c, d, fd
-            d = lo + gr * (hi - lo)
-            fd = _ses_sse(x, d)
-    return 0.5 * (lo + hi)
+    [0.01, 0.99] — deterministic, wheel-free."""
+    # tol=3e-13 stops the 0.98-wide bracket after exactly 60 steps
+    # (0.98·φ⁻⁶⁰ ≈ 2.8e-13, 0.98·φ⁻⁵⁹ ≈ 4.6e-13)
+    return golden_min(lambda a: _ses_sse(x, a), 0.01, 0.99, 3e-13)
 
 
 def _prefix_ols_slope(x: np.ndarray) -> float:

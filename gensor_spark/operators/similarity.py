@@ -66,11 +66,6 @@ def dot(a, b) -> "F.Column":
     )
 
 
-def cosine(a, b) -> "F.Column":
-    """Cosine over quantized integer vectors — exact across engines."""
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
 def hyperplane_bucket(vec, plane_lits: list[list[int]]) -> "F.Column":
     """LSH bucket id for one table: bit ``j`` set iff ``planes[j] · vec >= 0``."""
     sig = F.lit(0).cast("long")

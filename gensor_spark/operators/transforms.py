@@ -139,6 +139,32 @@ def _boxcox_llf(lmbda: float, x: np.ndarray, logx_sum: float) -> float:
     return (lmbda - 1.0) * logx_sum - n / 2.0 * np.log(var)
 
 
+_INVPHI = (np.sqrt(5.0) - 1.0) / 2.0
+
+
+def golden_min(f, lo: float, hi: float, tol: float) -> float:
+    """Golden-section search for the minimum of a unimodal ``f`` on
+    ``[lo, hi]``; returns the bracket midpoint once it is ``tol`` wide.
+
+    Deterministic and wheel-free: the one search behind Box-Cox's λ, the
+    Kalman q/r ratio and the theta method's SES alpha. Ties, ``inf`` and
+    NaN values step the bracket right, so a left-hand ``inf`` plateau
+    (an objective that fails there) is walked past.
+    """
+    c, d = hi - _INVPHI * (hi - lo), lo + _INVPHI * (hi - lo)
+    fc, fd = f(c), f(d)
+    while hi - lo > tol:
+        if fc < fd:
+            hi, d, fd = d, c, fc
+            c = hi - _INVPHI * (hi - lo)
+            fc = f(c)
+        else:
+            lo, c, fc = c, d, fd
+            d = lo + _INVPHI * (hi - lo)
+            fd = f(d)
+    return 0.5 * (lo + hi)
+
+
 def boxcox_mle_lambda(x: np.ndarray, lo: float = -5.0, hi: float = 5.0) -> float:
     """Golden-section maximization of the Box-Cox log-likelihood.
 
@@ -150,20 +176,7 @@ def boxcox_mle_lambda(x: np.ndarray, lo: float = -5.0, hi: float = 5.0) -> float
     if np.any(x <= 0):
         raise ValueError("box-cox requires strictly positive data")
     logx_sum = float(np.log(x).sum())
-    invphi = (np.sqrt(5.0) - 1.0) / 2.0
-    a, b = lo, hi
-    c, d = b - invphi * (b - a), a + invphi * (b - a)
-    fc, fd = _boxcox_llf(c, x, logx_sum), _boxcox_llf(d, x, logx_sum)
-    while abs(b - a) > 1e-8:
-        if fc > fd:
-            b, d, fd = d, c, fc
-            c = b - invphi * (b - a)
-            fc = _boxcox_llf(c, x, logx_sum)
-        else:
-            a, c, fc = c, d, fd
-            d = a + invphi * (b - a)
-            fd = _boxcox_llf(d, x, logx_sum)
-    return (a + b) / 2.0
+    return golden_min(lambda lm: -_boxcox_llf(lm, x, logx_sum), lo, hi, 1e-8)
 
 
 def box_cox_mle(points: DataFrame, keys=KEYS) -> DataFrame:

@@ -69,24 +69,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql queries."""
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def read_from_api() -> None:
-    """API ingestion — parity with the reference's own placeholder.
-
-    The reference ships this as a bare ``return NotImplemented``
-    (``/root/reference/gensor/io/read.py:190-192``); there is no behavior to
-    re-express. Kept as an explicit, documented stub so the operator
-    inventory is complete; a real implementation would land rows through the
-    same point-view schema as ``csvfiles.read_vanessen``.
-    """
-    return NotImplemented
-
-
 def iceberg_available(spark: SparkSession) -> bool:
     """True when the iceberg-spark runtime jar is on the classpath.
 

@@ -70,16 +70,15 @@ def runner(docs_dir: str, cpus: int, repeats: int = 1) -> None:
     store; min-of-N is reported because stop-the-world GC timing makes
     individual runs noisy (±40% observed) while the minimum is stable.
     """
-    # Batch-pipeline profile: AQE partition coalescing ON. The session
-    # default is now also ON (r3) but the tier pipeline pins it explicitly:
-    # its post-shuffle partitions are tiny compressed numeric rows and its
-    # concurrent batches contend for task slots: merging the tiny stages
-    # frees slots for the heavy kernel stages. Measured on the 873M-point
-    # input: ON is ~13% faster at local[32] (18.5s vs 21.2s) and ~6% slower
-    # at local[4] — the wide end is what a 1000-executor deployment runs at,
-    # so ON is this job's production setting (applied uniformly to every
-    # level; the efficiency ratio compares like with like).
-    os.environ.setdefault("SPARK_GRAFT_COALESCE", "true")
+    # Batch-pipeline profile: AQE partition coalescing ON, the session
+    # default. The tier pipeline's post-shuffle partitions are tiny
+    # compressed numeric rows and its concurrent batches contend for task
+    # slots: merging the tiny stages frees slots for the heavy kernel stages.
+    # Measured on the 873M-point input: ON is ~13% faster at local[32]
+    # (18.5s vs 21.2s) and ~6% slower at local[4] — the wide end is what a
+    # 1000-executor deployment runs at, so ON is this job's production
+    # setting (applied uniformly to every level; the efficiency ratio
+    # compares like with like).
 
     from gensor_spark.plans.incremental import TIERS, TierPipeline
     from gensor_spark.session import get_spark

@@ -95,7 +95,21 @@ def test_spark_encode_decode_docs(spark, docs_small):
     assert sizes["blob"] < n_tok * 16 * 0.5
 
 
-# ---------------------------------------------------------------- fast codec
+def test_docs_blobs_decode_with_the_series_api(spark, docs_small):
+    """``encode_docs`` writes the same layout ``decode_series`` reads."""
+    rows = encode_docs(docs_small).select("doc_id", "source", "blob").collect()
+    want = {(r.doc_id, r.source): r.tokens for r in
+            docs_small.select("doc_id", "source", "tokens").collect()}
+    assert rows and len(rows) == len(want)
+    for r in rows:
+        ts, vals = decode_series(bytes(r.blob))
+        toks = want[(r.doc_id, r.source)]
+        np.testing.assert_array_equal(vals, np.asarray(toks, dtype=np.float64))
+        np.testing.assert_array_equal(
+            ts, EPOCH0_US + np.arange(len(toks), dtype=np.int64) * TICK_US)
+
+
+# ------------------------------------------------- ticks and special values
 
 @given(
     st.lists(st.integers(min_value=-(2**31), max_value=2**31 - 1),
@@ -104,24 +118,20 @@ def test_spark_encode_decode_docs(spark, docs_small):
 )
 @settings(max_examples=60, deadline=None)
 def test_fast_codec_roundtrip_property(tokens, tick_us):
-    from gensor_spark.codecs.gorilla import decode_series_fast, encode_series_fast
-
     vals = np.asarray(tokens, dtype=np.float64)
     ts = np.arange(len(tokens), dtype=np.int64) * tick_us
-    dts, dv = decode_series_fast(encode_series_fast(ts, vals))
+    dts, dv = decode_series(encode_series(ts, vals))
     assert np.array_equal(dts, ts)
     assert np.array_equal(dv, vals)
 
 
 def test_fast_codec_irregular_and_specials():
-    from gensor_spark.codecs.gorilla import decode_series_fast, encode_series_fast
-
     rng = np.random.default_rng(9)
     ts = np.cumsum(rng.integers(1, 10**6, 4000)).astype(np.int64)
     vals = rng.normal(size=4000)
     vals[::97] = 0.0
     vals[1::101] = np.inf
     vals[2::103] = 5e-324
-    dts, dv = decode_series_fast(encode_series_fast(ts, vals))
+    dts, dv = decode_series(encode_series(ts, vals))
     assert np.array_equal(dts, ts)
     assert np.array_equal(dv.view(np.uint64), vals.view(np.uint64))  # bit-exact

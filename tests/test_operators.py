@@ -122,6 +122,21 @@ def test_boxcox_fixed_and_mle(spark):
     assert abs(lam) < 0.2  # lognormal sanity
 
 
+def test_golden_min_parabola_and_inf_plateau():
+    """The one golden-section search: a shifted parabola's minimum to within
+    ``tol``, and a left-hand ``inf`` plateau (an objective that fails there,
+    as the Kalman likelihood does) is stepped past, not stopped at."""
+    for m in (-3.7, 0.0, 0.25, 4.9):
+        got = transforms.golden_min(lambda x: (x - m) ** 2, -5.0, 5.0, 1e-9)
+        assert abs(got - m) <= 1e-9
+
+    def plateau(x):
+        return np.inf if x < 2.0 else (x - 3.0) ** 2
+
+    got = transforms.golden_min(plateau, -8.0, 8.0, 1e-6)
+    assert abs(got - 3.0) <= 1e-6
+
+
 # ------------------------------------------------------------------- outliers
 
 def _spiked(spark):

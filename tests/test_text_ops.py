@@ -77,8 +77,7 @@ def test_minhash_xxhash64_production_family(docs):
 
 
 def test_simhash_invariants(spark, docs):
-    out = {r.doc_id: r.simhash for r in docs.select(
-        "doc_id", D.simhash_col(F.col("text")).alias("simhash")).collect()}
+    out = {r.doc_id: r.simhash for r in D.simhash_docs(docs).collect()}
     assert out[0] == out[1]            # identical text -> identical simhash
     assert out[4] == 0                 # empty doc -> zero signature
     assert all(v >= 0 for v in out.values())
