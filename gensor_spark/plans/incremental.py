@@ -3,8 +3,8 @@
 North-rule requirements: continuous aggregates (1m→1h→1d) maintained as
 incrementally-merged tables, per-partition lineage rows, resumable from
 checkpoint. gensor has no incrementality at all — every ``resample`` call
-recomputes from raw (``/root/reference/gensor/core/base.py:147-170``); its
-only idempotency is the SQLite ``ON CONFLICT DO NOTHING`` insert
+recomputes from raw (``core/base.py:147-170`` in the reference); its only
+idempotency is the SQLite ``ON CONFLICT DO NOTHING`` insert
 (``base.py:355-358``). This module is the from-scratch distributed
 replacement.
 
@@ -14,30 +14,41 @@ maintained with real ``MERGE INTO`` via plans/iceberg_store.py):
 - Input is processed in deterministic **batches** (at real scale: Iceberg
   snapshots / ingest partitions; here: hash buckets of doc_id). Each batch's
   contribution to each tier is written as **partial states**
-  (operators/rollup.py) — parquet backend: ``tier_<t>/batch=<id>/`` with
-  directory-level overwrite; iceberg backend: one ``MERGE INTO`` snapshot
-  keyed on ``(keys…, bin_ts, batch)`` — so re-running a batch is idempotent
-  in either backend.
-- The **checkpoint ledger** (`_ledger.json`, written atomically via
-  tmp+rename) records completed batches; a rerun skips them. A crash between
-  data write and ledger update is safe: the rerun overwrites the same
-  directory with identical content.
-- **Lineage** (`_lineage.jsonl`): one row per (batch, tier) with row/point
-  counts and wall time — the per-partition lineage rows the north rule asks
-  for.
-- Reads merge partial states across batch contributions (associative — see
+  (operators/rollup.py) — parquet backend: a fresh ``tier_<t>/batch=<id>-*``
+  dir per tier; iceberg backend: one ``MERGE INTO`` snapshot keyed on
+  ``(keys…, bin_ts, batch)``.
+- **One commit protocol** (plans/manifest.py): the store's versioned
+  manifest lists every tier's committed dirs, the processed batch ids (the
+  checkpoint: a rerun skips them) and each sketch tier's committed stream
+  epochs (a replay skips them, also once a fold absorbed them). A
+  contribution commits all its tiers in one version; a fold (compaction,
+  retention, sketch fold, calendar refresh) writes a fresh dir and commits
+  it in place of the dirs it listed, keeping any contribution committed
+  since. Readers read the newest version only.
+- **Lineage** (``_lineage.jsonl``): one row per commit with its manifest
+  version: per batch the per-tier row counts and wall time, the per-partition
+  lineage rows the north rule asks for; per fold its kind and rows written.
+- Reads merge partial states across contributions (associative — see
   rollup.py) and finalize to count/min/max/mean/last. ``compact()``
   re-aggregates a tier into a single contribution (Iceberg: rewrite_data_files).
 
 Because partials are associative and batches are disjoint row sets, the
 pipeline commutes with any batch order and any parallelism level — which is
 also what makes the N-vs-4N scaling run apples-to-apples.
+
+Crash windows (parquet backend). A kill before a writer's commit leaves
+its dirs unlisted: readers see the store as before, and a rerun writes the
+batch again into fresh dirs. A kill after it leaves the write visible in
+every tier it touches; a fold killed there has not yet deleted the dirs it
+absorbed, and a plain fold not yet dropped a bucketed catalog entry. Unlisted
+dirs are never read (a bucketed read checks the catalog location against the
+manifest); ``reset()`` removes them. ``blobs/batch=<id>`` is outside the
+manifest: a rerun of the batch overwrites it.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import shutil
 import threading
 import time
@@ -85,7 +96,10 @@ from gensor_spark.operators.topkrollup import (
     merge_topk,
     rollup_topk,
 )
+from gensor_spark.plans import manifest
+from gensor_spark.plans.bucketing import write_bucketed
 from gensor_spark.plans.caching import cache_scope, pooled_cache
+from gensor_spark.plans.zorder import rank_scale, zvalue
 
 TIERS = ("1m", "1h", "1d")
 
@@ -120,7 +134,7 @@ class _SketchFamily:
     """One mergeable sketch family's tier contract.
 
     Every family stores per-contribution 1m partials under
-    ``tier_<tier>/batch=<id>/`` (batch, wave and stream-epoch
+    ``tier_<tier>/batch=<id>-*`` (batch, wave and stream-epoch
     contributions alike), merges any set of them per (series, bin) at read,
     and derives coarser tiers at read by cascading the merged 1m state —
     bin-grain work, never a raw-point re-read. ``params`` are the rollup
@@ -142,18 +156,6 @@ class _SketchFamily:
     #: (docs, keys, tick_seconds, **params) → 1m partials straight from the
     #: token docs, or None for the point path
     docs_rollup: Callable[..., DataFrame | None] | None = None
-
-    def folded(self, store: Path) -> set[str]:
-        """Stream-epoch contribution ids already absorbed into ``batch=-1``
-        by a fold (compaction or retention), from the tier's
-        ``_folded.json``. foreachBatch replay is at-least-once, and a
-        replayed epoch re-written next to its folded copy would be counted
-        twice; this manifest is the store's memory of what a fold absorbed,
-        written INSIDE the fold's tmp dir and promoted by the same rename."""
-        f = store / f"tier_{self.tier}" / "_folded.json"
-        if not f.exists():
-            return set()
-        return set(json.loads(f.read_text()).get("folded_stream_epochs", []))
 
 
 _SKETCH_FAMILIES = {
@@ -235,8 +237,8 @@ class TierPipeline:
         #: tier storage: "parquet" (directory-per-batch, dynamic overwrite)
         #: or "iceberg" (MERGE INTO per batch — plans/iceberg_store.py;
         #: requires the iceberg-spark runtime jar + a configured catalog,
-        #: see iceberg_store.iceberg_conf). Ledger/lineage/blobs stay on the
-        #: filesystem either way.
+        #: see iceberg_store.iceberg_conf). Manifest/lineage/blobs stay on
+        #: the filesystem either way.
         self.backend = backend
         # validate flag/backend combinations BEFORE any backend session work:
         # the Iceberg MERGE templates carry the plain wide rows only — no
@@ -328,41 +330,23 @@ class TierPipeline:
         #: (scheduler + file-commit latency) that otherwise bounds wide-N
         #: scaling efficiency (the Amdahl term measured in BENCH/BASELINE.md).
         self.max_concurrent = max(1, max_concurrent)
-        self._meta_lock = threading.Lock()
-        #: data schema (without the ``batch`` partition column) of each
-        #: tier directory this pipeline has read, by directory name — see
-        #: ``_scan``. Cleared by ``reset()``.
+        #: data schema of each tier directory this pipeline has read, by
+        #: directory name — see ``_scan``. Cleared by ``reset()``.
         self._schemas: dict[str, StructType] = {}
-        #: the last frame each tier read built, with the listing it was
-        #: built on, by read key — see ``_memo_read``. Cleared by ``reset()``.
+        #: the last frame each tier read built, with the manifest entries it
+        #: was built on, by read key — see ``_memo_read``. Cleared by
+        #: ``reset()``.
         self._frames: dict[tuple, tuple[tuple, DataFrame]] = {}
-        self.store.mkdir(parents=True, exist_ok=True)
 
     # ------------------------------------------------------------- checkpoint
 
-    @property
-    def _ledger_path(self) -> Path:
-        return self.store / "_ledger.json"
+    def _manifest(self) -> dict:
+        """The store's newest committed manifest version."""
+        return manifest.newest(self.store)
 
     def ledger(self) -> dict:
-        if self._ledger_path.exists():
-            return json.loads(self._ledger_path.read_text())
-        return {"processed": []}
-
-    def _commit_batch(self, batch_id: int) -> None:
-        with self._meta_lock:  # read-modify-write; batches may commit concurrently
-            led = self.ledger()
-            if batch_id not in led["processed"]:
-                led["processed"].append(batch_id)
-                led["processed"].sort()
-            tmp = self._ledger_path.with_suffix(".tmp")
-            tmp.write_text(json.dumps(led, indent=1))
-            os.replace(tmp, self._ledger_path)  # atomic checkpoint
-
-    def _lineage_row(self, row: dict) -> None:
-        with self._meta_lock:
-            with (self.store / "_lineage.jsonl").open("a") as f:
-                f.write(json.dumps(row) + "\n")
+        """The committed batch and wave ids, from the manifest."""
+        return {"processed": self._manifest()["processed"]}
 
     def lineage(self) -> list[dict]:
         p = self.store / "_lineage.jsonl"
@@ -400,8 +384,10 @@ class TierPipeline:
         )
         return int(obs.get["rows"])
 
-    def _store_tier(self, tier_df: DataFrame, tier: str, b: int) -> int:
-        """Persist one batch's tier partials via the configured backend."""
+    def _store_tier(self, tier_df: DataFrame, tier: str, b: int,
+                    dirs: dict[str, Path] | None = None) -> int:
+        """Persist one batch's tier partials via the configured backend
+        (parquet: into the tier's fresh dir in ``dirs``)."""
         if self.backend == "iceberg":
             # one atomic MERGE-INTO snapshot per (tier, batch); idempotent
             # on re-run because the merge key includes the batch id.
@@ -409,9 +395,7 @@ class TierPipeline:
             # a standalone data-scan count job — see IcebergTierStore.
             self.iceberg.merge_batch(tier, tier_df, b)
             return self.iceberg.count_batch(tier, b)
-        return self._write_counted(
-            tier_df, str(self.store / f"tier_{tier}" / f"batch={b}")
-        )
+        return self._write_counted(tier_df, str(dirs[tier]))
 
     def _store_contribution(self, sid: int, m1: DataFrame, points: DataFrame,
                             docs: DataFrame | None = None,
@@ -423,11 +407,15 @@ class TierPipeline:
         (token docs) lets a sketch family with a docs kernel skip the point
         view, and ``blobs`` is its Gorilla-encoded series. A ``run()`` batch
         passes all of them; a late wave passes ``wave`` and no docs or
-        blobs. One lineage row and the ledger commit close the
-        contribution; a crash before the commit reruns it, overwriting the
-        same directories.
+        blobs. Every tier dir is fresh; one manifest commit makes them all
+        visible with ``sid`` processed, or none when another writer
+        committed ``sid`` first. A failed write deletes its dirs.
         """
         t0 = time.monotonic()
+        fams = self._sketch_families()
+        dirs = ({t: manifest.fresh_dir(self.store, t, sid) for t in
+                 (*TIERS, *(_SKETCH_FAMILIES[f].tier for f in fams))}
+                if self.backend == "parquet" else {})
         counts: dict[str, int] = {}
         blob_thread: threading.Thread | None = None
         blob_err: list[BaseException] = []
@@ -447,35 +435,45 @@ class TierPipeline:
             blob_thread = threading.Thread(target=_encode, daemon=True)
             blob_thread.start()
 
-        try:
-            with cache_scope():
-                # cached so the 1h cascade reuses the in-memory partials
-                # instead of a parquet read-back round trip (another ~2
-                # floor jobs per batch)
-                m1 = pooled_cache(m1)
-                counts["1m"] = self._store_tier(m1, "1m", sid)
-                # coarser tiers cascade from the (much smaller) finer tier —
-                # never re-read the raw points
-                h1 = pooled_cache(cascade_tier(m1, "1h", keys=self.keys))
-                counts["1h"] = self._store_tier(h1, "1h", sid)
-                counts["1d"] = self._store_tier(
-                    cascade_tier(h1, "1d", keys=self.keys), "1d", sid
-                )
-        finally:
-            if blob_thread is not None:
-                blob_thread.join()
-        if blob_err:
-            raise blob_err[0]
-        for family in self._sketch_families():
-            counts[_SKETCH_FAMILIES[family].tier] = self._store_sketch(
-                family, sid, points, docs=docs)
+        with manifest.writing(dirs.values()):
+            try:
+                with cache_scope():
+                    # cached so the 1h cascade reuses the in-memory partials
+                    # instead of a parquet read-back round trip (another ~2
+                    # floor jobs per batch)
+                    m1 = pooled_cache(m1)
+                    counts["1m"] = self._store_tier(m1, "1m", sid, dirs)
+                    # coarser tiers cascade from the (much smaller) finer
+                    # tier — never re-read the raw points
+                    h1 = pooled_cache(cascade_tier(m1, "1h", keys=self.keys))
+                    counts["1h"] = self._store_tier(h1, "1h", sid, dirs)
+                    counts["1d"] = self._store_tier(
+                        cascade_tier(h1, "1d", keys=self.keys), "1d", sid,
+                        dirs)
+            finally:
+                if blob_thread is not None:
+                    blob_thread.join()
+            if blob_err:
+                raise blob_err[0]
+            # each sketch family from the token docs when it has a docs
+            # kernel that applies, else from the point view
+            for family in fams:
+                fam, params = (_SKETCH_FAMILIES[family],
+                               self._sketch_params(family))
+                part = None
+                if docs is not None and fam.docs_rollup is not None:
+                    part = fam.docs_rollup(docs, self.keys, self.tick_seconds,
+                                           **params)
+                if part is None:
+                    part = fam.rollup(points, "1m", keys=self.keys, **params)
+                counts[fam.tier] = self._write_counted(
+                    part, str(dirs[fam.tier]))
         row: dict = {"batch": sid}
         if wave is not None:
             row["wave"] = wave
         row.update(rows=counts, wall_s=round(time.monotonic() - t0, 3),
                    tiers=list(TIERS))
-        self._lineage_row(row)
-        self._commit_batch(sid)
+        manifest.add(self.store, sid, dirs, row)
 
     def _process_batch(self, docs_batched: DataFrame, b: int) -> None:
         batch_docs = docs_batched.filter(F.col("_batch") == b).drop("_batch")
@@ -599,10 +597,9 @@ class TierPipeline:
     # ------------------------------------------------- sketch-tier families
     # Histograms, HLL, Misra-Gries and Count-Min tiers share ONE store
     # contract (_SKETCH_FAMILIES): per-contribution 1m partial dirs under
-    # ``tier_<family>_1m``, _SUCCESS-gated visibility, a fold manifest for
-    # at-least-once stream replay, and the crash-safe compaction/retention
-    # rewrite. The public per-family methods below are a call into it plus
-    # that family's finalize step.
+    # ``tier_<family>_1m``, committed, folded and read through the store's
+    # manifest like every other tier. The public per-family methods below
+    # are a call into it plus that family's finalize step.
 
     def _sketch_families(self) -> list[str]:
         return [f for f in _SKETCH_FAMILIES if getattr(self, f"{f}_tiers")]
@@ -614,50 +611,6 @@ class TierPipeline:
             # DDSketch mode is a pipeline option only; no stream sink takes it
             params["quantize_alpha"] = self.hist_quantize_alpha
         return params
-
-    def _store_sketch(self, family: str, sid: int, points: DataFrame,
-                      docs: DataFrame | None = None) -> int:
-        """Write one contribution's 1m partials of ``family``: from the
-        token ``docs`` when the family has a docs kernel that applies, else
-        from the point view."""
-        fam = _SKETCH_FAMILIES[family]
-        params = self._sketch_params(family)
-        part = None
-        if docs is not None and fam.docs_rollup is not None:
-            part = fam.docs_rollup(docs, self.keys, self.tick_seconds, **params)
-        if part is None:
-            part = fam.rollup(points, "1m", keys=self.keys, **params)
-        return self._write_counted(
-            part, str(self.store / f"tier_{fam.tier}" / f"batch={sid}"))
-
-    def _sketch_contribs(self, family: str
-                         ) -> tuple[Path, list[Path], set[str]]:
-        """The tier dir of ``family``, its visible contribution dirs and
-        its folded stream epochs, once crash leftovers are repaired.
-
-        Two kinds of dir are invisible everywhere. A crash mid-write leaves
-        a ``batch=*`` dir with no ``_SUCCESS``; reading it would merge half
-        an epoch, and folding it while marking the epoch folded would LOSE
-        the other half, so the writer (batch retry or stream replay)
-        overwrites it in full. And a ``batch=s<e>`` whose epoch is listed
-        in ``_folded.json`` already sits inside ``batch=-1``: a replay that
-        passed the sink's manifest check just before a fold landed writes
-        it again, and counting it would count the epoch twice. The next
-        fold deletes it with the rest of the old tier dir.
-        """
-        fam = _SKETCH_FAMILIES[family]
-        self._recover_compact(fam.tier)
-        folded = fam.folded(self.store)
-        base = self.store / f"tier_{fam.tier}"
-        parts = sorted(p for p in base.glob("batch=*")
-                       if (p / "_SUCCESS").exists()
-                       and p.name.split("=", 1)[1] not in folded)
-        if not parts:
-            raise FileNotFoundError(
-                f"no partials under {base} — construct the pipeline with "
-                f"{family}_tiers=True and run() it first"
-            )
-        return base, parts, folded
 
     def _merge_sketch(self, family: str, raw: DataFrame,
                       tier: str = "1m") -> DataFrame:
@@ -673,39 +626,25 @@ class TierPipeline:
 
     def _read_sketch(self, family: str, key: tuple,
                      build: Callable[[DataFrame], DataFrame]) -> DataFrame:
-        """``build`` over the visible 1m contributions of ``family`` (one
+        """``build`` over the committed 1m contributions of ``family`` (one
         row per contribution, series and bin), memoized under
         ``(family, *key)`` by ``_memo_read``."""
-        base, parts, _ = self._sketch_contribs(family)
-        return self._memo_read((family, *key), base, parts, build)
+        tier = _SKETCH_FAMILIES[family].tier
+        return self._memo_read((family, *key), tier,
+                               self._manifest()["tiers"].get(tier, []), build)
 
     def _fold_sketch(self, family: str, cutoff: str | None = None
                      ) -> str | None:
-        """Fold every visible contribution of ``family`` into one
-        ``batch=-1`` (compaction); with ``cutoff``, also drop bins older
-        than it (retention — coarser sketch tiers are derived at read, so
-        the 1m horizon IS the family's retention horizon).
-
-        The fold's manifest (previously folded epochs ∪ the stream
-        contributions it absorbs) and its input come from ONE listing, so
-        no epoch is recorded as folded without having been read. An epoch
-        whose write completes after that listing but before the rewrite's
-        rename is still deleted with the old tier dir: nothing orders a
-        stream write against a running fold.
-        """
-        fam = _SKETCH_FAMILIES[family]
-        base, parts, folded = self._sketch_contribs(family)
-        absorbed = {p.name.split("=", 1)[1] for p in parts
-                    if p.name.startswith("batch=s")}
-        merged = self._merge_sketch(family, self._scan(base, parts))
-        if cutoff is not None:
-            merged = merged.filter(
-                F.col("bin_ts") >= F.lit(cutoff).cast("timestamp"))
+        """Fold every committed contribution of ``family`` into one
+        (compaction); with ``cutoff``, also drop bins older than it
+        (retention — coarser sketch tiers are derived at read, so the 1m
+        horizon IS the family's retention horizon)."""
+        tier = _SKETCH_FAMILIES[family].tier
         self._rewrite_tier(
-            fam.tier, merged,
-            manifest={"folded_stream_epochs": sorted(folded | absorbed)})
-        if cutoff is not None:
-            self._lineage_row({"retention": {fam.tier: cutoff}})
+            tier, lambda listed: self._merge_sketch(
+                family, self._scan(tier, listed)),
+            {"retention": {tier: cutoff}} if cutoff else {"compact": tier},
+            cutoff=cutoff)
         return cutoff
 
     def read_hist_quantiles(
@@ -755,10 +694,9 @@ class TierPipeline:
                             width=self.cms_width)
 
     def compact_hist(self) -> None:
-        """Fold all histogram contributions into one (crash-safe rewrite —
-        the same promote/rollback protocol as ``compact``). Absorbed stream
-        epochs are recorded in the tier's ``_folded.json`` so an
-        at-least-once replay of those epochs skips re-writing them."""
+        """Fold all histogram contributions into one (the same manifest
+        commit as ``compact``). The manifest keeps the absorbed stream
+        epochs as committed, so an at-least-once replay of them is skipped."""
         self._fold_sketch("hist")
 
     def compact_distinct(self) -> None:
@@ -801,7 +739,7 @@ class TierPipeline:
         batches ``<= b`` — the tier exactly as it stood after batch ``b``
         committed (reproduce a historical training run, bisect a data
         regression). Requires the per-batch layout: a compacted tier
-        (``batch=-1``) has folded its history away, so as-of reads raise
+        has folded its history away, so as-of reads raise
         there instead of silently answering from the folded state.
         Parquet backend (Iceberg's own snapshot time travel covers it
         there).
@@ -816,85 +754,66 @@ class TierPipeline:
                     "as_of_batch is parquet-backend only — use Iceberg "
                     "snapshot time travel (VERSION AS OF) instead")
             return build(self.iceberg.read(tier))
-        self._recover_compact(tier)
+        listed = self._manifest()["tiers"].get(tier, [])
         if as_of_batch is None:
-            df = self._bucketed_scan(tier)
+            df = self._bucketed_scan(tier, listed)
             if df is not None:
                 return build(df)
-        base = self.store / f"tier_{tier}"
-        parts = sorted(base.glob("batch=*"))
-        if as_of_batch is not None:
-            ids = [int(p.name.split("=", 1)[1]) for p in parts]
-            if -1 in ids:
+        else:
+            if any("layout" in e for e in listed):
                 raise ValueError(
-                    f"tier {tier!r} is compacted (batch=-1): its per-batch "
-                    "history is folded — as-of reads need the uncompacted "
-                    "layout")
-            parts = [p for p, i in zip(parts, ids) if i <= as_of_batch]
-        if not parts:
-            raise FileNotFoundError(
-                f"tier {tier!r} has no data under {base} — run() it first "
-                "(retention/compaction skip absent tiers)"
-            )
-        return self._memo_read(("tier", tier, finalize, as_of_batch),
-                               base, parts, build)
+                    f"tier {tier!r} is compacted: its per-batch history is "
+                    "folded — as-of reads need the uncompacted layout")
+            listed = [e for e in listed if e["id"] <= as_of_batch]
+        return self._memo_read(("tier", tier, finalize, as_of_batch), tier,
+                               listed, build)
 
-    def _listing(self, parts: list[Path]) -> tuple:
-        """What a scan of the contribution dirs ``parts`` is built on: each
-        dir's ``part-*`` files as (name, size, ``st_mtime_ns``), and the
-        session's ``spark.sql.files.openCostInBytes`` (the one-task cut of
-        ``_scan``). One local ``os.scandir`` per dir, never a Spark job."""
-        dirs = []
-        for p in parts:
-            with os.scandir(p) as entries:
-                files = sorted((e.name, st.st_size, st.st_mtime_ns)
-                               for e in entries if e.name.startswith("part-")
-                               for st in (e.stat(),))
-            dirs.append((str(p), tuple(files)))
-        conf = self.spark._jsparkSession.sessionState().conf()
-        return tuple(dirs), conf.filesOpenCostInBytes()
+    def _merged(self, tier: str, listed: list[dict]) -> DataFrame:
+        """The merged partials of the contributions ``listed`` of ``tier``."""
+        return _merge_partials(self._scan(tier, listed),
+                               [*self.keys, "bin_ts"])
 
-    def _memo_read(self, key: tuple, base: Path, parts: list[Path],
+    def _open_cost(self) -> int:
+        """The session's ``spark.sql.files.openCostInBytes``: the one-task
+        cut of ``_scan``."""
+        return self.spark._jsparkSession.sessionState().conf() \
+            .filesOpenCostInBytes()
+
+    def _memo_read(self, key: tuple, tier: str, listed: list[dict],
                    build: Callable[[DataFrame], DataFrame]) -> DataFrame:
-        """``build`` over the scan of ``parts``, or the frame the last read
-        under ``key`` built, when the listing (``_listing``) it was built on
-        is unchanged.
+        """``build`` over the scan of the committed contributions ``listed``
+        of ``tier``, or the frame the last read under ``key`` built, when
+        it was built on the same entries and open cost.
 
         Building a read is driver work before any job: data source
         resolution, file index, analysis of the merge and finalize plans,
         and their Py4J round trips; a store that has not changed gets the
-        frame it already has. Every write changes the listing: a batch, a
-        wave or a stream epoch adds a dir, and every overwrite or fold
-        writes new part names (each write job stamps its own UUID in them),
-        by this pipeline or any other. Crash repair and the visibility
-        filter run before the listing is taken, on every read. A frame keeps
-        the SQL conf it was analysed under, and a file rewritten in place
-        with the same name, size and mtime is not seen; a new
-        ``TierPipeline`` builds afresh. Concurrent reads of one key may each
-        build; each stores its frame together with its own listing.
+        frame it already has. A committed dir is never written again, so
+        its manifest entry names its content: every write, by this pipeline
+        or any other, commits new entries. A frame keeps the SQL conf it was
+        analysed under; a new ``TierPipeline`` builds afresh. Concurrent
+        reads of one key may each build; each stores its frame together
+        with its own entries.
         """
-        listing = self._listing(parts)
+        seen = (tuple((e["dir"], e["bytes"]) for e in listed),
+                self._open_cost())
         hit = self._frames.get(key)
-        if hit is not None and hit[0] == listing:
+        if hit is not None and hit[0] == seen:
             return hit[1]
-        df = build(self._scan(base, parts, listing))
-        self._frames[key] = (listing, df)
+        df = build(self._scan(tier, listed))
+        self._frames[key] = (seen, df)
         return df
 
-    def _scan(self, base: Path, parts: list[Path],
-              listing: tuple | None = None) -> DataFrame:
-        """Parquet scan of the contribution dirs ``parts`` of the tier
-        directory ``base``, without the ``batch`` partition column;
-        ``listing`` is their ``_listing``, taken here when not given.
+    def _scan(self, tier: str, listed: list[dict]) -> DataFrame:
+        """Parquet scan of the committed contribution dirs ``listed`` of
+        ``tier``; a FileNotFoundError when there are none.
 
-        Only a directory's first scan infers the data schema (a one-task
-        Spark job over a footer, most of a small read's plan-build time);
-        later scans pass the remembered one. ``batch`` stays out of the
-        memo, so its type is still inferred from the paths. A pipeline's
-        flags fix each tier's columns for its lifetime, so the memo cannot
-        go stale. A frame's file index keeps the listing it was built with,
-        which is why a read reuses a frame (``_memo_read``) only while the
-        listing is unchanged.
+        Only a tier's first scan infers the data schema (a one-task Spark
+        job over a footer, most of a small read's plan-build time); later
+        scans pass the remembered one. A pipeline's flags fix each tier's
+        columns for its lifetime, so the memo cannot go stale. A frame's
+        file index keeps the files it was built with, which is why a read
+        reuses a frame (``_memo_read``) only while the entries are unchanged.
 
         A read whose ``part-*`` files sum to at most the session's
         ``spark.sql.files.openCostInBytes`` (1 MB from ``get_spark``) runs
@@ -906,103 +825,99 @@ class TierPipeline:
         Larger reads keep their file splits and the merge its shuffle: one
         task is slower there (a 1.9 MB hist quantile read, measured).
         """
-        reader = self.spark.read.option("basePath", str(base))
+        if not listed:
+            raise FileNotFoundError(
+                f"tier {tier!r} has no data under {self.store} — run() it "
+                "first (a sketch tier needs its <family>_tiers flag)")
+        base = self.store / f"tier_{tier}"
+        reader = self.spark.read
         known = self._schemas.get(base.name)
         if known is not None:
             reader = reader.schema(known)
-        df = reader.parquet(*[str(p) for p in parts])
+        df = reader.parquet(*[str(base / e["dir"]) for e in listed])
         if known is None:
             # concurrent first reads may both infer; they store equal schemas
-            self._schemas[base.name] = StructType(
-                [f for f in df.schema.fields if f.name != "batch"])
-        df = df.drop("batch")
-        dirs, open_cost = listing or self._listing(parts)
-        size = sum(f[1] for _, files in dirs for f in files)
-        return df.coalesce(1) if size <= open_cost else df
+            self._schemas[base.name] = df.schema
+        size = sum(e["bytes"] for e in listed)
+        return df.coalesce(1) if size <= self._open_cost() else df
 
-    def _compact_paths(self, tier: str) -> tuple[Path, Path, Path]:
-        base = self.store / f"tier_{tier}"
-        return base, Path(f"{base}_compact_tmp"), Path(f"{base}_old")
+    def _rewrite_tier(self, tier: str,
+                      build: Callable[[list[dict]], DataFrame], row: dict,
+                      cutoff: str | None = None, n_buckets: int | None = None,
+                      layout: str = "plain") -> int | None:
+        """Fold a tier: ``build`` maps the tier's committed entries to the
+        partials that replace them (parquet backend), written to a fresh
+        dir and committed in their place; returns the row count written
+        (None for a bucketed write). The one rewrite behind every fold:
+        compaction (plain, z-order, bucketed), retention, sketch folds and
+        calendar refreshes, first write included. ``cutoff`` drops bins
+        older than it (retention); ``row`` is the commit's lineage row.
 
-    def _recover_compact(self, tier: str) -> None:
-        """Repair any state a crash mid-``_rewrite_tier`` can leave behind.
+        The commit keeps every contribution committed after the listing
+        (partials are associative). When an entry it absorbed is gone or
+        another fold's output is new (another fold committed first), the
+        output is deleted and the fold redone on the newer version. The
+        absorbed dirs are deleted after the commit; a read running then can
+        find its files gone and fail, and issued again reads the new version.
 
-        The rewrite's step order is: (1) write tmp, (2) rename final→old,
-        (3) rename tmp→final, (4) delete old. A crash after any single step
-        leaves either final intact (→ drop leftovers) or final missing with
-        a complete tmp and the old copy still on disk (→ promote tmp,
-        falling back to restoring old). No window loses the tier — the old
-        copy is only deleted after the compacted one is in place. A first
-        write (no final yet, so no step 2) leaves a complete tmp (→ promote)
-        or an incomplete one, which the next rewrite clears.
+        ``n_buckets`` writes the output as a bucketed catalog table on the
+        series keys (plans/bucketing.py) registered at the output dir; the
+        read side uses it only while the manifest lists that dir as the
+        tier's one entry (``_bucketed_scan``). A plain rewrite drops the
+        catalog entry after its commit, so a failed write leaves the live
+        bucketed fast path in place.
         """
-        final, tmp, old = self._compact_paths(tier)
-        if final.exists():
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-            return
-        if tmp.exists() and (tmp / "batch=-1" / "_SUCCESS").exists():
-            os.replace(tmp, final)  # crash was between steps 2 and 3
-            shutil.rmtree(old, ignore_errors=True)
-        elif old.exists():
-            os.replace(old, final)  # tmp incomplete — roll back
-            shutil.rmtree(tmp, ignore_errors=True)
+        while True:
+            listed = self._manifest()["tiers"].get(tier, [])
+            absorbed = {e["dir"] for e in listed}
 
-    def _rewrite_tier(self, tier: str, partials: DataFrame,
-                      manifest: dict | None = None,
-                      n_buckets: int | None = None) -> int | None:
-        """Atomically replace a tier's contents with ``partials`` as its one
-        ``batch=-1`` contribution (parquet backend); returns the row count
-        written (None for a bucketed write). The one rewrite behind every
-        fold: compaction (plain, z-order, bucketed), retention, sketch folds
-        and calendar refreshes, first write included.
+            def kept(m: dict) -> list[dict] | None:
+                """The entries of ``m`` the fold keeps; None when another
+                fold committed since the listing."""
+                cur = m["tiers"].get(tier, [])
+                new = [e for e in cur if e["dir"] not in absorbed]
+                if (len(cur) - len(new) < len(absorbed)
+                        or any("layout" in e for e in new)):
+                    return None
+                return new
 
-        Steps: (1) write tmp, (2) set the live tier aside (skipped when there
-        is none yet), (3) promote tmp, (4) delete the old copy. The current
-        tier is renamed aside, not deleted, until the new copy is promoted —
-        ``_recover_compact`` repairs every intermediate state. ``manifest``
-        (a sketch tier's folded stream epochs) is written INSIDE tmp before
-        the promote rename, so the fold and its memory become visible in the
-        same atomic step.
+            out = manifest.fresh_dir(self.store, tier, -1)
+            try:
+                with manifest.writing([out]):
+                    partials = build(listed)
+                    if cutoff is not None:
+                        partials = partials.filter(
+                            F.col("bin_ts") >= F.lit(cutoff).cast("timestamp"))
+                    if n_buckets is None:
+                        n = self._write_counted(partials, str(out))
+                    else:
+                        # an overwrite-saveAsTable onto a live entry would
+                        # replace it before the commit
+                        self._drop_bucket_table(tier)
+                        write_bucketed(partials, self._bucket_table(tier),
+                                       n_buckets, bucket_cols=self.keys,
+                                       sort_cols=("bin_ts",), path=str(out))
+                        n = None
+            except Exception:
+                if kept(self._manifest()) is not None:
+                    raise
+                continue  # that fold deleted this one's input: redo
+            folded = manifest.entry(out, layout=layout)
 
-        ``n_buckets`` writes tmp as a bucketed catalog table on the series
-        keys (plans/bucketing.py) and re-points the catalog at the live tier
-        after the promote. Bucket file names carry their bucket id, so the
-        layout survives the rename; only the catalog's location string is
-        stale between promote and re-point, and the read side treats the
-        catalog as advisory (``_bucketed_scan``), so every crash window
-        degrades to the plain path scan, never to wrong data.
-        """
-        final, tmp, old = self._compact_paths(tier)
-        shutil.rmtree(tmp, ignore_errors=True)
-        # step 1: write tmp. Any rewrite retires a bucketed layout's catalog
-        # entry before the promote, or a reader could treat new plain files
-        # as bucket files (Spark aborts on unsuffixed bucket files). A plain
-        # rewrite retires it only once tmp is written, so a failed write
-        # leaves the live bucketed fast path in place; a bucketed rewrite
-        # retires it before the write, so an overwrite-saveAsTable onto an
-        # entry registered at the LIVE location never gets to touch it
-        # (external-table drops are metadata-only; the live files stay)
+            def change(m: dict) -> bool:
+                new = kept(m)
+                if new is not None:
+                    m["tiers"][tier] = [folded, *new]
+                return new is not None
+
+            if manifest.commit(self.store, change,
+                               {**row, "rows": n}) is not None:
+                break
+            shutil.rmtree(out, ignore_errors=True)
         if n_buckets is None:
-            n = self._write_counted(partials, str(tmp / "batch=-1"))
             self._drop_bucket_table(tier)
-        else:
-            from gensor_spark.plans.bucketing import write_bucketed
-
-            self._drop_bucket_table(tier)
-            write_bucketed(partials, self._bucket_table(tier), n_buckets,
-                           bucket_cols=self.keys, sort_cols=("bin_ts",),
-                           path=str(tmp / "batch=-1"))
-            n = None
-        if manifest is not None:
-            (tmp / "_folded.json").write_text(json.dumps(manifest))
-        if final.exists():
-            os.replace(final, old)  # step 2: set aside, never rmtree the live tier
-        os.replace(tmp, final)  # step 3: promote
-        if n_buckets is not None:
-            self.spark.sql(f"ALTER TABLE {self._bucket_table(tier)} "
-                           f"SET LOCATION '{final / 'batch=-1'}'")
-        shutil.rmtree(old, ignore_errors=True)  # step 4: cleanup
+        for d in absorbed:
+            shutil.rmtree(self.store / f"tier_{tier}" / d, ignore_errors=True)
         return n
 
     def _drop_bucket_table(self, tier: str) -> None:
@@ -1023,27 +938,25 @@ class TierPipeline:
         h = hashlib.md5(str(self.store.resolve()).encode()).hexdigest()[:10]
         return f"gs_bkt_{h}_{tier.replace('-', '_')}"
 
-    def _bucketed_scan(self, tier: str) -> DataFrame | None:
-        """The verified bucketed fast path: the catalog table must exist,
-        the tier must be fully folded (only ``batch=-1``), and the
-        registered location must name the LIVE tier directory. Any
-        mismatch → None (callers fall back to the plain path scan)."""
+    def _bucketed_scan(self, tier: str,
+                       listed: list[dict]) -> DataFrame | None:
+        """The verified bucketed fast path: the manifest lists one bucketed
+        fold as the tier's only entry, and the catalog table is registered
+        at its dir. Otherwise None (callers use the plain scan)."""
+        if len(listed) != 1 or listed[0].get("layout") != "bucketed":
+            return None
         tbl = self._bucket_table(tier)
         try:
             if not self.spark.catalog.tableExists(tbl):
                 return None
         except Exception:
             return None
-        base = self.store / f"tier_{tier}"
-        parts = sorted(p.name for p in base.glob("batch=*"))
-        if parts != ["batch=-1"]:
-            return None
         loc = (
             self.spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}")
             .filter(F.col("col_name") == "Location")
             .first()
         )
-        want = (base / "batch=-1").resolve()
+        want = (self.store / f"tier_{tier}" / listed[0]["dir"]).resolve()
         if loc is None or Path(
                 loc["data_type"].replace("file:", "")).resolve() != want:
             return None
@@ -1069,11 +982,10 @@ class TierPipeline:
         every subsequent ``read_tier`` merge — a groupBy on the keys+bin
         SUPERSET of the bucket columns — plans with ZERO Exchange, turning
         the store's dominant recurring read cost into this one write-side
-        shuffle. The catalog entry is advisory only: reads verify the
-        registered location still names the live tier directory and fall
-        back to the plain path scan on any mismatch (crash between promote
-        and re-register, bucketing disabled, foreign session), so the
-        rename-promotion crash protocol is unchanged.
+        shuffle. The catalog entry is advisory only: reads use it while the
+        manifest lists its dir as the tier's one entry and the registered
+        location matches, and fall back to the plain path scan otherwise
+        (a later contribution, bucketing disabled, foreign session).
         """
         if self.backend == "iceberg":
             if zorder or bucket:
@@ -1085,28 +997,32 @@ class TierPipeline:
             return
         if bucket is not None and zorder:
             raise ValueError("bucket and zorder are exclusive layouts")
-        merged = self.read_tier(tier, finalize=False)
-        if zorder:
-            from gensor_spark.plans.zorder import rank_scale, zvalue
+        layout = "bucketed" if bucket else "zorder" if zorder else "plain"
 
+        def fold(listed: list[dict]) -> DataFrame:
+            merged = self._merged(tier, listed)
+            if not zorder:
+                return merged
             sid = F.xxhash64(*[F.col(k) for k in self.keys])
             z = merged.withColumn("__sid", sid).withColumn(
                 "__ts", F.col("bin_ts").cast("long"))
             z = rank_scale(z, "__sid", 16, "__zs0")
             z = rank_scale(z, "__ts", 16, "__zs1")
-            merged = (
+            return (
                 z.withColumn("__z", zvalue(["__zs0", "__zs1"], 16))
                 .repartitionByRange(zorder_files, F.col("__z"))
                 .sortWithinPartitions("__z")
                 .drop("__sid", "__ts", "__zs0", "__zs1", "__z")
             )
-        self._rewrite_tier(tier, merged, n_buckets=bucket)
+
+        self._rewrite_tier(tier, fold, {"compact": tier, "layout": layout},
+                           n_buckets=bucket, layout=layout)
 
     def refresh_calendar(self, unit: str = "month",
                          from_tier: str = "1d") -> int:
         """Materialize (or re-fold) a CALENDAR tier from a stored fixed
         tier: ``cascade_calendar`` over the merged ``from_tier`` partials,
-        written as the calendar tier's single ``batch=-1`` contribution —
+        written as the calendar tier's single folded contribution —
         a continuous aggregate at calendar grain, refreshed from the ~30×
         smaller 1d state, never from raw points. Re-run after new batches
         land (the fold is a full re-cascade of bin-grain rows — cheap).
@@ -1122,12 +1038,11 @@ class TierPipeline:
             raise ValueError(f"unit must be one of {CALENDAR_UNITS}, got {unit!r}")
         if self.backend != "parquet":
             raise ValueError("refresh_calendar requires the parquet backend")
-        cal = cascade_calendar(self.read_tier(from_tier, finalize=False), unit,
-                               keys=self.keys, finer_unit=from_tier)
-        n = self._rewrite_tier(unit, cal)
-        self._lineage_row({"calendar_refresh": {"unit": unit,
-                                                "from": from_tier, "rows": n}})
-        return n
+        return self._rewrite_tier(
+            unit, lambda _: cascade_calendar(
+                self.read_tier(from_tier, finalize=False), unit,
+                keys=self.keys, finer_unit=from_tier),
+            {"calendar_refresh": {"unit": unit, "from": from_tier}})
 
     def apply_retention(self, policy: dict[str, str], now) -> dict[str, str]:
         """Enforce per-tier retention windows: the 'retention' in retention
@@ -1138,8 +1053,8 @@ class TierPipeline:
         (raw/fine tiers short-lived, coarse tiers long-lived).
 
         ``now`` is explicit (a timestamp / ISO string), never wall-clock —
-        retention runs must be replayable. Parquet backend: crash-safe
-        filtered rewrite (doubles as compaction); Iceberg backend: a real
+        retention runs must be replayable. Parquet backend: a filtered fold,
+        one commit per tier (doubles as compaction); Iceberg backend: a real
         ``DELETE FROM ... WHERE bin_ts < cutoff`` — an Iceberg
         metadata/partition-level delete, one atomic snapshot.
 
@@ -1155,35 +1070,35 @@ class TierPipeline:
             # backends (iceberg tier tables are created lazily on the first
             # merge_batch, so DELETE on them would raise)
             if self.backend == "parquet":
-                self._recover_compact(tier)  # promote crash leftovers first
-                if not any((self.store / f"tier_{tier}").glob("batch=*")):
+                if not self._manifest()["tiers"].get(tier):
                     continue
+                self._rewrite_tier(
+                    tier, lambda listed, t=tier: self._merged(t, listed),
+                    {"retention": {tier: cutoff}}, cutoff=cutoff)
             elif not self.spark.catalog.tableExists(self.iceberg.table(tier)):
                 continue
-            if self.backend == "iceberg":
+            else:
                 self.spark.sql(
                     f"DELETE FROM {self.iceberg.table(tier)} "
                     f"WHERE bin_ts < TIMESTAMP '{cutoff}'"
                 )
-            else:
-                kept = self.read_tier(tier, finalize=False).filter(
-                    F.col("bin_ts") >= F.lit(cutoff).cast("timestamp")
-                )
-                self._rewrite_tier(tier, kept)
             applied[tier] = cutoff
-        if applied:
-            self._lineage_row({"retention": applied})
         return applied
 
     def reset(self) -> None:
+        """Empty the store: commit an empty version, then delete every dir
+        but the manifest."""
         # With the iceberg backend the tier rows live in the warehouse, not
-        # under store_dir — wiping only the ledger/lineage would leave stale
+        # under store_dir — emptying only the manifest would leave stale
         # tier data that a rerun MERGEs onto. Drop the tables too.
         if self.backend == "iceberg":
             for tier in TIERS:
                 self.iceberg.drop(tier)
-        shutil.rmtree(self.store, ignore_errors=True)
-        self.store.mkdir(parents=True, exist_ok=True)
+        manifest.commit(self.store, lambda m: m.update(
+            processed=[], tiers={}, epochs={}) or True, {"reset": True})
+        for p in self.store.iterdir():
+            if p.is_dir() and p.name != manifest.MANIFEST:
+                shutil.rmtree(p)
         self._schemas.clear()
         self._frames.clear()
 
@@ -1202,10 +1117,11 @@ def read_range(
     half a million, and the time-range predicate prunes the tier scan.
 
     ``max_points=None`` picks the finest stored tier (full resolution).
-    The choice is metadata arithmetic (span / tier step — no data scan);
-    absent tiers are skipped; falls back to the finest stored tier when
-    even it cannot satisfy the budget (short span). Returns the filtered
-    tier frame plus the chosen tier name.
+    The choice is metadata arithmetic (span / tier step — no data scan)
+    over the tiers the store's manifest lists contributions of; a tier dir
+    holding only an uncommitted write is not stored. Falls back to the
+    finest stored tier when even it cannot satisfy the budget (short
+    span). Returns the filtered tier frame plus the chosen tier name.
     """
     import pandas as pd
 
@@ -1223,8 +1139,8 @@ def read_range(
     span = (e - s).total_seconds()
     widths = dict(TIER_SECONDS, **cal_seconds)
     ladder = [*TIERS, *cal_seconds]  # fine -> coarse
-    stored = [t for t in ladder
-              if (pipeline.store / f"tier_{t}").exists()]
+    tiers = pipeline._manifest()["tiers"]
+    stored = [t for t in ladder if tiers.get(t)]
     if not stored:
         raise FileNotFoundError(f"no tiers stored under {pipeline.store}")
     chosen = stored[0]

@@ -20,23 +20,23 @@ from-scratch rollup, never a wrong one (``cnt <= true <= cnt + err``), and
 equal to it when no truncation fires (per-contribution bin cardinality
 <= k) — see tests/test_topk_stream.py.
 
-Delivery: ``foreachBatch`` is at-least-once on replay, so each epoch writes
-to its own ``batch=s<epoch>`` directory in overwrite mode — a replayed epoch
-overwrites exactly its own contribution (the asof_stream sink contract).
-Contribution ids are prefixed ``s`` so they can never collide with the batch
-pipeline's integer ids (run buckets and wave·n+bucket); a TierPipeline over
-the same store dir merges batch, wave and stream contributions together.
+Delivery: ``foreachBatch`` is at-least-once on replay, so each epoch is
+one contribution ``s<epoch>``, committed through the store's manifest
+(plans/manifest.py) like the batch pipeline's: its partials go to a fresh
+``tier_<family>_1m/batch=s<epoch>-*`` dir, and one commit lists it. The
+``s`` prefix keeps epoch ids apart from the batch pipeline's integer ids
+(run buckets and wave·n+bucket); a TierPipeline over the same store dir
+merges batch, wave and stream contributions together.
 
-One hole overwrite-per-epoch alone can't close: ``compact_<family>`` /
-``apply_<family>_retention`` FOLD contribution dirs into ``batch=-1`` and
-delete them — a replay of an already-folded epoch would then re-add its
-partials next to the folded copy and double-count. The fold therefore
-records the absorbed stream epochs in the tier's ``_folded.json`` (written
-atomically with the fold, see TierPipeline._rewrite_tier). The store's
-readers and folds ignore any ``batch=s<e>`` listed there, which also covers
-a fold that lands between this sink's manifest check and its write; the
-sink's own skip is an early exit that keeps such dirs from being written
-at all.
+A sink skips every epoch the manifest has committed, whether it still
+lists the epoch's dir or a fold (``compact_<family>`` /
+``apply_<family>_retention``) absorbed it: before writing, and again inside
+the commit, so a replay racing a fold or another replay of the same epoch
+counts it once. A fold keeps an epoch committed after its listing.
+
+Crash windows: a kill before the commit leaves an unlisted dir that no read
+sees, and the replay writes the epoch again; a kill after it leaves the
+epoch committed, and the replay skips it.
 """
 
 from __future__ import annotations
@@ -45,6 +45,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame
 
+from gensor_spark.plans import manifest
 from gensor_spark.plans.incremental import _SKETCH_FAMILIES
 
 KEYS = ("doc_id", "source")
@@ -71,13 +72,15 @@ def make_sketch_sink(store_dir: str, family: str,
     store = Path(store_dir)
 
     def _sink(batch: DataFrame, epoch_id: int) -> None:
-        if f"s{epoch_id}" in fam.folded(store):
-            # already absorbed into batch=-1 by a fold — re-writing it
-            # would only leave a dir every reader ignores
+        sid = f"s{epoch_id}"
+        if manifest.committed(manifest.newest(store), sid, [fam.tier]):
             return
-        out = store / f"tier_{fam.tier}" / f"batch=s{epoch_id}"
-        part = fam.rollup(batch, "1m", keys=keys, **params)
-        part.write.mode("overwrite").parquet(str(out))
+        out = manifest.fresh_dir(store, fam.tier, sid)
+        with manifest.writing([out]):
+            fam.rollup(batch, "1m", keys=keys, **params).write.parquet(
+                str(out))
+        manifest.add(store, sid, {fam.tier: out},
+                     {"epoch": sid, "tier": fam.tier})
 
     return _sink
 
@@ -92,7 +95,7 @@ def start_sketch_sink(
     **params,
 ):
     """Stream of point rows → per-epoch 1m ``family`` contributions under
-    ``{store_dir}/tier_<family>_1m/batch=s<epoch>`` (the TierPipeline
+    ``{store_dir}/tier_<family>_1m/batch=s<epoch>-*`` (the TierPipeline
     sketch store layout — the pipeline's ``read_*`` on the same store folds
     stream, batch and wave contributions into one view)."""
     sink = make_sketch_sink(store_dir, family, keys, **params)

@@ -147,7 +147,7 @@ def test_validation(bucketed_points):
 
 # ------------------------------------------------- tier-store bucketed fold
 
-def test_tier_store_bucketed_compact_roundtrip(spark, tmp_path):
+def test_tier_store_bucketed_compact_roundtrip(spark, tmp_path, request):
     """compact(tier, bucket=N): the folded tier becomes a bucketed catalog
     table; read_tier's partial merge then plans with ZERO Exchange and
     identical values. A later batch degrades gracefully to the plain union
@@ -161,6 +161,7 @@ def test_tier_store_bucketed_compact_roundtrip(spark, tmp_path):
     from gensor_spark.sources.synth import synth_docs
 
     docs = synth_docs(spark, n_docs=40, seed=21, min_tok=5, max_tok=200).cache()
+    request.addfinalizer(docs.unpersist)
     pipe = TierPipeline(spark, str(tmp_path / "bkt_store"), n_batches=2)
     pipe.run(docs, batches=[0])
     before = (pipe.read_tier("1h").orderBy("doc_id", "source", "bin_ts")

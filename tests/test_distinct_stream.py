@@ -84,7 +84,7 @@ def test_stream_batch_share_store_and_folded_replay(spark, tmp_path_factory,
     want = _estimates(finalize_distinct(rollup_distinct(pts, "1h")))
     assert _estimates(pipe.read_distinct("1h")) == want
 
-    # replay before fold: overwrite, same state
+    # replay before fold: skipped, same state
     sink(half_b_pts, 0)
     assert _estimates(pipe.read_distinct("1h")) == want
 
@@ -93,4 +93,4 @@ def test_stream_batch_share_store_and_folded_replay(spark, tmp_path_factory,
     sink(half_b_pts, 0)
     assert _estimates(pipe.read_distinct("1h")) == want
     base = tmp_path / "store" / "tier_distinct_1m"
-    assert not (base / "batch=s0").exists()
+    assert not list(base.glob("batch=s0-*"))

@@ -130,12 +130,12 @@ def test_epoch_replay_is_idempotent(spark, tmp_path_factory, tmp_path):
 
 def test_compact_then_replay_does_not_double_count(spark, tmp_path_factory,
                                                    tmp_path):
-    """The overwrite-per-epoch contract alone cannot survive a COMPACT
-    between write and replay: the fold absorbs ``batch=s<epoch>`` into
-    ``batch=-1`` and deletes it, so a replayed epoch would re-add its
-    histograms. The fold's ``_folded.json`` manifest makes the sink skip
-    absorbed epochs — percentiles stay exact through write → compact →
-    full replay → (for good measure) a second compact."""
+    """A COMPACT between write and replay absorbs the epochs' dirs into
+    one fold and deletes them, so a replayed epoch would re-add its
+    histograms. The fold records the epochs as folded in the store's
+    manifest and the sink skips them — percentiles stay exact through
+    write → compact → full replay → (for good measure) a second
+    compact."""
     pts = events_to_points(spark.read.parquet(f"{SF}/events.parquet")) \
         .select("doc_id", "source", "ts", "value")
     in_dir = _split_files(spark, tmp_path_factory, pts, "foldreplay")
@@ -151,7 +151,7 @@ def test_compact_then_replay_does_not_double_count(spark, tmp_path_factory,
 
     run_pass("c1")
     pipe = TierPipeline(spark, store, hist_tiers=True)
-    pipe.compact_hist()  # folds s0/s1 into batch=-1 and deletes them
+    pipe.compact_hist()  # folds s0/s1 into one dir and deletes them
     run_pass("c2")       # fresh checkpoint = at-least-once replay of both
     pipe.compact_hist()  # idempotent again over the (unchanged) store
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pytest
 
+from gensor_spark.plans import manifest
 from gensor_spark.plans.iceberg_store import iceberg_conf, merge_sql
 from gensor_spark.sources.tables import iceberg_available
 
@@ -86,12 +87,13 @@ def test_reset_iceberg_drops_tier_tables(spark, tmp_path):
     pipe.backend = "iceberg"
     fake = _FakeIcebergStore()
     pipe.iceberg = fake
-    (pipe.store / "_ledger.json").write_text("{}")
+    manifest.commit(pipe.store,
+                    lambda m: m.update(processed=[0]) or True, {"batch": 0})
     pipe.reset()
     assert [c for c in fake.calls if c[0] == "drop"] == [
         ("drop", "1m"), ("drop", "1h"), ("drop", "1d")
     ]
-    assert not (pipe.store / "_ledger.json").exists()
+    assert pipe.ledger() == {"processed": []}
 
 
 def test_merge_into_tier_maintenance(spark, tmp_path):
@@ -113,11 +115,11 @@ def test_merge_into_tier_maintenance(spark, tmp_path):
         spark, str(tmp_path / "ice"), n_batches=3, backend="iceberg",
         iceberg_namespace="local.gensor_test",
     )
-    # idempotency: run one batch twice (the MERGE rewrites its own rows)
+    # idempotency: run one batch twice (the MERGE rewrites its own rows);
+    # a version that un-processes it forges the second run
     ice.run(docs, batches=[0])
-    led = ice.ledger()
-    led["processed"] = []
-    ice._ledger_path.write_text(__import__("json").dumps(led))
+    manifest.commit(ice.store,
+                    lambda m: m.update(processed=[]) or True, {"forge": 0})
     ice.run(docs)
 
     key = ["doc_id", "source", "bin_ts"]

@@ -145,7 +145,7 @@ def test_stream_batch_share_store_and_folded_replay(spark, tmp_path):
     want = _by_bin(finalize_topk(rollup_topk(pts, "1h", k=k)))
     assert _by_bin(pipe.read_topk("1h")) == want
 
-    # replay before fold: overwrite, same state
+    # replay before fold: skipped, same state
     sink(half_b_pts, 0)
     assert _by_bin(pipe.read_topk("1h")) == want
 
@@ -154,4 +154,4 @@ def test_stream_batch_share_store_and_folded_replay(spark, tmp_path):
     sink(half_b_pts, 0)
     assert _by_bin(pipe.read_topk("1h")) == want
     base = tmp_path / "store" / "tier_topk_1m"
-    assert not (base / "batch=s0").exists()
+    assert not list(base.glob("batch=s0-*"))
