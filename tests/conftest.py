@@ -45,7 +45,9 @@ def spark():
 def docs_small(spark):
     from gensor_spark.sources.synth import synth_docs
 
-    return synth_docs(spark, n_docs=40, seed=7, min_tok=8, max_tok=200).cache()
+    df = synth_docs(spark, n_docs=40, seed=7, min_tok=8, max_tok=200).cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="session")
@@ -82,8 +84,9 @@ def points_pdf() -> pd.DataFrame:
 
 @pytest.fixture(scope="session")
 def points_sdf(spark, points_pdf):
-    sdf = spark.createDataFrame(points_pdf)
-    return sdf.cache()
+    sdf = spark.createDataFrame(points_pdf).cache()
+    yield sdf
+    sdf.unpersist()
 
 
 @pytest.fixture

@@ -594,8 +594,21 @@ def test_read_range_resolution_router(spark, docs, tmp_path):
     # max_points=None -> finest stored
     _, t4 = read_range(pipe, "2024-01-01", "2024-01-03")
     assert t4 == "1m"
-    # the time predicate reaches the parquet scan (partition/row-group prune)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    # under the one-task cut the tier is a driver-local relation the time
+    # predicate folds into; above it the predicate reaches the parquet scan
+    # (partition/row-group prune)
+    assert "LocalTableScan" in out._jdf.queryExecution().executedPlan() \
+        .toString()
+    assert "LocalRelation" in out._jdf.queryExecution().optimizedPlan() \
+        .toString()
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        out, _ = read_range(pipe, "2024-01-01", "2024-01-03", max_points=24)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
     assert "PushedFilters" in plan and "bin_ts" in plan
     import pytest as _pt
     with _pt.raises(ValueError, match="empty range"):

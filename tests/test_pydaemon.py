@@ -121,3 +121,23 @@ def test_udfs_run_from_a_foreign_cwd(tmp_path):
     out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
                          capture_output=True, text=True, timeout=300)
     assert "ROWS 3 4" in out.stdout, out.stderr[-3000:]
+
+
+def test_daemon_preloads_pandas_and_pyarrow():
+    """The daemon imports pandas and pyarrow before it forks its workers,
+    so no worker imports them on its first Arrow task."""
+    script = textwrap.dedent(f"""
+        import runpy
+        import sys
+        sys.path.insert(0, {str(ROOT)!r})
+        from gensor_spark import pydaemon
+
+        mods = ("pandas", "pyarrow")
+        before = [m in sys.modules for m in mods]
+        runpy.run_module = lambda *a, **k: print(
+            "LOADED", before, [m in sys.modules for m in mods])
+        pydaemon.main()
+    """)
+    out = subprocess.run([sys.executable, "-c", script], capture_output=True,
+                         text=True, timeout=120)
+    assert "LOADED [False, False] [True, True]" in out.stdout, out.stderr

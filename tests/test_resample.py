@@ -139,7 +139,7 @@ def test_salted_rollup_equals_plain(spark, points_sdf):
     )
 
 
-def test_rollup_fast_paths_bit_identical(spark):
+def test_rollup_fast_paths_bit_identical(spark, request):
     """The two 1m-rollup strategies agree bit-for-bit (SURVEY §2.4 +
     rollup_docs_arrow docstring): explode+shuffle and the batched numpy
     reduceat kernel."""
@@ -151,6 +151,7 @@ def test_rollup_fast_paths_bit_identical(spark):
 
     docs = synth_docs(spark, n_docs=200, seed=13, min_tok=0, max_tok=400,
                       hot_fraction=0.05, hot_factor=7).cache()
+    request.addfinalizer(docs.unpersist)
     order = ["doc_id", "source", "bin_ts"]
     a = (rollup_tier(docs_to_points(docs, tick_seconds=1), "1m")
          .orderBy(*order).toPandas().reset_index(drop=True))

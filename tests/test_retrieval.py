@@ -66,11 +66,13 @@ ORDER BY query_id, rank
 def corpus(spark):
     from tests.conftest import SF_SMOKE
 
-    return (
+    df = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
         .select("doc_id", "text")
         .cache()
     )
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

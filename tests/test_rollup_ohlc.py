@@ -118,7 +118,7 @@ def test_salted_equals_plain(spark, points_sdf):
         )
 
 
-def test_producer_paths_bit_identical(spark):
+def test_producer_paths_bit_identical(spark, request):
     """rollup_tier(docs_to_points) and the shipped numpy kernel
     rollup_docs_arrow emit the same partial rows (Σx, Σx², Σx³, Σx⁴ all
     left-to-right over the same sequence, x³ = (x·x)·x and x⁴ = (x·x)·(x·x)
@@ -127,6 +127,7 @@ def test_producer_paths_bit_identical(spark):
 
     docs = synth_docs(spark, n_docs=80, seed=13, min_tok=0, max_tok=300,
                       hot_fraction=0.05, hot_factor=5).cache()
+    request.addfinalizer(docs.unpersist)
     a = (rollup_tier(docs_to_points(docs, tick_seconds=1), "1m", **FLAGS)
          .orderBy(*KEY).toPandas().reset_index(drop=True))
     b = (rollup_docs_arrow(docs, "1m", tick_seconds=1, **FLAGS)
@@ -180,7 +181,7 @@ def test_absent_when_not_requested(spark, points_sdf):
     assert {"skew", "kurt", "std"} <= set(only_m.columns)
 
 
-def test_store_ohlc_moment_tiers_match_direct(spark, tmp_path):
+def test_store_ohlc_moment_tiers_match_direct(spark, tmp_path, request):
     """TierPipeline(ohlc_tiers=True, moment_tiers=True): the stored/merged/
     cascaded tiers finalize open/skew/kurt equal to the direct batch
     computation — the Arrow producer, the schema-driven merge, compaction
@@ -190,6 +191,7 @@ def test_store_ohlc_moment_tiers_match_direct(spark, tmp_path):
 
     docs = synth_docs(spark, n_docs=60, seed=11, min_tok=0, max_tok=250,
                       hot_fraction=0.05, hot_factor=4).cache()
+    request.addfinalizer(docs.unpersist)
     store = str(tmp_path / "ohlc_tiers")
     pipe = TierPipeline(spark, store, n_batches=3,
                         ohlc_tiers=True, moment_tiers=True)

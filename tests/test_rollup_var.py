@@ -68,7 +68,7 @@ def test_std_matches_duckdb(spark, points_sdf, points_pdf):
         )
 
 
-def test_cascade_std_equals_direct_bitwise_on_tokens(spark):
+def test_cascade_std_equals_direct_bitwise_on_tokens(spark, request):
     """Integer token values: Σx and Σx² are exact in doubles at any merge
     order, so the 1m→1h→1d cascaded std equals the direct-from-points std
     BIT-FOR-BIT — the lossless-cascade property the tier store relies on."""
@@ -76,6 +76,7 @@ def test_cascade_std_equals_direct_bitwise_on_tokens(spark):
 
     docs = synth_docs(spark, n_docs=120, seed=7, min_tok=0, max_tok=500,
                       hot_fraction=0.05, hot_factor=6).cache()
+    request.addfinalizer(docs.unpersist)
     pts = docs_to_points(docs, tick_seconds=1)
     m1 = rollup_tier(pts, "1m", with_sumsq=True)
     for tier in ("1h", "1d"):
@@ -106,11 +107,12 @@ def test_salted_sumsq_equals_plain(spark, points_sdf):
     )
 
 
-def test_producer_paths_bit_identical_with_sumsq(spark):
+def test_producer_paths_bit_identical_with_sumsq(spark, request):
     from gensor_spark.sources.synth import synth_docs
 
     docs = synth_docs(spark, n_docs=80, seed=13, min_tok=0, max_tok=300,
                       hot_fraction=0.05, hot_factor=5).cache()
+    request.addfinalizer(docs.unpersist)
     a = (rollup_tier(docs_to_points(docs, tick_seconds=1), "1m",
                      with_sumsq=True)
          .orderBy(*KEY).toPandas().reset_index(drop=True))
@@ -154,7 +156,8 @@ def test_no_sumsq_requested_means_no_var_columns(spark, points_sdf):
     assert "vsumsq" not in rollup_tier(points_sdf, "1h").columns
 
 
-def test_merge_partials_propagates_sumsq_through_streaming_merge(spark):
+def test_merge_partials_propagates_sumsq_through_streaming_merge(spark,
+                                                                request):
     """The sumsq-aware _merge_partials is what the streaming rollup and the
     incremental pipeline call — splitting the input and merging must equal
     the single-pass partials exactly (integer values: bitwise)."""
@@ -162,7 +165,9 @@ def test_merge_partials_propagates_sumsq_through_streaming_merge(spark):
     from gensor_spark.sources.synth import synth_docs
 
     docs = synth_docs(spark, n_docs=60, seed=3, min_tok=1, max_tok=200).cache()
+    request.addfinalizer(docs.unpersist)
     pts = docs_to_points(docs, tick_seconds=1).cache()
+    request.addfinalizer(pts.unpersist)
     whole = (rollup_tier(pts, "1h", with_sumsq=True)
              .orderBy(*KEY).toPandas().reset_index(drop=True))
     half_a = rollup_tier(pts.filter("seq % 2 = 0"), "1h", with_sumsq=True)

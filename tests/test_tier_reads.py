@@ -7,10 +7,14 @@ A tier read passes the schema it remembers for the directory instead of
 letting Spark infer it with a job; the memo must equal what a fresh
 inference gives after every kind of write the store sees. A read whose data
 files sum to at most ``spark.sql.files.openCostInBytes`` runs as one task
-with no exchange and must return exactly the rows of the split scan. A
-quantile read re-bins the visible contributions inside the quantile window;
-it must equal merge → cascade → quantiles exactly, with one hash exchange
-when the scan is split. A read of an unchanged store returns the frame the
+with no exchange when it is built, and keeps its rows on the driver: a
+snapshot of the manifest version it was built on, which later actions
+answer without a job and which outlives a fold of that version. Its rows
+must equal the split scan's exactly, for every read kind, and the rows it
+holds come from at most the cut's bytes of parquet. A quantile read
+re-bins the visible contributions inside the quantile window; it must
+equal merge → cascade → quantiles exactly, with one hash exchange when the
+scan is split. A read of an unchanged store returns the frame the
 last read built; after any write the next read must equal a fresh
 pipeline's.
 """
@@ -147,9 +151,12 @@ def _open_cost(spark, n_bytes: int):
         spark.conf.set(key, old)
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def _exchanges(df) -> int:
-    return df._jdf.queryExecution().executedPlan().toString().count(
-        "Exchange")
+    return _plan(df).count("Exchange")
 
 
 def _same_rows(got, want) -> None:
@@ -226,16 +233,137 @@ def test_small_tier_reads_run_as_one_task(spark, docs, tmp_path):
         base = pipe.store / f"tier_{tier}"
         assert len(list(base.glob("batch=*"))) >= 3, name
         size = _data_bytes(base)
-        # at the cut: one job of one task, no exchange
-        with _open_cost(spark, size):
-            small = read()
-            assert _exchanges(small) == 0, name
-            assert _tasks_per_job(spark, small.collect) == [1], name
-        # one byte below it: the split scan and its shuffle
+        # one byte below the cut: the split scan and its shuffle, built
+        # lazily (no job once the tier's schema is known)
         with _open_cost(spark, size - 1):
             split = read()
             assert _exchanges(split) > 0, name
+        # at the cut: the first build runs one job of one task and keeps
+        # its rows on the driver; collecting them runs no job
+        with _open_cost(spark, size):
+            pipe._frames.clear()
+            built = []
+            assert _tasks_per_job(spark, lambda: built.append(read())) \
+                == [1], name
+            small = built[0]
+            assert _exchanges(small) == 0, name
+            assert _tasks_per_job(spark, small.collect) == [], name
             _same_rows(small, split)
+
+
+def _scanned_bytes(pipe: TierPipeline, tier: str,
+                   as_of_batch: int | None = None) -> int:
+    """Data bytes of the committed entries a read of ``tier`` scans."""
+    return sum(e["bytes"] for e in pipe._manifest()["tiers"][tier]
+               if as_of_batch is None or e["id"] <= as_of_batch)
+
+
+def _hll_words(sketch: bytes) -> tuple:
+    """An HLL sketch's serialized words in sorted order. A union writes
+    its coupons in the order it met its inputs, so a split read and a
+    one-task read of the same bins hold equal coupons in different order."""
+    return len(sketch), sorted(sketch[i:i + 4]
+                               for i in range(8, len(sketch), 4))
+
+
+def _exact(df) -> tuple:
+    """Schema and rows of ``df``, as a value that tells NULL from NaN and
+    compares binary cells by content."""
+    def cell(c):
+        return _hll_words(bytes(c)) if isinstance(c, (bytes, bytearray)) else c
+
+    return df.schema, sorted(repr(tuple(map(cell, r))) for r in df.collect())
+
+
+def _reads_by_kind(pipe: TierPipeline, items) -> dict:
+    """Every memoized read kind: name → (build, tier dir, as_of_batch)."""
+    return {
+        "tier": (lambda: pipe.read_tier("1h"), "1h", None),
+        "tier_partials": (lambda: pipe.read_tier("1h", finalize=False),
+                          "1h", None),
+        "as_of_batch": (lambda: pipe.read_tier("1h", as_of_batch=0),
+                        "1h", 0),
+        "hist_q": (lambda: pipe.read_hist_quantiles("1h"), "hist_1m", None),
+        "distinct": (lambda: pipe.read_distinct("1h"), "distinct_1m", None),
+        "topk": (lambda: pipe.read_topk("1h"), "topk_1m", None),
+        "cms": (lambda: pipe.read_cms("1h"), "cms_1m", None),
+        "cms_items": (lambda: pipe.read_cms("1h", items=items),
+                      "cms_1m", None),
+    }
+
+
+def _local_and_split(spark, pipe, read, tier, as_of_batch):
+    """The read at the cut (a driver-local relation) and one byte above
+    it (a file scan)."""
+    size = _scanned_bytes(pipe, tier, as_of_batch)
+    with _open_cost(spark, size):
+        local = read()
+    with _open_cost(spark, size - 1):
+        split = read()
+    assert "FileScan" not in _plan(local)
+    assert "FileScan" in _plan(split)
+    return local, split
+
+
+def test_local_reads_equal_split_reads_exactly(spark, docs, tmp_path):
+    pipe = TierPipeline(spark, str(tmp_path / "store"), n_batches=2,
+                        hist_tiers=True, distinct_tiers=True,
+                        topk_tiers=True, cms_tiers=True, var_tiers=True,
+                        moment_tiers=True)
+    pipe.run(docs)
+    # a wave of NaN values: NaN min/max/mean next to the NULL var and
+    # moments of one-point bins
+    pipe.ingest_points_wave(
+        docs_to_points(docs).filter("seq % 29 = 3").selectExpr(
+            "doc_id", "source", "seq", "ts + INTERVAL 7 SECONDS AS ts",
+            "double('NaN') AS value"), wave=1)
+    items = spark.createDataFrame([(float(i),) for i in range(4)],
+                                  "item double")
+    reads = _reads_by_kind(pipe, items)
+    schemas = {}
+    for name, (read, tier, as_of) in reads.items():
+        local, split = _local_and_split(spark, pipe, read, tier, as_of)
+        assert _exact(local) == _exact(split), name
+        assert local.count() > 0, name
+        schemas[name] = split.schema
+    cells = [c for r in pipe.read_tier("1h").collect() for c in r]
+    assert None in cells and any(c != c for c in cells
+                                 if isinstance(c, float))
+    assert all(isinstance(r["hll"], (bytes, bytearray))
+               for r in pipe.read_distinct("1h").collect())
+
+    # a store that retention emptied reads as an empty frame of the same
+    # schema on both sides of the cut (as-of reads need the per-batch
+    # layout, which the fold removed)
+    later = "2100-01-01"
+    pipe.apply_retention({"1h": "1 day"}, now=later)
+    for family in ("hist", "distinct", "topk", "cms"):
+        getattr(pipe, f"apply_{family}_retention")("1 day", now=later)
+    del reads["as_of_batch"]
+    for name, (read, tier, as_of) in reads.items():
+        local, split = _local_and_split(spark, pipe, read, tier, as_of)
+        assert local.schema == split.schema == schemas[name], name
+        assert local.collect() == split.collect() == [], name
+
+
+def test_local_read_outlives_the_fold_of_its_version(spark, docs, tmp_path):
+    pipe = TierPipeline(spark, str(tmp_path / "store"), n_batches=2)
+    pipe.run(docs)
+    pipe.ingest_points_wave(
+        _late(docs_to_points(docs), 13, 5, 30, 7), wave=1)
+    base = pipe.store / "tier_1m"
+    with _open_cost(spark, _data_bytes(base)):
+        held = pipe.read_tier("1m")
+        want = _exact(held)
+        pipe.compact("1m")
+        # the fold deleted every dir the held frame was built on
+        assert [p.name[:9] for p in base.glob("batch=*")] == ["batch=-1-"]
+        assert _exact(held) == want
+        folded = pipe.read_tier("1m")
+        assert folded is not held
+        assert [e["dir"][:9] for e in pipe._manifest()["tiers"]["1m"]] \
+            == ["batch=-1-"]
+        assert _exact(folded) == want
 
 
 def _rows(df) -> list[tuple]:
