@@ -75,8 +75,11 @@ def cascade_distinct(
     keys: tuple[str, ...] = KEYS,
 ) -> DataFrame:
     """Coarser-tier sketches from finer-tier sketches — never re-reads raw
-    points. Union takes per-register max, so the result is register-
-    identical to a direct ``rollup_distinct`` at ``tier``."""
+    points. Union takes per-register max, so registers and estimates are
+    order-free and match a direct ``rollup_distinct`` at ``tier`` (within
+    the module docstring's sparse/dense bound). The serialized ``hll``
+    bytes depend on the order the union met its inputs: compare sketches
+    by estimate, never by bytes."""
     rebinned = finer.withColumn("bin_ts", bin_ts(F.col("bin_ts"), _step(tier)))
     return rebinned.groupBy(*keys, "bin_ts").agg(
         F.hll_union_agg(F.col("hll")).alias("hll")
@@ -85,7 +88,9 @@ def cascade_distinct(
 
 def merge_distinct(partials: DataFrame, group_cols: list[str]) -> DataFrame:
     """Merge same-bin sketch rows from multiple contributions (the store's
-    cross-batch read-side merge — associative, order-free)."""
+    cross-batch read-side merge). Associative; registers and estimates are
+    order-free, but the serialized ``hll`` bytes depend on merge order, so
+    compare merged sketches by estimate, never by bytes."""
     return partials.groupBy(*group_cols).agg(
         F.hll_union_agg(F.col("hll")).alias("hll")
     )

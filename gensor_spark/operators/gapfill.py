@@ -16,7 +16,10 @@ gensor exposes these through pandas delegation —
 
 Spark realization: pure window functions — a forward frame carrying
 ``(last non-null value, its ts/seq)`` and a reverse frame carrying the next
-ones, then the affine blend. No UDFs, single shuffle on the series key.
+ones, then the affine blend. LOCF is interpolation's previous value and NOCB
+its next, so ``fill_all`` builds all three fills from those two windows. No
+UDFs, single shuffle on the series key; none at all over a frame already
+hash-partitioned on it (``resample(dense=True)``'s grid).
 
 Performance note: the "next non-null" lookup is expressed as a DESCENDING
 sort with an unbounded-PRECEDING frame, never ``rowsBetween(0,
@@ -29,38 +32,61 @@ the series key.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 KEYS = ("doc_id", "source")
 
 
-def _fwd(keys, seq_col: str = "seq"):
-    return W.partitionBy(*keys).orderBy(seq_col).rowsBetween(W.unboundedPreceding, 0)
-
-
-def _bwd(keys, seq_col: str = "seq"):
-    # descending order + preceding frame == "current row to end" in ascending
-    # order, but incremental instead of quadratic (see module docstring)
-    return (
-        W.partitionBy(*keys)
-        .orderBy(F.desc(seq_col))
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
+def _carry(value_sql: str, keys, seq_col: str, desc: bool = False) -> str:
+    """SQL for the last non-null ``value_sql`` up to this row, or from it on
+    if ``desc``: a descending order + preceding frame == "current row to
+    end" in ascending order, but incremental instead of quadratic (see
+    module docstring)."""
+    part = f"PARTITION BY {', '.join(f'`{k}`' for k in keys)} " if keys else ""
+    return (f"last({value_sql}, true) OVER ({part}ORDER BY `{seq_col}`"
+            f"{' DESC' if desc else ''} "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
 
 
 def locf(points: DataFrame, keys=KEYS, value_col: str = "value",
          seq_col: str = "seq") -> DataFrame:
     """Last observation carried forward (pandas ffill parity)."""
-    filled = F.last(value_col, ignorenulls=True).over(_fwd(keys, seq_col))
-    return points.withColumn(value_col, filled)
+    return points.withColumn(
+        value_col, F.expr(_carry(f"`{value_col}`", keys, seq_col)))
 
 
 def nocb(points: DataFrame, keys=KEYS, value_col: str = "value",
          seq_col: str = "seq") -> DataFrame:
     """Next observation carried backward (pandas bfill parity)."""
-    filled = F.last(value_col, ignorenulls=True).over(_bwd(keys, seq_col))
-    return points.withColumn(value_col, filled)
+    return points.withColumn(
+        value_col, F.expr(_carry(f"`{value_col}`", keys, seq_col, desc=True)))
+
+
+def fill_all(points: DataFrame, method: str = "linear", keys=KEYS,
+             value_col: str = "value", ts_col: str = "ts",
+             seq_col: str = "seq") -> DataFrame:
+    """``points`` plus ``locf``, ``nocb`` and ``interp`` columns, the three
+    fills of ``value_col`` from one ascending and one descending window
+    (``points`` must not already carry those names): ``interp`` is
+    ``interpolate``'s value for ``method``."""
+    if method not in ("linear", "time"):
+        raise ValueError(f"unsupported interpolation method: {method}")
+    x = (f"CAST(`{seq_col}` AS DOUBLE)" if method == "linear"
+         else f"CAST(unix_micros(`{ts_col}`) AS DOUBLE)")
+    v, vx = f"`{value_col}`", f"CASE WHEN `{value_col}` IS NOT NULL THEN {x} END"
+    carried = points.selectExpr(
+        "*", f"{_carry(v, keys, seq_col)} AS locf",
+        f"{_carry(vx, keys, seq_col)} AS _px",
+        f"{_carry(v, keys, seq_col, desc=True)} AS nocb",
+        f"{_carry(vx, keys, seq_col, desc=True)} AS _nx")
+    # interior nulls blend prev/next; leading nulls stay null (no backfill);
+    # trailing nulls carry the last value forward
+    return carried.selectExpr(
+        *[f"`{c}`" for c in points.columns], "locf", "nocb",
+        f"CASE WHEN {v} IS NOT NULL THEN {v} WHEN locf IS NULL THEN NULL "
+        "WHEN nocb IS NULL THEN locf "
+        f"ELSE locf + (nocb - locf) * ({x} - _px) / (_nx - _px) END AS interp")
 
 
 def interpolate(
@@ -77,24 +103,6 @@ def interpolate(
     weights by the timestamp. Interior nulls blend prev/next; trailing nulls
     carry the last value forward; leading nulls stay null.
     """
-    if method not in ("linear", "time"):
-        raise ValueError(f"unsupported interpolation method: {method}")
-    x = F.col(seq_col).cast("double") if method == "linear" else (
-        F.unix_micros(F.col(ts_col)).cast("double")
-    )
-    v = F.col(value_col)
-    fwd, bwd = _fwd(keys, seq_col), _bwd(keys, seq_col)
-
-    prev_v = F.last(v, ignorenulls=True).over(fwd)
-    prev_x = F.last(F.when(v.isNotNull(), x), ignorenulls=True).over(fwd)
-    next_v = F.last(v, ignorenulls=True).over(bwd)
-    next_x = F.last(F.when(v.isNotNull(), x), ignorenulls=True).over(bwd)
-
-    blended = prev_v + (next_v - prev_v) * (x - prev_x) / (next_x - prev_x)
-    filled = (
-        F.when(v.isNotNull(), v)
-        .when(prev_v.isNull(), F.lit(None))          # leading nulls: no backfill
-        .when(next_v.isNull(), prev_v)               # trailing nulls: ffill
-        .otherwise(blended)
-    )
-    return points.withColumn(value_col, filled)
+    filled = fill_all(points, method, keys, value_col, ts_col, seq_col)
+    return filled.selectExpr(*[f"interp AS `{c}`" if c == value_col else f"`{c}`"
+                               for c in points.columns])

@@ -12,12 +12,15 @@ replicate exactly (verified empirically against pandas 2.2.2, SURVEY.md §2.4):
   the point view encodes gaps as null values).
 
 Spark realization: ``groupBy(keys, date_trunc-style bin)`` for the
-aggregation (one shuffle, with map-side partial aggregation), then the dense
-grid is synthesized with ``sequence(min_bin, max_bin, interval)`` + explode
-and left-joined back. The span aggregate groups by the same keys as the bin
-aggregate, so Catalyst reuses the exchange; the grid join is keys+bin equi
-(AQE picks broadcast when the grid is small). A naive ``groupBy(window(...))``
-would silently drop empty bins — that is the main parity trap.
+aggregation (one shuffle, with map-side partial aggregation), then one
+explicit-count ``repartition(n, *keys)`` of the aggregated bins and
+``lead(bin_ts)`` over each series: every populated bin explodes
+``sequence(bin_ts, next - step, step)``, itself plus the empty bins before
+the next populated one, and keeps its aggregates only on its own bin. One
+scan, two shuffles, no join; the output is hash-partitioned on the series
+keys, so a per-series window over it adds no exchange. A naive
+``groupBy(window(...))`` would silently drop empty bins — that is the main
+parity trap.
 
 At 100 TB: the bin aggregate is the dominant shuffle and it is keyed on
 ``(doc_id, source, bin)`` — high cardinality, well distributed; per-series
@@ -177,28 +180,26 @@ def resample(
     if not dense:
         return agged
 
-    spans = agged.groupBy(*keys).agg(
-        F.min("bin_ts").alias("_lo"), F.max("bin_ts").alias("_hi")
-    )
-    # The span aggregate is tiny in BYTES but each row explodes into a full
-    # bin sequence — AQE's byte-based coalescing would run the explode 1-2
-    # wide and serialize the grid generation (and its shuffle write). An
-    # explicit count repartition is never coalesced, so the explode always
-    # runs at full parallelism regardless of the coalescing profile (same
-    # defeat as udfkernel.per_series_map's kernel stages).
-    n = points.sparkSession.sparkContext.defaultParallelism
-    grid = spans.repartition(n, F.xxhash64(*keys)).select(
-        *keys,
-        F.explode(
-            F.sequence("_lo", "_hi", F.expr(f"interval {step} seconds"))
-        ).alias("bin_ts"),
-    )
-    # Force a sort-merge join here. The span aggregate is tiny pre-explode,
-    # so Catalyst (mis)estimates the grid side as small, AQE coalesces its
-    # exchange to 1 partition, and the planner broadcasts `agged` — which is
-    # the SAME cardinality as the grid. Net effect: the explode, the join,
-    # and every downstream per-series window run in a single task (measured
-    # 40× slowdown on a month of 15-min bins). The merge hint makes both
-    # sides exchange on (keys, bin_ts) at real parallelism; at 100 TB this
-    # join could never be broadcast anyway.
-    return grid.join(agged.hint("merge"), [*keys, "bin_ts"], "left")
+    # One shuffle on the series keys, after the map-side-combined bin
+    # aggregate, then each populated bin emits itself plus the empty bins up
+    # to its series' next populated one. The repartition's input is small
+    # partial aggregates, but the explode multiplies rows, so AQE's byte
+    # model would coalesce this stage 1-2 wide; an explicit-count
+    # repartition is never coalesced (same defeat as
+    # udfkernel.per_series_map). Its hash partitioning on the keys also
+    # satisfies any downstream per-series window (gapfill), so the grid is
+    # never shuffled again. With ``keys=()`` the input is one series and
+    # the window gathers it into one partition itself.
+    ks = [f"`{k}`" for k in keys]
+    if keys:
+        agged = agged.repartition(
+            points.sparkSession.sparkContext.defaultParallelism, *keys)
+    part = f"PARTITION BY {', '.join(ks)} " if keys else ""
+    iv = f"INTERVAL {step} SECONDS"
+    runs = agged.selectExpr(
+        "*", f"lead(bin_ts) OVER ({part}ORDER BY bin_ts) AS _next"
+    ).selectExpr(
+        *ks, *[f"`{a}`" for a in aggs], "bin_ts AS _bin",
+        f"explode(sequence(bin_ts, coalesce(_next - {iv}, bin_ts), {iv})) AS bin_ts")
+    return runs.selectExpr(*ks, "bin_ts", *[
+        f"CASE WHEN bin_ts = _bin THEN `{a}` END AS `{a}`" for a in aggs])

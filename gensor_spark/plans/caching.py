@@ -10,7 +10,9 @@ This module is the only code that caches a DataFrame, and the owner rule
 is:
 
 - ``pooled_cache(df)`` caches ``df`` and adds it to the pool of the
-  innermost open ``cache_scope()`` in this thread's context.
+  innermost open ``cache_scope()`` in this thread's context, unless an
+  equal plan is already cached: then the pool that cached it first stays
+  its only owner, and ``df`` reads that entry without being pooled.
 - ``cache_scope()`` owns the pool it opens: on exit, normal or by an
   exception, it unpersists every frame pooled inside it, including those
   of lazy operators called there. A nested scope releases only its own
@@ -22,9 +24,9 @@ is:
 
 An operator that runs its own actions (a writer, a training loop) opens a
 scope around them; a lazy operator pools into whatever scope its caller
-holds. Spark keeps one CacheManager entry per plan, so two pools that cache
-equal plans share it, and the first to release drops it for both (the
-other's reads recompute; rows are unchanged). A long-lived session that
+holds. Spark keeps one CacheManager entry per plan, so a second pool that
+pooled an equal plan would release the first one's entry early; owner-first
+pooling leaves the release to the first. A long-lived session that
 acts on lazy plans outside a scope must call ``release_caches()``; at
 process exit executor storage dies with the JVM.
 """
@@ -34,6 +36,7 @@ from __future__ import annotations
 from contextlib import contextmanager, suppress
 from contextvars import ContextVar
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _SESSION_POOL: list[DataFrame] = []
@@ -42,8 +45,10 @@ _pool: ContextVar[list[DataFrame]] = ContextVar("cache_pool", default=_SESSION_P
 
 def pooled_cache(df: DataFrame) -> DataFrame:
     """``df.cache()``, owned by the innermost open ``cache_scope()`` or,
-    outside any scope, by the session pool."""
-    _pool.get().append(df.cache())
+    outside any scope, by the session pool. A frame whose plan is already
+    cached is returned as is: it reads its owner's entry."""
+    if df.storageLevel == StorageLevel.NONE:
+        _pool.get().append(df.cache())
     return df
 
 

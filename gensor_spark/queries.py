@@ -490,50 +490,23 @@ WINDOW w2 AS (PARTITION BY doc_id, source ORDER BY seq
 # gap-fill over the dense 15-minute grid (LOCF + time interpolation)
 # --------------------------------------------------------------------------
 
-def _dense_15min_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = resample(_points(spark, sf_dir), "15min", aggs="mean")
-    return out.select(
-        "doc_id", "source", "bin_ts", F.col("mean").alias("value")
-    )
-
-
 def q_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LOCF + NOCB + time-weighted interpolation over the dense 15-minute
-    grid in one driver entry and ONE plan: all three fills are window
-    columns over the same series partitioning (NOCB shares interpolation's
-    descending sort), so the grid (the expensive part — resample + per-series
-    spine) materializes once, not once per method."""
-    from pyspark.sql import Window as W2
-
+    grid in one driver entry and ONE plan: all three fills come from one
+    ascending and one descending window (``gapfill.fill_all``) over the
+    grid, which ``resample`` already hash-partitions on the series keys by
+    an explicit-count repartition — so the windows add no exchange and AQE
+    never coalesces them (its byte model once ran this chain 1-2 wide,
+    measured 68s vs ~4s at sf0.1)."""
     from gensor_spark.operators import gapfill
 
-    dense = _dense_15min_mean(spark, sf_dir).withColumnRenamed("bin_ts", "ts")
-    # Explicit repartition onto the window keys: the dense grid is millions
-    # of rows but only ~10s of MB compressed, so AQE's byte-based coalescing
-    # would run the whole 4-window chain 1-2 wide (measured 68s vs ~4s at
-    # sf0.1). An explicit count repartition is never coalesced, and because
-    # it hash-partitions on exactly the window keys it satisfies every
-    # downstream window's required distribution — no second exchange.
-    n = spark.sparkContext.defaultParallelism
-    dense = dense.repartition(n, "doc_id", "source")
-    dense = dense.withColumn(
-        "seq",
-        F.row_number().over(W2.partitionBy("doc_id", "source").orderBy("ts")) - 1,
-    )
-    w = W2.partitionBy("doc_id", "source").orderBy("seq").rowsBetween(
-        W2.unboundedPreceding, 0
-    )
-    both = dense.withColumn(
-        "locf", F.last("value", ignorenulls=True).over(w)
-    ).withColumn("vnocb", F.col("value"))
-    both = gapfill.nocb(both, value_col="vnocb")  # shares interp's desc sort
-    filled = gapfill.interpolate(both, method="time")
-    return filled.select(
+    dense = resample(_points(spark, sf_dir), "15min", aggs="mean").selectExpr(
+        "doc_id", "source", "bin_ts AS ts", "mean AS value")
+    filled = gapfill.fill_all(dense, method="time", seq_col="ts")
+    return filled.selectExpr(
         "doc_id", "source",
-        F.date_format("ts", TS_FMT_SPARK).alias("bin_ts"),
-        _r6(F.col("locf")).alias("filled_locf"),
-        _r6(F.col("vnocb")).alias("filled_nocb"),
-        _r6(F.col("value")).alias("filled_interp"),
+        f"date_format(ts, '{TS_FMT_SPARK}') AS bin_ts",
+        *[f"round({c} + 1e-9, 6) AS filled_{c}" for c in ("locf", "nocb", "interp")],
     )
 
 

@@ -57,12 +57,13 @@ def get_spark(
         # wildly under-counts the CPU behind a partition — at the default
         # floor a 1.85M-row grid stage read as ~2MB and ran 2-wide. The two
         # CPU-amplifying stages the byte model can't see at ANY floor — the
-        # span→sequence explode (operators/resample.py) and the per-series
-        # Arrow kernels (operators/udfkernel.py) — defeat coalescing locally
-        # with explicit-count repartitions, which AQE never merges. r2 ran
-        # with coalescing OFF session-wide, which fixed those two but taxed
-        # every small query with full-width task overhead (~0.3-0.5s each,
-        # VERDICT r2 #7); local defeats + a lower floor serve both.
+        # dense grid's lead→sequence explode (operators/resample.py) and the
+        # per-series Arrow kernels (operators/udfkernel.py) — defeat
+        # coalescing locally with explicit-count repartitions, which AQE
+        # never merges. r2 ran with coalescing OFF session-wide, which fixed
+        # those two but taxed every small query with full-width task
+        # overhead (~0.3-0.5s each, VERDICT r2 #7); local defeats + a lower
+        # floor serve both.
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -660,6 +660,29 @@ def test_nested_cache_scope_releases_only_its_own(spark, cached_entries):
     assert not outer.storageLevel.useMemory
 
 
+def test_equal_plans_cached_by_two_scopes_stay_with_the_owner(
+        spark, cached_entries):
+    """Two scopes cache an equal plan: the first to cache it owns the
+    CacheManager entry, so only the owner's exit releases it, and the
+    second frame is never asked to cache (Spark's "Asked to cache already
+    cached data" warning cannot fire)."""
+    from gensor_spark.plans.caching import cache_scope, pooled_cache
+
+    before = cached_entries()
+    with cache_scope():
+        owner = pooled_cache(_frames(spark, 1, 6)[0])
+        owner.count()
+        with cache_scope():
+            other = pooled_cache(_frames(spark, 1, 6)[0])
+            assert other.count() == owner.count()
+            assert not other.is_cached
+            assert cached_entries() == before + 1
+        assert cached_entries() == before + 1
+        assert owner.storageLevel.useMemory
+    assert cached_entries() == before
+    assert not owner.storageLevel.useMemory
+
+
 def test_build_two_then_run_both_keeps_caches_live(spark, cached_entries):
     """Two lazy plans built in one scope keep their pooled caches until the
     scope exits, whichever runs first: acting on one releases nothing the

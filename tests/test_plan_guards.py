@@ -46,11 +46,33 @@ def test_compensation_pushdown_and_broadcast(spark, queries):
     assert "BroadcastHashJoin" in plan          # baro side broadcast
 
 
-def test_dense_grid_join_not_broadcast(spark, queries):
-    """The grid join must stay sort-merge: Catalyst under-estimates the
-    exploded side and would broadcast an equal-size build (resample.py)."""
+def test_dense_grid_is_one_scan_without_join(spark, queries):
+    """resample(dense=True) fills the grid from lead(bin_ts) over one
+    repartition of the bin aggregate: no join, one events scan and at most
+    two Exchanges (the bin aggregate's and the series-key repartition)."""
     plan = _plan(queries["resample_15min_dense"](spark, SF))
-    assert "SortMergeJoin" in plan
+    assert "Join" not in plan
+    assert plan.count("FileScan") == 1
+    assert len(re.findall(r"\bExchange\b", plan)) <= 2
+
+
+def test_dense_grid_explode_sits_on_explicit_count_exchange(spark, queries):
+    """The grid explode multiplies a few KB of bin aggregates into the full
+    grid: the first Exchange below it must be an explicit-count
+    repartition (REPARTITION_BY_NUM), which AQE never coalesces, or the
+    explode and every per-series window above it collapse into one task."""
+    plan = _plan(queries["resample_15min_dense"](spark, SF))
+    below = plan[plan.index("Generate explode"):]
+    assert "REPARTITION_BY_NUM" in re.search(r"Exchange [^\n]*", below).group(0)
+
+
+def test_gapfill_two_exchanges_three_windows(spark, queries):
+    """gapfill's fills reuse the grid's series-key partitioning: the grid's
+    lead window plus one ascending and one descending fill window, no
+    shuffle beyond the grid's two."""
+    plan = _plan(queries["gapfill"](spark, SF))
+    assert len(re.findall(r"\bExchange\b", plan)) <= 2
+    assert len(re.findall(r"\bWindow \[", plan)) == 3
 
 
 def test_column_pruning_on_narrow_query(spark, queries):

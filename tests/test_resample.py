@@ -92,6 +92,60 @@ def test_resample_dense_grid_has_nan_bins(spark):
     )
 
 
+def _spine_join_dense(points, freq, aggs, keys):
+    """The dense grid as it was first built, kept as the reference: a span
+    aggregate per series, a ``sequence`` spine from its first to its last
+    bin, and the bin aggregate left-joined back onto the spine."""
+    from pyspark.sql import functions as F
+
+    from gensor_spark.operators.resample import freq_to_seconds
+
+    agged = resample(points, freq, aggs, keys=keys, dense=False)
+    spans = agged.groupBy(*keys).agg(
+        F.min("bin_ts").alias("_lo"), F.max("bin_ts").alias("_hi"))
+    step = F.expr(f"interval {freq_to_seconds(freq)} seconds")
+    grid = spans.select(
+        *keys, F.explode(F.sequence("_lo", "_hi", step)).alias("bin_ts"))
+    return grid.join(agged, [*keys, "bin_ts"], "left")
+
+
+def _gappy_points(with_keys: bool) -> pd.DataFrame:
+    """A single-point series, a series with an all-NULL bin, and one with
+    gaps of hours and days between its points."""
+    t = pd.Timestamp("2024-03-01 00:00", tz="UTC")
+    rows = [("a", "x", t + pd.Timedelta(minutes=7), 4.0)]
+    rows += [("b", "x", t + pd.Timedelta(minutes=m), v) for m, v in
+             [(1, 1.0), (16, None), (29, None), (40, 3.5), (95, 2.0)]]
+    rows += [("c", "y", t + pd.Timedelta(minutes=m), v) for m, v in
+             [(0, 5.0), (3, 6.0), (600, 7.0), (3 * 1440 + 2, None),
+              (5 * 1440 + 31, 8.0)]]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "source", "ts", "value"])
+    if not with_keys:
+        pdf = pdf[pdf.doc_id == "c"].drop(columns=["doc_id", "source"])
+    return pdf
+
+
+@pytest.mark.parametrize("freq", ["15min", "h"])
+@pytest.mark.parametrize("aggs", [
+    ["mean", "count"],
+    ["sum", "min", "max", "first", "last", "std", "median"],
+])
+@pytest.mark.parametrize("keys", [("doc_id", "source"), ()])
+def test_dense_grid_equals_spine_join(spark, freq, aggs, keys):
+    """``resample(dense=True)`` fills its grid from ``lead(bin_ts)``: the
+    same rows, values and column types as the spine + left-join grid."""
+    pts = spark.createDataFrame(_gappy_points(bool(keys)))
+    got = resample(pts, freq, aggs, keys=keys)
+    want = _spine_join_dense(pts, freq, aggs, keys)
+    assert [(f.name, f.dataType) for f in got.schema] == \
+        [(f.name, f.dataType) for f in want.schema]
+    order = [*keys, "bin_ts"]
+    g = got.toPandas().sort_values(order).reset_index(drop=True)
+    w = want.toPandas().sort_values(order).reset_index(drop=True)
+    pd.testing.assert_frame_equal(g, w)
+    assert len(g) > 3 * 24  # the day-long gaps are filled
+
+
 @pytest.mark.parametrize("tier,freq", [("1m", "min"), ("1h", "h"), ("1d", "D")])
 def test_rollup_tier_matches_pandas(spark, points_pdf, points_sdf, tier, freq):
     out = finalize_tier(rollup_tier(points_sdf, tier)).toPandas()
